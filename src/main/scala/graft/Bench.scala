@@ -117,7 +117,7 @@ object Bench {
     * private[spark], so it is reached reflectively; a bounded sleep is
     * the fallback if the internals ever move.
     */
-  private def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+  private[graft] def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     try {
       val bus = sc.getClass.getMethod("listenerBus").invoke(sc)
       bus.getClass.getMethod("waitUntilEmpty").invoke(bus)

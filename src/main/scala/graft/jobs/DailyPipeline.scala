@@ -28,6 +28,14 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     [[CatalogWarehouse.createReferenceTables]] (idempotent CREATE
   *     TABLE IF NOT EXISTS); warehouses that create tables on first
   *     write need no DDL step.
+  *
+  * At the daily sizes the run's cost is per-action overhead, not data,
+  * so each decision costs one Spark action: the extract counts its
+  * fetched rows on the driver, each dim compares rebuild and stored
+  * content in one pass ([[graft.ops.IncrementalOps.sameContent]]), the
+  * aircrafts FK probe runs on whichever dim will be published, the fact
+  * load decides on one `count()`, and every lake read pins its schema
+  * ([[ExtractFlights.readLake]]) so no read launches an inference job.
   */
 object DailyPipeline {
 
@@ -106,7 +114,7 @@ object DailyPipeline {
     // the aircrafts dim FK-checks against the lake the extract just fed —
     // the DAG's extract→fact edge starts binding here
     val flightsLake =
-      if (graft.ops.Fs.exists(in.lakeDir)) Some(spark.read.parquet(in.lakeDir))
+      if (graft.ops.Fs.exists(in.lakeDir)) Some(ExtractFlights.readLake(spark, in.lakeDir))
       else None
     val aircraftsRewritten = LoadDimAircrafts.run(spark, wh,
       in.aircrafts, in.manufacturers, in.types, in.airlines, flightsLake)

@@ -41,6 +41,14 @@ object ExtractFlights {
   val apiSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(Schemas.srcFlights.fields.dropRight(3))
 
+  /** The flights lake as stored, read with the schema pinned to
+    * Schemas.srcFlights: no Parquet schema-inference job per read, and
+    * the partition columns come back as the SMALLINT/TINYINT the extract
+    * writes rather than as inferred INT.
+    */
+  def readLake(spark: SparkSession, lakeDir: String): DataFrame =
+    spark.read.schema(Schemas.srcFlights).parquet(lakeDir)
+
   def derivePartitionCols(df: DataFrame, driver: String): DataFrame =
     df.withColumn("__ts", timestamp_seconds(col(driver)))
       .withColumn("flight_year", year(col("__ts")).cast(ShortType))
@@ -58,15 +66,20 @@ object ExtractFlights {
     var acc = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), Schemas.srcFlights)
 
+    // the fetched rows are already on the driver: count them there, not
+    // with Spark jobs over local relations
+    var batchSize = 0L
     directions.foreach { dir =>
       val rows = source.fetch(airportIcao, beginTs, endTs, dir)
-      val df = spark.createDataFrame(rows.asJava, apiSchema)
       val driver = partitionDriver(dir)
-      val nullCnt = df.filter(col(driver).isNull).count()
+      val driverIdx = apiSchema.fieldIndex(driver)
+      val nullCnt = rows.count(_.isNullAt(driverIdx))
       if (nullCnt > 0)
         System.err.println(
           s"[extract] WARN: $nullCnt $dir rows have NULL $driver; they land in the null partition")
-      acc = acc.unionByName(derivePartitionCols(df, driver))
+      batchSize += rows.size
+      acc = acc.unionByName(
+        derivePartitionCols(spark.createDataFrame(rows.asJava, apiSchema), driver))
     }
 
     val (y, m, d) = {
@@ -77,17 +90,19 @@ object ExtractFlights {
     // Hadoop-FS probe, not java.io.File — the lake may be hdfs://, s3a://
     // (reference: extract_flights.py:68-79)
     val lakeExists = graft.ops.Fs.exists(lakeDir)
-    val delta =
-      if (!lakeExists) acc
+    val (delta, n) =
+      if (!lakeExists) (acc, batchSize)
       else {
-        val current = spark.read.parquet(lakeDir)
+        val current = readLake(spark, lakeDir)
           .filter(col("flight_year") === y && col("flight_month") === m && col("flight_day") === d)
         // count-equality short-circuit (reference: extract_flights.py:82-84)
-        if (current.count() == acc.count()) acc.limit(0)
-        else IncrementalOps.exceptNew(acc, current)
+        if (current.count() == batchSize) (acc, 0L)
+        else {
+          val fresh = IncrementalOps.exceptNew(acc, current)
+          (fresh, fresh.count())
+        }
       }
 
-    val n = delta.count()
     if (n > 0)
       delta.write.mode("append")
         .partitionBy("flight_year", "flight_month", "flight_day")

@@ -119,6 +119,13 @@ object LoadDimAircrafts {
       .join(dim, col("icao24") === col("icao24_addr"), "left_anti")
 
   /** Returns true when the dim was (re)written.
+    *
+    * Check order: rebuild, compare with the stored dim, FK-probe the dim
+    * that will be published, and only then overwrite. When the content is
+    * unchanged the probe runs on the stored table, which the exact
+    * [[IncrementalOps.sameContent]] check has just shown equal to the
+    * rebuild; when it changed, the probe runs on the rebuild. A failed
+    * probe aborts before any write either way.
     * @param flightsLake current flights (for the FK assert); None skips
     *                    the check (first load, empty lake).
     */
@@ -127,15 +134,17 @@ object LoadDimAircrafts {
           types: DataFrame, airlines: DataFrame,
           flightsLake: Option[DataFrame]): Boolean = {
     val dim = build(aircrafts, manufacturers, types, airlines)
+    val stored = if (wh.exists(table)) Some(wh.table(spark, table)) else None
+    val unchanged = stored.filter(IncrementalOps.sameContent(dim, _))
+    val published = unchanged.getOrElse(dim)
 
     flightsLake.foreach { fl =>
-      val violations = fkViolations(fl, dim)
+      val violations = fkViolations(fl, published)
       require(violations.isEmpty,
         s"dim_aircrafts FK check failed: ${violations.count()} flight icao24s missing from dim")
     }
 
-    val changed = !wh.exists(table) ||
-      !IncrementalOps.sameContent(dim, wh.table(spark, table))
+    val changed = unchanged.isEmpty
     if (changed) wh.overwrite(table, dim)
     changed
   }

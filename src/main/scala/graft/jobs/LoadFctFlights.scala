@@ -65,7 +65,7 @@ object LoadFctFlights {
   def run(spark: SparkSession, wh: Warehouse, lakeDir: String,
           year: Int, month: Int, day: Int): Long = {
     // partition-pruned scan (reference: load_fct_flights.py:24-29)
-    val flights = spark.read.parquet(lakeDir)
+    val flights = ExtractFlights.readLake(spark, lakeDir)
       .filter(col("flight_year") === year && col("flight_month") === month
         && col("flight_day") === day)
 
@@ -90,12 +90,10 @@ object LoadFctFlights {
         .select(factCols.map(col): _*)
     val delta = IncrementalOps.exceptNew(fact, current)
 
-    // isEmpty short-circuit (reference: load_fct_flights.py:107)
-    if (delta.isEmpty) 0L
-    else {
-      val n = delta.count()
-      wh.append(table, delta, partitionBy = Seq("flight_date_dim_id"))
-      n
-    }
+    // empty-delta short-circuit (reference: load_fct_flights.py:107),
+    // one count() instead of isEmpty followed by count()
+    val n = delta.count()
+    if (n > 0) wh.append(table, delta, partitionBy = Seq("flight_date_dim_id"))
+    n
   }
 }

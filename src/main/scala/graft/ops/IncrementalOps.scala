@@ -32,13 +32,21 @@ object IncrementalOps {
     * rendition of the reference's dead object-identity comparison
     * (reference: load_dim_aircrafts.py:126, load_dim_airports.py:54,
     * always-false `==` on DataFrame objects). Used to skip dim rewrites.
+    *
+    * One Spark action: rows of `a` count +1, rows of `b` count −1, and a
+    * group-by over every column keeps the rows whose counts do not
+    * cancel. Grouping treats NULLs as equal and normalises NaN and -0.0,
+    * the same row equality EXCEPT ALL uses, so this is exact multiset
+    * equality (NULL and "" stay distinct).
     */
   def sameContent(a: DataFrame, b: DataFrame): Boolean = {
+    import org.apache.spark.sql.functions.{lit, sum}
     val ordered = a.columns.sorted.map(col).toSeq
-    val x = a.select(ordered: _*)
-    val y = b.select(ordered: _*)
-    // exceptAll both ways = multiset equality without a full sort
-    x.exceptAll(y).isEmpty && y.exceptAll(x).isEmpty
+    val tag = "__same_content_tag"
+    val x = a.select(ordered :+ lit(1L).as(tag): _*)
+    val y = b.select(ordered :+ lit(-1L).as(tag): _*)
+    x.union(y).groupBy(ordered: _*).agg(sum(col(tag)).as(tag))
+      .filter(col(tag) =!= 0L).isEmpty
   }
 
   /** Incremental aggregate maintenance: merge an existing aggregate

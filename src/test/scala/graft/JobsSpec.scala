@@ -135,6 +135,21 @@ class JobsSpec extends SparkSpec with JobFixtures {
     assert(ex.getMessage == "API down")
   }
 
+  test("readLake pins the lake schema and reads back the rows the extract wrote") {
+    val lake = tmpDir("lake6") + "/flights"
+    ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
+    val back = ExtractFlights.readLake(spark, lake)
+    // partition columns come back SMALLINT/TINYINT as written, not INT
+    assert(back.schema == Schemas.srcFlights)
+    val written = ExtractFlights.directions.map { dir =>
+      ExtractFlights.derivePartitionCols(
+        spark.createDataFrame(FixtureSource.fetch("EDDF", day, day + 86399, dir).asJava,
+          ExtractFlights.apiSchema),
+        ExtractFlights.partitionDriver(dir))
+    }.reduce(_ unionByName _)
+    assert(graft.ops.IncrementalOps.sameContent(back, written))
+  }
+
   test("cleanse order: sentinel-only rows survive as all-NULL, dropped-column-only rows don't") {
     // reference order is drop-cols -> dropna(all) -> filters -> sentinel-to-NULL
     val sentinelOnly = Row(null, "-UNKNOWN-", null, null, null, null, null, null,
@@ -158,5 +173,54 @@ class JobsSpec extends SparkSpec with JobFixtures {
       LoadDimAircrafts.run(spark, wh, aircraftsDf, manufacturersDf,
         typesDf, airlinesDf, Some(unknownFlights))
     }
+  }
+
+  test("FK violation aborts an unchanged aircrafts dim too, leaving the stored dim byte-identical") {
+    val root = tmpDir("wh6")
+    val wh = new ParquetWarehouse(root)
+    val lake = tmpDir("lake7") + "/flights"
+    ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
+    def load(): Boolean = LoadDimAircrafts.run(spark, wh, aircraftsDf, manufacturersDf,
+      typesDf, airlinesDf, Some(ExtractFlights.readLake(spark, lake)))
+    assert(load())  // first publish
+    assert(!load()) // same inputs: unchanged, the probe passes on the stored dim
+
+    def files(): Map[String, Seq[Byte]] = {
+      val dir = java.nio.file.Paths.get(root, LoadDimAircrafts.table)
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
+        .map(f => dir.relativize(f).toString ->
+          java.nio.file.Files.readAllBytes(f).toSeq).toMap
+      finally walk.close()
+    }
+    val before = files()
+    // the next day's feed brings a flight whose icao24 the dim lacks
+    val unknown = new FlightSource {
+      def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
+        if (dir == "departure") Seq(flightRow("ffffff", b + 3600, "EDDF", b + 7200, "EGLL"))
+        else Nil
+    }
+    assert(ExtractFlights.run(spark, unknown, lake, "EDDF", day + 86400, day + 2 * 86400 - 1) == 1)
+    val ex = intercept[IllegalArgumentException](load())
+    assert(ex.getMessage.contains("1 flight icao24s missing"))
+    assert(files() == before)
+  }
+
+  test("a same-date DailyPipeline replay stays within its query-execution budget") {
+    val lake = tmpDir("lake8") + "/flights"
+    val wh = new ParquetWarehouse(tmpDir("wh8"))
+    val in = DailyPipeline.Inputs(FixtureSource, lake, airports,
+      aircraftsDf, manufacturersDf, typesDf, airlinesDf)
+    val p = DailyPipeline.Params("EDDF", java.time.LocalDate.of(2024, 1, 1),
+      dimDatesStart = "2024-01-01", dimDatesEnd = "2024-01-31", retryDelayMs = 0L)
+    DailyPipeline.run(spark, wh, in, p)
+    // one action per decision: extract count-equality, airports compare,
+    // dates generator count + delta count, aircrafts compare + FK probe,
+    // fact delta count
+    val budget = 7
+    val n = queryExecutions {
+      assert(DailyPipeline.run(spark, wh, in, p) == DailyPipeline.Report(0L, false, 0L, false, 0L))
+    }
+    assert(n <= budget, s"a replay ran $n query executions, budget $budget")
   }
 }

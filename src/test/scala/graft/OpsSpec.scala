@@ -442,6 +442,26 @@ class OpsSpec extends SparkSpec {
     val c = Seq(("x", 1), ("y", 2)).toDF("v", "id") // one dup missing
     assert(IncrementalOps.sameContent(a, b))
     assert(!IncrementalOps.sameContent(a, c))
+    // a strict sub-multiset is unequal in both directions
+    assert(!IncrementalOps.sameContent(c, a))
+    val d = Seq((1, "x")).toDF("id", "v") // drops a distinct row too
+    assert(!IncrementalOps.sameContent(a, d) && !IncrementalOps.sameContent(d, a))
+  }
+
+  test("sameContent: NULLs compare equal to NULLs, never to \"\"; one query execution") {
+    val n = Seq[(Integer, String)]((null, null), (null, null), (1, null), (2, "")).toDF("id", "v")
+    val m = Seq[(String, Integer)]((null, 1), ("", 2), (null, null), (null, null)).toDF("v", "id")
+    assert(IncrementalOps.sameContent(n, m) && IncrementalOps.sameContent(m, n))
+    // NULL against "" in the same position: unequal either way round
+    val e = Seq[(Integer, String)]((null, null), (null, null), (1, ""), (2, "")).toDF("id", "v")
+    assert(!IncrementalOps.sameContent(n, e) && !IncrementalOps.sameContent(e, n))
+    // NaN and -0.0 group like EXCEPT ALL: NaN = NaN, -0.0 = 0.0
+    val f1 = Seq(Double.NaN, -0.0).toDF("x")
+    val f2 = Seq(0.0, Double.NaN).toDF("x")
+    assert(IncrementalOps.sameContent(f1, f2))
+    // the decision is one Spark action, whichever way it goes
+    assert(queryExecutions(assert(IncrementalOps.sameContent(n, m))) == 1)
+    assert(queryExecutions(assert(!IncrementalOps.sameContent(n, e))) == 1)
   }
 
   test("surrogate keys are dense 1..n in order; scalable variant agrees") {
