@@ -1,5 +1,6 @@
 package graft.jobs
 
+import scala.util.{Failure, Success, Try}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The composed daily run — the Spark-native rendition of the
@@ -10,16 +11,30 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   extract_flights                  >>                    load_fct_flights
   * }}}
   *
-  * One driver invocation per logical date, tasks in dependency order.
+  * One driver invocation per logical date, run as the DAG declares it:
+  * the extract, dim_airports and dim_dates each run on a thread of the
+  * run's own while dim_aircrafts runs on the calling thread, and the fact
+  * load runs last, once every branch has succeeded. The aircrafts dim
+  * rebuilds and compares while the extract runs; only its FK probe waits
+  * for the extract, because it reads the lake the extract feeds — the one
+  * edge graft adds to the reference DAG. The run joins every branch
+  * before it returns or throws, so no write is in flight once it exits,
+  * and then rethrows the first failure in DAG order (extract, airports,
+  * dates, aircrafts) as thrown. An interrupt of the calling thread does
+  * not cut the joins short: they wait for the branches, then set the
+  * thread's interrupt flag again. A failed extract keeps the
+  * aircrafts dim and the fact table unwritten, while airports and dates
+  * may still publish, as load_dim_tables does in the reference.
+  *
   * Airflow task semantics map to plain library behavior:
   *
   *   - '''skip-if-done''': every task is idempotent against its own
-  *     store (the extract diffs against the lake partition, the dims
-  *     skip unchanged content, dim_dates appends only missing days, the
-  *     fact load replays to zero rows) — re-invoking the whole pipeline
-  *     for the same date writes nothing anywhere, which is exactly the
-  *     reference's AirflowSkipException / count-short-circuit behavior
-  *     without a scheduler in the loop.
+  *     store (the extract diffs against the lake partitions its batch
+  *     touches, the dims skip unchanged content, dim_dates appends only
+  *     missing days, the fact load replays to zero rows) — re-invoking
+  *     the whole pipeline for the same date writes nothing anywhere,
+  *     which is exactly the reference's AirflowSkipException /
+  *     count-short-circuit behavior without a scheduler in the loop.
   *   - '''retries''': the reference puts retries=5, 10 s apart, on the
   *     one task with an external dependency — the API extract
   *     (flights_daily.py:57-58). [[retry]] wraps exactly that seam;
@@ -36,6 +51,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * aircrafts FK probe runs on whichever dim will be published, the fact
   * load decides on one `count()`, and every lake read pins its schema
   * ([[ExtractFlights.readLake]]) so no read launches an inference job.
+  * For the same reason the branches overlap: one branch's driver-side
+  * planning and job launches fill the time another waits on its jobs.
   */
 object DailyPipeline {
 
@@ -95,6 +112,36 @@ object DailyPipeline {
     sys.error("unreachable")
   }
 
+  /** Catches every throwable, fatal ones too: a branch's outcome must
+    * reach the join whatever it is.
+    */
+  private def outcomeOf[T](f: => T): Try[T] =
+    try Success(f) catch { case t: Throwable => Failure(t) }
+
+  /** One DAG branch on its own daemon thread, `graft-daily-<name>`. The
+    * thread is created by the caller, so it inherits the caller's Spark
+    * local properties (job group, description, scheduler pool).
+    */
+  private final class Branch[T](name: String)(f: => T) {
+    @volatile private var outcome: Try[T] = _
+    private val thread = new Thread(() => outcome = outcomeOf(f), s"graft-daily-$name")
+    thread.setDaemon(true)
+    thread.start()
+
+    /** Waits for the branch to finish; joining again returns at once. An
+      * interrupt does not cut the wait short: it is kept for the caller
+      * and raised again once the branch is done.
+      */
+    def join(): Try[T] = {
+      var interrupted = false
+      while (thread.isAlive)
+        try thread.join()
+        catch { case _: InterruptedException => interrupted = true }
+      if (interrupted) Thread.currentThread().interrupt()
+      outcome
+    }
+  }
+
   def run(spark: SparkSession, wh: Warehouse, in: Inputs, p: Params): Report = {
     // DDL before any dim load (the DAG's create_hive_tbls edge)
     wh match {
@@ -103,21 +150,29 @@ object DailyPipeline {
     }
     val begin = p.dataDate.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
     val end = begin + 86399
-    // the extract branch — the only retried task (external API seam)
-    val extractedRows = retry(p.extractRetries, p.retryDelayMs) {
+    // the extract branch — the only retried task (external API seam) —
+    // beside the dim task group
+    val extract = new Branch("extract")(retry(p.extractRetries, p.retryDelayMs) {
       ExtractFlights.run(spark, in.source, in.lakeDir, p.airportIcao, begin, end)
+    })
+    val airports = new Branch("dim-airports")(LoadDimAirports.run(spark, wh, in.airports))
+    val dates = new Branch("dim-dates")(LoadDimDates.run(spark, wh, p.dimDatesStart, p.dimDatesEnd))
+    val aircrafts = outcomeOf {
+      LoadDimAircrafts.run(spark, wh,
+        in.aircrafts, in.manufacturers, in.types, in.airlines, {
+          // evaluated after the aircrafts compare: the FK probe reads the
+          // lake the extract feeds, so it waits for the extract
+          extract.join().get
+          if (graft.ops.Fs.exists(in.lakeDir)) Some(ExtractFlights.readLake(spark, in.lakeDir))
+          else None
+        })
     }
-    // the dim task group (parallel in the DAG; sequential here — same
-    // cluster either way, Spark schedules within each job)
-    val airportsRewritten = LoadDimAirports.run(spark, wh, in.airports)
-    val datesAdded = LoadDimDates.run(spark, wh, p.dimDatesStart, p.dimDatesEnd)
-    // the aircrafts dim FK-checks against the lake the extract just fed —
-    // the DAG's extract→fact edge starts binding here
-    val flightsLake =
-      if (graft.ops.Fs.exists(in.lakeDir)) Some(ExtractFlights.readLake(spark, in.lakeDir))
-      else None
-    val aircraftsRewritten = LoadDimAircrafts.run(spark, wh,
-      in.aircrafts, in.manufacturers, in.types, in.airlines, flightsLake)
+    Seq(extract, airports, dates).foreach(_.join())
+    // every branch has finished: rethrow the first failure in DAG order
+    val extractedRows = extract.join().get
+    val airportsRewritten = airports.join().get
+    val datesAdded = dates.join().get
+    val aircraftsRewritten = aircrafts.get
     // fact last: depends on BOTH branches (dims for the FK joins, the
     // extract for the day's partition)
     val factRows = LoadFctFlights.run(spark, wh, in.lakeDir,

@@ -1,6 +1,7 @@
 package graft.jobs
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{ByteType, ShortType}
 import graft.ops.IncrementalOps
@@ -23,8 +24,22 @@ trait FlightSource {
   *
   * Pipeline: per direction fetch → explicit-schema DataFrame → NULL
   * check on the partition-driving column → derive flight_ts + y/m/d →
-  * unionByName accumulate → diff against the existing partition →
-  * append only the delta. Re-running a day appends zero rows.
+  * unionByName accumulate → diff against the lake partitions the batch
+  * touches → append only the delta. Re-running a day appends zero rows.
+  *
+  * Diff scope: the partitions are derived from each row's own driver
+  * timestamp, so a batch may touch more than the run date — the Hive
+  * default partition for NULL-driver rows, or a neighbouring day. The
+  * run works out that set on the driver from the fetched rows and the
+  * EXCEPT DISTINCT reads exactly those lake partitions, so every row of
+  * a replayed batch meets its stored copy.
+  *
+  * The reference's count-equality short-circuit (extract_flights.py:82-84)
+  * is left out: a partition can hold other days' rows (the NULL
+  * partition always does), so an equal count proves nothing about which
+  * rows are stored and would skip new ones silently. The EXCEPT's own
+  * count decides instead — one Spark action on a replay, as the count
+  * was, and one rather than two on a new day.
   */
 object ExtractFlights {
 
@@ -56,6 +71,16 @@ object ExtractFlights {
       .withColumn("flight_day", dayofmonth(col("__ts")).cast(ByteType))
       .drop("__ts")
 
+  /** Selects the lake rows in `parts`, each (year, month, day); None is
+    * the Hive default partition that rows with a NULL driver land in.
+    */
+  private def inPartitions(parts: Iterable[Option[(Int, Int, Int)]]): Column =
+    parts.map {
+      case Some((y, m, d)) =>
+        col("flight_year") === y && col("flight_month") === m && col("flight_day") === d
+      case None => col("flight_year").isNull
+    }.reduceOption(_ || _).getOrElse(lit(false))
+
   /** Runs the extract; returns the number of rows appended. */
   def run(spark: SparkSession, source: FlightSource, lakeDir: String,
           airportIcao: String, beginTs: Long, endTs: Long): Long = {
@@ -66,10 +91,12 @@ object ExtractFlights {
     var acc = spark.createDataFrame(
       java.util.Collections.emptyList[Row](), Schemas.srcFlights)
 
-    // the fetched rows are already on the driver: count them there, not
-    // with Spark jobs over local relations
+    // the fetched rows are already on the driver: count them and find the
+    // partitions they touch there, in the session time zone
+    // derivePartitionCols uses
+    val zone = DateTimeUtils.getZoneId(spark.sessionState.conf.sessionLocalTimeZone)
     var batchSize = 0L
-    directions.foreach { dir =>
+    val batchParts = directions.flatMap { dir =>
       val rows = source.fetch(airportIcao, beginTs, endTs, dir)
       val driver = partitionDriver(dir)
       val driverIdx = apiSchema.fieldIndex(driver)
@@ -80,12 +107,14 @@ object ExtractFlights {
       batchSize += rows.size
       acc = acc.unionByName(
         derivePartitionCols(spark.createDataFrame(rows.asJava, apiSchema), driver))
-    }
-
-    val (y, m, d) = {
-      val t = java.time.Instant.ofEpochSecond(beginTs).atZone(java.time.ZoneOffset.UTC)
-      (t.getYear, t.getMonthValue, t.getDayOfMonth)
-    }
+      rows.map { r =>
+        if (r.isNullAt(driverIdx)) None
+        else {
+          val t = java.time.Instant.ofEpochSecond(r.getLong(driverIdx)).atZone(zone)
+          Some((t.getYear, t.getMonthValue, t.getDayOfMonth))
+        }
+      }
+    }.toSet
 
     // Hadoop-FS probe, not java.io.File — the lake may be hdfs://, s3a://
     // (reference: extract_flights.py:68-79)
@@ -93,14 +122,9 @@ object ExtractFlights {
     val (delta, n) =
       if (!lakeExists) (acc, batchSize)
       else {
-        val current = readLake(spark, lakeDir)
-          .filter(col("flight_year") === y && col("flight_month") === m && col("flight_day") === d)
-        // count-equality short-circuit (reference: extract_flights.py:82-84)
-        if (current.count() == batchSize) (acc, 0L)
-        else {
-          val fresh = IncrementalOps.exceptNew(acc, current)
-          (fresh, fresh.count())
-        }
+        val fresh = IncrementalOps.exceptNew(acc,
+          readLake(spark, lakeDir).filter(inPartitions(batchParts)))
+        (fresh, fresh.count())
       }
 
     if (n > 0)

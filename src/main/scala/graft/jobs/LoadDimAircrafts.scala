@@ -127,18 +127,21 @@ object LoadDimAircrafts {
     * rebuild; when it changed, the probe runs on the rebuild. A failed
     * probe aborts before any write either way.
     * @param flightsLake current flights (for the FK assert); None skips
-    *                    the check (first load, empty lake).
+    *                    the check (first load, empty lake). Taken by name
+    *                    and evaluated once, only after the compare, so a
+    *                    caller can overlap the rebuild and compare with
+    *                    the extract that feeds the lake.
     */
   def run(spark: SparkSession, wh: Warehouse,
           aircrafts: DataFrame, manufacturers: DataFrame,
           types: DataFrame, airlines: DataFrame,
-          flightsLake: Option[DataFrame]): Boolean = {
+          flightsLake: => Option[DataFrame]): Boolean = {
     val dim = build(aircrafts, manufacturers, types, airlines)
     val stored = if (wh.exists(table)) Some(wh.table(spark, table)) else None
     val unchanged = stored.filter(IncrementalOps.sameContent(dim, _))
     val published = unchanged.getOrElse(dim)
 
-    flightsLake.foreach { fl =>
+    flightsLake.foreach { fl => // the one evaluation of the by-name lake
       val violations = fkViolations(fl, published)
       require(violations.isEmpty,
         s"dim_aircrafts FK check failed: ${violations.count()} flight icao24s missing from dim")

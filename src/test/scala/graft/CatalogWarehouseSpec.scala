@@ -104,4 +104,8 @@ class CatalogWarehouseSpec extends SparkSpec with JobFixtures {
       .count().collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
     assert(counts == Map(20240101 -> 3L, 20240102 -> 1L))
   }
+
+  test("DailyPipeline's concurrent branches match the sequential schedule (CatalogWarehouse)") {
+    assertSameAsSequential(freshWarehouse("graft_whconc"), freshWarehouse("graft_whseq"))
+  }
 }

@@ -38,6 +38,18 @@ trait JobFixtures { self: SparkSpec =>
       if (dir == "departure") departures else arrivals
   }
 
+  /** The fixture flights moved to whatever day the run asks for, so
+    * consecutive days each bring their own rows.
+    */
+  object DaySource extends FlightSource {
+    def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
+      FixtureSource.fetch(a, b, e, dir).map { r =>
+        def shifted(i: Int): java.lang.Long =
+          if (r.isNullAt(i)) null else java.lang.Long.valueOf(r.getLong(i) + b - day)
+        Row.fromSeq(r.toSeq.updated(1, shifted(1)).updated(3, shifted(3)))
+      }
+  }
+
   val airports = Seq(
     LoadDimAirports.RawAirport("Frankfurt Main", "FRA", "EDDF", "Germany", 50.03, 8.57, 364),
     LoadDimAirports.RawAirport("Heathrow", "LHR", "EGLL", "United Kingdom", 51, 0, "-1"), // int lat + alt sentinel
@@ -85,5 +97,67 @@ trait JobFixtures { self: SparkSpec =>
       Row("NoIcao Air", "ZZ", null),
       Row("NoCode Air", null, "NCA"))
     spark.createDataFrame(rows.asJava, Schemas.srcAirlines)
+  }
+
+  def dailyInputs(source: FlightSource, lake: String): DailyPipeline.Inputs =
+    DailyPipeline.Inputs(source, lake, airports,
+      aircraftsDf, manufacturersDf, typesDf, airlinesDf)
+
+  def dailyParams(date: java.time.LocalDate): DailyPipeline.Params =
+    DailyPipeline.Params("EDDF", date,
+      dimDatesStart = "2024-01-01", dimDatesEnd = "2024-01-31", retryDelayMs = 0L)
+
+  /** `DailyPipeline.run`'s five tasks called one by one in the DAG's
+    * order: the sequential schedule the concurrent run must match.
+    */
+  def sequentialRun(wh: Warehouse, in: DailyPipeline.Inputs,
+                    p: DailyPipeline.Params): DailyPipeline.Report = {
+    wh match {
+      case cw: CatalogWarehouse => cw.createReferenceTables()
+      case _                    => ()
+    }
+    val begin = p.dataDate.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
+    val extracted = ExtractFlights.run(spark, in.source, in.lakeDir, p.airportIcao,
+      begin, begin + 86399)
+    val airportsRewritten = LoadDimAirports.run(spark, wh, in.airports)
+    val datesAdded = LoadDimDates.run(spark, wh, p.dimDatesStart, p.dimDatesEnd)
+    val lake =
+      if (graft.ops.Fs.exists(in.lakeDir)) Some(ExtractFlights.readLake(spark, in.lakeDir))
+      else None
+    val aircraftsRewritten = LoadDimAircrafts.run(spark, wh,
+      in.aircrafts, in.manufacturers, in.types, in.airlines, lake)
+    val factRows = LoadFctFlights.run(spark, wh, in.lakeDir,
+      p.dataDate.getYear, p.dataDate.getMonthValue, p.dataDate.getDayOfMonth)
+    DailyPipeline.Report(extracted, airportsRewritten, datesAdded, aircraftsRewritten, factRows)
+  }
+
+  /** Day 1, its replay and day 2 through `DailyPipeline.run` into
+    * `concurrent`, and through [[sequentialRun]] into `sequential`: the
+    * Reports, the four tables and the lake must all be equal.
+    */
+  def assertSameAsSequential(concurrent: Warehouse, sequential: Warehouse): Unit = {
+    val lakes = Seq(concurrent, sequential).map(_ => tmpDir("sched-lake") + "/flights")
+    val day1 = java.time.LocalDate.of(2024, 1, 1)
+    for ((date, step) <- Seq(day1 -> "day 1", day1 -> "replay", day1.plusDays(1) -> "day 2")) {
+      val p = dailyParams(date)
+      val got = DailyPipeline.run(spark, concurrent, dailyInputs(DaySource, lakes(0)), p)
+      val want = sequentialRun(sequential, dailyInputs(DaySource, lakes(1)), p)
+      assert(got == want, s"$step: concurrent $got, sequential $want")
+    }
+    Seq("dim_airports", "dim_dates", "dim_aircrafts", "fct_flights").foreach { t =>
+      assert(graft.ops.IncrementalOps.sameContent(
+        concurrent.table(spark, t), sequential.table(spark, t)), s"$t differs")
+    }
+    assert(graft.ops.IncrementalOps.sameContent(
+      ExtractFlights.readLake(spark, lakes(0)), ExtractFlights.readLake(spark, lakes(1))),
+      "lake differs")
+  }
+
+  /** Threads of `DailyPipeline.run`'s branches that are still alive. */
+  def liveDailyThreads(): Set[String] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-daily-"))
+      .map(_.getName).toSet
   }
 }

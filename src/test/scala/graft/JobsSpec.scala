@@ -18,7 +18,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
     val n1 = ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
     assert(n1 == 5) // first write keeps the in-batch duplicate
     val n2 = ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
-    assert(n2 == 0) // count-equality short-circuit
+    assert(n2 == 0) // every row meets its stored copy
     val stored = spark.read.parquet(lake)
     assert(stored.count() == 5)
     // partition layout is hive-style y/m/d
@@ -127,12 +127,19 @@ class JobsSpec extends SparkSpec with JobFixtures {
       def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
         throw new RuntimeException("API down")
     }
+    val down = new ParquetWarehouse(tmpDir("wh5"))
     val ex = intercept[RuntimeException] {
-      DailyPipeline.run(spark, new ParquetWarehouse(tmpDir("wh5")),
+      DailyPipeline.run(spark, down,
         in.copy(source = alwaysDown, lakeDir = tmpDir("lake5") + "/flights"),
         p.copy(extractRetries = 2))
     }
-    assert(ex.getMessage == "API down")
+    // unwrapped, and only once every branch has joined: the aircrafts dim
+    // and the fact stay unwritten, while the dim group, which does not
+    // depend on the extract (load_dim_tables), still publishes
+    assert(ex.getClass == classOf[RuntimeException] && ex.getMessage == "API down")
+    assert(!down.exists(LoadDimAircrafts.table) && !down.exists(LoadFctFlights.table))
+    assert(down.exists(LoadDimAirports.table) && down.exists(LoadDimDates.table))
+    assert(liveDailyThreads().isEmpty)
   }
 
   test("readLake pins the lake schema and reads back the rows the extract wrote") {
@@ -214,7 +221,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
     val p = DailyPipeline.Params("EDDF", java.time.LocalDate.of(2024, 1, 1),
       dimDatesStart = "2024-01-01", dimDatesEnd = "2024-01-31", retryDelayMs = 0L)
     DailyPipeline.run(spark, wh, in, p)
-    // one action per decision: extract count-equality, airports compare,
+    // one action per decision: extract EXCEPT count, airports compare,
     // dates generator count + delta count, aircrafts compare + FK probe,
     // fact delta count
     val budget = 7
@@ -222,5 +229,141 @@ class JobsSpec extends SparkSpec with JobFixtures {
       assert(DailyPipeline.run(spark, wh, in, p) == DailyPipeline.Report(0L, false, 0L, false, 0L))
     }
     assert(n <= budget, s"a replay ran $n query executions, budget $budget")
+  }
+
+  private def source(deps: Seq[Row], arrs: Seq[Row]): FlightSource = new FlightSource {
+    def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
+      if (dir == "departure") deps else arrs
+  }
+
+  test("an extract replay diffs against every partition its batch touches: NULL driver, next day") {
+    val lake = tmpDir("lake9") + "/flights"
+    val spill = source(
+      Seq(flightRow("3c6444", day + 3600, "EDDF", day + 7200, "EGLL"),
+        // first seen just past the window's last midnight: the next day's partition
+        flightRow("abc123", day + 86400 + 600, "EDDF", day + 86400 + 4000, "LFPG")),
+      Seq(flightRow("abc123", day + 100, "EGLL", null, "EDDF"))) // NULL lastSeen
+    assert(ExtractFlights.run(spark, spill, lake, "EDDF", day, day + 86399) == 3)
+    assert(ExtractFlights.run(spark, spill, lake, "EDDF", day, day + 86399) == 0)
+    assert(ExtractFlights.readLake(spark, lake).count() == 3)
+  }
+
+  test("an extract appends new rows even when the touched partitions hold as many rows") {
+    def nullArrival(icao24: String) = flightRow(icao24, day + 100, "EGLL", null, "EDDF")
+    val day2 = day + 86400
+    // the NULL partition holds every day's NULL-driver rows: day 2's two
+    // new ones match day 1's two by count only
+    val lake = tmpDir("lake10") + "/flights"
+    assert(ExtractFlights.run(spark, source(Nil, Seq(nullArrival("aaa111"), nullArrival("bbb222"))),
+      lake, "EDDF", day, day + 86399) == 2)
+    assert(ExtractFlights.run(spark, source(Nil, Seq(nullArrival("ccc333"), nullArrival("ddd444"))),
+      lake, "EDDF", day2, day2 + 86399) == 2)
+    assert(ExtractFlights.readLake(spark, lake).count() == 4)
+    // two rows, as many as the touched partitions hold in total — but the
+    // day-2 departure is new, and only the NULL-driver arrival is stored
+    val lake2 = tmpDir("lake11") + "/flights"
+    assert(ExtractFlights.run(spark, source(Nil, Seq(nullArrival("aaa111"))),
+      lake2, "EDDF", day, day + 86399) == 1)
+    val next = source(Seq(flightRow("3c6444", day2 + 3600, "EDDF", day2 + 7200, "EGLL")),
+      Seq(nullArrival("aaa111")))
+    assert(ExtractFlights.run(spark, next, lake2, "EDDF", day2, day2 + 86399) == 1)
+    assert(ExtractFlights.readLake(spark, lake2).count() == 2)
+  }
+
+  test("DailyPipeline's concurrent branches match the sequential schedule (ParquetWarehouse)") {
+    assertSameAsSequential(
+      new ParquetWarehouse(tmpDir("wh-conc")), new ParquetWarehouse(tmpDir("wh-seq")))
+  }
+
+  test("an FK failure surfaces after the other branches finished; no branch thread outlives a run") {
+    val wh = new ParquetWarehouse(tmpDir("wh10"))
+    val lake = tmpDir("lake12") + "/flights"
+    val day1 = java.time.LocalDate.of(2024, 1, 1)
+    assert(DailyPipeline.run(spark, wh, dailyInputs(DaySource, lake), dailyParams(day1)).factRows == 4)
+    assert(liveDailyThreads().isEmpty)
+
+    val unknown = new FlightSource {
+      def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
+        if (dir == "departure") Seq(flightRow("ffffff", b + 3600, "EDDF", b + 7200, "EGLL"))
+        else Nil
+    }
+    // day 2 also widens the calendar, and the dates branch's append lands
+    // well after the aircrafts probe has failed
+    val slowDates = new Warehouse {
+      def exists(t: String): Boolean = wh.exists(t)
+      def table(s: org.apache.spark.sql.SparkSession, n: String): DataFrame = wh.table(s, n)
+      def overwrite(n: String, df: DataFrame, parts: Seq[String]): Unit = wh.overwrite(n, df, parts)
+      def append(n: String, df: DataFrame, parts: Seq[String]): Unit = {
+        if (n == LoadDimDates.table) Thread.sleep(3000)
+        wh.append(n, df, parts)
+      }
+    }
+    val ex = intercept[IllegalArgumentException] {
+      DailyPipeline.run(spark, slowDates, dailyInputs(unknown, lake),
+        dailyParams(day1.plusDays(1)).copy(dimDatesEnd = "2024-02-29"))
+    }
+    assert(ex.getMessage.contains("1 flight icao24s missing"))
+    assert(wh.table(spark, LoadDimDates.table).count() == 31 + 29)
+    assert(ExtractFlights.readLake(spark, lake).filter(col("icao24") === "ffffff").count() == 1)
+    assert(wh.table(spark, LoadFctFlights.table)
+      .filter(col("flight_date_dim_id") === 20240102).count() == 0)
+    assert(liveDailyThreads().isEmpty)
+  }
+
+  test("every job of a DailyPipeline run carries the caller's job group") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[Option[String]]
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
+    }
+    Bench.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    sc.setJobGroup("g", "daily run")
+    try DailyPipeline.run(spark, new ParquetWarehouse(tmpDir("wh11")),
+      dailyInputs(DaySource, tmpDir("lake13") + "/flights"),
+      dailyParams(java.time.LocalDate.of(2024, 1, 1)))
+    finally {
+      sc.clearJobGroup()
+      Bench.drainListenerBus(sc)
+      sc.removeSparkListener(listener)
+    }
+    val seen = groups.asScala.toSeq
+    assert(seen.nonEmpty)
+    assert(seen.forall(_.contains("g")), s"jobs outside group g: ${seen.filterNot(_.contains("g"))}")
+  }
+
+  test("an interrupted DailyPipeline run still waits for every branch before it exits") {
+    val release = new java.util.concurrent.CountDownLatch(1)
+    val held = new FlightSource {
+      def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] = {
+        release.await()
+        DaySource.fetch(a, b, e, dir)
+      }
+    }
+    @volatile var aliveAtExit: Option[Set[String]] = None
+    val runner = new Thread(() =>
+      try DailyPipeline.run(spark, new ParquetWarehouse(tmpDir("wh12")),
+        dailyInputs(held, tmpDir("lake14") + "/flights"),
+        dailyParams(java.time.LocalDate.of(2024, 1, 1)))
+      catch { case _: Throwable => () } // whatever the interrupt makes it throw
+      finally aliveAtExit = Some(liveDailyThreads()),
+      "daily-runner")
+    runner.start()
+    try {
+      // the aircrafts FK probe waits for the held extract on the calling thread
+      def joining = runner.getStackTrace.exists(f =>
+        f.getClassName == "java.lang.Thread" && f.getMethodName == "join")
+      val deadline = System.nanoTime() + 120L * 1000 * 1000 * 1000
+      while (!joining && runner.isAlive && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(joining)
+      // interrupt every join the run reaches while the extract is held
+      for (_ <- 1 to 20) { runner.interrupt(); Thread.sleep(50) }
+      assert(runner.isAlive, "the run exited while its extract branch was still running")
+    } finally release.countDown()
+    runner.join(120000)
+    assert(!runner.isAlive)
+    assert(aliveAtExit.contains(Set.empty[String]), s"branch threads alive at exit: $aliveAtExit")
   }
 }
