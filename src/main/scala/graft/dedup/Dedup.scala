@@ -122,11 +122,7 @@ object Dedup {
                         k: Int, tau: Double,
                         probePred: Column => Column,
                         maxDf: Option[Long] = None): DataFrame = {
-    // tokenize+shingle+hash is the flow's CPU bulk; spread a
-    // single-split corpus across the cores before it (see Fanout)
-    val base = graft.ops.Fanout.spread(
-      docs.select(col(idCol).as("doc_id"), col(textCol)), col("doc_id"))
-    val shAll = base.select(col("doc_id"),
+    val shAll = docs.select(col(idCol).as("doc_id"),
       explode(array_distinct(TextAnalysis.shingleHashes(col(textCol), k))).as("hs"))
     // the (filtered) shingle relation feeds THREE subplan edges — the
     // sizes aggregation and both sides of the self-join — and Spark
@@ -257,12 +253,8 @@ object Dedup {
     */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
                         k: Int, n: Int): DataFrame = {
-    // same single-split fan-out as jaccardPairsExact: the shingle+hash
-    // map is the signature build's CPU bulk
-    val exploded = graft.ops.Fanout.spread(
-        docs.select(col(idCol).as("doc_id"), col(textCol)), col("doc_id"))
-      .select(col("doc_id"),
-        explode(array_distinct(TextAnalysis.shingleHashes(col(textCol), k))).as("h"))
+    val exploded = docs.select(col(idCol).as("doc_id"),
+      explode(array_distinct(TextAnalysis.shingleHashes(col(textCol), k))).as("h"))
     val minCols = (0 until n).map(i => min(xxhash64(lit(i), col("h"))).as(s"__m$i"))
     exploded
       .groupBy(col("doc_id"))

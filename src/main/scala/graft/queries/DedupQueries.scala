@@ -1443,9 +1443,7 @@ object DedupQueries {
       // distinct-gram-sized cache. Identical pair counts: a pair
       // (a < b, both containing g) is emitted exactly once per gram
       // either way.
-      val bySh = graft.ops.Caching.cachedOnce(graft.ops.Fanout.spread(
-          Tables.documents(s, d).select(col("doc_id"), col("source"), col("text")),
-          col("doc_id"))
+      val bySh = graft.ops.Caching.cachedOnce(Tables.documents(s, d)
         .select(col("source"), explode(TextAnalysis.shingles(col("text"), 3)).as("g"))
         .groupBy(col("g")).agg(array_sort(collect_set(col("source"))).as("ss")))
       val sz = bySh.select(explode(col("ss")).as("source"))

@@ -1799,10 +1799,9 @@ object ParityQueries {
       SELECT 2 AS version, (SELECT count(*) FROM v2) AS n_rows
       ORDER BY version"""))
 
-  /** §2.9-ext: DATA-COLUMN FILE SKIPPING on a sink table — the pruning
-    * a Parquet lake reads from row-group footers, recovered for the
-    * text layout via the per-file min/max manifests the write side
-    * publishes (graft.sources.SinkStats). Three appends land orders in
+  /** §2.9-ext: DATA-COLUMN FILE SKIPPING on a sink table — whole files
+    * skipped before any footer is opened, via the per-file min/max
+    * manifests the write side publishes (graft.sources.SinkStats). Three appends land orders in
     * DISJOINT total-price bands (three files per partition, each with
     * a tight recorded range); the read filters `o_totalprice > 300k`,
     * which the scan consumes as a file-skip (PartitionedSinkScanBuilder
@@ -1980,14 +1979,6 @@ object ParityQueries {
           col("o_orderstatus"), col("o_orderpriority"))
       band(0, 100000)
         .writeTo("graft_dyn.del_orders")
-        // pin the parquet data-file format the COW rewrite's vectorized
-        // scans rely on. NOTE (optimization r19): the catalog has
-        // defaulted NEW tables to parquet since the r18 build wave, so
-        // this property is belt-and-braces, not a behavior change — the
-        // r18 round's claimed ±% for adding it (and the r18 verdict's
-        // suspected regression from it) were both noise between
-        // behaviorally identical builds.
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       band(100000, 200000).writeTo("graft_dyn.del_orders").append()
       band(200000, Double.MaxValue).writeTo("graft_dyn.del_orders").append()
@@ -2237,9 +2228,6 @@ object ParityQueries {
       band(0, 100000)
         .writeTo("graft_dyn.delm_orders")
         .tableProperty("graft.deleteMode", "mor")
-        // parquet pin — a no-op under the catalog's parquet default for
-        // new tables; see q_dsv2_delete's note (optimization r19)
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       band(100000, 200000).writeTo("graft_dyn.delm_orders").append()
       band(200000, Double.MaxValue).writeTo("graft_dyn.delm_orders").append()
@@ -2362,8 +2350,8 @@ object ParityQueries {
     * readers resolve by field id and decode-cast old files, so the
     * aggregate spans both generations with no rewrite. A growing
     * table's int key overflowing into long is the first widening a
-    * real lake hits; narrows and TSV tables keep rejecting loudly
-    * (spec-pinned).
+    * real lake hits; narrows and partition columns keep rejecting
+    * loudly (spec-pinned).
     */
   val qDsv2Widen = Q(
     "q_dsv2_widen",
@@ -2417,7 +2405,7 @@ object ParityQueries {
     * write UTF-8 renderings of comments as BLOBs, read back length
     * and per-priority totals. Stats/bloom manifests never record the
     * binary column (skipping bytes by min/max is meaningless —
-    * spec-pinned), TSV tables reject binary at DDL time.
+    * spec-pinned), and a binary column can never partition.
     */
   val qDsv2Binary = Q(
     "q_dsv2_binary",
@@ -2519,9 +2507,6 @@ object ParityQueries {
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderstatus"), col("o_orderpriority"))
         .writeTo("graft_dyn.dpp_orders")
-        // vectorized parquet decode for the post-DPP fact scan — same
-        // result as the TSV default (optimization r18)
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       // parquet-backed dim with a selective predicate (a local
       // relation's filter would constant-fold away before the DPP
@@ -2575,7 +2560,6 @@ object ParityQueries {
       // the order — existing data reclusters in ONE maintenance pass
       residue(0)
         .writeTo("graft_dyn.clus_orders")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       residue(1).writeTo("graft_dyn.clus_orders").append()
       residue(2).writeTo("graft_dyn.clus_orders").append()
@@ -2622,7 +2606,6 @@ object ParityQueries {
             pmod(col("o_orderkey"), lit(11))).as("res"),
           col("o_orderpriority"))
         .writeTo("graft_dyn.nest_orders")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       s.table("graft_dyn.nest_orders")
         .groupBy(col("o_orderpriority"))
@@ -2667,13 +2650,11 @@ object ParityQueries {
         .select(col("o_orderkey"), col("o_totalprice"),
           col("o_orderpriority"))
         .writeTo("graft_dyn.spj_facts")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("o_orderpriority")).create()
       ord(s, d)
         .select(col("o_orderkey").as("r_orderkey"), col("o_orderstatus"),
           col("o_orderpriority").as("r_prio"))
         .writeTo("graft_dyn.spj_status")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("r_prio")).create()
       val l = s.table("graft_dyn.spj_facts")
       val r = s.table("graft_dyn.spj_status")

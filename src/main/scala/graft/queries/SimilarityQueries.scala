@@ -452,7 +452,6 @@ object SimilarityQueries {
       s.sql("DROP TABLE IF EXISTS graft_sim.embed_corpus")
       Tables.embeddings(s, d)
         .writeTo("graft_sim.embed_corpus")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("label")).create()
       val corpus = s.table("graft_sim.embed_corpus")
       val probes = corpus.orderBy(col("vec_id")).limit(64)
@@ -508,7 +507,6 @@ object SimilarityQueries {
       emb.withColumn("cell",
           Similarity.nearestCentroid(col("embedding"), cents))
         .writeTo("graft_sim.ivf_corpus")
-        .tableProperty("graft.format", "parquet")
         .partitionedBy(col("cell")).create()
       val p = probes(s, d)
       val ann = Similarity.ivfLayoutTopK(s.table("graft_sim.ivf_corpus"),

@@ -683,9 +683,7 @@ object TextQueries {
       // persisted: the bigram relation feeds the LM build AND the
       // final join-back, and the LM dimension feeds cx AND pm — as
       // defs the corpus tokenize+explode would execute three times
-      val docBigrams = graft.ops.Caching.cachedOnce(graft.ops.Fanout.spread(
-          Tables.documents(s, d).select(col("doc_id"), col("text")),
-          col("doc_id"))
+      val docBigrams = graft.ops.Caching.cachedOnce(Tables.documents(s, d)
         .select(col("doc_id"), tokens(lower(col("text"))).as("t"))
         .filter(size(col("t")) >= 2)
         .select(col("doc_id"), explode(expr(

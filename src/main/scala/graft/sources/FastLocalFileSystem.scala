@@ -29,8 +29,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * The fix is semantic-preserving: the standard nine rwx bits are set
   * through `java.nio.file.Files.setPosixFilePermissions` (same syscall
   * as chmod, no fork); anything the java API cannot express — setuid /
-  * setgid / sticky, or a non-POSIX store — falls back to Hadoop's own
-  * path. Registered via `fs.file.impl` in [[graft.GraftSession]]; a
+  * setgid / sticky, a non-POSIX store, or an I/O failure — falls back
+  * to Hadoop's own path, so errors surface exactly as Hadoop reports
+  * them. Registered via `fs.file.impl` in [[graft.GraftSession]]; a
   * session built without it keeps Hadoop's default behavior (slower,
   * never wrong).
   */
@@ -49,7 +50,8 @@ class FastRawLocalFileSystem extends RawLocalFileSystem {
         java.nio.file.Files.setPosixFilePermissions(pathToFile(p).toPath, set)
         ()
       } catch {
-        case _: UnsupportedOperationException | _: SecurityException =>
+        case _: UnsupportedOperationException | _: SecurityException |
+             _: java.io.IOException =>
           super.setPermission(p, permission)
       }
     }

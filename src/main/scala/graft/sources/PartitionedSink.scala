@@ -20,14 +20,14 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * append/overwrite warehouse in reference src/jobs/load_*.py, which
   * delegates the commit problem to Hive — this connector owns it).
   *
-  * Layout: hive-style `<root>/<p1>=<v1>/<p2>=<v2>/.../part-*.tsv` —
-  * MULTI-LEVEL nested partition directories, one LEAF directory per
+  * Layout: hive-style `<root>/<p1>=<v1>/<p2>=<v2>/.../part-*.parquet`
+  * — MULTI-LEVEL nested partition directories, one LEAF directory per
   * partition-value TUPLE (the reference's own lake is three-level
   * `flight_year/flight_month/flight_day`, extract_flights.py:96-99),
-  * tab-separated data columns in dataSchema order (`\N` = NULL).
+  * parquet data files holding the data columns (see [[SinkParquetWrite]]).
   * Readable back through [[PartitionedSink.readBack]] (plain
-  * `spark.read.csv` + partition discovery — nothing about the layout
-  * is private to this connector).
+  * `spark.read.parquet` + partition discovery — nothing about the
+  * layout is private to this connector).
   *
   * The part that matters at 100 TB is the COMMIT PROTOCOL — a job
   * that writes for an hour from 1000 executors must publish all-or-
@@ -65,27 +65,20 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * publish for a manifest commit, which is why publish is a single
   * private method.
   *
-  * Types: atomic columns only (string/boolean/int/long/float/double/
-  * date-less). Partition columns must be non-null atomics. The text
-  * encoding is lossless: Long/Double round-trip through Java's
-  * shortest-repr toString exactly, and strings go through
-  * [[TsvCodec]] — backslash escapes for the delimiter characters
-  * (tab/newline/CR), backslash itself, and the empty string, so a
-  * value containing the layout's own syntax (or the literal `\N` NULL
-  * token — its backslash gets escaped) round-trips byte-exactly.
-  * Partition VALUES are hive-escaped in directory names
-  * (`ExternalCatalogUtils.escapePathName` — `/`, `=`, `%`, control
-  * chars), which Spark's partition discovery unescapes on read.
+  * Types: the atomic set plus BINARY and nested struct/array data
+  * columns ([[SinkFormat.validateColumnType]]). Partition columns must
+  * be non-null atomics; their VALUES are hive-escaped in directory
+  * names (`ExternalCatalogUtils.escapePathName` — `/`, `=`, `%`,
+  * control chars), which Spark's partition discovery unescapes on read.
   */
-/** Lossless string codec for the sink's TSV layout. The escape set is
-  * exactly the characters the layout gives meaning to: `\t` (column
-  * separator), `\n`/`\r` (row separator), `\` (the escape itself —
-  * which also neutralizes the `\N` NULL token: a literal "\N" value
-  * writes as `\\N`, never matching the reader's nullValue), plus `\e`
-  * for the wholly-empty string (CSV readers are config-dependent about
-  * empty-vs-null for a zero-length unquoted field; an explicit token
-  * removes the ambiguity). Decode is a single linear scan exposed as a
-  * codegen expression so read-back stays inside whole-stage codegen.
+/** Lossless string codec for the sink's text METADATA — version,
+  * position-delete, stats and bloom manifests, catalog sidecars and
+  * stream file logs (data files are parquet). The escape set is
+  * exactly the characters those line formats give meaning to: `\t`
+  * (field separator), `\n`/`\r` (line separator), `\` (the escape
+  * itself — which also neutralizes the `\N` NULL token: a literal
+  * "\N" value writes as `\\N`), plus `\e` for the wholly-empty
+  * string. Directory names use hive escaping ([[escapeDir]]).
   */
 object TsvCodec {
   def escape(s: String): String = {
@@ -105,7 +98,7 @@ object TsvCodec {
     sb.toString
   }
 
-  /** Codegen-reachable (static forwarder) decode; inverse of escape. */
+  /** Inverse of [[escape]]. */
   def unescape(s: org.apache.spark.unsafe.types.UTF8String)
       : org.apache.spark.unsafe.types.UTF8String = {
     val str = s.toString
@@ -127,22 +120,6 @@ object TsvCodec {
       } else { sb.append(c); i += 1 }
     }
     org.apache.spark.unsafe.types.UTF8String.fromString(sb.toString)
-  }
-
-  /** tsv_unescape(col): the read-back decode as a native expression. */
-  case class TsvUnescape(child: org.apache.spark.sql.catalyst.expressions.Expression)
-      extends org.apache.spark.sql.catalyst.expressions.UnaryExpression {
-    override def dataType: DataType = StringType
-    override def nullSafeEval(v: Any): Any =
-      unescape(v.asInstanceOf[org.apache.spark.unsafe.types.UTF8String])
-    override protected def doGenCode(
-        ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-        ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-        : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-      defineCodeGen(ctx, ev, c => s"graft.sources.TsvCodec.unescape($c)")
-    override protected def withNewChildInternal(
-        c: org.apache.spark.sql.catalyst.expressions.Expression): TsvUnescape =
-      copy(child = c)
   }
 
   /** Hive-style escaping for partition directory names (`/`, `=`, `%`,
@@ -197,10 +174,22 @@ private[graft] object SinkLayout {
   }
 
   /** Data files of one leaf dir (markers and manifests excluded). */
-  def dataFiles(fs: FileSystem, leaf: Path): Seq[FileStatus] =
-    Option(fs.listStatus(leaf)).toSeq.flatten
+  def dataFiles(fs: FileSystem, leaf: Path): Seq[FileStatus] = {
+    val files = Option(fs.listStatus(leaf)).toSeq.flatten
       .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
         !f.getPath.getName.startsWith("_"))
+    files.foreach(f => requireParquet(f.getPath))
+    files
+  }
+
+  /** Loud stop for a data file of the retired text tier: its rows
+    * would otherwise surface as a parquet decode error, or not at all.
+    */
+  def requireParquet(file: Path): Unit =
+    if (file.getName.endsWith(".tsv")) throw new IllegalStateException(
+      s"$file is a TSV data file: TSV data files are no longer readable " +
+        "(the sink reads and writes parquet only) — rewrite the table " +
+        "from its source")
 
   /** Delete a leaf dir, then remove now-empty ancestors up to (but
     * never including) the table root — a multi-level overwrite must
@@ -233,10 +222,9 @@ class PartitionedSink extends TableProvider {
           "PartitionedSink needs option partitionBy=<col>[,<col>...]")),
       schema,
       // graft.* write options ride as table properties on the path API
-      // (`.option("graft.format", "parquet")`); the path default stays
-      // TSV — only catalog-created tables flip the parquet default
-      props = properties.asScala.toMap
-        .filter { case (k, _) => k.startsWith("graft.") })
+      // (`.option("graft.bloomColumns", "k")`)
+      props = SinkFormat.userProps(s"path ${properties.get("path")}",
+        properties.asScala.toMap.filter { case (k, _) => k.startsWith("graft.") }))
 }
 
 object PartitionedSink {
@@ -266,9 +254,8 @@ object PartitionedSink {
     if (!hasParts)
       emptyFrame(spark, dataSchema, partCols)
     else {
-      // explicit file listing (not a glob): the per-file format
-      // dispatch in readPaths needs extensions, and the pruned leaf
-      // walk already exists
+      // explicit file listing (not a glob): the leaf walk skips
+      // manifests and markers, and rejects retired TSV data files
       val files = SinkLayout.listLeaves(fs, rootPath, partCols.map(_._1))
         .flatMap { case (_, leaf) =>
           SinkLayout.dataFiles(fs, leaf).map(_.getPath.toString) }
@@ -284,59 +271,23 @@ object PartitionedSink {
       spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
   }
 
-  /** EXPLICIT data-file paths (or globs) of one sink layout as rows —
-    * the shared decode behind [[readBackParts]] and the change feed
-    * ([[graft.ops.Compaction.tableChanges]], which reads exactly a
-    * manifest-diff's files). Partition columns come from partition
-    * discovery against `basePath` (the dir names), data columns from
-    * the TSV payload through the [[TsvCodec]] decode.
+  /** EXPLICIT data-file paths of one sink layout as rows, through
+    * Spark's own (name-based) parquet reader. Partition columns come
+    * from partition discovery against `basePath` (the dir names), data
+    * columns from the parquet files.
     */
   private[graft] def readPaths(spark: SparkSession, root: String,
                                paths: Seq[String], dataSchema: StructType,
                                partCols: Seq[(String, DataType)]): DataFrame = {
     if (paths.isEmpty) return emptyFrame(spark, dataSchema, partCols)
     import org.apache.spark.sql.functions.col
-    // per-file FORMAT dispatch by extension, mirroring the DSv2
-    // reader factory: a table whose graft.format changed mid-life
-    // reads correctly file by file
-    val (pq, tsv) = paths.partition(_.endsWith(".parquet"))
-    val sides = Seq(
-      if (tsv.isEmpty) None else Some {
-        val raw = partCols.foldLeft(
-          spark.read
-            .schema(dataSchema)
-            .option("sep", "\t")
-            .option("nullValue", NullToken)
-            // quote handling OFF: the layout's own [[TsvCodec]] escaping
-            // is the one decode layer — a value starting with '"' must
-            // not trigger CSV quote semantics
-            .option("quote", "")
-            .option("basePath", root)
-            .csv(tsv: _*)) { case (df, (c, t)) =>
-          df.withColumn(c, col(c).cast(t))
-        }
-        // decode the TsvCodec escapes on every string DATA column (the
-        // partition columns come from the dir names, hive-unescaped by
-        // partition discovery, not from the TSV payload)
-        dataSchema.fields.filter(_.dataType == StringType).foldLeft(raw) {
-          (df, f) =>
-            df.withColumn(f.name, org.apache.spark.sql.GraftColumnShim.column(
-              TsvCodec.TsvUnescape(org.apache.spark.sql.GraftColumnShim
-                .expression(col(f.name)))))
-        }
-      },
-      if (pq.isEmpty) None else Some {
-        // parquet is self-describing — no unescape layer; partition
-        // columns still come from the dir names via basePath discovery
-        partCols.foldLeft(
-          spark.read
-            .schema(dataSchema)
-            .option("basePath", root)
-            .parquet(pq: _*)) { case (df, (c, t)) =>
-          df.withColumn(c, col(c).cast(t))
-        }
-      }).flatten
-    sides.reduce(_ unionByName _)
+    partCols.foldLeft(
+      spark.read
+        .schema(dataSchema)
+        .option("basePath", root)
+        .parquet(paths: _*)) { case (df, (c, t)) =>
+      df.withColumn(c, col(c).cast(t))
+    }
   }
 }
 
@@ -386,9 +337,9 @@ private[sources] class PartitionedSinkTable(path: String,
   /** Metadata columns: `_file` — the row's data-file path, a per-split
     * constant (the row-level rewrites use it for runtime group
     * filtering) — and `_pos`, the row's stable position within its
-    * file (byte offset of the line for TSV, file row index for
-    * parquet; the merge-on-read delete identity). A DATA column with
-    * the same name shadows either (Spark's standard conflict rule).
+    * file (its row index; the merge-on-read delete identity). A DATA
+    * column with the same name shadows either (Spark's standard
+    * conflict rule).
     */
   override def metadataColumns()
       : Array[org.apache.spark.sql.connector.catalog.MetadataColumn] =
@@ -470,11 +421,10 @@ private class PartitionedSinkWriteBuilder(path: String, partCols: Seq[String],
   private var mode: SinkMode = Append
   partCols.foreach(pc => require(info.schema().fieldNames.contains(pc),
     s"partition column $pc not in written schema ${info.schema().sql}"))
-  // loud at plan time: binary columns need the parquet format (the
-  // path API's default is TSV) and can never partition
+  // loud at plan time: binary and nested columns can never partition,
+  // and MAP columns are not supported
   info.schema().fields.foreach(f => SinkFormat.validateColumnType(
-    SinkFormat.fromProps(props), f.name, f.dataType,
-    partCols.contains(f.name)))
+    f.name, f.dataType, partCols.contains(f.name)))
 
   override def truncate(): WriteBuilder = { mode = Truncate; this }
 
@@ -586,9 +536,9 @@ private case object Truncate extends SinkMode
 private case class OverwriteEq(eqs: Map[String, String]) extends SinkMode
 private case object Dynamic extends SinkMode
 
-/** Per-file, per-column min/max over the NON-NULL values — the file-
-  * skipping statistics a text layout doesn't get from its format (the
-  * pruning a Parquet lake reads from row-group footers). `minMax` is
+/** Per-file, per-column min/max over the NON-NULL values — the
+  * file-skipping statistics a scan can use without opening a data
+  * file (row-group footers are the grain below). `minMax` is
   * None when every value in the file is NULL for the column — which
   * lets the reader skip the file for ANY comparison predicate on it
   * (SQL comparisons with NULL are never true). Columns with no entry
@@ -1059,8 +1009,8 @@ private[graft] object SinkVersions {
 
 /** POSITION-DELETE manifests (Iceberg v2's merge-on-read shape): one
   * file per MOR commit under `_deletes/`, one line per deleted row —
-  * `escaped(relPath) \t pos` (pos = the `_pos` row identity: byte
-  * offset for TSV rows, file row index for parquet). A snapshot's
+  * `escaped(relPath) \t pos` (pos = the `_pos` row identity, the
+  * row's index within its parquet file). A snapshot's
   * ACTIVE manifests are the `#\tdel` headers of its version manifest;
   * scans anti-filter through them, `compact` folds them into
   * rewritten files, vacuum reclaims manifests no retained snapshot
@@ -1477,8 +1427,7 @@ private class PartitionedSinkBatchWrite(path: String, partCols: Seq[String],
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     new PartitionedSinkWriterFactory(path, partCols, schema, queryId,
       PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props),
-      SinkFormat.fromProps(props), SinkFormat.fieldIds(props),
+      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
       SinkParquetWrite.rowGroupBytesFromSession())
 
   // at most one committed attempt per task partition — the scheduler
@@ -1492,7 +1441,7 @@ private class PartitionedSinkBatchWrite(path: String, partCols: Seq[String],
     // orphan staging file is NOT in any commit message and is swept
     // with the staging dir below.
     // The published name carries a QUERY-UNIQUE token: the staged name
-    // alone is part-<partitionId>-<taskId>-<tuple>.tsv, and Spark's
+    // alone is part-<partitionId>-<taskId>-<tuple>.parquet, and Spark's
     // task ids restart at 0 per APPLICATION — two appends from
     // different driver JVMs can mint the same (partitionId, taskId)
     // pair, and publish's delete-before-rename (needed for streaming
@@ -1540,15 +1489,12 @@ private object PartitionedSinkWriterFactory {
 private class PartitionedSinkWriterFactory(
     path: String, partCols: Seq[String], schema: StructType, queryId: String,
     conf: org.apache.spark.util.SerializableConfiguration,
-    bloom: (Seq[String], Double, Int) = (Seq.empty, 0.01, 131072),
-    format: String = SinkFormat.Tsv,
-    fieldIds: Map[String, Int] = Map.empty,
-    rowGroupBytes: Long =
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
+    bloom: (Seq[String], Double, Int), fieldIds: Map[String, Int],
+    rowGroupBytes: Long)
     extends DataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     new PartitionedSinkWriter(path, partCols, schema, queryId, partitionId,
-      taskId, conf, bloom, format, fieldIds, rowGroupBytes)
+      taskId, conf, bloom, fieldIds, rowGroupBytes)
 }
 
 /** Task-side writer: buffers one open staged file per partition TUPLE
@@ -1561,13 +1507,9 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
                                     schema: StructType, stagingSub: String,
                                     partitionId: Int, taskId: Long,
                                     conf: org.apache.spark.util.SerializableConfiguration,
-                                    bloom: (Seq[String], Double, Int) =
-                                      (Seq.empty, 0.01, 131072),
-                                    format: String = SinkFormat.Tsv,
-                                    fieldIds: Map[String, Int] = Map.empty,
-                                    rowGroupBytes: Long =
-                                      org.apache.parquet.hadoop.ParquetWriter
-                                        .DEFAULT_BLOCK_SIZE.toLong)
+                                    bloom: (Seq[String], Double, Int),
+                                    fieldIds: Map[String, Int],
+                                    rowGroupBytes: Long)
     extends DataWriter[InternalRow] {
 
   private val fs = FileSystem.get(new java.net.URI(path), conf.value)
@@ -1725,73 +1667,28 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
     }
   }
 
-  /** Format seam: the one per-row encode call the two formats differ
-    * in. Everything around it — staging paths, stats/bloom
-    * accumulation, the commit message — is format-independent.
-    */
-  private sealed trait RowOut {
-    def write(row: InternalRow): Unit
-    def close(): Unit
-  }
-
-  private final class TsvRowOut(w: java.io.BufferedWriter) extends RowOut {
-    override def write(row: InternalRow): Unit = {
-      w.write(dataFields.map { case (fld, i) => fieldStr(row, i, fld.dataType) }
-        .mkString("\t"))
-      w.write("\n")
-    }
-    override def close(): Unit = w.close()
-  }
-
-  private final class ParquetRowOut(
-      pw: org.apache.parquet.hadoop.ParquetWriter[InternalRow])
-      extends RowOut {
-    override def write(row: InternalRow): Unit = pw.write(row)
-    override def close(): Unit = pw.close()
-  }
-
-  private def newRowOut(f: Path): RowOut =
-    if (format == SinkFormat.Parquet)
-      new ParquetRowOut(SinkParquetWrite.open(conf.value, f,
-        dataFields.toSeq, fieldIds, rowGroupBytes))
-    else {
-      fs.mkdirs(f.getParent)
-      new TsvRowOut(new java.io.BufferedWriter(
-        new java.io.OutputStreamWriter(fs.create(f, true), "UTF-8")))
-    }
-
-  private final class OpenOut(val w: RowOut, val p: Path,
-                              var rows: Long,
-                              val stats: Array[ColAcc],
-                              val blooms: Array[BloomAcc])
+  private final class OpenOut(
+      val w: org.apache.parquet.hadoop.ParquetWriter[InternalRow],
+      val p: Path, var rows: Long, val stats: Array[ColAcc],
+      val blooms: Array[BloomAcc])
 
   private val open = scala.collection.mutable.Map[Seq[String], OpenOut]()
 
-  /** Data-cell rendering: strings go through the TsvCodec escape so
-    * delimiter bytes / the NULL token / the empty string round-trip;
-    * the PARTITION values are read with [[rawStr]] instead (the
-    * manifest carries them raw; paths escape them at construction).
+  /** Partition-value rendering: the raw string the manifest carries
+    * and the directory name escapes (partition columns are non-null
+    * atomics).
     */
-  private def fieldStr(row: InternalRow, i: Int, dt: DataType): String = {
-    if (row.isNullAt(i)) PartitionedSink.NullToken
-    else dt match {
-      case StringType  => TsvCodec.escape(row.getUTF8String(i).toString)
-      case LongType    => row.getLong(i).toString
-      case IntegerType => row.getInt(i).toString
-      case DoubleType  => row.getDouble(i).toString
-      case FloatType   => row.getFloat(i).toString
-      case BooleanType => row.getBoolean(i).toString
-      case ShortType   => row.getShort(i).toString
-      case ByteType    => row.getByte(i).toString
-      case other => throw new UnsupportedOperationException(
-        s"PartitionedSink supports atomic column types only, got $other")
-    }
-  }
-
-  /** Raw (unescaped) rendering for a partition value. */
   private def rawStr(row: InternalRow, i: Int, dt: DataType): String = dt match {
-    case StringType => row.getUTF8String(i).toString
-    case other      => fieldStr(row, i, other)
+    case StringType  => row.getUTF8String(i).toString
+    case LongType    => row.getLong(i).toString
+    case IntegerType => row.getInt(i).toString
+    case DoubleType  => row.getDouble(i).toString
+    case FloatType   => row.getFloat(i).toString
+    case BooleanType => row.getBoolean(i).toString
+    case ShortType   => row.getShort(i).toString
+    case ByteType    => row.getByte(i).toString
+    case other => throw new UnsupportedOperationException(
+      s"PartitionedSink partition columns must be atomic, got $other")
   }
 
   override def write(row: InternalRow): Unit = {
@@ -1803,9 +1700,10 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
     val o = open.getOrElseUpdate(pvs, {
       val f = new Path(path,
         s"_staging/$stagingSub/part-$partitionId-$taskId-" +
-          s"${SinkLayout.valueTag(pvs)}.${SinkFormat.extension(format)}")
+          s"${SinkLayout.valueTag(pvs)}.parquet")
       fs.mkdirs(f.getParent)
-      new OpenOut(newRowOut(f), f, 0L, newStats(),
+      new OpenOut(SinkParquetWrite.open(conf.value, f, dataFields.toSeq,
+        fieldIds, rowGroupBytes), f, 0L, newStats(),
         bloomPlan.map { case (_, _, isStr) => new BloomAcc(isStr) })
     })
     o.w.write(row)
@@ -1861,7 +1759,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
   * same stage-then-publish protocol. Two mechanisms compose:
   *
   *   - DETERMINISTIC TARGET NAMES: epoch e's files publish as
-  *     `part-e<e>-p<partitionId>-<tuple>.tsv` — a REPLAYED epoch (the
+  *     `part-e<e>-p<partitionId>-<tuple>.parquet` — a REPLAYED epoch (the
   *     checkpoint committed the sink write but crashed before the
   *     offset commit, so Spark re-runs the batch) overwrites its own
   *     files instead of appending duplicates. This holds because a
@@ -1892,8 +1790,7 @@ private class PartitionedSinkStreamingWrite(path: String, partCols: Seq[String],
       : StreamingDataWriterFactory =
     new PartitionedSinkStreamingWriterFactory(path, partCols, schema, queryId,
       PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props),
-      SinkFormat.fromProps(props), SinkFormat.fieldIds(props),
+      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
       SinkParquetWrite.rowGroupBytesFromSession())
 
   override def commit(epochId: Long,
@@ -1903,9 +1800,7 @@ private class PartitionedSinkStreamingWrite(path: String, partCols: Seq[String],
     if (!fs.exists(marker(epochId))) {
       SinkCommit.publish(fs, path, partCols, mode, files.toSeq,
         f => s"part-e$epochId-p${f.partitionId}-" +
-          s"${SinkLayout.valueTag(f.partValues)}" +
-          // deterministic name, staged extension (format-dependent)
-          f.stagedPath.substring(f.stagedPath.lastIndexOf('.')),
+          s"${SinkLayout.valueTag(f.partValues)}.parquet",
         statsToken = s"e$epochId", versioned = versioned)
       fs.mkdirs(marker(epochId).getParent)
       fs.create(marker(epochId), true).close()
@@ -1925,15 +1820,12 @@ private class PartitionedSinkStreamingWrite(path: String, partCols: Seq[String],
 private class PartitionedSinkStreamingWriterFactory(
     path: String, partCols: Seq[String], schema: StructType, queryId: String,
     conf: org.apache.spark.util.SerializableConfiguration,
-    bloom: (Seq[String], Double, Int) = (Seq.empty, 0.01, 131072),
-    format: String = SinkFormat.Tsv,
-    fieldIds: Map[String, Int] = Map.empty,
-    rowGroupBytes: Long =
-      org.apache.parquet.hadoop.ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
+    bloom: (Seq[String], Double, Int), fieldIds: Map[String, Int],
+    rowGroupBytes: Long)
     extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
   override def createWriter(partitionId: Int, taskId: Long,
                             epochId: Long): DataWriter[InternalRow] =
     new PartitionedSinkWriter(path, partCols, schema,
       s"$queryId/epoch-$epochId", partitionId, taskId, conf, bloom,
-      format, fieldIds, rowGroupBytes)
+      fieldIds, rowGroupBytes)
 }

@@ -81,7 +81,8 @@ private[graft] object SinkSidecar {
     val in = fs.open(meta)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
       finally in.close()
-    parse(text)
+    val (partCols, schema, props) = parse(text)
+    (partCols, schema, SinkFormat.storedProps(tableDir, props))
   }
 }
 
@@ -158,7 +159,7 @@ class PartitionedSinkCatalog extends TableCatalog
     finally in.close()
     val (partCols, schema, props) = parseSidecar(json)
     new PartitionedSinkTable(tableDir(ident).toString, partCols, schema,
-      versioned, props = props)
+      versioned, props = SinkFormat.storedProps(ident.toString, props))
   }
 
   /** Time travel: `VERSION AS OF v` / `spark.read.option("versionAsOf",
@@ -223,29 +224,19 @@ class PartitionedSinkCatalog extends TableCatalog
     // 'k')` survives restarts and applies to every writer of the
     // table, unlike the session conf. Spark's bookkeeping properties
     // (provider, owner, location...) are not ours to store.
-    val declared = Option(properties).map(_.asScala.toMap)
-      .getOrElse(Map.empty)
-      .filter { case (k, _) => k.startsWith("graft.") }
-    // STORAGE FORMAT: parquet is the default for NEW tables (columnar
-    // chunks + compression — the 100 TB-shaped choice); `TBLPROPERTIES
-    // ('graft.format' = 'tsv')` opts into the text layout. Existing
-    // tables (no property in their sidecar) keep reading/writing TSV.
-    val withFormat =
-      if (declared.contains(SinkFormat.PropFormat)) declared
-      else declared + (SinkFormat.PropFormat -> SinkFormat.Parquet)
-    // FIELD IDS: parquet tables carry a name→id registry so columns
-    // resolve by id across rename/drop evolution; minted once here,
-    // extended by ADD COLUMNS, never reused after a drop
+    val declared = SinkFormat.userProps(s"CREATE TABLE $ident",
+      Option(properties).map(_.asScala.toMap).getOrElse(Map.empty)
+        .filter { case (k, _) => k.startsWith("graft.") })
+    // FIELD IDS: tables carry a name→id registry so columns resolve by
+    // id across rename/drop evolution; minted once here, extended by
+    // ADD COLUMNS, never reused after a drop
     val persisted =
-      if (SinkFormat.fromProps(withFormat) == SinkFormat.Parquet &&
-        !withFormat.contains(SinkFormat.PropFieldIds))
-        withFormat ++ SinkFormat.initialIdProps(schema, partCols)
-      else withFormat
-    // loud at CREATE, not at first-row write: binary columns need the
-    // parquet format and can never partition
+      if (declared.contains(SinkFormat.PropFieldIds)) declared
+      else declared ++ SinkFormat.initialIdProps(schema, partCols)
+    // loud at CREATE, not at first-row write: binary and nested
+    // columns can never partition
     schema.fields.foreach(f => SinkFormat.validateColumnType(
-      SinkFormat.fromProps(withFormat), f.name, f.dataType,
-      partCols.contains(f.name)))
+      f.name, f.dataType, partCols.contains(f.name)))
     // atomic publish of the sidecar: concurrent CREATEs race on the
     // rename, not on a half-written file
     val dir = tableDir(ident)
@@ -263,20 +254,18 @@ class PartitionedSinkCatalog extends TableCatalog
       props = persisted)
   }
 
-  /** Schema evolution. ADD COLUMNS (nullable, appended at the end)
-    * works on BOTH formats: TSV files written before the change are
-    * SHORT rows whose missing trailing cells read as NULL; parquet
-    * files simply lack the column. RENAME/DROP COLUMN work on PARQUET
-    * tables only, through the field-id registry (`graft.fieldIds`): a
-    * renamed column keeps its id, so files written before the rename
-    * still resolve; a dropped column's id is retired and never
-    * reused, so its data in old files is simply never requested. On a
-    * TSV table rename/drop would silently re-map existing files'
-    * POSITIONS — rejected loudly, as before. Retype/reorder are
-    * rejected on both. (After a rename, per-column skip stats
-    * recorded under the old name no longer match — affected files are
-    * scanned instead of skipped until rewritten: degraded, never
-    * wrong.)
+  /** Schema evolution. ADD COLUMNS (nullable, appended at the end):
+    * files written before the change simply lack the column and read
+    * it as NULL. RENAME/DROP COLUMN and safe type widening go through
+    * the field-id registry (`graft.fieldIds`): a renamed column keeps
+    * its id, so files written before the rename still resolve; a
+    * dropped column's id is retired and never reused, so its data in
+    * old files is simply never requested. A column without an id (a
+    * name containing ',' or ':') resolves by name, so renaming or
+    * dropping it is rejected. Reorder is rejected. (After a rename,
+    * per-column skip stats recorded under the old name no longer
+    * match — affected files are scanned instead of skipped until
+    * rewritten: degraded, never wrong.)
     *
     * The sidecar update is last-writer-wins (staged write + delete +
     * rename): DDL here is a single-admin operation, not a concurrent
@@ -287,13 +276,13 @@ class PartitionedSinkCatalog extends TableCatalog
     val current = loadTable(ident).asInstanceOf[PartitionedSinkTable]
     var props = current.props
     var schema = current.schema()
-    val isParquet = SinkFormat.fromProps(props) == SinkFormat.Parquet
     var ids = SinkFormat.fieldIds(props)
     val ids0 = ids
     var nextId = props.get(SinkFormat.PropNextFieldId).map(_.toInt)
       .getOrElse(ids.values.maxOption.getOrElse(0) + 1)
-    // the format/field-id registry is engine-managed state, not a user
-    // knob: hand-editing it would silently transpose columns
+    // the field-id registry is engine-managed state, not a user knob:
+    // hand-editing it would silently transpose columns (the retired
+    // format key is not settable either)
     val reserved = Set(SinkFormat.PropFormat, SinkFormat.PropFieldIds,
       SinkFormat.PropNextFieldId)
     def oneLevel(fieldNames: Array[String]): String = {
@@ -308,11 +297,10 @@ class PartitionedSinkCatalog extends TableCatalog
           "added columns must be nullable (existing files read them as NULL)")
         require(!schema.fieldNames.contains(name),
           s"column $name already exists")
-        SinkFormat.validateColumnType(SinkFormat.fromProps(props),
-          name, a.dataType(), isPartition = false)
+        SinkFormat.validateColumnType(name, a.dataType(), isPartition = false)
         schema = StructType(schema.fields :+
           StructField(name, a.dataType(), nullable = true))
-        if (isParquet && ids.nonEmpty && SinkFormat.idSafe(name)) {
+        if (ids.nonEmpty && SinkFormat.idSafe(name)) {
           ids = ids + (name -> nextId); nextId += 1
         }
       case r: TableChange.RenameColumn =>
@@ -320,10 +308,9 @@ class PartitionedSinkCatalog extends TableCatalog
         val to = r.newName()
         require(!current.partCols.contains(from),
           s"cannot rename partition column $from (it names the directory layout)")
-        require(isParquet && ids.contains(from),
-          s"RENAME COLUMN needs a parquet-format table with field ids " +
-            s"($from resolves by POSITION in the TSV layout — renames " +
-            "would re-map existing files)")
+        require(ids.contains(from),
+          s"RENAME COLUMN needs a field id for $from (it resolves by " +
+            "name — existing files would lose its data)")
         require(schema.fieldNames.contains(from), s"no such column $from")
         require(!schema.fieldNames.contains(to), s"column $to already exists")
         require(SinkFormat.idSafe(to),
@@ -337,10 +324,9 @@ class PartitionedSinkCatalog extends TableCatalog
         require(!current.partCols.contains(name),
           s"cannot retype partition column $name (its rendered values " +
             "name the directory layout and key the split planning)")
-        require(isParquet && ids.contains(name),
-          s"ALTER COLUMN ... TYPE needs a parquet-format table with " +
-            s"field ids (old files decode-cast through the id registry; " +
-            "the TSV layout re-parses by POSITION and is not retypable)")
+        require(ids.contains(name),
+          s"ALTER COLUMN ... TYPE needs a field id for $name (old files " +
+            "decode-cast through the id registry)")
         val from = schema(name).dataType
         require(SinkFormat.safeWiden(from, u.newDataType()),
           s"only safe widenings are supported " +
@@ -356,10 +342,9 @@ class PartitionedSinkCatalog extends TableCatalog
         if (!schema.fieldNames.contains(name)) {
           require(d.ifExists(), s"no such column $name")
         } else {
-          require(isParquet && ids.contains(name),
-            s"DROP COLUMN needs a parquet-format table with field ids " +
-              s"($name resolves by POSITION in the TSV layout — drops " +
-              "would shift every later column)")
+          require(ids.contains(name),
+            s"DROP COLUMN needs a field id for $name (it resolves by " +
+              "name — a later column of that name would read its data)")
           schema = StructType(schema.fields.filterNot(_.name == name))
           ids = ids - name // id retired, never reused (nextId unchanged)
         }
@@ -378,7 +363,7 @@ class PartitionedSinkCatalog extends TableCatalog
       case other => throw new UnsupportedOperationException(
         s"PartitionedSinkCatalog tables support ADD COLUMNS " +
           s"(append-at-end, nullable), RENAME/DROP COLUMN and safe " +
-          s"type widening (parquet format only) and graft.* SET/UNSET " +
+          s"type widening (columns with field ids) and graft.* SET/UNSET " +
           s"TBLPROPERTIES; got $other")
     }
     if (ids != ids0)

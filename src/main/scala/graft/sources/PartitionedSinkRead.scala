@@ -9,8 +9,8 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /** READ half of the partitioned sink's catalog tables: `SELECT ... FROM
-  * cat.t` / `spark.table("cat.t")` scan the hive-style TSV layout
-  * directly, with the two pushdowns that matter for this layout shape:
+  * cat.t` / `spark.table("cat.t")` scan the hive-style parquet layout
+  * directly, with the pushdowns that matter for this layout shape:
   *
   *   - PARTITION PRUNING ([[SupportsPushDownFilters]]): `pCol = v`,
   *     `pCol IN (...)` and `IsNotNull(pCol)` on ANY of the partition
@@ -19,14 +19,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *     a multi-level layout's columns prunes at its own level (a
   *     `month = 3` filter on a year/month/day table skips eleven
   *     twelfths of every year without touching the day listings).
-  *     Data-column predicates are declined (returned as post-scan
-  *     filters) — a text layout has no row-group statistics to prune
-  *     with.
-  *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): the
-  *     reader still splits every line (a TSV row must be walked to be
-  *     skipped) but only DECODES and materializes requested fields;
-  *     partition columns cost nothing (they come from the dir names,
-  *     one constant tuple per split).
+  *     Data-column comparisons stay post-scan filters, and also skip
+  *     files (stats/bloom manifests) and row groups (parquet footers).
+  *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): only the
+  *     requested columns' chunks are read and decoded; partition
+  *     columns cost nothing (they come from the dir names, one
+  *     constant tuple per split).
   *
   * One [[InputPartition]] per data FILE — the natural split grain of
   * the layout (files are per-(task, partition-tuple) from the write
@@ -139,9 +137,8 @@ private[sources] class PartitionedSinkScanBuilder(
     partitionFilters ++ skipFilters
 
   override def pruneColumns(requiredSchema: StructType): Unit =
-    // keep the table's field order (the line decoder walks by ordinal);
-    // METADATA columns (`_file` — not in the table schema) append at
-    // the end in requested order
+    // keep the table's field order; METADATA columns (`_file` — not
+    // in the table schema) append at the end in requested order
     required = StructType(
       fullSchema.fields.filter(f => requiredSchema.fieldNames.contains(f.name))
         ++ requiredSchema.fields.filterNot(f =>
@@ -284,7 +281,7 @@ private[sources] object SinkAggPushdown {
           }
         }
         val picked = bounds.flatten.map { case (mn, mx) =>
-          PartitionedSinkReader.castValue(if (wantMax) mx else mn, dt)
+          SinkParquetResolve.castValue(if (wantMax) mx else mn, dt)
         }
         if (picked.isEmpty) null // zero rows / all NULL: SQL min = NULL
         else dt match {
@@ -293,7 +290,7 @@ private[sources] object SinkAggPushdown {
           case LongType | IntegerType | ShortType | ByteType =>
             val ls = picked.map(_.asInstanceOf[java.lang.Number].longValue)
             val win = if (wantMax) ls.max else ls.min
-            PartitionedSinkReader.castValue(win.toString, dt)
+            SinkParquetResolve.castValue(win.toString, dt)
           case _ => // Double/Float only (the numeric() gate above)
             val sel = picked.map(v =>
               (v, v.asInstanceOf[java.lang.Number].doubleValue))
@@ -310,7 +307,7 @@ private[sources] object SinkAggPushdown {
         .toSeq.sortBy(_._1.mkString(" "))
         .map { case (key, files) =>
           val keyVals = groupCols.zip(key).map { case (c, raw) =>
-            PartitionedSinkReader.castValue(raw, fullSchema(c).dataType)
+            SinkParquetResolve.castValue(raw, fullSchema(c).dataType)
           }
           org.apache.spark.sql.catalyst.InternalRow.fromSeq(
             (keyVals ++ aggValues(files.map(_._2)).getOrElse(return None))
@@ -554,6 +551,8 @@ private[sources] class PartitionedSinkScan(
                 SinkLayout.dataFiles(fs, leaf).map(values -> _)
               }
         }
+      // a versioned table's manifest names files without a listing
+      candidates.foreach { case (_, f) => SinkLayout.requireParquet(f.getPath) }
       // per-dir stats manifests (driver-side, small — one per publish
       // per dir): used for FILE SKIPPING (drop every file whose
       // recorded min/max provably excludes a skip filter; files
@@ -605,15 +604,6 @@ private[sources] class PartitionedSinkScan(
   private lazy val keyTypes: Seq[DataType] =
     partCols.map(c => fullSchema(c).dataType)
 
-  /** Byte-range split carving: a scan that cannot split a 10 GB file
-    * is one task at 100 TB. The TSV codec escapes \n and \r inside
-    * values, so every ROW is one physical LINE and the classic
-    * LineRecordReader contract applies — split i reads the lines whose
-    * first byte lies in (start_i, end_i] (the first split from 0), a
-    * line crossing the boundary is finished by the split that started
-    * it, and every split with start > 0 discards its first (possibly
-    * partial) line. Files at or under the threshold stay whole.
-    */
   /** LIMIT-driven file trimming: the shortest deterministic PREFIX of
     * files whose recorded rows cover the pushed limit. Only when
     * provable: every surviving file carries a count and no position
@@ -635,6 +625,12 @@ private[sources] class PartitionedSinkScan(
       case _ => prunedFiles
     }
 
+  /** Byte-range split carving: a scan that cannot split a 10 GB file
+    * is one task at 100 TB. A range reads the row groups whose
+    * midpoint lies inside it (ParquetReadOptions.withRange), so
+    * contiguous ranges partition a file's row groups exactly. Files at
+    * or under the threshold stay whole.
+    */
   private lazy val inputSplits: Array[InputPartition] = {
     val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
     limitedFiles.flatMap { case (values, f) =>
@@ -733,16 +729,15 @@ private[sources] class PartitionedSinkScan(
     // manifest-level file skip); sound because every filter stays
     // residual. The COW row-level scan overrides this with NO skip
     // filters — group rewrites read their files whole. COLUMNAR when
-    // every split qualifies (all-parquet, no MOR deletes): batches +
-    // ColumnarToRow beat row materialization by the per-value decode
-    // cost — see SinkParquetColumnarReader.
+    // the projection qualifies (MOR deletes fold in as a per-batch
+    // mask): batches + ColumnarToRow beat row materialization by the
+    // per-value decode cost — see SinkParquetColumnarReader.
     new PartitionedSinkReaderFactory(fullSchema, required, partCols,
       PartitionedSinkWriterFactory.sessionConf(), fieldIds,
       skipFilters.toSeq,
       columnar = SinkParquetColumnar.enabledInSession() &&
         SinkParquetColumnar.schemaEligible(required) &&
-        inputSplits.nonEmpty && SinkParquetColumnar.splitsEligible(
-          inputSplits.toSeq.map(_.asInstanceOf[SinkFileSplit])))
+        inputSplits.nonEmpty)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -897,13 +892,9 @@ private object SinkSplitConf {
   * log entries s+1..e — deterministic under replay: the same offsets
   * always read the same immutable logs, across restarts too (the seen
   * set and max generation are rebuilt from the logs on construction).
-  * The pre-r15 encoding carried the ENTIRE published-file list in
-  * every offset — O(files) checkpoint growth per trigger; a LEGACY
-  * (array-form) offset found in an old checkpoint is ABSORBED on first
-  * deserialize: its unseen files are written as the next generation
-  * (seeding the seen set), and the offset itself resolves to the raw
-  * file set, so a mixed (legacy, generation) batch plans exactly the
-  * delta — zero duplicated and zero lost files across the upgrade.
+  * An array-form (file-list) offset comes from a checkpoint written
+  * before generations existed, over TSV data files nothing reads now:
+  * it is rejected, not migrated.
   * Append-only semantics — files removed by a dynamic overwrite after
   * being logged are skipped at planning (already-emitted rows are NOT
   * retracted; a reader of a table being rewritten wants a CDC log, not
@@ -929,15 +920,6 @@ private class PartitionedSinkMicroBatchStream(
 
   private case class GenOffset(gen: Long) extends Offset {
     override def json(): String = s"""{"gen":$gen}"""
-  }
-
-  /** A pre-r15 (file-list) offset recovered from an old checkpoint.
-    * Carries the raw file set for exact delta planning; re-serializes
-    * verbatim (it only ever flows back into logs that already hold it).
-    */
-  private case class LegacyFilesOffset(files: Seq[String], raw: String)
-      extends Offset {
-    override def json(): String = raw
   }
 
   private def fs: FileSystem = FileSystem.get(new java.net.URI(path),
@@ -1023,102 +1005,31 @@ private class PartitionedSinkMicroBatchStream(
     GenOffset(maxGen.get())
   }
 
-  /** Recover the partition tuple of a legacy-offset file from its
-    * path: the last `partCols.length` directory names are the
-    * hive-escaped `col=value` segments.
-    */
-  private def valuesFromPath(file: String): Seq[String] = {
-    var p = new Path(file).getParent
-    var segs = List.empty[String]
-    var k = partCols.length
-    while (k > 0 && p != null) {
-      segs = p.getName :: segs
-      p = p.getParent
-      k -= 1
-    }
-    partCols.zip(segs).map { case (c, seg) =>
-      TsvCodec.unescapeDir(seg.stripPrefix(c + "="))
-    }
-  }
-
-  /** One-time migration of a pre-r15 checkpoint: the first time a
-    * legacy array offset is seen, its not-yet-logged files are written
-    * as the next generation, so the seen set covers everything the old
-    * checkpoint had emitted and `latestOffset` never re-emits it. A
-    * second legacy offset (the replay START of an uncommitted batch —
-    * a subset of the first) finds nothing fresh and writes nothing.
-    */
-  private def absorbLegacy(files: Seq[String]): Unit = state.synchronized {
-    val (seen, maxGen) = state
-    val fresh = files.filterNot(seen)
-    if (fresh.nonEmpty) {
-      val gen = maxGen.incrementAndGet()
-      writeLog(fs, gen, fresh.map(f => f -> valuesFromPath(f)))
-      fresh.foreach(seen += _)
-    }
-  }
-
   override def deserializeOffset(json: String): Offset = {
     val m = """\{\s*"gen"\s*:\s*(\d+)\s*\}""".r
-    val t = json.trim
-    t match {
+    json.trim match {
       case m(g) => GenOffset(g.toLong)
-      case _ if t.startsWith("[") =>
-        // pre-r15 encoding: a flat JSON string array of file paths
-        val items = scala.collection.mutable.ArrayBuffer[String]()
-        val sb = new StringBuilder
-        var inStr = false; var i = 0
-        while (i < t.length) {
-          val c = t.charAt(i)
-          if (!inStr) { if (c == '"') inStr = true }
-          else c match {
-            case '\\' => sb.append(t.charAt(i + 1)); i += 1
-            case '"'  => items += sb.toString; sb.clear(); inStr = false
-            case o    => sb.append(o)
-          }
-          i += 1
-        }
-        absorbLegacy(items.toSeq)
-        LegacyFilesOffset(items.toSeq, json)
+      case t if t.startsWith("[") => throw new IllegalStateException(
+        s"sink-stream offset of $path is a file list from a checkpoint " +
+          "written before generation offsets, over TSV data files: TSV " +
+          "data files are no longer readable — restart the stream from " +
+          "a fresh checkpoint")
       case _ => throw new IllegalStateException(
         s"unreadable sink-stream offset '$json'")
     }
   }
 
-  /** Cumulative (file, tuple) entries through generation g. */
-  private def entriesThrough(f: FileSystem, g: Long)
-      : Seq[(String, Seq[String])] =
-    (1L to g).flatMap { gen =>
-      val p = new Path(logDir, gen.toString)
-      if (!f.exists(p)) Seq.empty else readLog(f, p)
-    }
-
   override def planInputPartitions(start: Offset, end: Offset)
       : Array[InputPartition] = {
     val f = fs
-    // (start, end] as file sets. The all-generation fast path reads
-    // only logs s+1..e; a LEGACY endpoint (one-time, post-upgrade)
-    // resolves against raw file sets so the delta is exact whatever
-    // grain the absorb landed in.
-    val live: Seq[(String, Seq[String])] = (start, end) match {
-      case (GenOffset(s), GenOffset(e)) =>
-        (s + 1 to e).flatMap { g =>
-          val p = new Path(logDir, g.toString)
-          if (!f.exists(p)) Seq.empty else readLog(f, p)
-        }
-      case _ =>
-        val startSet: Set[String] = start match {
-          case GenOffset(s) => entriesThrough(f, s).map(_._1).toSet
-          case LegacyFilesOffset(fl, _) => fl.toSet
-          case o => throw new IllegalStateException(s"unexpected offset $o")
-        }
-        val endEntries: Seq[(String, Seq[String])] = end match {
-          case GenOffset(e) => entriesThrough(f, e)
-          case LegacyFilesOffset(fl, _) =>
-            fl.map(file => file -> valuesFromPath(file))
-          case o => throw new IllegalStateException(s"unexpected offset $o")
-        }
-        endEntries.filterNot { case (file, _) => startSet(file) }
+    // (start, end] = the files of logs s+1..e
+    val (s, e) = (start, end) match {
+      case (GenOffset(s), GenOffset(e)) => (s, e)
+      case o => throw new IllegalStateException(s"unexpected offsets $o")
+    }
+    val live: Seq[(String, Seq[String])] = (s + 1 to e).flatMap { g =>
+      val p = new Path(logDir, g.toString)
+      if (!f.exists(p)) Seq.empty else readLog(f, p)
     }
     val present = live
       .filter { case (file, values) =>
@@ -1193,7 +1104,7 @@ private[sources] case class SinkFileSplit(file: String, partValues: Seq[String],
     with org.apache.spark.sql.connector.read.HasPartitionKey {
   override def partitionKey(): InternalRow =
     InternalRow.fromSeq(partValues.zip(keyTypes).map { case (v, t) =>
-      PartitionedSinkReader.castValue(v, t) })
+      SinkParquetResolve.castValue(v, t) })
 }
 
 /** Readers expose the CURRENT row's stable in-file position (the
@@ -1211,25 +1122,17 @@ private class PartitionedSinkReaderFactory(
     skipFilters: Seq[Filter] = Seq.empty,
     columnar: Boolean = false)
     extends PartitionReaderFactory {
-  // per-FILE format dispatch (by extension): a table whose
-  // `graft.format` changed mid-life, or a feed mixing table files with
-  // spark-written change files, reads correctly file by file
   override def createReader(split: InputPartition): PartitionReader[InternalRow] = {
     val s = split.asInstanceOf[SinkFileSplit]
-    val base: PartitionReader[InternalRow] with HasRowPos =
-      if (s.file.endsWith(".parquet"))
-        new SinkParquetReader(s, fullSchema, required, partCols, conf,
-          fieldIds, skipFilters)
-      else
-        new PartitionedSinkReader(s, fullSchema, required, partCols, conf)
+    val base = new SinkParquetReader(s, fullSchema, required, partCols,
+      conf, fieldIds, skipFilters)
     if (s.delManifests.isEmpty) base
     else new PositionFilterReader(base, s, conf)
   }
 
   // VECTORIZED path: Spark requires all partitions of a scan to agree
-  // on columnar-vs-row, so the SCAN decides once (every split a
-  // parquet file with no merge-on-read deletes) and the factory
-  // answers uniformly
+  // on columnar-vs-row, so the SCAN decides once (session flag and
+  // projection eligibility) and the factory answers uniformly
   override def supportColumnarReads(split: InputPartition): Boolean = columnar
 
   override def createColumnarReader(split: InputPartition)
@@ -1265,156 +1168,6 @@ private class PositionFilterReader(
   }
   override def get(): InternalRow = inner.get()
   override def close(): Unit = inner.close()
-}
-
-/** Line reader for one staged-then-published TSV file: split on tab,
-  * decode only the REQUIRED ordinals (TsvCodec unescape for strings,
-  * straight parses for numerics, `\N` → null), fill the partition
-  * columns from the split's constant tuple.
-  */
-private class PartitionedSinkReader(
-    split: SinkFileSplit, fullSchema: StructType, required: StructType,
-    partCols: Seq[String],
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends PartitionReader[InternalRow] with HasRowPos {
-
-  /** `_pos` of the current row: byte offset of its line's first byte. */
-  private var lastPos: Long = -1L
-  override def currentRowPos: Long = lastPos
-
-  // Path(...).toUri, not new URI(...): the file name embeds the escaped
-  // partition VALUE, which hive escaping leaves spaces (and other
-  // URI-illegal chars) in — Path percent-encodes them, a raw URI throws
-  private val fs = FileSystem.get(new Path(split.file).toUri, conf.value)
-
-  // Ranged read, LineRecordReader contract: emit the lines whose FIRST
-  // byte position is ≤ end (INCLUSIVE — a line starting exactly at the
-  // boundary belongs to THIS split; the next split's discard-first
-  // throws its copy away), finish a line that crosses the boundary,
-  // and when start > 0 discard the first (possibly partial) line — the
-  // previous split finished it. Sound for UTF-8 because '\n' bytes
-  // cannot occur inside a multi-byte character, and sound for the
-  // layout because TsvCodec escapes \n/\r inside values.
-  private val stream = fs.open(new Path(split.file))
-  private val end: Long = {
-    val len = fs.getFileStatus(new Path(split.file)).getLen
-    if (split.length >= len - split.start) len // saturating: MaxValue ok
-    else split.start + split.length
-  }
-  private var pos: Long = split.start
-  private val lineReader = {
-    if (split.start > 0) stream.seek(split.start)
-    val lr = new org.apache.hadoop.util.LineReader(stream, conf.value)
-    if (split.start > 0)
-      pos += lr.readLine(new org.apache.hadoop.io.Text) // discard-first
-    lr
-  }
-  private val text = new org.apache.hadoop.io.Text
-
-  // the file carries the data fields in fullSchema order MINUS the
-  // partition columns (ALL columns when the split says the partition
-  // values are inline — change files carry them as ordinary cells)
-  private val dataFields =
-    if (split.inlineParts) fullSchema.fields
-    else fullSchema.fields.filter(f => !partCols.contains(f.name))
-  // per-partition-column constants from the split's tuple
-  private val partValues: Map[String, Any] =
-    if (split.inlineParts) Map.empty
-    else partCols.zip(split.partValues).map { case (c, v) =>
-      c -> PartitionedSinkReader.castValue(v, fullSchema(c).dataType)
-    }.toMap
-  /** Sentinel file-column indexes in [[plan]]: -1 = split constant,
-    * -2 = the per-row `_pos` metadata value (the line's byte offset).
-    */
-  private final val ConstIdx = -1
-  private final val PosIdx = -2
-  // required ordinal -> (file column index | a sentinel: partition
-  // cols from the split's tuple, the `_file`/`_pos` metadata columns
-  // from the split/reader — a DATA column with the same name wins,
-  // matching Spark's conflict rule for metadata columns)
-  private val plan: Array[(Int, DataType, Any)] = required.fields.map { f =>
-    if (partValues.contains(f.name)) (ConstIdx, f.dataType, partValues(f.name))
-    else {
-      val di = dataFields.indexWhere(_.name == f.name)
-      lazy val extra = split.extras.find(_._1 == f.name)
-      if (di < 0 && extra.isDefined)
-        (ConstIdx, f.dataType,
-          PartitionedSinkReader.castValue(extra.get._2, f.dataType))
-      else if (di < 0 && f.name == SinkMeta.FileCol)
-        (ConstIdx, StringType, UTF8String.fromString(split.file))
-      else if (di < 0 && f.name == SinkMeta.PosCol)
-        (PosIdx, LongType, null)
-      else (di, f.dataType, null)
-    }
-  }
-  // column pruning, for real: the walk below materializes a String for
-  // REQUIRED cells only and stops at the last one — a 2-column
-  // projection of a 50-column row never scans past its cells, and a
-  // partition-column-only read (count(*) over p) never walks the line
-  // at all. `java.lang.String.split` would allocate every cell of
-  // every row regardless of the projection.
-  private val maxNeeded: Int =
-    if (plan.exists(_._1 >= 0)) plan.map(_._1).max else -1
-  private val neededCell: Array[Boolean] = {
-    val a = new Array[Boolean](maxNeeded + 1)
-    plan.foreach { case (i, _, _) => if (i >= 0) a(i) = true }
-    a
-  }
-
-  private def cast(s: String, dt: DataType): Any =
-    PartitionedSinkReader.castValue(s, dt)
-
-  private var current: InternalRow = _
-
-  override def next(): Boolean = {
-    if (pos > end) return false // next line starts past this range
-    val lineStart = pos // `_pos`: byte offset of the line's first byte
-    val n = lineReader.readLine(text)
-    if (n == 0) return false // end of file
-    pos += n
-    lastPos = lineStart
-    val line = new String(text.getBytes, 0, text.getLength, "UTF-8")
-    // one pass, required cells only, stop after the last needed one.
-    // End-of-line terminates the final cell (split("\t", -1) parity:
-    // trailing empty cells — a NULL in the last column — survive)
-    val cells = new Array[String](maxNeeded + 1)
-    var cellIdx = 0
-    var cellStart = 0
-    var i = 0
-    while (cellIdx <= maxNeeded && i <= line.length) {
-      if (i == line.length || line.charAt(i) == '\t') {
-        if (neededCell(cellIdx))
-          cells(cellIdx) = line.substring(cellStart, i)
-        cellIdx += 1
-        cellStart = i + 1
-      }
-      i += 1
-    }
-    // cells actually present on the line, for SHORT-row detection (the
-    // file predates an ADD COLUMNS evolution — missing trailing cells
-    // read as NULL); when the walk stopped early every needed cell was
-    // seen, so the count only matters when it is small
-    val cellsSeen = cellIdx
-    val values = plan.map { case (idx, dt, const) =>
-      if (idx == PosIdx) lineStart
-      else if (idx < 0) const
-      else if (idx >= cellsSeen) null
-      else {
-        val cell = cells(idx)
-        if (cell == PartitionedSink.NullToken) null
-        else dt match {
-          case StringType => UTF8String.fromString(
-            TsvCodec.unescape(UTF8String.fromString(cell)).toString)
-          case other => cast(cell, other)
-        }
-      }
-    }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
-    true
-  }
-
-  override def get(): InternalRow = current
-  override def close(): Unit = { lineReader.close() }
 }
 
 /** Range evaluation for file skipping: decides whether a file MAY
@@ -1530,20 +1283,4 @@ private[sources] object SinkFileSkip {
           (cMn, cMx) => cMn <= 0 && cMx >= 0))
       case _ => true
     }
-}
-
-private[sources] object PartitionedSinkReader {
-  /** Text → Catalyst value for the sink's atomic type set. */
-  def castValue(s: String, dt: DataType): Any = dt match {
-    case StringType  => UTF8String.fromString(s)
-    case LongType    => s.toLong
-    case IntegerType => s.toInt
-    case DoubleType  => s.toDouble
-    case FloatType   => s.toFloat
-    case BooleanType => s.toBoolean
-    case ShortType   => s.toShort
-    case ByteType    => s.toByte
-    case other => throw new UnsupportedOperationException(
-      s"PartitionedSink read supports atomic column types only, got $other")
-  }
 }

@@ -64,10 +64,10 @@ private[graft] object SinkMeta {
   final val FileCol = "_file"
 
   /** Name of the row-position metadata column (Iceberg's `_pos`
-    * shape): the row's STABLE position within its data file — byte
-    * offset of the line for TSV files, file-level row index for
-    * parquet. (file, pos) is the row identity merge-on-read deletes
-    * key on; stability holds because published files are immutable.
+    * shape): the row's STABLE position within its data file — its
+    * file-level row index. (file, pos) is the row identity
+    * merge-on-read deletes key on; stability holds because published
+    * files are immutable.
     */
   final val PosCol = "_pos"
 
@@ -129,18 +129,7 @@ private[sources] class SinkRowLevelOperation(
     new SinkCowScanBuilder(path, partCols, fullSchema, this,
       SinkFormat.fieldIds(props))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder = {
-    // the replace write must carry every table column (partition
-    // columns route rows to leaves; data columns define the cell
-    // order) — and in TABLE order, because the TSV layout is
-    // positional and the readers decode by the table schema's
-    // ordinals. Catalyst's ReplaceDataProjections provides exactly
-    // that; this guard turns any drift into a loud error instead of
-    // silently transposed cells.
-    val names = info.schema().fields.map(_.name).toSeq
-    val expected = fullSchema.fields.map(_.name).toSeq
-    require(names == expected,
-      s"row-level write schema $names must match table schema $expected")
+  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder {
       override def build(): Write = new Write
           with RequiresDistributionAndOrdering {
@@ -169,7 +158,6 @@ private[sources] class SinkRowLevelOperation(
             info.queryId(), versioned, SinkRowLevelOperation.this, props)
       }
     }
-  }
 }
 
 private[sources] class SinkCowScanBuilder(
@@ -298,9 +286,7 @@ private[sources] class SinkCowScan(
   /** NO row-group skipping on a group-based rewrite scan: the files it
     * plans must be read WHOLE — a skipped row group's non-matching
     * rows would silently vanish from the rewritten file. COLUMNAR when
-    * every candidate group is parquet (decided on the STATIC set so
-    * runtime filtering — a subset — can never break Spark's
-    * all-or-nothing columnar requirement): the rewrite's read half
+    * the projection qualifies and the STATIC set is non-empty: the rewrite's read half
     * gets the vectorized decode, ColumnarToRow feeds the ReplaceData
     * projection, and merge-on-read positions fold via the reader's
     * batch-grain mask.
@@ -311,8 +297,7 @@ private[sources] class SinkCowScan(
       PartitionedSinkWriterFactory.sessionConf(), fieldIds,
       columnar = SinkParquetColumnar.enabledInSession() &&
         SinkParquetColumnar.schemaEligible(required) &&
-        staticPrunedFiles.nonEmpty &&
-        staticPrunedFiles.forall(_._2.getPath.getName.endsWith(".parquet")))
+        staticPrunedFiles.nonEmpty)
 }
 
 /** Row-grain change files for COW rewrites (`graft.rowChanges`):
@@ -563,8 +548,7 @@ private class SinkDeltaBatchWrite(
       if (schema.isEmpty) None
       else Some(new PartitionedSinkWriterFactory(path, partCols,
         schema, queryId, PartitionedSinkWriterFactory.sessionConf(),
-        SinkBloomConf.fromSession(props),
-        SinkFormat.fromProps(props), SinkFormat.fieldIds(props),
+        SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
         SinkParquetWrite.rowGroupBytesFromSession()))
     new SinkDeltaWriterFactory(innerFactory, fileOrd, posOrd)
   }
@@ -642,7 +626,8 @@ private class SinkReplaceBatchWrite(
       info: PhysicalWriteInfo): DataWriterFactory =
     new PartitionedSinkWriterFactory(path, partCols, schema, queryId,
       PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props))
+      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
+      SinkParquetWrite.rowGroupBytesFromSession())
 
   override def useCommitCoordinator(): Boolean = true
 

@@ -19,41 +19,35 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** PARQUET data files for the sink table format — the columnar
-  * storage tier under the format-agnostic commit protocol (staging,
-  * publish renames, CAS version manifests, stats/bloom manifests,
-  * partition layout, row-level replace and the change feed all key on
-  * FILE NAMES and never looked inside a data file; this layer is the
-  * only part that does).
-  *
-  * Selected per TABLE via the `graft.format` property: `parquet` is
-  * the default for NEW catalog tables, `tsv` remains the default for
-  * the path-based writer and for every pre-existing table (whose
-  * sidecar has no format property). Dispatch on the READ side is per
-  * FILE by extension, so a table whose property changed mid-life —
-  * or whose change files were written by Spark's own parquet writer —
-  * reads correctly file by file.
+/** PARQUET data files for the sink table format — the storage tier
+  * under the format-agnostic commit protocol (staging, publish
+  * renames, CAS version manifests, stats/bloom manifests, partition
+  * layout, row-level replace and the change feed all key on FILE
+  * NAMES and never look inside a data file; this layer is the only
+  * part that does). Every data file is parquet: there is no format
+  * option (see [[SinkFormat.userProps]]).
   *
   * Why hand-rolled read/write support instead of Spark's internal
   * ParquetWriteSupport/VectorizedParquetRecordReader: the sink's type
   * surface is deliberately small — the atomic set (string/boolean/
   * int/long/float/double/short/byte), opaque BINARY, and NESTED
   * struct/array compositions of those (parquet's standard group and
-  * 3-level LIST shapes; the TSV tier stays atomic-only —
-  * PartitionedSinkWriter.fieldStr's contract) — which the public
-  * parquet-mr API covers compactly with no dependency on Spark
-  * internals that move between releases; and owning the materializer
+  * 3-level LIST shapes) — which the public parquet-mr API covers
+  * compactly with no dependency on Spark internals that move between
+  * releases; and owning the materializer
   * is what makes FIELD-ID column resolution (rename/drop evolution)
   * and row-index tracking (merge-on-read positions) possible.
   *
-  * What this buys at 100 TB vs the TSV tier: a narrow projection
-  * reads only its columns' chunks (I/O pruning, not just decode
-  * pruning), values are dictionary/RLE-encoded and snappy-compressed
+  * What this buys at 100 TB: a narrow projection reads only its
+  * columns' chunks (I/O pruning, not just decode pruning), values are dictionary/RLE-encoded and snappy-compressed
   * (5–10× fewer bytes on disk and over the wire), and byte-range
   * split carving maps onto row groups (the classic midpoint rule via
   * ParquetReadOptions.withRange).
   */
 private[graft] object SinkFormat {
+  /** The retired data-file format switch. Not an option: every sink
+    * data file is parquet. Kept only to reject it.
+    */
   final val PropFormat = "graft.format"
   final val PropFieldIds = "graft.fieldIds"
   final val PropNextFieldId = "graft.nextFieldId"
@@ -78,8 +72,6 @@ private[graft] object SinkFormat {
     * a newly-set order to existing data.
     */
   final val PropSortOrder = "graft.sortOrder"
-  final val Tsv = "tsv"
-  final val Parquet = "parquet"
 
   def deleteMode(props: Map[String, String]): String =
     props.getOrElse(PropDeleteMode, "cow") match {
@@ -112,21 +104,35 @@ private[graft] object SinkFormat {
         c
       }
 
-  def fromProps(props: Map[String, String]): String =
-    props.getOrElse(PropFormat, Tsv) match {
-      case Tsv => Tsv
-      case Parquet => Parquet
-      case other => throw new IllegalArgumentException(
-        s"$PropFormat must be '$Tsv' or '$Parquet', got '$other'")
-    }
+  /** User-supplied `graft.*` properties (path-API options, CREATE
+    * TBLPROPERTIES), unchanged: `graft.format` is rejected — the sink
+    * has one data-file format.
+    */
+  def userProps(where: String,
+                props: Map[String, String]): Map[String, String] = {
+    require(!props.contains(PropFormat),
+      s"$where: $PropFormat is not an option (sink data files are " +
+        "always parquet)")
+    props
+  }
 
-  def extension(format: String): String =
-    if (format == Parquet) "parquet" else "tsv"
+  /** Properties persisted in a table's sidecar, minus the retired
+    * format key. Tables created while the key existed recorded
+    * 'parquet' (fine) or 'tsv', whose data files nothing reads now.
+    */
+  def storedProps(table: String,
+                  props: Map[String, String]): Map[String, String] = {
+    props.get(PropFormat).foreach(f => require(f == "parquet",
+      s"table $table is '$f'-format: TSV data files are no longer " +
+        "readable (the sink reads and writes parquet only) — rewrite " +
+        "the table from its source"))
+    props - PropFormat
+  }
 
   /** Iceberg-legal type WIDENING: every old file's physical values
     * embed exactly into the new type, so readers only need a decode
     * cast (resolved through the field-id registry — which is why the
-    * evolution requires a parquet table with ids). Everything else —
+    * evolution requires a column with a field id). Everything else —
     * narrows, integral↔floating, string↔anything — is rejected.
     */
   def safeWiden(from: org.apache.spark.sql.types.DataType,
@@ -139,31 +145,23 @@ private[graft] object SinkFormat {
       case _ => false
     }
 
-  /** Create/evolve-time type gate: BINARY and NESTED (struct / array
-    * / map) data columns are parquet-only (the TSV text encoding is
-    * flat positional text) and never partition columns (partition
-    * values name directories). Loud at DDL time, not first-row write
-    * time. Nested element types recurse — a struct of decimals is as
-    * unsupported as a top-level decimal.
+  /** Create/evolve-time type gate: BINARY and NESTED (struct / array)
+    * columns are never partition columns (partition values name
+    * directories), and MAP columns are rejected. Loud at DDL time, not
+    * first-row write time. Nested element types recurse — a struct of
+    * decimals is as unsupported as a top-level decimal.
     */
-  def validateColumnType(format: String, name: String,
+  def validateColumnType(name: String,
                          dt: org.apache.spark.sql.types.DataType,
                          isPartition: Boolean): Unit = dt match {
     case BinaryType =>
       require(!isPartition,
         s"partition column $name cannot be BINARY (its rendered values " +
           "name the directory layout)")
-      require(format == Parquet,
-        s"BINARY column $name needs a parquet-format table " +
-          "(the TSV layout is positional text with no lossless binary " +
-          "rendering)")
     case _: StructType | _: ArrayType =>
       require(!isPartition,
         s"partition column $name cannot be nested (its rendered values " +
           "name the directory layout)")
-      require(format == Parquet,
-        s"nested column $name needs a parquet-format table " +
-          "(the TSV layout is flat positional text)")
       def walk(n: String, t: org.apache.spark.sql.types.DataType): Unit =
         t match {
           case s: StructType =>
@@ -222,9 +220,8 @@ private[graft] object SinkFormat {
 }
 
 /** Write half: a [[WriteSupport]] over [[InternalRow]] for the sink's
-  * atomic type set. One writer per (task, partition tuple), same as
-  * the TSV tier; stats/bloom accumulation stays in
-  * [[PartitionedSinkWriter]] (format-independent).
+  * atomic type set. One writer per (task, partition tuple); stats/bloom
+  * accumulation stays in [[PartitionedSinkWriter]].
   */
 private[graft] object SinkParquetWrite {
 
@@ -418,8 +415,8 @@ private[graft] object SinkParquetIo {
   * file's row groups exactly). Projection is pushed to the parquet
   * column chunks: only the REQUIRED data columns' pages are read and
   * decoded; partition columns, `_file`/`_pos` metadata and
-  * change-feed extras are split-level constants, same contract as the
-  * TSV reader.
+  * change-feed extras are split-level constants
+  * ([[SinkParquetResolve.castValue]]).
   *
   * Column resolution: by FIELD ID when both the table (via
   * `graft.fieldIds`) and the file field carry one — which is what
@@ -427,8 +424,7 @@ private[graft] object SinkParquetIo {
   * column keeps its id; files written before the rename resolve
   * through it) — by NAME otherwise (files written before ids existed,
   * and Spark-written change files). A required column absent from the
-  * file reads as NULL (the ADD COLUMNS evolution, same as the TSV
-  * short-row rule).
+  * file reads as NULL (the ADD COLUMNS evolution).
   */
 /** ROW-GROUP skipping for the parquet tier: evaluate the scan's
   * pushed data-column comparisons against each selected row group's
@@ -549,6 +545,22 @@ private[sources] object SinkParquetResolve {
 
   private def idOf(t: Type): Option[Int] = Option(t.getId).map(_.intValue)
 
+  /** Rendered split constant (partition value, change-feed extra) →
+    * Catalyst value, for the atomic types a partition column can have.
+    */
+  def castValue(s: String, dt: DataType): Any = dt match {
+    case StringType  => UTF8String.fromString(s)
+    case LongType    => s.toLong
+    case IntegerType => s.toInt
+    case DoubleType  => s.toDouble
+    case FloatType   => s.toFloat
+    case BooleanType => s.toBoolean
+    case ShortType   => s.toShort
+    case ByteType    => s.toByte
+    case other => throw new UnsupportedOperationException(
+      s"PartitionedSink read supports atomic column types only, got $other")
+  }
+
   def field(fileSchema: MessageType, fieldIds: Map[String, Int],
             name: String): Option[Type] = {
     val fields = fileSchema.getFields.asScala
@@ -598,7 +610,7 @@ private[sources] class SinkParquetReader(
   // per-row non-file value)
   private val partValues: Map[String, Any] =
     partCols.zip(split.partValues).map { case (c, v) =>
-      c -> PartitionedSinkReader.castValue(v,
+      c -> SinkParquetResolve.castValue(v,
         if (split.inlineParts) StringType else fullSchema(c).dataType)
     }.toMap
 
@@ -623,7 +635,7 @@ private[sources] class SinkParquetReader(
         FromFile(resolved.length - 1)
       }
       else if (extra.isDefined)
-        Const(PartitionedSinkReader.castValue(extra.get._2, f.dataType))
+        Const(SinkParquetResolve.castValue(extra.get._2, f.dataType))
       else if (f.name == SinkMeta.FileCol)
         Const(UTF8String.fromString(split.file))
       else if (f.name == SinkMeta.PosCol) RowPos

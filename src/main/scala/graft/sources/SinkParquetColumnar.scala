@@ -67,13 +67,6 @@ private[graft] object SinkParquetColumnar {
     */
   final val BatchRows = 4096
 
-  /** Can the scan serve these splits as batches? (Merge-on-read
-    * position deletes are handled INSIDE the columnar reader via a
-    * per-batch keep mask, so they don't demote the scan.)
-    */
-  def splitsEligible(splits: Seq[SinkFileSplit]): Boolean =
-    splits.forall(_.file.endsWith(".parquet"))
-
   /** The vectorized decode handles FLAT columns and ARRAYS OF
     * ATOMICS (one parquet leaf per field either way — the embedding /
     * token-list shapes decode straight into an offsets-plus-child
@@ -127,7 +120,7 @@ private[sources] class SinkParquetColumnarReader(
 
   private val partValues: Map[String, Any] =
     partCols.zip(split.partValues).map { case (c, v) =>
-      c -> PartitionedSinkReader.castValue(v,
+      c -> SinkParquetResolve.castValue(v,
         if (split.inlineParts) StringType else fullSchema(c).dataType)
     }.toMap
 
@@ -170,7 +163,7 @@ private[sources] class SinkParquetColumnarReader(
             new OnHeapColumnVector(SinkParquetColumnar.BatchRows, f.dataType))
         case None if extra.isDefined =>
           Const(constVector(f.dataType,
-            PartitionedSinkReader.castValue(extra.get._2, f.dataType)))
+            SinkParquetResolve.castValue(extra.get._2, f.dataType)))
         case None if f.name == SinkMeta.FileCol =>
           Const(constVector(StringType, UTF8String.fromString(split.file)))
         case None if f.name == SinkMeta.PosCol =>

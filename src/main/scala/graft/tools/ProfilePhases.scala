@@ -71,7 +71,6 @@ object ProfilePhases {
       time("ann: write corpus (create)") {
         emb.withColumn("cell", Similarity.nearestCentroid(col("embedding"), cents))
           .writeTo("graft_sim.ivf_corpus")
-          .tableProperty("graft.format", "parquet")
           .partitionedBy(col("cell")).create()
       }
       val p = emb.filter(col("vec_id") % 100 === 0)
@@ -156,34 +155,6 @@ object ProfilePhases {
           .agg(count(lit(1)).as("n"))))
     }
 
-    // A/B: the same delete flow on a PARQUET-format table — quantifies
-    // what the TSV default costs q_dsv2_delete's scans and rewrite
-    (1 to 2).foreach { rep =>
-      println(s"=== q_dsv2_delete PARQUET rep $rep")
-      val ord = Tables.orders(s, d)
-      time("delp: drop table")(s.sql("DROP TABLE IF EXISTS graft_dyn.delp_orders"))
-      def band(lo: Double, hi: Double) = ord
-        .filter(col("o_totalprice") >= lo && col("o_totalprice") < hi)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderstatus"), col("o_orderpriority"))
-      time("delp: create (band 1)")(
-        band(0, 100000).writeTo("graft_dyn.delp_orders")
-          .tableProperty("graft.format", "parquet")
-          .partitionedBy(col("o_orderpriority")).create())
-      time("delp: append band 2")(
-        band(100000, 200000).writeTo("graft_dyn.delp_orders").append())
-      time("delp: append band 3")(
-        band(200000, Double.MaxValue).writeTo("graft_dyn.delp_orders").append())
-      time("delp: DELETE (COW rewrite)")(
-        s.sql("""DELETE FROM graft_dyn.delp_orders
-          WHERE o_totalprice >= 150000 AND o_totalprice < 250000
-            AND o_orderstatus = 'F'"""))
-      time("delp: final agg read (noop)")(
-        noop(s.table("graft_dyn.delp_orders")
-          .groupBy(col("o_orderpriority"))
-          .agg(count(lit(1)).as("n"))))
-    }
-
     (1 to 2).foreach { rep =>
       println(s"=== q_dsv2_cluster rep $rep")
       val ord = Tables.orders(s, d)
@@ -194,7 +165,6 @@ object ProfilePhases {
           col("o_orderstatus"), col("o_orderpriority"))
       time("clus: create r0")(
         residue(0).writeTo("graft_dyn.clus_orders")
-          .tableProperty("graft.format", "parquet")
           .partitionedBy(col("o_orderpriority")).create())
       time("clus: append r1")(
         residue(1).writeTo("graft_dyn.clus_orders").append())
@@ -221,13 +191,11 @@ object ProfilePhases {
       time("spj: create facts")(
         ord.select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
           .writeTo("graft_dyn.spj_facts")
-          .tableProperty("graft.format", "parquet")
           .partitionedBy(col("o_orderpriority")).create())
       time("spj: create status")(
         ord.select(col("o_orderkey").as("r_orderkey"), col("o_orderstatus"),
             col("o_orderpriority").as("r_prio"))
           .writeTo("graft_dyn.spj_status")
-          .tableProperty("graft.format", "parquet")
           .partitionedBy(col("r_prio")).create())
       time("spj: zero-shuffle join (noop)") {
         val l = s.table("graft_dyn.spj_facts")
@@ -247,7 +215,6 @@ object ProfilePhases {
       time("embed: drop")(s.sql("DROP TABLE IF EXISTS graft_sim.embed_corpus"))
       time("embed: create corpus")(
         emb.writeTo("graft_sim.embed_corpus")
-          .tableProperty("graft.format", "parquet")
           .partitionedBy(col("label")).create())
       time("embed: probes+brute (noop)") {
         val corpus = s.table("graft_sim.embed_corpus")

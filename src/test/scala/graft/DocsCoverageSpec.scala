@@ -87,9 +87,9 @@ class DocsCoverageSpec extends AnyFunSuite {
   // forced a refresh. Pin it to the CURRENT round: the round in
   // progress is max(recorded BENCH_r<N>.json) + 1 (the driver records
   // its artifact only after the round closes), and a committed
-  // bench_out/bench_sf1_r<current>.json must exist — a round that
-  // ships operator changes without re-measuring the 10x slope fails
-  // here.
+  // bench_out/bench_sf1_r<current>.json must exist with status ok — a
+  // round that ships operator changes without re-measuring the 10x
+  // slope fails here.
   test("a fresh sf1 bench artifact exists for the round in progress") {
     val recorded = Option(new java.io.File(".").listFiles()).toSeq.flatten
       .flatMap(f => raw"^BENCH_r(\d+)\.json$$".r
@@ -100,6 +100,13 @@ class DocsCoverageSpec extends AnyFunSuite {
       s"round $current has no committed sf1 sweep ($expected) — rerun " +
         "Bench with SPARK_GRAFT_SF_DIR=data/sf1 (see SURVEY §8) so the " +
         "scaling slope table stays current")
+    // a degraded or invalid sweep measured the machine's other load,
+    // not the engine: it is no scaling evidence
+    val status = raw""""status"\s*:\s*"([^"]*)"""".r
+      .findFirstMatchIn(read(expected)).map(_.group(1))
+    assert(status.contains("ok"),
+      s"$expected records status ${status.getOrElse("(none)")}, not ok — " +
+        "rerun the sf1 sweep on a quiet machine")
   }
 
   test("registry names are unique") {

@@ -85,19 +85,32 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(back.count() === 0)
   }
 
+  /** Rewrite a catalog table's sidecar as if CREATE had recorded
+    * `graft.format = <format>` (what tables created while the key
+    * existed carry).
+    */
+  private def stampFormat(tableDir: String, format: String): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sparkContext.hadoopConfiguration)
+    val (partCols, schema, props) = graft.sources.SinkSidecar.readDir(fs, tableDir)
+    // through the checksummed FS: a raw write would leave a stale .crc
+    val out = fs.create(new org.apache.hadoop.fs.Path(tableDir, "_table.json"), true)
+    try out.write(graft.sources.SinkSidecar.render(partCols, schema,
+      props + (graft.sources.SinkFormat.PropFormat -> format)).getBytes("UTF-8"))
+    finally out.close()
+  }
+
   // ---- protocol-level pins: the transitions Spark schedules on real
   // clusters (speculative twin loses the commit race; job aborts) ----
 
-  private def batchWriteFor(path: String, mode: String,
-                            format: String = "tsv"):
+  private def batchWriteFor(path: String, mode: String):
       org.apache.spark.sql.connector.write.BatchWrite = {
     import org.apache.spark.sql.util.CaseInsensitiveStringMap
     import scala.jdk.CollectionConverters._
     val fullSchema = StructType(dataSchema.fields :+ StructField("p", StringType))
     val provider = new graft.sources.PartitionedSink
     val table = provider.getTable(fullSchema, Array.empty,
-      Map("path" -> path, "partitionBy" -> "p",
-        "graft.format" -> format).asJava)
+      Map("path" -> path, "partitionBy" -> "p").asJava)
       .asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsWrite]
     val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
       override def options() = new CaseInsensitiveStringMap(java.util.Map.of())
@@ -1132,25 +1145,18 @@ class PartitionedSinkSpec extends SparkSpec {
     spark.conf.set("spark.sql.catalog.graft_evf_spec",
       classOf[graft.sources.PartitionedSinkCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_evf_spec.root", root)
-    // TSV opt-in: positional layout — rename/drop must reject
-    spark.sql("""CREATE TABLE graft_evf_spec.tsv_t
-      (k BIGINT, s STRING, p STRING) PARTITIONED BY (p)
-      TBLPROPERTIES ('graft.format' = 'tsv')""")
+    // a table whose sidecar still records the retired TSV format has
+    // data files nothing reads: rename/drop must reject, naming why
     Seq((1L, "a", "A")).toDF("k", "s", "p")
-      .writeTo("graft_evf_spec.tsv_t").append()
-    val eR = intercept[Exception] {
-      spark.sql("ALTER TABLE graft_evf_spec.tsv_t RENAME COLUMN s TO s2") }
-    assert(eR.getMessage.contains("POSITION"),
-      s"TSV rename must explain the positional constraint: ${eR.getMessage}")
-    val eD = intercept[Exception] {
-      spark.sql("ALTER TABLE graft_evf_spec.tsv_t DROP COLUMN s") }
-    assert(eD.getMessage.contains("POSITION"))
-    // the TSV files really are TSV (path default unchanged by the
-    // catalog's parquet default)
-    val tsvFiles = new java.io.File(s"$root/tsv_t/p=A").listFiles()
-      .map(_.getName).filter(n => !n.startsWith("_") && !n.startsWith("."))
-    assert(tsvFiles.nonEmpty && tsvFiles.forall(_.endsWith(".tsv")), tsvFiles.toSeq)
-    // parquet (default): rename, then read back PRE-rename files via id
+      .writeTo("graft_evf_spec.tsv_t").partitionedBy(col("p")).create()
+    stampFormat(s"$root/tsv_t", "tsv")
+    for (ddl <- Seq("RENAME COLUMN s TO s2", "DROP COLUMN s")) {
+      val e = intercept[Exception] {
+        spark.sql(s"ALTER TABLE graft_evf_spec.tsv_t $ddl") }
+      assert(e.getMessage.contains("TSV data files are no longer readable"),
+        s"$ddl: ${e.getMessage}")
+    }
+    // rename, then read back PRE-rename files via id
     Seq((1L, "before", 1.0, "A"), (2L, "before2", 2.0, "B"))
       .toDF("k", "s", "v", "p")
       .writeTo("graft_evf_spec.pq_t").partitionedBy(col("p")).create()
@@ -1171,7 +1177,6 @@ class PartitionedSinkSpec extends SparkSpec {
       spark.sql("ALTER TABLE graft_evf_spec.pq_t SET TBLPROPERTIES " +
         "('graft.fieldIds' = '1:boom')") }
     assert(eProp.getMessage.contains("not user-settable"))
-    spark.sql("DROP TABLE graft_evf_spec.tsv_t")
     spark.sql("DROP TABLE graft_evf_spec.pq_t")
   }
 
@@ -1256,14 +1261,13 @@ class PartitionedSinkSpec extends SparkSpec {
       spark.sql("ALTER TABLE graft_wid_spec.t2 ALTER COLUMN p TYPE BIGINT") }
     assert(eP.getMessage.contains("partition column"), eP.getMessage)
     spark.sql("DROP TABLE graft_wid_spec.t2")
-    // TSV tables re-parse by position — not retypable
-    spark.sql("""CREATE TABLE graft_wid_spec.tsv_t (k INT, p STRING)
-      PARTITIONED BY (p) TBLPROPERTIES ('graft.format' = 'tsv')""")
+    // TSV is no longer a table format: CREATE rejects it
     val eT = intercept[Exception] {
-      spark.sql("ALTER TABLE graft_wid_spec.tsv_t ALTER COLUMN k TYPE BIGINT") }
-    assert(eT.getMessage.contains("parquet-format"), eT.getMessage)
+      spark.sql("""CREATE TABLE graft_wid_spec.tsv_t (k INT, p STRING)
+        PARTITIONED BY (p) TBLPROPERTIES ('graft.format' = 'tsv')""") }
+    assert(eT.getMessage.contains("graft.format is not an option"),
+      eT.getMessage)
     spark.sql("DROP TABLE graft_wid_spec.t")
-    spark.sql("DROP TABLE graft_wid_spec.tsv_t")
   }
 
   test("BINARY data columns: exact roundtrip on parquet; stats exclude them; TSV and partitioning reject") {
@@ -1299,12 +1303,13 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(statsText.contains("\tk\t"), "numeric columns keep their stats")
     assert(!statsText.contains("\tpayload\t"),
       s"binary columns must carry no stats, got:\n$statsText")
-    // TSV rejects at DDL time, loudly
+    // TSV is no longer a table format: CREATE rejects it, loudly
     val eT = intercept[Exception] {
       spark.sql("""CREATE TABLE graft_bin_spec.tsv_t (k BIGINT, b BINARY,
         p STRING) PARTITIONED BY (p)
         TBLPROPERTIES ('graft.format' = 'tsv')""") }
-    assert(eT.getMessage.contains("parquet-format"), eT.getMessage)
+    assert(eT.getMessage.contains("graft.format is not an option"),
+      eT.getMessage)
     // binary can never partition (its rendering would name directories)
     val eP = intercept[Exception] {
       Seq((1L, Array[Byte](1))).toDF("k", "pb")
@@ -1412,13 +1417,13 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(!new File(path, "_staging").exists(), "staging swept on abort")
   }
 
-  // ---- parquet storage tier: the same commit protocol over columnar
-  // data files (graft.format = 'parquet') ----
+  // ---- parquet storage tier: the commit protocol over columnar
+  // data files ----
 
   test("parquet format: round-trip (delimiters, NULLs, empty string), " +
     "zombie-twin exactly-once, and job abort — same protocol, columnar files") {
     val path = tmpDir("sink_pq_proto")
-    val bw = batchWriteFor(path, "append", format = "parquet")
+    val bw = batchWriteFor(path, "append")
     val factory = bw.createBatchWriterFactory(null)
     val winner = factory.createWriter(0, 300L)
     val zombie = factory.createWriter(0, 301L)
@@ -1441,7 +1446,7 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(dataFiles.nonEmpty && dataFiles.forall(_.endsWith(".parquet")),
       s"data files must be parquet: ${dataFiles.toSeq}")
     // job abort leaves the published layout untouched
-    val bw2 = batchWriteFor(path, "truncate", format = "parquet")
+    val bw2 = batchWriteFor(path, "truncate")
     val f2 = bw2.createBatchWriterFactory(null)
     val w = f2.createWriter(0, 310L)
     w.write(internalRow(7L, 7.0, "gone", "A"))
@@ -1452,8 +1457,7 @@ class PartitionedSinkSpec extends SparkSpec {
   }
 
   test("parquet format: a narrow projection reads a fraction of the " +
-    "full-width bytes (column-chunk I/O pruning), and the layout is " +
-    "smaller on disk than TSV for the same rows") {
+    "full-width bytes (column-chunk I/O pruning)") {
     import spark.implicits._
     val root = tmpDir("sink_pq_io")
     spark.conf.set("spark.sql.catalog.graft_pqio_spec",
@@ -1489,32 +1493,7 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(narrow * 2 < full,
       s"narrow projection must read < half the full-width bytes " +
         s"(I/O pruning, not just decode pruning): narrow=$narrow full=$full")
-    // storage: REALISTIC (repetitive, categorical) rows — where
-    // dictionary/RLE + snappy earn their keep — occupy a fraction of
-    // the TSV bytes for the same data (the entropy rows above are the
-    // worst case for compression, deliberately: that pin isolates
-    // projection I/O, this one isolates encoding)
-    val catRows = (1L to 5000L).map { i =>
-      (i, s"status-${i % 7}", s"category-${i % 23}",
-        s"region-${i % 11}", (i % 100) * 1.0, (i % 3).toString)
-    }
-    val cat = catRows.toDF("k", "pa", "pb", "pc", "v", "p")
-    cat.writeTo("graft_pqio_spec.cat").partitionedBy(col("p")).create()
-    val tsvPath = tmpDir("sink_pq_io_tsv")
-    cat.write.format("graft.sources.PartitionedSink")
-      .option("partitionBy", "p").mode("append").save(tsvPath)
-    def layoutBytes(dir: String, ext: String): Long =
-      new File(dir).listFiles().filter(_.isDirectory)
-        .flatMap(_.listFiles()).filter(f => f.getName.endsWith(ext))
-        .map(_.length()).sum
-    val pqBytes = layoutBytes(s"$root/cat", ".parquet")
-    val tsvBytes = layoutBytes(tsvPath, ".tsv")
-    assert(pqBytes > 0 && tsvBytes > 0)
-    assert(pqBytes * 2 < tsvBytes,
-      s"parquet layout must compress below half the TSV bytes " +
-        s"(pq=$pqBytes tsv=$tsvBytes)")
     spark.sql("DROP TABLE graft_pqio_spec.wide")
-    spark.sql("DROP TABLE graft_pqio_spec.cat")
   }
 
   test("parquet format: row-group footer stats skip provably-excluded " +

@@ -71,6 +71,19 @@ class RowLevelOpsSpec extends SparkSpec {
     else dataFileNames(dir)
   }
 
+  test("a copy-on-write rewrite writes parquet files with field ids: a later RENAME keeps the rewritten rows") {
+    val root = freshCatalog("rlfmt")
+    seed("rlfmt.t", Seq((1L, 1.0, "A"), (2L, 2.0, "A"), (3L, 3.0, "B")))
+    spark.sql("UPDATE rlfmt.t SET v = v + 10 WHERE k = 1")
+    assert(liveFileNames(root, "t").forall(_.endsWith(".parquet")),
+      liveFileNames(root, "t"))
+    spark.sql("ALTER TABLE rlfmt.t RENAME COLUMN v TO w")
+    val got = spark.table("rlfmt.t").collect()
+      .map(r => (r.getAs[Long]("k"), r.getAs[Double]("w"))).toSet
+    assert(got === Set((1L, 11.0), (2L, 2.0), (3L, 3.0)),
+      "rewritten files must resolve the renamed column through its field id")
+  }
+
   test("DELETE with a data-column predicate rewrites and keeps the rest") {
     freshCatalog("rl1")
     seed("rl1.t",

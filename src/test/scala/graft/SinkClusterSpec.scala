@@ -112,7 +112,6 @@ class SinkClusterSpec extends SparkSpec {
     shuffled.map(k => (k.toLong, "A")).toDF("k", "p")
       .coalesce(1)
       .writeTo("cl3.t").tableProperty("graft.sortOrder", "k")
-      .tableProperty("graft.format", "parquet")
       .partitionedBy(col("p")).create()
     // one batch in, rows must come back sorted within each file: read
     // with _pos and check monotonicity per file

@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * array = 3-level LIST); the row reader's record-assembly converters
   * recurse. Arrays of ATOMICS keep the vectorized path (rep-level walk,
   * SinkParquetColumnarSpec); scans projecting a struct or an array of
-  * non-atomics demote to the row path (spec-pinned here). TSV tables,
+  * non-atomics demote to the row path (spec-pinned here). A TSV format,
   * partition columns and MAP types reject loudly at DDL time.
   */
 class SinkNestedSpec extends SparkSpec {
@@ -42,8 +42,7 @@ class SinkNestedSpec extends SparkSpec {
       .withColumn("hits", array(
         struct(lit("q1").as("q"), col("k").cast("int").as("rank")),
         struct(lit("q2").as("q"), lit(7).as("rank"))))
-    df.writeTo(t).tableProperty("graft.format", "parquet")
-      .partitionedBy(col("p")).create()
+    df.writeTo(t).partitionedBy(col("p")).create()
   }
 
   test("struct / array / array-of-struct roundtrip byte-exact") {
@@ -79,8 +78,7 @@ class SinkNestedSpec extends SparkSpec {
           .when(col("k") === 2, array().cast("array<bigint>"))
           .when(col("k") === 3, array(lit(1L), lit(null).cast("bigint")))
           .otherwise(array(lit(9L))))
-    df.writeTo("ns2.t").tableProperty("graft.format", "parquet")
-      .partitionedBy(col("p")).create()
+    df.writeTo("ns2.t").partitionedBy(col("p")).create()
     val rows = spark.table("ns2.t").orderBy(col("k")).collect()
     assert(rows(0).isNullAt(rows(0).fieldIndex("info")))
     assert(rows(0).isNullAt(rows(0).fieldIndex("emb")))
@@ -117,7 +115,6 @@ class SinkNestedSpec extends SparkSpec {
     freshCatalog("ns5")
     import spark.implicits._
     Seq((1L, "A")).toDF("k", "p").writeTo("ns5.t")
-      .tableProperty("graft.format", "parquet")
       .partitionedBy(col("p")).create()
     spark.sql("ALTER TABLE ns5.t ADD COLUMNS (meta STRUCT<src: STRING, n: BIGINT>)")
     Seq((2L, "A")).toDF("k", "p")
@@ -138,16 +135,15 @@ class SinkNestedSpec extends SparkSpec {
       base.writeTo("ns6.bad1").tableProperty("graft.format", "tsv")
         .partitionedBy(col("p")).create()
     }
-    assert(e1.getMessage.contains("parquet-format"))
+    assert(e1.getMessage.contains("graft.format is not an option"))
     val e2 = intercept[Exception] {
-      base.writeTo("ns6.bad2").tableProperty("graft.format", "parquet")
-        .partitionedBy(col("info")).create()
+      base.writeTo("ns6.bad2").partitionedBy(col("info")).create()
     }
     assert(e2.getMessage.toLowerCase.contains("partition"))
     val e3 = intercept[Exception] {
       Seq((1L, "A")).toDF("k", "p")
         .withColumn("m", map(lit("a"), lit(1L)))
-        .writeTo("ns6.bad3").tableProperty("graft.format", "parquet")
+        .writeTo("ns6.bad3")
         .partitionedBy(col("p")).create()
     }
     assert(e3.getMessage.contains("array<struct<key,value>>"))

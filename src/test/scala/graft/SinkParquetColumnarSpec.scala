@@ -32,7 +32,7 @@ class SinkParquetColumnarSpec extends SparkSpec {
     root
   }
 
-  test("eligible parquet scans plan ColumnarToRow; the flag forces rows; TSV stays rows") {
+  test("eligible parquet scans plan ColumnarToRow; the flag forces rows") {
     import spark.implicits._
     setupCatalog("graft_colnr1")
     Seq((1L, 1.5, "a", "A"), (2L, 2.5, "b", "B"))
@@ -44,13 +44,7 @@ class SinkParquetColumnarSpec extends SparkSpec {
       assert(!scanIsColumnar(spark.table("graft_colnr1.t")),
         "the escape hatch must force the row path")
     }
-    spark.sql("""CREATE TABLE graft_colnr1.tsv_t (k BIGINT, p STRING)
-      PARTITIONED BY (p) TBLPROPERTIES ('graft.format' = 'tsv')""")
-    Seq((1L, "A")).toDF("k", "p").writeTo("graft_colnr1.tsv_t").append()
-    assert(!scanIsColumnar(spark.table("graft_colnr1.tsv_t")),
-      "TSV scans cannot batch")
     spark.sql("DROP TABLE graft_colnr1.t")
-    spark.sql("DROP TABLE graft_colnr1.tsv_t")
   }
 
   test("columnar and row paths answer identically: nulls, evolution, _pos/_file, projections, skips") {

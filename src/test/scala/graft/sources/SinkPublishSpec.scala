@@ -145,89 +145,117 @@ class SinkPublishSpec extends AnyFunSuite {
     spark.sql("DROP TABLE graft_st_spec.t")
   }
 
-  test("legacy (pre-r15) array offsets absorb into the generation log: exact deltas, no duplicates, no loss") {
-    // a pre-r15 checkpoint's offsets are flat JSON arrays of every file
-    // ever emitted; the generation encoding must ABSORB one on first
-    // deserialize (unseen files become the next generation) and plan
-    // mixed legacy/generation batches as exact set deltas — an operator
-    // upgrading in place neither replays the whole table nor loses the
-    // files published between the old run's last offset and the upgrade
+  /** A one-partition catalog table with one parquet row, for the
+    * retired-TSV rejections below.
+    */
+  private def freshTable(cat: String): String = {
     val spark = graft.TestSpark.spark
     import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val root = Files.createTempDirectory("sink_legacy").toString
-    spark.conf.set("spark.sql.catalog.graft_lg_spec",
+    val root = Files.createTempDirectory(s"sink_$cat").toString
+    spark.conf.set(s"spark.sql.catalog.$cat",
       classOf[PartitionedSinkCatalog].getName)
-    spark.conf.set("spark.sql.catalog.graft_lg_spec.root", root)
-    def batch(ks: Seq[Long]) = ks.map(k => (k, "A")).toDF("k", "p").coalesce(1)
-    // a table with a pre-r15 checkpoint is by definition a TSV-era
-    // table (and the file ordering below reads the one-row files as
-    // text) — pin the legacy format explicitly
-    batch(Seq(1L)).writeTo("graft_lg_spec.t")
-      .tableProperty("graft.format", "tsv")
-      .partitionedBy(col("p")).create()
-    batch(Seq(2L)).writeTo("graft_lg_spec.t").append()
-    batch(Seq(3L)).writeTo("graft_lg_spec.t").append()
+    spark.conf.set(s"spark.sql.catalog.$cat.root", root)
+    Seq((1L, "A")).toDF("k", "p").writeTo(s"$cat.t")
+      .partitionedBy(org.apache.spark.sql.functions.col("p")).create()
+    s"$root/t"
+  }
+
+  private def assertTsvRejection(e: Throwable, names: String): Unit = {
+    val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains("TSV data files are no longer readable") &&
+      msgs.contains(names), msgs)
+  }
+
+  test("a sidecar recording graft.format = 'tsv' fails to load, naming the table") {
+    val spark = graft.TestSpark.spark
+    val dir = freshTable("graft_tsvsc_spec")
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-    // the three published files in ROW order (batch file names carry a
-    // random query token, so lexicographic path order is meaningless —
-    // order by each one-row file's k value instead), rendered the way
-    // the tail renders paths
-    val files = fs.listStatus(new Path(s"$root/t/p=A"))
-      .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith("."))
-      .map { s =>
-        val in = fs.open(s.getPath)
-        val k = try scala.io.Source.fromInputStream(in, "UTF-8")
-          .mkString.trim.toLong
-        finally in.close()
-        (k, s.getPath.toString)
-      }.sortBy(_._1).map(_._2).toSeq
-    assert(files.length === 3)
-    def legacyJson(fl: Seq[String]) =
-      fl.map(f => "\"" + f.replace("\\", "\\\\") + "\"")
-        .mkString("[", ",", "]")
+    val (partCols, schema, props) = SinkSidecar.readDir(fs, dir)
+    def stamp(format: String): Unit = {
+      val out = fs.create(new Path(dir, "_table.json"), true)
+      try out.write(SinkSidecar.render(partCols, schema,
+        props + (SinkFormat.PropFormat -> format)).getBytes("UTF-8"))
+      finally out.close()
+    }
+    // what CREATE persisted while the key existed: still loads, and
+    // the key no longer surfaces as a table property
+    stamp("parquet")
+    assert(spark.table("graft_tsvsc_spec.t").count() === 1L)
+    assert(!spark.sessionState.catalogManager.catalog("graft_tsvsc_spec")
+      .asInstanceOf[PartitionedSinkCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier
+        .of(Array.empty, "t")).properties().containsKey(SinkFormat.PropFormat))
+    stamp("tsv")
+    assertTsvRejection(
+      intercept[Exception](spark.table("graft_tsvsc_spec.t").count()), "t")
+    // the change feed's out-of-band sidecar read names the table dir
+    assertTsvRejection(intercept[Exception](SinkSidecar.readDir(fs, dir)), dir)
+  }
+
+  test("a .tsv data file in a leaf fails scans and read-back loudly, naming the file") {
+    val spark = graft.TestSpark.spark
+    val dir = freshTable("graft_tsvdf_spec")
+    val stray = new java.io.File(s"$dir/p=A/part-0-0-A.tsv")
+    Files.write(stray.toPath, "2\n".getBytes("UTF-8"))
+    assertTsvRejection(
+      intercept[Exception](spark.table("graft_tsvdf_spec.t").count()),
+      stray.getName)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType)))
+    assertTsvRejection(intercept[Exception](
+      PartitionedSink.readBack(spark, dir, schema, "p").count()),
+      stray.getName)
+    stray.delete()
+    assert(spark.table("graft_tsvdf_spec.t").count() === 1L)
+  }
+
+  test("a file-list stream offset from a pre-generation checkpoint is rejected, naming the table") {
+    val spark = graft.TestSpark.spark
+    val dir = freshTable("graft_tsvof_spec")
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("k",
         org.apache.spark.sql.types.LongType),
       org.apache.spark.sql.types.StructField("p",
         org.apache.spark.sql.types.StringType)))
-    val ckpt = Files.createTempDirectory("legacy_ck").toString
-    def stream() = new PartitionedSinkScanBuilder(s"$root/t", Seq("p"), schema)
-      .build().toMicroBatchStream(ckpt)
-    val s1 = stream()
-    def rowsOf(splits: Array[org.apache.spark.sql.connector.read.InputPartition],
-               st: org.apache.spark.sql.connector.read.streaming.MicroBatchStream)
-        : Seq[Long] = {
-      val factory = st.createReaderFactory()
-      splits.toSeq.flatMap { sp =>
-        val r = factory.createReader(sp)
-        val buf = scala.collection.mutable.ArrayBuffer[Long]()
-        while (r.next()) buf += r.get().getLong(0)
-        r.close(); buf
-      }
+    val stream = new PartitionedSinkScanBuilder(dir, Seq("p"), schema)
+      .build().toMicroBatchStream(
+        Files.createTempDirectory("tsvof_ck").toString)
+    assertTsvRejection(intercept[IllegalStateException](
+      stream.deserializeOffset(s"""["$dir/p=A/part-0-0-A.tsv"]""")), dir)
+    // the generation encoding still round-trips
+    val off = stream.latestOffset()
+    assert(stream.deserializeOffset(off.json()) === off)
+    assert(spark.table("graft_tsvof_spec.t").count() === 1L)
+  }
+
+  test("graft.format is not an option: path-API writes, CREATE and ALTER reject it") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    freshTable("graft_nofmt_spec")
+    val rows = Seq((1L, "A")).toDF("k", "p")
+    def rejects(f: => Unit): Unit = {
+      val e = intercept[Exception](f)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        .mkString(" | ")
+      assert(msgs.contains(SinkFormat.PropFormat), msgs)
     }
-    // the old checkpoint committed through file 2; files absorb as gen 1
-    val start = s1.deserializeOffset(legacyJson(files.take(2)))
-    val end = s1.latestOffset()
-    val delta = s1.planInputPartitions(start, end)
-    assert(rowsOf(delta, s1).sorted === Seq(3L),
-      "the (legacy, latest) batch must emit exactly the post-upgrade file")
-    // an uncommitted legacy batch replays as a legacy/legacy pair —
-    // still an exact delta, whatever grain the absorb landed in
-    val s2 = stream()
-    val lStart = s2.deserializeOffset(legacyJson(files.take(1)))
-    val lEnd = s2.deserializeOffset(legacyJson(files.take(2)))
-    assert(rowsOf(s2.planInputPartitions(lStart, lEnd), s2).sorted === Seq(2L),
-      "a replayed legacy batch emits exactly its old delta")
-    // a RESTART on the migrated checkpoint rebuilds the seen set from
-    // the absorbed logs: nothing is re-logged, and a from-scratch read
-    // of the full range still sees every row exactly once
-    val s3 = stream()
-    val full = s3.planInputPartitions(s3.initialOffset(), s3.latestOffset())
-    assert(rowsOf(full, s3).sorted === Seq(1L, 2L, 3L),
-      "absorbed + fresh generations cover the table exactly once")
-    spark.sql("DROP TABLE graft_lg_spec.t")
+    rejects(rows.write.format("graft.sources.PartitionedSink")
+      .option("partitionBy", "p").option(SinkFormat.PropFormat, "parquet")
+      .mode("append").save(Files.createTempDirectory("nofmt").toString))
+    rejects(spark.sql("""CREATE TABLE graft_nofmt_spec.t2 (k BIGINT, p STRING)
+      PARTITIONED BY (p) TBLPROPERTIES ('graft.format' = 'parquet')"""))
+    rejects(spark.sql("ALTER TABLE graft_nofmt_spec.t SET TBLPROPERTIES " +
+      "('graft.format' = 'parquet')"))
+    // the path API writes parquet data files with no option at all
+    val path = Files.createTempDirectory("fmt_default").toString
+    rows.write.format("graft.sources.PartitionedSink")
+      .option("partitionBy", "p").mode("append").save(path)
+    val names = new java.io.File(s"$path/p=A").list().toSeq
+      .filterNot(n => n.startsWith("_") || n.startsWith("."))
+    assert(names.nonEmpty && names.forall(_.endsWith(".parquet")), names)
   }
 
   test("same-named staged files from two driver JVMs both survive publish") {
