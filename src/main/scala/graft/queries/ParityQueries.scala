@@ -2586,7 +2586,7 @@ object ParityQueries {
     * on a parquet sink table — typed payload records and list columns
     * (the embedding/token shapes) living inside the versioned table
     * format: write nested values derived from orders, read them back
-    * through the sink's own record-assembly readers, aggregate over
+    * through the sink's field-id-resolving reader, aggregate over
     * nested FIELD ACCESS and array elements. Roundtrip/null/evolution
     * pins live in SinkNestedSpec.
     */

@@ -304,7 +304,7 @@ private[sources] object SinkAggPushdown {
         Array(org.apache.spark.sql.catalyst.InternalRow.fromSeq(
           aggValues(perFile.map(_._2)).getOrElse(return None).toIndexedSeq))
       else perFile.groupBy { case (values, _) => groupIdx.map(values) }
-        .toSeq.sortBy(_._1.mkString(" "))
+        .toSeq.sortBy(_._1.mkString("\u0000"))
         .map { case (key, files) =>
           val keyVals = groupCols.zip(key).map { case (c, raw) =>
             SinkParquetResolve.castValue(raw, fullSchema(c).dataType)
@@ -724,20 +724,13 @@ private[sources] class PartitionedSinkScan(
         limitedFiles.map(_._1).distinct.size)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    // the pushed data-column comparisons ride to the parquet readers
+    // the pushed data-column comparisons ride to the parquet reader
     // for ROW-GROUP footer-stats skipping (the grain below the
     // manifest-level file skip); sound because every filter stays
     // residual. The COW row-level scan overrides this with NO skip
-    // filters — group rewrites read their files whole. COLUMNAR when
-    // the projection qualifies (MOR deletes fold in as a per-batch
-    // mask): batches + ColumnarToRow beat row materialization by the
-    // per-value decode cost — see SinkParquetColumnarReader.
-    new PartitionedSinkReaderFactory(fullSchema, required, partCols,
-      PartitionedSinkWriterFactory.sessionConf(), fieldIds,
-      skipFilters.toSeq,
-      columnar = SinkParquetColumnar.enabledInSession() &&
-        SinkParquetColumnar.schemaEligible(required) &&
-        inputSplits.nonEmpty)
+    // filters — group rewrites read their files whole.
+    new PartitionedSinkReaderFactory(required, partCols,
+      PartitionedSinkWriterFactory.sessionConf(), fieldIds, skipFilters.toSeq)
 
   override def toMicroBatchStream(checkpointLocation: String)
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream = {
@@ -1075,9 +1068,8 @@ private class PartitionedSinkMicroBatchStream(
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionedSinkReaderFactory(fullSchema, required, partCols,
-      PartitionedSinkWriterFactory.sessionConf(), fieldIds,
-      skipFilters.toSeq)
+    new PartitionedSinkReaderFactory(required, partCols,
+      PartitionedSinkWriterFactory.sessionConf(), fieldIds, skipFilters.toSeq)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -1107,67 +1099,44 @@ private[sources] case class SinkFileSplit(file: String, partValues: Seq[String],
       SinkParquetResolve.castValue(v, t) })
 }
 
-/** Readers expose the CURRENT row's stable in-file position (the
-  * `_pos` identity) so the position-delete anti-filter can wrap any
-  * format's reader without knowing its decode.
+/** Every sink split decodes through the one columnar reader
+  * ([[SinkParquetSplitReader]]), so each scan — batch, copy-on-write,
+  * micro-batch tail, change feed — is columnar and Spark's
+  * ColumnarToRow (whole-stage codegen) consumes the batches; the row
+  * reader is a view over the same batches for row-only consumers
+  * ([[SinkSplitsRead]]). `fieldIds` is the table's registry: a reader
+  * without it would resolve renamed columns' old files by name and
+  * serve NULL.
   */
-private[sources] trait HasRowPos {
-  def currentRowPos: Long
-}
-
 private class PartitionedSinkReaderFactory(
-    fullSchema: StructType, required: StructType, partCols: Seq[String],
+    required: StructType, partCols: Seq[String],
     conf: org.apache.spark.util.SerializableConfiguration,
-    fieldIds: Map[String, Int] = Map.empty,
-    skipFilters: Seq[Filter] = Seq.empty,
-    columnar: Boolean = false)
+    fieldIds: Map[String, Int], skipFilters: Seq[Filter])
     extends PartitionReaderFactory {
-  override def createReader(split: InputPartition): PartitionReader[InternalRow] = {
-    val s = split.asInstanceOf[SinkFileSplit]
-    val base = new SinkParquetReader(s, fullSchema, required, partCols,
-      conf, fieldIds, skipFilters)
-    if (s.delManifests.isEmpty) base
-    else new PositionFilterReader(base, s, conf)
-  }
-
-  // VECTORIZED path: Spark requires all partitions of a scan to agree
-  // on columnar-vs-row, so the SCAN decides once (session flag and
-  // projection eligibility) and the factory answers uniformly
-  override def supportColumnarReads(split: InputPartition): Boolean = columnar
+  override def supportColumnarReads(split: InputPartition): Boolean = true
 
   override def createColumnarReader(split: InputPartition)
-      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] = {
-    val s = split.asInstanceOf[SinkFileSplit]
-    new SinkParquetColumnarReader(s, fullSchema, required, partCols, conf,
-      fieldIds, skipFilters)
-  }
-}
+      : PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
+    new SinkParquetSplitReader(split.asInstanceOf[SinkFileSplit], required,
+      partCols, conf, fieldIds, skipFilters)
 
-/** MERGE-ON-READ anti-filter: drop the rows whose (file, pos) identity
-  * appears in the split's active position-delete manifests (or — in
-  * the change feed's `invertDeletes` mode — emit EXACTLY those rows).
-  * Executor-side: each split loads only its own file's positions from
-  * the per-commit manifests, so the driver never holds delete state.
-  */
-private class PositionFilterReader(
-    inner: PartitionReader[InternalRow] with HasRowPos,
-    split: SinkFileSplit,
-    conf: org.apache.spark.util.SerializableConfiguration)
-    extends PartitionReader[InternalRow] {
-  private lazy val positions: java.util.HashSet[java.lang.Long] = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new Path(split.file).toUri, conf.value)
-    SinkDeletes.positionsFor(fs, split.delManifests, split.relPath)
-  }
-  override def next(): Boolean = {
-    while (inner.next()) {
-      if (positions.contains(inner.currentRowPos) == split.invertDeletes)
-        return true
+  override def createReader(split: InputPartition): PartitionReader[InternalRow] = {
+    val batches = createColumnarReader(split)
+    new PartitionReader[InternalRow] {
+      private var rows = java.util.Collections.emptyIterator[InternalRow]()
+      private var row: InternalRow = _
+      override def next(): Boolean = {
+        while (!rows.hasNext) {
+          if (!batches.next()) return false
+          rows = batches.get().rowIterator()
+        }
+        row = rows.next()
+        true
+      }
+      override def get(): InternalRow = row
+      override def close(): Unit = batches.close()
     }
-    false
   }
-  override def get(): InternalRow = inner.get()
-  override def close(): Unit = inner.close()
 }
 
 /** Range evaluation for file skipping: decides whether a file MAY

@@ -285,19 +285,13 @@ private[sources] class SinkCowScan(
 
   /** NO row-group skipping on a group-based rewrite scan: the files it
     * plans must be read WHOLE — a skipped row group's non-matching
-    * rows would silently vanish from the rewritten file. COLUMNAR when
-    * the projection qualifies and the STATIC set is non-empty: the rewrite's read half
-    * gets the vectorized decode, ColumnarToRow feeds the ReplaceData
-    * projection, and merge-on-read positions fold via the reader's
-    * batch-grain mask.
+    * rows would silently vanish from the rewritten file. Merge-on-read
+    * positions fold via the reader's batch-grain mask.
     */
   override def createReaderFactory()
       : org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new PartitionedSinkReaderFactory(fullSchema, required, partCols,
-      PartitionedSinkWriterFactory.sessionConf(), fieldIds,
-      columnar = SinkParquetColumnar.enabledInSession() &&
-        SinkParquetColumnar.schemaEligible(required) &&
-        staticPrunedFiles.nonEmpty)
+    new PartitionedSinkReaderFactory(required, partCols,
+      PartitionedSinkWriterFactory.sessionConf(), fieldIds, Seq.empty)
 }
 
 /** Row-grain change files for COW rewrites (`graft.rowChanges`):

@@ -133,16 +133,16 @@ private class SinkChangeFeedScan(path: String, partCols: Seq[String],
     extends Scan with Batch {
   override def readSchema(): StructType = SinkChangeFeed.cdcSchema(tableSchema)
   override def description(): String = s"SinkChangeFeedScan($path)"
+  // the batch rendition plans and reads exactly like the stream
+  private lazy val stream = new SinkChangeFeedStream(path, partCols,
+    tableSchema, startingVersion, fieldIds)
+
   override def toMicroBatchStream(checkpointLocation: String)
-      : MicroBatchStream =
-    new SinkChangeFeedStream(path, partCols, tableSchema, startingVersion,
-      fieldIds)
+      : MicroBatchStream = stream
 
   override def toBatch: Batch = this
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val stream = new SinkChangeFeedStream(path, partCols, tableSchema,
-      startingVersion, fieldIds)
     val start = stream.initialOffset()
     val end = endingVersion.map(e => stream.versionOffset(e.toLong))
       .getOrElse(stream.latestOffset())
@@ -150,9 +150,7 @@ private class SinkChangeFeedScan(path: String, partCols: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionedSinkReaderFactory(tableSchema,
-      SinkChangeFeed.cdcSchema(tableSchema), partCols,
-      PartitionedSinkWriterFactory.sessionConf())
+    stream.createReaderFactory()
 }
 
 /** Offsets are version numbers; batch (s, e] = the manifest diffs of
@@ -312,9 +310,8 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new PartitionedSinkReaderFactory(tableSchema,
-      SinkChangeFeed.cdcSchema(tableSchema), partCols,
-      PartitionedSinkWriterFactory.sessionConf(), fieldIds)
+    new PartitionedSinkReaderFactory(SinkChangeFeed.cdcSchema(tableSchema),
+      partCols, PartitionedSinkWriterFactory.sessionConf(), fieldIds, Seq.empty)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()

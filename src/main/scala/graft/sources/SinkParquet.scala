@@ -4,18 +4,14 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.column.Dictionary
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
+import org.apache.parquet.hadoop.ParquetWriter
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.io.ColumnIOFactory
-import org.apache.parquet.io.api.{Binary, Converter, GroupConverter, PrimitiveConverter, RecordConsumer, RecordMaterializer}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, PrimitiveType, Type, Types}
+import org.apache.parquet.io.api.{Binary, RecordConsumer}
+import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -27,22 +23,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * part that does). Every data file is parquet: there is no format
   * option (see [[SinkFormat.userProps]]).
   *
-  * Why hand-rolled read/write support instead of Spark's internal
-  * ParquetWriteSupport/VectorizedParquetRecordReader: the sink's type
-  * surface is deliberately small — the atomic set (string/boolean/
-  * int/long/float/double/short/byte), opaque BINARY, and NESTED
-  * struct/array compositions of those (parquet's standard group and
-  * 3-level LIST shapes) — which the public parquet-mr API covers
-  * compactly with no dependency on Spark internals that move between
-  * releases; and owning the materializer
-  * is what makes FIELD-ID column resolution (rename/drop evolution)
-  * and row-index tracking (merge-on-read positions) possible.
+  * Why a hand-rolled WRITE support instead of Spark's internal
+  * ParquetWriteSupport: the sink's type surface is deliberately small
+  * — the atomic set (string/boolean/int/long/float/double/short/byte),
+  * opaque BINARY, and NESTED struct/array compositions of those
+  * (parquet's standard group and 3-level LIST shapes) — which the
+  * public parquet-mr API covers compactly, and owning the writer is
+  * what stamps each top-level field with its FIELD ID (rename/drop
+  * evolution). READS decode through Spark's own vectorized reader
+  * ([[SinkParquetSplitReader]]); graft adds only the field-id column
+  * resolution, split constants, row-group skip predicate and
+  * merge-on-read mask in front of it.
   *
   * What this buys at 100 TB: a narrow projection reads only its
   * columns' chunks (I/O pruning, not just decode pruning), values are dictionary/RLE-encoded and snappy-compressed
   * (5–10× fewer bytes on disk and over the wire), and byte-range
   * split carving maps onto row groups (the classic midpoint rule via
-  * ParquetReadOptions.withRange).
+  * ParquetMetadataConverter.range).
   */
 private[graft] object SinkFormat {
   /** The retired data-file format switch. Not an option: every sink
@@ -409,120 +406,8 @@ private[graft] object SinkParquetIo {
   def planned: Long = chunkBytesPlanned.sum()
 }
 
-/** Read half: one split = one parquet file or a byte range of one
-  * (row groups selected by the standard midpoint rule —
-  * ParquetReadOptions.withRange — so contiguous ranges partition the
-  * file's row groups exactly). Projection is pushed to the parquet
-  * column chunks: only the REQUIRED data columns' pages are read and
-  * decoded; partition columns, `_file`/`_pos` metadata and
-  * change-feed extras are split-level constants
-  * ([[SinkParquetResolve.castValue]]).
-  *
-  * Column resolution: by FIELD ID when both the table (via
-  * `graft.fieldIds`) and the file field carry one — which is what
-  * makes rename/drop evolution safe on parquet tables (a renamed
-  * column keeps its id; files written before the rename resolve
-  * through it) — by NAME otherwise (files written before ids existed,
-  * and Spark-written change files). A required column absent from the
-  * file reads as NULL (the ADD COLUMNS evolution).
-  */
-/** ROW-GROUP skipping for the parquet tier: evaluate the scan's
-  * pushed data-column comparisons against each selected row group's
-  * footer statistics and skip groups PROVABLY free of matches — the
-  * grain below the manifest-level file skipping (a 1 GB file holds ~8
-  * row groups; banded data skips 7 of them). Sound by the same
-  * residual contract as every other skip tier: Spark re-evaluates all
-  * filters post-scan, so a wrong KEEP costs decode time, and a skip
-  * needs proof. Conservative on every doubt — absent column (resolved
-  * by field id first, so a renamed column's old files still prove),
-  * empty/truncation-adjusted stats (parquet guarantees adjusted
-  * bounds remain valid bounds), non-finite doubles, unknown types all
-  * answer "keep". Comparison semantics mirror [[SinkFileSkip]]:
-  * BigDecimal for numerics, binary UTF-8 for strings. Never applied
-  * to row-level (COW group) scans — a group-based rewrite must read
-  * its files WHOLE or carried-forward rows would be lost.
-  */
-private[sources] object SinkParquetGroupSkip {
-  import org.apache.parquet.hadoop.metadata.BlockMetaData
-  import org.apache.spark.sql.sources.{EqualTo, Filter, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
-
-  private def big(v: Any): Option[java.math.BigDecimal] = v match {
-    case n: java.lang.Integer => Some(java.math.BigDecimal.valueOf(n.longValue))
-    case n: java.lang.Long => Some(java.math.BigDecimal.valueOf(n))
-    case n: java.lang.Float =>
-      if (n.isNaN || n.isInfinite) None
-      else Some(new java.math.BigDecimal(n.toString))
-    case n: java.lang.Double =>
-      if (n.isNaN || n.isInfinite) None
-      else Some(new java.math.BigDecimal(n.toString))
-    case n: java.lang.Number => Some(new java.math.BigDecimal(n.toString))
-    case _ => None
-  }
-
-  /** (cmp(min, lit), cmp(max, lit)); None = incomparable → keep. */
-  private def rel(min: Any, max: Any, lit: Any): Option[(Int, Int)] =
-    (min, max, lit) match {
-      case (bMin: Binary, bMax: Binary, _) =>
-        val l = lit match {
-          case s: String => Some(UTF8String.fromString(s))
-          case u: UTF8String => Some(u)
-          case _ => None
-        }
-        l.map { u =>
-          (UTF8String.fromBytes(bMin.getBytes).compareTo(u),
-            UTF8String.fromBytes(bMax.getBytes).compareTo(u))
-        }
-      case _ =>
-        for (mn <- big(min); mx <- big(max); l <- big(lit))
-          yield (mn.compareTo(l), mx.compareTo(l))
-    }
-
-  /** May any row of the block match the filter? Column names resolve
-    * through `resolve` (current name → the FILE's field name).
-    */
-  private def mayMatch(block: BlockMetaData, f: Filter,
-                       resolve: String => Option[String]): Boolean = {
-    def stats(col: String): Option[(Any, Any)] =
-      resolve(col).flatMap { fileName =>
-        import scala.jdk.CollectionConverters._
-        block.getColumns.asScala
-          .find(_.getPath.toDotString == fileName)
-          .flatMap { c =>
-            val st = c.getStatistics
-            if (st == null || st.isEmpty || !st.hasNonNullValue) None
-            else Some((st.genericGetMin, st.genericGetMax))
-          }
-      }
-    def cmp(col: String, lit: Any)(sat: (Int, Int) => Boolean): Boolean =
-      stats(col) match {
-        case None => true // no usable stats: keep
-        case Some((mn, mx)) =>
-          Option(lit).flatMap(rel(mn, mx, _)) match {
-            case Some((cMn, cMx)) => sat(cMn, cMx)
-            case None => true
-          }
-      }
-    f match {
-      case GreaterThan(c, v) => cmp(c, v)((_, cMx) => cMx > 0)
-      case GreaterThanOrEqual(c, v) => cmp(c, v)((_, cMx) => cMx >= 0)
-      case LessThan(c, v) => cmp(c, v)((cMn, _) => cMn < 0)
-      case LessThanOrEqual(c, v) => cmp(c, v)((cMn, _) => cMn <= 0)
-      case EqualTo(c, v) => cmp(c, v)((cMn, cMx) => cMn <= 0 && cMx >= 0)
-      case In(c, vs) =>
-        if (vs == null) true
-        else vs.exists(v => cmp(c, v)((cMn, cMx) => cMn <= 0 && cMx >= 0))
-      case _ => true
-    }
-  }
-
-  /** true = the block may contain matches (read it). */
-  def keep(block: BlockMetaData, filters: Seq[Filter],
-           resolve: String => Option[String]): Boolean =
-    filters.forall(mayMatch(block, _, resolve))
-}
-
 /** Column resolution against one parquet FILE's schema, shared by the
-  * value decode and the row-group-skip stats lookup so both see the
+  * value decode and the row-group-skip predicate so both see the
   * same column (or the same absence). The rule is Iceberg's:
   *
   *   - When the table column carries a field id, resolve by ID; fall
@@ -576,311 +461,263 @@ private[sources] object SinkParquetResolve {
   }
 }
 
-private[sources] class SinkParquetReader(
-    split: SinkFileSplit, fullSchema: StructType, required: StructType,
-    partCols: Seq[String],
+/** THE sink decoder: every sink read (batch and copy-on-write scans,
+  * the micro-batch tail, the change feed, [[SinkSplitsRead]]) decodes
+  * one split — a file or a byte range of one — through Spark's own
+  * [[VectorizedParquetRecordReader]]. Graft keeps only what Spark's
+  * name-based reader cannot know, in front of it:
+  *
+  *   - COLUMN RESOLUTION by the table's field-id registry
+  *     ([[SinkParquetResolve.field]]). Each resolved column is
+  *     requested under the FILE's own field name with the TABLE's type,
+  *     so a renamed column's old files serve it, and Spark's decode
+  *     widens int→long / float→double in its vector updaters. A column
+  *     the file does not carry (ADD COLUMNS, or a retired column that
+  *     shares its name) is never requested by name: it is a NULL
+  *     constant.
+  *   - SPLIT CONSTANTS: partition values, `_file` and the change feed's
+  *     extras ride `initBatch` as constant vectors; `_pos` is Spark's
+  *     row-index column (absolute within the file, row-group and page
+  *     skipping notwithstanding).
+  *   - ROW-GROUP SKIPPING: the scan's data-column comparisons, renamed
+  *     to the file's field names, become the parquet filter predicate
+  *     (Spark's [[ParquetFilters]]), so groups and pages whose footer
+  *     statistics exclude them are never decoded. Sound because every
+  *     filter stays residual; copy-on-write scans pass none (a group
+  *     rewrite must read its files whole).
+  *   - MERGE-ON-READ deletes (and the feed's `invertDeletes`): a
+  *     per-batch row mask over the row-index column; a batch that
+  *     loses rows is served as a selection view over the decoded
+  *     vectors, never copied.
+  */
+private[sources] class SinkParquetSplitReader(
+    split: SinkFileSplit, required: StructType, partCols: Seq[String],
     conf: org.apache.spark.util.SerializableConfiguration,
-    fieldIds: Map[String, Int] = Map.empty,
-    skipFilters: Seq[org.apache.spark.sql.sources.Filter] = Seq.empty)
-    extends org.apache.spark.sql.connector.read.PartitionReader[InternalRow]
-    with HasRowPos {
+    fieldIds: Map[String, Int],
+    skipFilters: Seq[org.apache.spark.sql.sources.Filter])
+    extends org.apache.spark.sql.connector.read.PartitionReader[
+      org.apache.spark.sql.vectorized.ColumnarBatch] {
+  import org.apache.parquet.filter2.predicate.FilterApi
+  import org.apache.parquet.filter2.statisticslevel.StatisticsFilter
+  import org.apache.parquet.format.converter.ParquetMetadataConverter
+  import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFilters, ParquetFooterReader, ParquetReadSupport, VectorizedParquetRecordReader}
+  import org.apache.spark.sql.internal.SQLConf
+  import org.apache.spark.sql.sources.{EqualTo, GreaterThan, GreaterThanOrEqual, In, LessThan, LessThanOrEqual}
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
 
-  /** `_pos` of the current row: its row index within the FILE. */
-  private var lastPos: Long = -1L
-  override def currentRowPos: Long = lastPos
+  private val path = new Path(split.file)
+  private val inputFile = HadoopInputFile.fromPath(path, conf.value)
+  private val end =
+    if (split.length == Long.MaxValue) Long.MaxValue
+    else split.start + split.length
+  // the footer is read once, carved to the split's row groups by the
+  // midpoint rule, and handed to Spark's reader as is
+  private val footer = ParquetFooterReader.readFooter(inputFile,
+    if (end == Long.MaxValue) ParquetMetadataConverter.NO_FILTER
+    else ParquetMetadataConverter.range(split.start, end))
+  private val fileSchema: MessageType = footer.getFileMetaData.getSchema
 
-  private val filePath = new Path(split.file)
-  private val inputFile = HadoopInputFile.fromPath(filePath, conf.value)
+  private val masking = split.delManifests.nonEmpty || split.invertDeletes
+  private val RowIndex = ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME
 
-  private val reader: ParquetFileReader = {
-    val b = org.apache.parquet.ParquetReadOptions.builder()
-    // MaxValue length = whole file; otherwise the carved byte range
-    val opts =
-      (if (split.length == Long.MaxValue) b
-       else b.withRange(split.start, split.start + split.length)).build()
-    new ParquetFileReader(inputFile, opts)
-  }
-
-  private val fileSchema: MessageType =
-    reader.getFooter.getFileMetaData.getSchema
-
-  // required ordinal -> value source: Left(slot into the materializer
-  // buffer) for file columns, Right(constant) for partition values /
-  // extras / `_file` / `_pos` (pos handled separately — it is the one
-  // per-row non-file value)
-  private val partValues: Map[String, Any] =
-    partCols.zip(split.partValues).map { case (c, v) =>
-      c -> SinkParquetResolve.castValue(v,
-        if (split.inlineParts) StringType else fullSchema(c).dataType)
-    }.toMap
-
-  /** (file field resolved for this required column, its Catalyst type,
-    * buffer slot) — in required order, file columns only.
-    */
-  private val resolved = scala.collection.mutable.ArrayBuffer[(Type, DataType)]()
-
-  private sealed trait Source
-  private case class FromFile(slot: Int) extends Source
-  private case class Const(v: Any) extends Source
-  private case object RowPos extends Source
-
-  private val plan: Array[Source] = required.fields.map { f =>
+  // per required column: Left(ordinal among the decoded columns) or
+  // Right(ordinal among the initBatch constants)
+  private val decoded = scala.collection.mutable.ArrayBuffer[StructField]()
+  private val constants = scala.collection.mutable.ArrayBuffer[(DataType, Any)]()
+  private val slots: Array[Either[Int, Int]] = required.fields.map { f =>
+    def decode(sf: StructField) = { decoded += sf; Left(decoded.length - 1) }
+    def constant(v: Any) = { constants += ((f.dataType, v)); Right(constants.length - 1) }
     if (!split.inlineParts && partCols.contains(f.name))
-      Const(partValues(f.name))
+      constant(SinkParquetResolve.castValue(
+        split.partValues(partCols.indexOf(f.name)), f.dataType))
+    else SinkParquetResolve.field(fileSchema, fieldIds, f.name) match {
+      case Some(ff) => decode(StructField(ff.getName, f.dataType))
+      case None => split.extras.find(_._1 == f.name) match {
+        case Some((_, v)) => constant(SinkParquetResolve.castValue(v, f.dataType))
+        case None if f.name == SinkMeta.FileCol =>
+          constant(UTF8String.fromString(split.file))
+        case None if f.name == SinkMeta.PosCol =>
+          decode(StructField(RowIndex, LongType))
+        case None => constant(null) // evolution: column newer than the file
+      }
+    }
+  }
+  if (masking && !decoded.exists(_.name == RowIndex))
+    decoded += StructField(RowIndex, LongType)
+  private val rowIndexOrdinal = decoded.indexWhere(_.name == RowIndex)
+
+  /** Skip filters on the file's own field names (resolved like the
+    * decode, so a renamed column's old files still prove and a retired
+    * one never does), as a parquet predicate.
+    */
+  private val pushed = {
+    def onFile(c: String): Option[String] =
+      SinkParquetResolve.field(fileSchema, fieldIds, c)
+        .filter(_.isPrimitive)
+        .map(t => org.apache.spark.sql.catalyst.util.QuotingUtils.quoteIfNeeded(t.getName))
+    val renamed = skipFilters.flatMap {
+      case EqualTo(c, v) => onFile(c).map(EqualTo(_, v))
+      case GreaterThan(c, v) => onFile(c).map(GreaterThan(_, v))
+      case GreaterThanOrEqual(c, v) => onFile(c).map(GreaterThanOrEqual(_, v))
+      case LessThan(c, v) => onFile(c).map(LessThan(_, v))
+      case LessThanOrEqual(c, v) => onFile(c).map(LessThanOrEqual(_, v))
+      case In(c, vs) => onFile(c).map(In(_, vs))
+      case _ => None
+    }
+    if (renamed.isEmpty) None
     else {
-      lazy val extra = split.extras.find(_._1 == f.name)
-      val fileField = SinkParquetResolve.field(fileSchema, fieldIds, f.name)
-      if (fileField.isDefined) {
-        resolved += ((fileField.get, f.dataType))
-        FromFile(resolved.length - 1)
-      }
-      else if (extra.isDefined)
-        Const(SinkParquetResolve.castValue(extra.get._2, f.dataType))
-      else if (f.name == SinkMeta.FileCol)
-        Const(UTF8String.fromString(split.file))
-      else if (f.name == SinkMeta.PosCol) RowPos
-      else Const(null) // evolution: column newer than the file
+      val pf = new ParquetFilters(fileSchema, false, false, false, true,
+        SQLConf.PARQUET_FILTER_PUSHDOWN_INFILTERTHRESHOLD.defaultValue.get,
+        true, org.apache.spark.sql.catalyst.util.RebaseDateTime.RebaseSpec(
+          org.apache.spark.sql.internal.LegacyBehaviorPolicy.CORRECTED))
+      renamed.flatMap(pf.createFilter).reduceOption(FilterApi.and)
     }
   }
 
-  private val nSlots = resolved.length
-  private val buffer = new Array[Any](nSlots)
-
-  /** Converter writing one file column into its buffer slot, with
-    * dictionary support for strings (decode each dictionary entry to
-    * a UTF8String ONCE per page, not once per row). `dt` is the
-    * TABLE's current type, which may be WIDER than the file's physical
-    * type after an `ALTER COLUMN ... TYPE` evolution — the decode
-    * casts (int→long, float→double) so old files serve the widened
-    * column directly.
-    */
-  private final class Slot(set: Any => Unit, dt: DataType,
-                           phys: PrimitiveTypeName) extends PrimitiveConverter {
-    private var dict: Array[Any] = _
-    override def hasDictionarySupport: Boolean = true
-    override def setDictionary(dictionary: Dictionary): Unit = {
-      dict = new Array[Any](dictionary.getMaxId + 1)
-      var i = 0
-      while (i < dict.length) {
-        // decode by the FILE's physical type, then widen to the
-        // table's — a dictionary written as INT32 must not be read
-        // through decodeToLong
-        dict(i) = (phys, dt) match {
-          case (PrimitiveTypeName.BINARY, StringType) =>
-            UTF8String.fromBytes(dictionary.decodeToBinary(i).getBytes)
-          case (PrimitiveTypeName.BINARY, BinaryType) =>
-            dictionary.decodeToBinary(i).getBytes
-          case (PrimitiveTypeName.INT64, LongType) => dictionary.decodeToLong(i)
-          case (PrimitiveTypeName.INT32, LongType) =>
-            dictionary.decodeToInt(i).toLong
-          case (PrimitiveTypeName.INT32, IntegerType) => dictionary.decodeToInt(i)
-          case (PrimitiveTypeName.INT32, ShortType) =>
-            dictionary.decodeToInt(i).toShort
-          case (PrimitiveTypeName.INT32, ByteType) =>
-            dictionary.decodeToInt(i).toByte
-          case (PrimitiveTypeName.DOUBLE, DoubleType) =>
-            dictionary.decodeToDouble(i)
-          case (PrimitiveTypeName.FLOAT, DoubleType) =>
-            dictionary.decodeToFloat(i).toDouble
-          case (PrimitiveTypeName.FLOAT, FloatType) => dictionary.decodeToFloat(i)
-          case (PrimitiveTypeName.BOOLEAN, BooleanType) =>
-            dictionary.decodeToBoolean(i)
-          case _ => null
-        }
-        i += 1
-      }
-    }
-    override def addValueFromDictionary(id: Int): Unit = set(dict(id))
-    override def addBinary(v: Binary): Unit = set(dt match {
-      case BinaryType => v.getBytes
-      case _ => UTF8String.fromBytes(v.getBytes)
-    })
-    override def addLong(v: Long): Unit = set(v)
-    override def addInt(v: Int): Unit = set(dt match {
-      case ShortType => v.toShort
-      case ByteType => v.toByte
-      case LongType => v.toLong // widened int → long
-      case _ => v
-    })
-    override def addDouble(v: Double): Unit = set(v)
-    override def addFloat(v: Float): Unit = set(dt match {
-      case DoubleType => v.toDouble // widened float → double
-      case _ => v
-    })
-    override def addBoolean(v: Boolean): Unit = set(v)
-  }
-
-  /** Converter for any supported type writing its finished Catalyst
-    * value through `setV`: primitives get [[Slot]] (dictionary-aware,
-    * widening-aware), structs assemble a [[GenericInternalRow]],
-    * arrays a [[GenericArrayData]] — recursion mirrors the writer's
-    * group shapes exactly. `req` is the REQUESTED parquet type (for
-    * nested columns: derived from the table's Catalyst type, so a
-    * nested-pruned projection builds exactly the requested subset).
-    */
-  private def converterFor(dt: DataType, req: Type,
-                           setV: Any => Unit): Converter = dt match {
-    case s: StructType =>
-      val group = req.asGroupType()
-      new GroupConverter {
-        private var values: Array[Any] = _
-        private val children: Array[Converter] =
-          s.fields.zipWithIndex.map { case (f, i) =>
-            converterFor(f.dataType, group.getType(i), v => values(i) = v)
-          }
-        override def getConverter(i: Int): Converter = children(i)
-        override def start(): Unit =
-          values = new Array[Any](s.fields.length)
-        override def end(): Unit = setV(new GenericInternalRow(values))
-      }
-    case a: ArrayType =>
-      val listGroup = req.asGroupType() // name (LIST) { repeated list { element } }
-      val elemType = listGroup.getType(0).asGroupType().getType(0)
-      new GroupConverter {
-        private val buf = scala.collection.mutable.ArrayBuffer[Any]()
-        private var elem: Any = _
-        private val repeated: Converter = new GroupConverter {
-          private val inner =
-            converterFor(a.elementType, elemType, v => elem = v)
-          override def getConverter(i: Int): Converter = inner
-          override def start(): Unit = elem = null
-          override def end(): Unit = buf += elem
-        }
-        override def getConverter(i: Int): Converter = repeated
-        override def start(): Unit = buf.clear()
-        override def end(): Unit =
-          setV(new GenericArrayData(buf.toArray))
-      }
-    case prim =>
-      new Slot(setV, prim, req.asPrimitiveType().getPrimitiveTypeName)
-  }
-
-  /** Requested schema, one entry per resolved column: PRIMITIVES keep
-    * the file field verbatim (file name, file PHYSICAL type — the
-    * widening decode resolves through it); NESTED columns derive the
-    * requested group from the table's Catalyst type under the file
-    * field's name, so Spark's nested-schema pruning (a struct
-    * projected to a subset of its fields) requests exactly that
-    * subset of the file's group — a valid projection, which is what
-    * ColumnIOFactory requires. Materializer fills the buffer slots in
-    * the same order.
-    */
-  private val requestedFields: Seq[Type] = resolved.toSeq.map {
-    case (ff, dt) =>
-      if (ff.isPrimitive) ff
-      else SinkParquetWrite.field(ff.getName, dt, -1)
-  }
-  private val requestedSchema: MessageType =
-    new MessageType("graft_sink", requestedFields.asJava)
-
-  private val materializer = new RecordMaterializer[Array[Any]] {
-    private val converters: Array[Converter] =
-      resolved.toArray.zipWithIndex.map { case ((_, dt), slot) =>
-        converterFor(dt, requestedFields(slot), v => buffer(slot) = v)
-      }
-    private val root = new GroupConverter {
-      override def getConverter(i: Int): Converter = converters(i)
-      override def start(): Unit = java.util.Arrays.fill(
-        buffer.asInstanceOf[Array[AnyRef]], null)
-      override def end(): Unit = ()
-    }
-    override def getCurrentRecord: Array[Any] = buffer
-    override def getRootConverter: GroupConverter = root
-  }
-
-  private val columnIO =
-    if (nSlots > 0) {
-      reader.setRequestedSchema(requestedSchema)
-      new ColumnIOFactory().getColumnIO(requestedSchema, fileSchema, false)
-    } else null
-
-  // selected row groups (post range filter), for row counting and the
-  // `_pos` offsets; COUNT-style scans (zero file columns needed) never
-  // touch a data page — the footer row counts drive the loop
-  private val rowGroups = reader.getRowGroups.asScala.toSeq
-
-  /** Row-group skip verdicts against the pushed data-column
-    * comparisons (see [[SinkParquetGroupSkip]]); filter columns
-    * resolve by field id first, so renamed columns' old files prove.
-    */
-  private val keepGroup: Array[Boolean] = {
-    if (skipFilters.isEmpty) Array.fill(rowGroups.length)(true)
-    else {
-      val resolve: String => Option[String] = name =>
-        SinkParquetResolve.field(fileSchema, fieldIds, name).map(_.getName)
-      rowGroups.map(b =>
-        SinkParquetGroupSkip.keep(b, skipFilters, resolve)).toArray
-    }
-  }
-
-  // account the chunk bytes this split selects (see SinkParquetIo) —
-  // KEPT groups only, so the counter also observes row-group skipping
+  // account the chunk bytes this split selects (see SinkParquetIo):
+  // requested columns of the row groups the footer stats keep
   locally {
-    val wanted = requestedSchema.getFields.asScala.map(_.getName).toSet
-    if (wanted.nonEmpty) {
-      val bytes = rowGroups.zipWithIndex.iterator
-        .filter { case (_, i) => keepGroup(i) }
-        .flatMap(_._1.getColumns.asScala)
-        .filter(c => wanted.contains(c.getPath.toDotString.split("\\.")(0)))
-        .map(_.getTotalSize).sum
-      SinkParquetIo.chunkBytesPlanned.add(bytes)
+    val names = decoded.map(_.name).toSet - RowIndex
+    if (names.nonEmpty) {
+      SinkParquetIo.chunkBytesPlanned.add(footer.getBlocks.asScala.iterator
+        .filterNot(b => pushed.exists(StatisticsFilter.canDrop(_, b.getColumns)))
+        .flatMap(_.getColumns.asScala)
+        .filter(c => names.contains(c.getPath.toArray()(0)))
+        .map(_.getTotalSize).sum)
     }
   }
 
-  private var groupIdx = -1
-  private var inGroupRemaining = 0L
-  private var recordReader: org.apache.parquet.io.RecordReader[Array[Any]] = _
-  /** Global row index (within the FILE) of the NEXT row. */
-  private var rowIndex: Long = 0L
-
-  private def advanceGroup(): Boolean = {
-    groupIdx += 1
-    if (groupIdx >= rowGroups.length) return false
-    if (!keepGroup(groupIdx)) {
-      // provably match-free: skip the group's pages wholesale. `_pos`
-      // stays correct because every kept group's offset comes from
-      // its own footer metadata, never from a running count.
-      if (nSlots > 0) reader.skipNextRowGroup()
-      inGroupRemaining = 0L
-      return advanceGroup()
-    }
-    if (nSlots > 0) {
-      val pages = reader.readNextRowGroup()
-      if (pages == null) return false
-      inGroupRemaining = pages.getRowCount
-      rowIndex = pages.getRowIndexOffset.orElse(
-        rowGroups(groupIdx).getRowIndexOffset)
-      recordReader = columnIO.getRecordReader(pages, materializer)
-    } else {
-      val block = rowGroups(groupIdx)
-      inGroupRemaining = block.getRowCount
-      // row-index offsets come from the footer (absolute within the
-      // FILE, range filtering notwithstanding)
-      rowIndex = block.getRowIndexOffset
-    }
-    true
+  private val reader = {
+    val ctx = new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(
+      conf.value, new org.apache.hadoop.mapreduce.TaskAttemptID())
+    val c = ctx.getConfiguration
+    c.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+      classOf[ParquetReadSupport].getName)
+    c.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA,
+      StructType(decoded.toSeq).json)
+    c.setBoolean(SQLConf.CASE_SENSITIVE.key, true)
+    c.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key, false)
+    c.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key, true)
+    c.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key, false)
+    c.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key, false)
+    c.setBoolean(SQLConf.PARQUET_FIELD_ID_READ_ENABLED.key, false)
+    pushed.foreach(
+      org.apache.parquet.hadoop.ParquetInputFormat.setFilterPredicate(c, _))
+    val r = new VectorizedParquetRecordReader(false,
+      SinkParquetSplitReader.BatchRows)
+    val stream = inputFile.newStream()
+    try {
+      r.initialize(new org.apache.hadoop.mapred.FileSplit(path, split.start,
+        end - split.start, Array.empty[String]), ctx, Some(inputFile),
+        Some(stream), Some(footer))
+      r.initBatch(StructType(constants.toSeq.zipWithIndex.map {
+        case ((dt, _), i) => StructField(s"c$i", dt) }),
+        InternalRow.fromSeq(constants.toSeq.map(_._2)))
+    } catch { case e: Throwable => stream.close(); r.close(); throw e }
+    r
   }
 
-  private var current: InternalRow = _
+  private val vectors: Array[ColumnVector] = {
+    val b = reader.resultBatch()
+    slots.map {
+      case Left(k) => b.column(k)
+      case Right(j) => b.column(decoded.length + j)
+    }
+  }
+  private val whole = new ColumnarBatch(vectors)
+  private val selection = new SinkRowSelection(SinkParquetSplitReader.BatchRows)
+  private val masked = new ColumnarBatch(
+    vectors.map(v => new SinkSelectedVector(v, selection): ColumnVector))
+  private var current: ColumnarBatch = _
+
+  /** Active merge-on-read positions for this file, loaded once per
+    * split, executor-side.
+    */
+  private lazy val deletePositions: java.util.HashSet[java.lang.Long] =
+    SinkDeletes.positionsFor(
+      org.apache.hadoop.fs.FileSystem.get(path.toUri, conf.value),
+      split.delManifests, split.relPath)
 
   override def next(): Boolean = {
-    while (inGroupRemaining == 0L) {
-      if (!advanceGroup()) return false
+    while (reader.nextBatch()) {
+      val n = reader.resultBatch().numRows()
+      var kept = n
+      if (masking) {
+        val pos = reader.resultBatch().column(rowIndexOrdinal)
+        kept = 0
+        var i = 0
+        while (i < n) {
+          if (deletePositions.contains(pos.getLong(i)) == split.invertDeletes) {
+            selection.rows(kept) = i
+            kept += 1
+          }
+          i += 1
+        }
+      }
+      if (kept == n) {
+        whole.setNumRows(n)
+        current = whole
+        return true
+      }
+      if (kept > 0) {
+        selection.size = kept
+        masked.setNumRows(kept)
+        current = masked
+        return true
+      }
     }
-    if (nSlots > 0) recordReader.read() // fills buffer
-    val pos = rowIndex
-    lastPos = pos
-    val values = plan.map {
-      case FromFile(slot) => buffer(slot)
-      case Const(v) => v
-      case RowPos => pos
-    }
-    current = InternalRow.fromSeq(values.toIndexedSeq)
-    inGroupRemaining -= 1
-    rowIndex += 1
-    true
+    false
   }
 
-  override def get(): InternalRow = current
+  override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = current
   override def close(): Unit = reader.close()
+}
+
+private[sources] object SinkParquetSplitReader {
+  /** Rows per batch: Spark's own parquet default. */
+  final val BatchRows = 4096
+}
+
+/** The kept rows of one masked batch: `rows(0 until size)`. */
+private[sources] final class SinkRowSelection(capacity: Int) {
+  val rows = new Array[Int](capacity)
+  var size = 0
+}
+
+/** Row `i` of this vector is row `selection.rows(i)` of `inner`: the
+  * merge-on-read mask as a view over the decoded batch. Children
+  * (struct fields) select the same rows; arrays and maps keep their
+  * element storage.
+  */
+private[sources] final class SinkSelectedVector(
+    inner: org.apache.spark.sql.vectorized.ColumnVector,
+    selection: SinkRowSelection)
+    extends org.apache.spark.sql.vectorized.ColumnVector(inner.dataType()) {
+  import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarArray, ColumnarMap}
+  private def at(i: Int) = selection.rows(i)
+  private lazy val children: Array[ColumnVector] = dataType match {
+    case s: StructType => s.fields.indices.map(k =>
+      new SinkSelectedVector(inner.getChild(k), selection): ColumnVector).toArray
+    case _ => Array.empty
+  }
+  override def close(): Unit = ()
+  override def hasNull(): Boolean = inner.hasNull
+  override def numNulls(): Int =
+    (0 until selection.size).count(i => inner.isNullAt(at(i)))
+  override def isNullAt(i: Int): Boolean = inner.isNullAt(at(i))
+  override def getBoolean(i: Int): Boolean = inner.getBoolean(at(i))
+  override def getByte(i: Int): Byte = inner.getByte(at(i))
+  override def getShort(i: Int): Short = inner.getShort(at(i))
+  override def getInt(i: Int): Int = inner.getInt(at(i))
+  override def getLong(i: Int): Long = inner.getLong(at(i))
+  override def getFloat(i: Int): Float = inner.getFloat(at(i))
+  override def getDouble(i: Int): Double = inner.getDouble(at(i))
+  override def getArray(i: Int): ColumnarArray = inner.getArray(at(i))
+  override def getMap(i: Int): ColumnarMap = inner.getMap(at(i))
+  override def getDecimal(i: Int, precision: Int, scale: Int)
+      : org.apache.spark.sql.types.Decimal =
+    inner.getDecimal(at(i), precision, scale)
+  override def getUTF8String(i: Int): UTF8String = inner.getUTF8String(at(i))
+  override def getBinary(i: Int): Array[Byte] = inner.getBinary(at(i))
+  override def getChild(ordinal: Int): ColumnVector = children(ordinal)
 }

@@ -6,20 +6,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Driver-assembled DataFrame over EXPLICIT sink splits, through the
-  * engine's own readers — the decode path for internal jobs that need
-  * semantics Spark's name-based parquet reader cannot give:
+/** Driver-assembled DataFrame over EXPLICIT sink splits, for internal
+  * jobs that need the resolution graft puts in front of Spark's
+  * parquet decoder, which a plain name-based `spark.read.parquet`
+  * does not have:
   *
   *   - FIELD-ID column resolution, so a table that RENAMEd a column
   *     reads its pre-rename files correctly (the name-based
   *     [[PartitionedSink.readPaths]] would serve NULL — wrong
   *     row-grain CDC rows after a rename);
-  *   - the merge-on-read POSITION-DELETE anti-filter, so a diff's
-  *     "before" side sees exactly the rows a table scan of that
-  *     snapshot saw (rows already MOR-deleted must not re-delete).
+  *   - the merge-on-read POSITION-DELETE mask, so a diff's "before"
+  *     side sees exactly the rows a table scan of that snapshot saw
+  *     (rows already MOR-deleted must not re-delete).
   *
-  * One RDD partition per split; each drives the same
-  * [[PartitionedSinkReaderFactory]] readers the DSv2 scan uses, so the
+  * One RDD partition per split; each runs the same
+  * [[SinkParquetSplitReader]] the DSv2 scans use and iterates its
+  * batches' rows ([[PartitionedSinkReaderFactory]]'s row view), so the
   * two paths can never disagree on a value.
   */
 private[graft] object SinkSplitsRead {
@@ -49,22 +51,10 @@ private class SinkSplitsRDD(
       SinkSplitPartition(i, s): Partition }.toArray
 
   override def compute(p: Partition, ctx: TaskContext): Iterator[InternalRow] = {
-    val factory = new PartitionedSinkReaderFactory(fullSchema, fullSchema,
-      partCols, conf, fieldIds)
-    val reader = factory.createReader(p.asInstanceOf[SinkSplitPartition].split)
+    val reader = new PartitionedSinkReaderFactory(fullSchema, partCols, conf,
+      fieldIds, Seq.empty)
+      .createReader(p.asInstanceOf[SinkSplitPartition].split)
     ctx.addTaskCompletionListener[Unit](_ => reader.close())
-    new Iterator[InternalRow] {
-      private var ready = false
-      private var done = false
-      override def hasNext: Boolean = {
-        if (!ready && !done) { ready = reader.next(); done = !ready }
-        ready
-      }
-      override def next(): InternalRow = {
-        if (!hasNext) throw new NoSuchElementException
-        ready = false
-        reader.get()
-      }
-    }
+    Iterator.continually(reader).takeWhile(_.next()).map(_.get())
   }
 }

@@ -885,6 +885,29 @@ class PartitionedSinkSpec extends SparkSpec {
     spark.sql("DROP TABLE graft_tail_spec.t")
   }
 
+  test("streaming READ after RENAME COLUMN: pre-rename files serve the new name") {
+    import spark.implicits._
+    val root = tmpDir("sink_tail_rn")
+    spark.conf.set("spark.sql.catalog.graft_tailrn_spec",
+      classOf[graft.sources.PartitionedSinkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_tailrn_spec.root", root)
+    Seq((1L, "a", "A"), (2L, "b", "B")).toDF("k", "s", "p")
+      .writeTo("graft_tailrn_spec.t").partitionedBy(col("p")).create()
+    spark.sql("ALTER TABLE graft_tailrn_spec.t RENAME COLUMN s TO label")
+    Seq((3L, "c", "A")).toDF("k", "label", "p")
+      .writeTo("graft_tailrn_spec.t").append()
+    val q = spark.readStream.table("graft_tailrn_spec.t")
+      .writeStream.format("memory").queryName("sinktailrn")
+      .option("checkpointLocation", tmpDir("sink_tail_rn_ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(spark.table("sinktailrn").select("k", "label", "p").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSet ===
+      Set((1L, "a", "A"), (2L, "b", "B"), (3L, "c", "A")),
+      "the tail must resolve the renamed column by field id")
+    spark.sql("DROP TABLE graft_tailrn_spec.t")
+  }
+
   test("compactStats merges per-publish stats manifests into one; skipping still prunes") {
     import spark.implicits._
     val root = tmpDir("sink_statcmp")
@@ -1237,9 +1260,12 @@ class PartitionedSinkSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSet
     val want = Set((1L, 1.5), (2L, 2.5), (3000000000L, 3.5))
     assert(readAll() === want, "widened reads span both file generations")
-    spark.conf.set(graft.sources.SinkParquetColumnar.EnabledKey, "false")
-    try assert(readAll() === want, "row path agrees on widened decode")
-    finally spark.conf.unset(graft.sources.SinkParquetColumnar.EnabledKey)
+    // a projection and a key probe decode the widened columns alone
+    assert(spark.table("graft_wid_spec.t").select("v").collect()
+      .map(_.getDouble(0)).toSet === want.map(_._2))
+    assert(spark.table("graft_wid_spec.t").filter(col("k") === 2L)
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq ===
+      Seq((2L, 2.5)))
     // file-skip/row-group stats still prove through the widened type
     assert(spark.table("graft_wid_spec.t")
       .filter(col("k") > 2000000000L).count() === 1L)
@@ -1291,9 +1317,11 @@ class PartitionedSinkSpec extends SparkSpec {
     val want = payloads.map { case (k, b, _) =>
       k -> Option(b).map(_.toSeq) }.toMap
     assert(readAll() === want, "binary payloads roundtrip byte-exactly")
-    spark.conf.set(graft.sources.SinkParquetColumnar.EnabledKey, "false")
-    try assert(readAll() === want, "row path agrees on binary decode")
-    finally spark.conf.unset(graft.sources.SinkParquetColumnar.EnabledKey)
+    // the payload column alone, through a partition prune
+    assert(spark.table("graft_bin_spec.t").filter(col("p") === "B")
+      .select("payload").collect()
+      .map(r => Option(r.get(0)).map(_.asInstanceOf[Array[Byte]].toSeq))
+      .toSet === Set(want(3L), want(4L)))
     // stats manifests never record the binary column (a MB-sized image
     // has no meaningful min/max; k still skips)
     val statsText = new java.io.File(s"$root/t/p=A").listFiles()

@@ -230,6 +230,68 @@ class SinkChangeFeedSpec extends SparkSpec {
     spark.sql("DROP TABLE cdcr2.t")
   }
 
+  test("the batch feed after RENAME COLUMN returns the streaming feed's rows") {
+    import spark.implicits._
+    val dir = freshTable("cdcrb")
+    Seq((1L, 1.0, "A"), (2L, 2.0, "B")).toDF("k", "v", "p").coalesce(1)
+      .writeTo("cdcrb.t").partitionedBy(col("p")).create()         // v1
+    spark.sql("ALTER TABLE cdcrb.t RENAME COLUMN v TO w")
+    Seq((3L, 3.0, "A")).toDF("k", "w", "p").coalesce(1)
+      .writeTo("cdcrb.t").append()                                  // v2
+    def rows(df: org.apache.spark.sql.DataFrame) = df.collect().map(r =>
+      (r.getAs[Long]("k"), Option(r.getAs[java.lang.Double]("w")),
+        r.getAs[String]("_change_type"), r.getAs[Long]("_commit_version")))
+      .toSet
+    val batch = rows(spark.read.format("graft.sources.SinkChangeFeed")
+      .option("path", dir).load())
+    val q = spark.readStream.format("graft.sources.SinkChangeFeed")
+      .option("path", dir).load()
+      .writeStream.format("memory").queryName("cdcrb_sink")
+      .option("checkpointLocation", tmpDir("cdcrb_ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(batch === rows(spark.table("cdcrb_sink")),
+      "batch and streaming feeds must resolve the rename alike")
+    assert(batch === Set((1L, Some(1.0), "insert", 1L),
+      (2L, Some(2.0), "insert", 1L), (3L, Some(3.0), "insert", 2L)),
+      s"pre-rename files must serve the renamed column, got $batch")
+    spark.sql("DROP TABLE cdcrb.t")
+  }
+
+  test("rowChanges after RENAME and a MOR delete: the diff reads renamed, masked rows") {
+    import spark.implicits._
+    val dir = freshTable("cdcrm")
+    spark.sql("""CREATE TABLE cdcrm.t (k BIGINT, v DOUBLE, p STRING)
+      PARTITIONED BY (p) TBLPROPERTIES ('graft.rowChanges' = 'true',
+      'graft.deleteMode' = 'mor')""")
+    (1L to 100L).map(i => (i, i * 1.0, "A"))
+      .toDF("k", "v", "p").coalesce(1).writeTo("cdcrm.t").append()   // v1
+    spark.sql("ALTER TABLE cdcrm.t RENAME COLUMN v TO w")
+    spark.sql("DELETE FROM cdcrm.t WHERE k IN (5, 6)")                // v2 MOR
+    spark.sql("ALTER TABLE cdcrm.t SET TBLPROPERTIES ('graft.deleteMode' = 'cow')")
+    spark.sql("UPDATE cdcrm.t SET w = -w WHERE k = 7")                // v3 COW
+    // v3's change rows come from SinkSplitsRead over the pre-rename
+    // file: `w` resolves by field id and the v2 positions mask rows 5/6
+    val q = spark.readStream.format("graft.sources.SinkChangeFeed")
+      .option("path", dir).load()
+      .writeStream.format("memory").queryName("cdcrm_sink")
+      .option("checkpointLocation", tmpDir("cdcrm_ck"))
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    val feed = spark.table("cdcrm_sink").collect().map(r =>
+      (r.getAs[Long]("_commit_version"), r.getAs[Long]("k"),
+        Option(r.getAs[java.lang.Double]("w")).map(_.doubleValue),
+        r.getAs[String]("_change_type"))).toSeq
+    assert(feed.filter(_._1 == 2L).map(t => (t._2, t._3, t._4)).sorted ===
+      Seq((5L, Some(5.0), "delete"), (6L, Some(6.0), "delete")))
+    assert(feed.filter(_._1 == 3L).map(t => (t._2, t._3, t._4)).sorted ===
+      Seq((7L, Some(-7.0), "update_postimage"),
+        (7L, Some(7.0), "update_preimage")),
+      s"the COW diff must stream the exact renamed live delta, got $feed")
+    assert(spark.table("cdcrm.t").filter(col("w").isNull).count() === 0L)
+    spark.sql("DROP TABLE cdcrm.t")
+  }
+
   test("MERGE rowChanges label contract: delete/insert rows, exact multiset (updates not separable at the ReplaceData surface — documented)") {
     import spark.implicits._
     val dir = freshTable("cdcg")

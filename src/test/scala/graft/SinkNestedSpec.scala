@@ -10,11 +10,10 @@ import org.apache.spark.sql.functions._
   * of beside it.
   *
   * Shapes follow parquet's standard interop forms (struct = group,
-  * array = 3-level LIST); the row reader's record-assembly converters
-  * recurse. Arrays of ATOMICS keep the vectorized path (rep-level walk,
-  * SinkParquetColumnarSpec); scans projecting a struct or an array of
-  * non-atomics demote to the row path (spec-pinned here). A TSV format,
-  * partition columns and MAP types reject loudly at DDL time.
+  * array = 3-level LIST), which Spark's vectorized reader decodes
+  * for every projection, nested ones included (spec-pinned here). A
+  * TSV format, partition columns and MAP types reject loudly at DDL
+  * time.
   */
 class SinkNestedSpec extends SparkSpec {
 
@@ -89,16 +88,18 @@ class SinkNestedSpec extends SparkSpec {
     assert(rows(3).getAs[Seq[Long]]("emb") === Seq(9L))
   }
 
-  test("a nested projection demotes the scan to rows; flat stays columnar") {
+  test("nested and flat projections both scan columnar") {
     freshCatalog("ns3")
     seed("ns3.t")
     val nested = spark.table("ns3.t").select(col("k"), col("info"))
-    assert(!sinkScans(nested).head.supportsColumnar,
-      "a nested projection must use the record-assembly row path")
+    assert(sinkScans(nested).head.supportsColumnar,
+      "a nested projection decodes through the vectorized reader")
     val flat = spark.table("ns3.t").select(col("k"), col("p"))
     assert(sinkScans(flat).head.supportsColumnar,
       "a flat projection keeps the vectorized path")
-    assert(nested.count() === 3 && flat.count() === 3)
+    assert(nested.orderBy("k").collect().map(_.getAs[Row]("info")).toSeq ===
+      Seq(Row("s1", 1.5), Row("s2", 3.0), Row("s3", 4.5)))
+    assert(flat.count() === 3)
   }
 
   test("COW row-level DELETE rewrites nested rows intact") {
@@ -109,6 +110,27 @@ class SinkNestedSpec extends SparkSpec {
     assert(rows.map(_.getLong(0)).toSeq === Seq(1L, 3L))
     assert(rows(1).getAs[Row]("info") === Row("s3", 4.5))
     assert(rows(1).getAs[Seq[Row]]("hits") === Seq(Row("q1", 3), Row("q2", 7)))
+  }
+
+  test("a struct pruned to one field on a MOR table after DELETE, with _pos") {
+    freshCatalog("ns6")
+    import spark.implicits._
+    Seq(1L, 2L, 3L, 4L).toDF("k").withColumn("p", lit("A"))
+      .withColumn("info", struct(concat(lit("s"), col("k")).as("tag"),
+        (col("k") * 1.5).as("score")))
+      .coalesce(1).writeTo("ns6.t")
+      .tableProperty("graft.deleteMode", "mor")
+      .partitionedBy(col("p")).create()
+    val pos = spark.table("ns6.t").select(col("k"), col("_pos")).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(pos.values.toSet === Set(0L, 1L, 2L, 3L))
+    spark.sql("DELETE FROM ns6.t WHERE k = 2")
+    val df = spark.table("ns6.t")
+      .select(col("k"), col("info.score"), col("_pos"))
+    assert(sinkScans(df).head.supportsColumnar)
+    assert(df.collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2)))
+      .toSeq.sorted === Seq((1L, 1.5, pos(1L)), (3L, 4.5, pos(3L)), (4L, 6.0, pos(4L))),
+      "the pruned struct field and the surviving rows' positions")
   }
 
   test("schema evolution: a nested column ADDed later reads NULL from old files") {
