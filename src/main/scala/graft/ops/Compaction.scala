@@ -91,24 +91,16 @@ object Compaction {
     val partCols = t.partitioning().toSeq
       .map(_.references()(0).fieldNames.mkString("."))
     // table dir = the catalog root + escaped name (mirror the catalog's
-    // layout contract); count data files per partition LEAF dir
+    // layout contract); live file counts per partition tuple come from
+    // the latest snapshot manifest (a retired-but-unvacuumed file is
+    // not fragmentation)
     val root = spark.conf.get(s"spark.sql.catalog.$catalog.root")
     val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    // live file counts: from the snapshot manifest on a versioned
-    // table (a retired-but-unvacuumed file is not fragmentation), from
-    // the directory listing otherwise
-    val fragmented: Map[Seq[String], Int] = (
-      if (graft.sources.SinkVersions.isVersioned(fs, dir.toString))
-        graft.sources.SinkVersions.latest(fs, dir.toString).toSeq
-          .flatMap(graft.sources.SinkVersions.read(fs, dir.toString, _))
-          .groupBy(_._2).map { case (v, fsOfV) => v -> fsOfV.size }.toSeq
-      else graft.sources.SinkLayout.listLeaves(fs, dir, partCols)
-        .map { case (values, leaf) =>
-          values -> graft.sources.SinkLayout.dataFiles(fs, leaf).size
-        })
+    val snap = graft.sources.SinkVersions.readLatest(fs, dir.toString)
+    val fragmented: Map[Seq[String], Int] = snap.toSeq.flatMap(_.entries)
+      .groupBy(_.values).map { case (v, fsOfV) => v -> fsOfV.size }
       .filter { case (_, n) => recluster || n > maxFilesPerPartition }
-      .toMap
     if (fragmented.nonEmpty) {
       // predicate = OR over the fragmented tuples of per-column ANDs —
       // dimension-sized (one term per fragmented partition), never a
@@ -125,19 +117,11 @@ object Compaction {
       // compacted files were computed without it and would resurrect
       // the deleted rows. The commit runs driver-side on this thread
       // (V2 write exec), which is what makes the thread-local sound.
-      val dirStr = dir.toString
-      val snap = if (!graft.sources.SinkVersions.isVersioned(fs, dirStr)) None
-        else graft.sources.SinkVersions.latest(fs, dirStr).map { v =>
-          val readRels = graft.sources.SinkVersions.read(fs, dirStr, v)
-            .filter { case (_, values) => fragmented.contains(values) }
-            .map(_._1).toSet
-          graft.sources.SinkGuard.snapshot(
-            graft.sources.SinkVersions.readDeletes(fs, dirStr, v).toSet,
-            readRels)
-        }
+      val guard = snap.map(m => graft.sources.SinkGuard.snapshot(m.dels.toSet,
+        m.entries.filter(e => fragmented.contains(e.values)).map(_.rel).toSet))
       val sorted = t.properties().asScala
         .get(graft.sources.SinkFormat.PropSortOrder).exists(_.nonEmpty)
-      graft.sources.SinkGuard.armed(snap) {
+      graft.sources.SinkGuard.armed(guard) {
         val base = spark.table(s"$catalog.$table").filter(cond)
         // with a sort order the WRITE range-clusters on (tuple, sort
         // cols) itself; a hash exchange here would be a second shuffle
@@ -147,68 +131,6 @@ object Compaction {
       }
     }
     fragmented
-  }
-
-  /** Merge a sink table's per-publish STATS manifests: every publish
-    * writes its own `_stats-<token>.tsv` per touched partition dir (by
-    * design — append-friendly, no read-modify-write), so a long-lived
-    * streaming table accumulates one per epoch per dir, and the
-    * driver-side scan reads them ALL when evaluating file skips. This
-    * maintenance pass rewrites each dir's manifests into ONE, dropping
-    * entries whose data file no longer exists (retired + vacuumed, or
-    * compacted away). Readers racing the swap see at worst the union
-    * of old and merged manifests — same entries, keyed by file name —
-    * and a publish racing it writes a NEW token file this pass never
-    * touches. Returns the number of dirs rewritten. Single-admin
-    * maintenance, like [[compactSinkTable]].
-    */
-  def compactStats(spark: SparkSession, catalog: String, table: String,
-                   minManifests: Int = 2): Int = {
-    val root = spark.conf.get(s"spark.sql.catalog.$catalog.root")
-    val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
-    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(dir)) return 0
-    partitionDirs(fs, dir)
-      .count { d =>
-        val manifests = fs.listStatus(d.getPath).toSeq.filter(s =>
-          s.isFile && s.getPath.getName.startsWith("_stats-"))
-        if (manifests.size < minManifests) false
-        else {
-          val merged = graft.sources.SinkStats.readDir(fs, d.getPath)
-            .filter { case (file, _) =>
-              fs.exists(new Path(d.getPath, file)) } // drop dead entries
-            .toSeq.sortBy(_._1)
-            .map { case (file, st) =>
-              (file, st.rows,
-                st.cols.toSeq.sortBy(_._1).map { case (c, mm) =>
-                  graft.sources.SinkColStat(c, mm) })
-            }
-          graft.sources.SinkStats.write(fs, d.getPath,
-            s"merged-${java.util.UUID.randomUUID()}", merged)
-          manifests.foreach(m => fs.delete(m.getPath, false))
-          // bloom manifests compact in the same pass (same lifecycle:
-          // merged rewrite + delete of the per-publish files)
-          val bloomManifests = fs.listStatus(d.getPath).toSeq.filter(s =>
-            s.isFile && s.getPath.getName.startsWith("_bloom-"))
-          if (bloomManifests.size >= minManifests) {
-            val mergedBlooms = graft.sources.SinkBlooms.readDir(fs, d.getPath)
-              .filter { case (file, _) =>
-                fs.exists(new Path(d.getPath, file)) }
-              .toSeq.sortBy(_._1)
-              .map { case (file, byCol) =>
-                (file, byCol.toSeq.sortBy(_._1).map { case (c, bf) =>
-                  val out = new java.io.ByteArrayOutputStream()
-                  bf.writeTo(out)
-                  c -> out.toByteArray
-                })
-              }
-            graft.sources.SinkBlooms.write(fs, d.getPath,
-              s"merged-${java.util.UUID.randomUUID()}", mergedBlooms)
-            bloomManifests.foreach(m => fs.delete(m.getPath, false))
-          }
-          true
-        }
-      }
   }
 
   /** Every descendant PARTITION directory (`col=value` segments, any
@@ -246,14 +168,11 @@ object Compaction {
     val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
     val vDir = graft.sources.SinkVersions.dir(dir.toString)
-    if (!fs.exists(vDir)) return (0, 0)
-    val versions = fs.listStatus(vDir).toSeq
-      .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-      .map(_.getPath.getName.toLong).sorted
-    val (expired, kept) = versions.splitAt(math.max(0, versions.size - keepLast))
-    val referenced = kept
-      .flatMap(graft.sources.SinkVersions.read(fs, dir.toString, _))
-      .map(_._1).toSet
+    val versions = graft.sources.SinkVersions.list(fs, dir.toString)
+    if (versions.isEmpty) return (0, 0)
+    val (expired, keptVs) = versions.splitAt(math.max(0, versions.size - keepLast))
+    val kept = keptVs.map(graft.sources.SinkVersions.read(fs, dir.toString, _))
+    val referenced = kept.flatMap(_.entries.map(_.rel)).toSet
     expired.foreach(v => fs.delete(new Path(vDir, v.toString), false))
     // unreferenced data files under the partition dirs are unreachable
     // from every retained snapshot — delete them, EXCEPT files still
@@ -272,12 +191,11 @@ object Compaction {
           }
           .map { f => fs.delete(f.getPath, false); f.getPath.toString }
       }
-    // position-delete manifests and row-grain change dirs retire with
-    // the last snapshot referencing them (same age floor)
-    val keptDels = kept.flatMap(v =>
-      graft.sources.SinkVersions.readDeletes(fs, dir.toString, v)).toSet
-    val keptChanges = kept.flatMap(v =>
-      graft.sources.SinkVersions.readChangesDir(fs, dir.toString, v)).toSet
+    // position-delete manifests, row-grain change dirs and bloom blobs
+    // retire with the last snapshot referencing them (same age floor)
+    val keptDels = kept.flatMap(_.dels).toSet
+    val keptChanges = kept.flatMap(_.changesDir).toSet
+    val keptBlooms = kept.flatMap(_.entries.flatMap(_.bloom)).toSet
     def sweepAux(sub: String, keep: Set[String]): Unit = {
       val d = new Path(dir, sub)
       if (fs.exists(d)) fs.listStatus(d).toSeq
@@ -287,19 +205,18 @@ object Compaction {
     }
     sweepAux("_deletes", keptDels)
     sweepAux("_changes", keptChanges)
+    sweepAux("_blooms", keptBlooms)
     (expired.size, removed.size)
   }
 
   /** FILES metadata table for a sink table (Iceberg's `t.files`
     * shape): one row per LIVE data file — relative path, partition
     * leaf, size, the exact row count the publish recorded, and the
-    * per-column min/max bounds from the skipping manifests (string
-    * renderings; absent columns had no stats, an entry mapped to NULL
-    * was all-NULL in the file). Membership is the latest version
-    * manifest on a versioned table (or `asOfVersion`), the directory
-    * listing otherwise. Driver-side manifest reads only — the ops
+    * per-column min/max bounds (string renderings; absent columns had
+    * no stats or were all-NULL in the file). Every value comes from
+    * one version manifest — the latest, or `asOfVersion` — the ops
     * surface for "why didn't this skip?" / "how fragmented is this
-    * partition?" questions, no data file is opened.
+    * partition?" questions; no data file is listed or opened.
     */
   def tableFiles(spark: SparkSession, catalog: String, table: String,
                  asOfVersion: Option[Long] = None)
@@ -307,29 +224,15 @@ object Compaction {
     val root = spark.conf.get(s"spark.sql.catalog.$catalog.root")
     val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val t = spark.sessionState.catalogManager.catalog(catalog)
-      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
-      .loadTable(org.apache.spark.sql.connector.catalog.Identifier
-        .of(Array.empty, table))
-    val partCols = t.partitioning().toSeq
-      .map(_.references()(0).fieldNames.mkString("."))
-    val version: Option[Long] =
-      if (asOfVersion.isDefined ||
-        graft.sources.SinkVersions.isVersioned(fs, dir.toString))
-        asOfVersion.orElse(graft.sources.SinkVersions.latest(fs, dir.toString))
-      else None
-    val entries: Seq[(String, Seq[String])] = version match {
-      case Some(v) => graft.sources.SinkVersions.read(fs, dir.toString, v)
-      case None =>
-        graft.sources.SinkVersions.listingEntries(fs, dir.toString, partCols)
-    }
+    val snap = asOfVersion
+      .map(graft.sources.SinkVersions.read(fs, dir.toString, _))
+      .orElse(graft.sources.SinkVersions.readLatest(fs, dir.toString))
     // MERGE-ON-READ density signal: active position deletes per file,
     // from the snapshot's manifests (driver-side metadata only). Every
     // scan of a file pays its delete set until `compactSinkTable`
     // folds the positions in — so `deleted_positions / n_rows` is the
     // "compact me" signal a MOR-heavy table's operator watches.
-    val deletedByRel: Map[String, Long] = version.toSeq
-      .flatMap(v => graft.sources.SinkVersions.readDeletes(fs, dir.toString, v))
+    val deletedByRel: Map[String, Long] = snap.toSeq.flatMap(_.dels)
       .flatMap(m => graft.sources.SinkDeletes.read(fs,
         new Path(dir, s"_deletes/$m")))
       .groupBy(_._1).map { case (rel, es) =>
@@ -337,66 +240,33 @@ object Compaction {
         // (idempotent concurrent deletes) counts once
         rel -> es.map(_._2).distinct.size.toLong
       }
-    val statsByDir = scala.collection.mutable.Map[
-      String, Map[String, graft.sources.SinkFileStats]]()
-    val rows = entries.sortBy(_._1).map { case (rel, values) =>
-      val p = new Path(dir, rel)
-      val leaf = rel.take(rel.lastIndexOf('/').max(0))
-      val st = statsByDir.getOrElseUpdate(leaf,
-        graft.sources.SinkStats.readDir(fs, p.getParent))
-        .get(p.getName)
-      val size = if (fs.exists(p)) fs.getFileStatus(p).getLen else -1L
-      (rel, leaf, size,
-        st.flatMap(_.rows).map(java.lang.Long.valueOf).orNull,
-        st.map(_.cols.collect { case (c, Some((mn, _))) => c -> mn })
-          .getOrElse(Map.empty[String, String]),
-        st.map(_.cols.collect { case (c, Some((_, mx))) => c -> mx })
-          .getOrElse(Map.empty[String, String]),
-        deletedByRel.getOrElse(rel, 0L))
+    val rows = snap.toSeq.flatMap(_.entries).sortBy(_.rel).map { e =>
+      (e.rel, e.rel.take(e.rel.lastIndexOf('/').max(0)), e.size, e.rows,
+        e.cols.collect { case (c, Some((mn, _))) => c -> mn },
+        e.cols.collect { case (c, Some((_, mx))) => c -> mx },
+        deletedByRel.getOrElse(e.rel, 0L))
     }
     import spark.implicits._
     rows.toDF("rel_path", "partition", "size_bytes", "n_rows",
       "min_values", "max_values", "deleted_positions")
   }
 
-  /** DESCRIBE HISTORY for a versioned sink table: one row per retained
-    * snapshot — (version, n_files, n_rows), rows summed EXACTLY from
-    * the per-file counts the publish manifests record (NULL when any
-    * member file predates row-count stats). Driver-side reads of
-    * small manifests only; no data files are opened.
+  /** DESCRIBE HISTORY for a sink table: one row per retained
+    * snapshot — (version, n_files, n_rows, commit_ts_millis), rows
+    * summed EXACTLY from the per-file counts each manifest records.
+    * One read per retained manifest; no data file is listed or opened.
     */
   def tableHistory(spark: SparkSession, catalog: String,
                    table: String): org.apache.spark.sql.DataFrame = {
     val root = spark.conf.get(s"spark.sql.catalog.$catalog.root")
     val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val vDir = graft.sources.SinkVersions.dir(dir.toString)
-    val versions =
-      if (!fs.exists(vDir)) Seq.empty[Long]
-      else fs.listStatus(vDir).toSeq
-        .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-        .map(_.getPath.getName.toLong).sorted
-    // stats manifests are per partition dir; load each dir once
-    val statsByDir = scala.collection.mutable.Map[
-      String, Map[String, graft.sources.SinkFileStats]]()
-    val rows = versions.map { v =>
-      val files = graft.sources.SinkVersions.read(fs, dir.toString, v)
-      val counts = files.map { case (rel, _) =>
-        val slash = rel.lastIndexOf('/')
-        val (d, name) = (rel.take(slash), rel.drop(slash + 1))
-        statsByDir.getOrElseUpdate(d,
-          graft.sources.SinkStats.readDir(fs, new Path(dir, d)))
-          .get(name).flatMap(_.rows)
-      }
-      org.apache.spark.sql.Row(v, files.size.toLong,
-        if (counts.nonEmpty && counts.forall(_.isDefined))
-          counts.flatten.sum
-        else if (counts.isEmpty) 0L
-        else null,
-        // commit wall clock (epoch millis); NULL on manifests written
-        // before timestamp headers existed
-        graft.sources.SinkVersions.readTimestamp(fs, dir.toString, v)
-          .map(java.lang.Long.valueOf).orNull)
+    val rows = graft.sources.SinkVersions.list(fs, dir.toString).flatMap(v =>
+      graft.sources.SinkVersions.find(fs, dir.toString, v)).map { m =>
+      org.apache.spark.sql.Row(m.version, m.entries.size.toLong,
+        m.entries.map(_.rows).sum,
+        // commit wall clock (epoch millis)
+        m.ts.map(java.lang.Long.valueOf).orNull)
     }
     spark.createDataFrame(
       spark.sparkContext.parallelize(rows, 1),

@@ -69,7 +69,7 @@ object Layout {
     * single-partition sort — the same scale shape as [[zOrderBy]])
     * plus an in-partition sort, so each task — hence each staged
     * file — covers one narrow band of `cols` and the published
-    * `SinkStats` manifests carry bounds worth skipping on. One-column
+    * version manifests carry bounds worth skipping on. One-column
     * clusterBy is the single-dimension analogue of [[zOrderBy]]; the
     * strictly-fewer-splits effect of sorted vs unsorted publishes of
     * identical data is pinned in PartitionedSinkSpec.

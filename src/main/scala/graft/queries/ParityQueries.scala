@@ -1801,7 +1801,7 @@ object ParityQueries {
 
   /** §2.9-ext: DATA-COLUMN FILE SKIPPING on a sink table — whole files
     * skipped before any footer is opened, via the per-file min/max
-    * manifests the write side publishes (graft.sources.SinkStats). Three appends land orders in
+    * bounds each version manifest line records. Three appends land orders in
     * DISJOINT total-price bands (three files per partition, each with
     * a tight recorded range); the read filters `o_totalprice > 300k`,
     * which the scan consumes as a file-skip (PartitionedSinkScanBuilder
@@ -2098,7 +2098,7 @@ object ParityQueries {
     * [min, max] spans the whole key domain and range skipping keeps
     * all of them, while the per-file Bloom filters
     * (`spark.graft.sink.bloomColumns=o_orderkey`, written into
-    * `_bloom-` manifests at publish) prove two of three files free of
+    * bloom blobs at publish) prove two of three files free of
     * each probed key. Bloom false positives only ever SCAN a file;
     * false negatives are impossible — so the oracle (the same keys
     * straight from orders) catches any wrongly-skipped file as a

@@ -4,7 +4,7 @@ import java.util
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
@@ -24,10 +24,11 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * — MULTI-LEVEL nested partition directories, one LEAF directory per
   * partition-value TUPLE (the reference's own lake is three-level
   * `flight_year/flight_month/flight_day`, extract_flights.py:96-99),
-  * parquet data files holding the data columns (see [[SinkParquetWrite]]).
-  * Readable back through [[PartitionedSink.readBack]] (plain
-  * `spark.read.parquet` + partition discovery — nothing about the
-  * layout is private to this connector).
+  * parquet data files holding the data columns (see [[SinkParquetWrite]]),
+  * and a version manifest per commit (`_versions/<v>`, see
+  * [[SinkVersions]]) naming the live files with their facts.
+  * Readable back through [[PartitionedSink.readBack]] (the manifest's
+  * files through plain `spark.read.parquet` + partition discovery).
   *
   * The part that matters at 100 TB is the COMMIT PROTOCOL — a job
   * that writes for an hour from 1000 executors must publish all-or-
@@ -48,12 +49,15 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *     therefore a property of the manifest, not of task scheduling.
   *   - Overwrite semantics run at publish time, inside the one
   *     driver-side commit: TRUNCATE/OverwriteByExpression(true)
-  *     clears the whole layout, filter overwrite clears the leaf dirs
+  *     clears the whole table, filter overwrite clears the leaves
   *     matching the equality conjunction (ANY SUBSET of the partition
   *     columns — `month = 3` on a y/m/d table clears March of every
   *     year), dynamic overwrite clears exactly the partition TUPLES
-  *     present in the commit manifests. Readers of the old data race
-  *     only with the final rename window, not with the whole job.
+  *     present in the commit messages. The cleared files drop out of
+  *     the next version manifest, which is committed LAST by a
+  *     compare-and-swap rename: readers see the old or the new
+  *     version, never a mix, and a publish that dies before its commit
+  *     leaves the old version intact.
   *   - [[BatchWrite.abort]] deletes the staging dir; the published
   *     layout is untouched (all-or-nothing).
   *
@@ -61,9 +65,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * writers get the SESSION's Hadoop configuration, serialized into the
   * DataWriterFactory — credentials/defaultFS overrides reach the
   * executors), so the same protocol runs on file:/, hdfs:/ or any FS
-  * with atomic-enough rename; S3-class stores would swap the rename
-  * publish for a manifest commit, which is why publish is a single
-  * private method.
+  * with an atomic no-overwrite rename for the manifest commit.
   *
   * Types: the atomic set plus BINARY and nested struct/array data
   * columns ([[SinkFormat.validateColumnType]]). Partition columns must
@@ -72,7 +74,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * control chars), which Spark's partition discovery unescapes on read.
   */
 /** Lossless string codec for the sink's text METADATA — version,
-  * position-delete, stats and bloom manifests, catalog sidecars and
+  * position-delete manifests, bloom blobs, catalog sidecars and
   * stream file logs (data files are parquet). The escape set is
   * exactly the characters those line formats give meaning to: `\t`
   * (field separator), `\n`/`\r` (line separator), `\` (the escape
@@ -97,6 +99,10 @@ object TsvCodec {
     }
     sb.toString
   }
+
+  /** Inverse of [[escape]], on plain strings. */
+  def unescape(s: String): String =
+    unescape(org.apache.spark.unsafe.types.UTF8String.fromString(s)).toString
 
   /** Inverse of [[escape]]. */
   def unescape(s: org.apache.spark.unsafe.types.UTF8String)
@@ -134,10 +140,10 @@ object TsvCodec {
 }
 
 /** Shared geometry of the multi-level hive layout: tuple → leaf-dir
-  * mapping, the pruned recursive leaf walk, and the injective file-name
-  * encoding of a tuple. Hive escaping always percent-encodes a literal
-  * `=` inside a VALUE (`%3D`), so joining ESCAPED values with `=` is
-  * collision-free — two distinct tuples can never render to one name.
+  * mapping and the injective file-name encoding of a tuple. Hive
+  * escaping always percent-encodes a literal `=` inside a VALUE
+  * (`%3D`), so joining ESCAPED values with `=` is collision-free — two
+  * distinct tuples can never render to one name.
   */
 private[graft] object SinkLayout {
   /** Relative leaf dir for a partition tuple: `p1=v1/p2=v2/...`. */
@@ -149,58 +155,17 @@ private[graft] object SinkLayout {
   def valueTag(values: Seq[String]): String =
     values.map(TsvCodec.escapeDir).mkString("=")
 
-  /** Recursive leaf listing with PER-LEVEL pruning: at depth i only
-    * dirs named `partCols(i)=...` are entered, and only when
-    * `keepAt(i, value)` holds — a filter on ANY subset of the partition
-    * columns prunes at its own level, whole subtrees at a time.
-    * Returns (raw value tuple, leaf dir).
+  /** Remove `dir`, then each ancestor below the table root, while
+    * empty — retiring a leaf's last file must not leave empty
+    * `year=.../month=...` skeletons behind.
     */
-  def listLeaves(fs: FileSystem, root: Path, partCols: Seq[String],
-                 keepAt: (Int, String) => Boolean = (_, _) => true)
-      : Seq[(Seq[String], Path)] = {
-    def walk(dir: Path, level: Int,
-             acc: Vector[String]): Seq[(Seq[String], Path)] =
-      if (level == partCols.length) Seq((acc, dir))
-      else Option(fs.listStatus(dir)).toSeq.flatten
-        .filter(s => s.isDirectory &&
-          s.getPath.getName.startsWith(partCols(level) + "="))
-        .flatMap { s =>
-          val v = TsvCodec.unescapeDir(
-            s.getPath.getName.stripPrefix(partCols(level) + "="))
-          if (keepAt(level, v)) walk(s.getPath, level + 1, acc :+ v)
-          else Seq.empty
-        }
-    if (!fs.exists(root)) Seq.empty else walk(root, 0, Vector.empty)
-  }
-
-  /** Data files of one leaf dir (markers and manifests excluded). */
-  def dataFiles(fs: FileSystem, leaf: Path): Seq[FileStatus] = {
-    val files = Option(fs.listStatus(leaf)).toSeq.flatten
-      .filter(f => f.isFile && !f.getPath.getName.startsWith(".") &&
-        !f.getPath.getName.startsWith("_"))
-    files.foreach(f => requireParquet(f.getPath))
-    files
-  }
-
-  /** Loud stop for a data file of the retired text tier: its rows
-    * would otherwise surface as a parquet decode error, or not at all.
-    */
-  def requireParquet(file: Path): Unit =
-    if (file.getName.endsWith(".tsv")) throw new IllegalStateException(
-      s"$file is a TSV data file: TSV data files are no longer readable " +
-        "(the sink reads and writes parquet only) — rewrite the table " +
-        "from its source")
-
-  /** Delete a leaf dir, then remove now-empty ancestors up to (but
-    * never including) the table root — a multi-level overwrite must
-    * not leave empty `year=.../month=...` skeletons behind.
-    */
-  def deleteLeaf(fs: FileSystem, root: Path, leaf: Path): Unit = {
-    fs.delete(leaf, true)
-    var p = leaf.getParent
-    while (p != null && p != root && fs.exists(p) &&
-      fs.listStatus(p).isEmpty) {
-      fs.delete(p, true)
+  def pruneEmpty(fs: FileSystem, root: Path, dir: Path): Unit = {
+    def empty(p: Path) =
+      try fs.listStatus(p).isEmpty
+      catch { case _: java.io.FileNotFoundException => false }
+    var p = dir
+    while (p != null && p.depth > root.depth && empty(p)) {
+      fs.delete(p, false)
       p = p.getParent
     }
   }
@@ -230,10 +195,12 @@ class PartitionedSink extends TableProvider {
 object PartitionedSink {
   final val NullToken = "\\N"
 
-  /** Read a sink layout back as a DataFrame: partition discovery over
-    * the hive-style dirs plus an explicit data schema (no inference —
-    * deterministic types). An empty layout (no partition dirs — e.g.
-    * the job wrote zero rows) returns a schema-correct empty frame.
+  /** Read a sink layout back as a DataFrame: the latest version
+    * manifest's files through Spark's parquet reader, with partition
+    * discovery over the hive-style dirs plus an explicit data schema
+    * (no inference — deterministic types). A table with no commit
+    * (e.g. the job wrote zero rows) returns a schema-correct empty
+    * frame.
     */
   def readBack(spark: SparkSession, root: String, dataSchema: StructType,
                partCol: String, partType: DataType = StringType): DataFrame =
@@ -247,20 +214,9 @@ object PartitionedSink {
                     partCols: Seq[(String, DataType)]): DataFrame = {
     val fs = FileSystem.get(new java.net.URI(root),
       spark.sparkContext.hadoopConfiguration)
-    val rootPath = new Path(root)
-    val firstCol = partCols.head._1
-    val hasParts = fs.exists(rootPath) && fs.listStatus(rootPath)
-      .exists(s => s.isDirectory && s.getPath.getName.startsWith(firstCol + "="))
-    if (!hasParts)
-      emptyFrame(spark, dataSchema, partCols)
-    else {
-      // explicit file listing (not a glob): the leaf walk skips
-      // manifests and markers, and rejects retired TSV data files
-      val files = SinkLayout.listLeaves(fs, rootPath, partCols.map(_._1))
-        .flatMap { case (_, leaf) =>
-          SinkLayout.dataFiles(fs, leaf).map(_.getPath.toString) }
-      readPaths(spark, root, files, dataSchema, partCols)
-    }
+    val files = SinkVersions.readLatest(fs, root).toSeq
+      .flatMap(_.entries.map(e => new Path(root, e.rel).toString))
+    readPaths(spark, root, files, dataSchema, partCols)
   }
 
   private def emptyFrame(spark: SparkSession, dataSchema: StructType,
@@ -367,9 +323,8 @@ private[sources] class PartitionedSinkTable(path: String,
     * drops whole leaves without reading a row — Catalyst's
     * OptimizeMetadataOnlyDeleteFromTable prefers this path and falls
     * back to the copy-on-write rewrite for anything canDeleteWhere
-    * declines. On a versioned table the leaves retire LOGICALLY
-    * (a new manifest without them — time-travel safe), matching every
-    * other overwrite mode.
+    * declines. The leaves retire through a new manifest without them,
+    * matching every other overwrite mode.
     */
   override def canDeleteWhere(filters: Array[Filter]): Boolean =
     asOfVersion.isEmpty && filters.forall {
@@ -399,8 +354,7 @@ private[sources] class PartitionedSinkTable(path: String,
         OverwriteEq(eqs.toMap)
       }
     SinkCommit.publish(SinkCommit.fsFor(path), path, partCols, mode,
-      Seq.empty, _ => "", statsToken = java.util.UUID.randomUUID().toString,
-      versioned = versioned)
+      Seq.empty, _ => "", versioned = versioned)
   }
 }
 
@@ -536,18 +490,6 @@ private case object Truncate extends SinkMode
 private case class OverwriteEq(eqs: Map[String, String]) extends SinkMode
 private case object Dynamic extends SinkMode
 
-/** Per-file, per-column min/max over the NON-NULL values — the
-  * file-skipping statistics a scan can use without opening a data
-  * file (row-group footers are the grain below). `minMax` is
-  * None when every value in the file is NULL for the column — which
-  * lets the reader skip the file for ANY comparison predicate on it
-  * (SQL comparisons with NULL are never true). Columns with no entry
-  * (unsupported types, or a file containing NaN/±Inf) carry no stats
-  * and are never skipped on.
-  */
-private[graft] case class SinkColStat(col: String,
-                                        minMax: Option[(String, String)])
-
 /** Truncated STRING bounds for the skipping manifests, Iceberg-style:
   * a string column's recorded min is the 16-code-point PREFIX of the
   * true minimum (a prefix never exceeds its source, so it stays a
@@ -613,14 +555,17 @@ private[graft] object SinkStrBounds {
   }
 }
 
-/** One staged file, as named by the task that wrote it. `blooms` is
-  * (column, serialized [[org.apache.spark.util.sketch.BloomFilter]])
-  * for each bloom-enabled column whose per-file distinct count stayed
-  * under the cap.
+/** One staged file, as named by the task that wrote it: its size, row
+  * count and per-column min/max over the NON-NULL values (`None` =
+  * every value NULL; a column without an entry carries no stats), and
+  * `blooms` = (column, serialized
+  * [[org.apache.spark.util.sketch.BloomFilter]]) for each bloom-enabled
+  * column whose per-file distinct count stayed under the cap.
   */
 private case class StagedFile(partValues: Seq[String], stagedPath: String,
-                              rows: Long, partitionId: Int,
-                              stats: Seq[SinkColStat] = Seq.empty,
+                              rows: Long, size: Long, partitionId: Int,
+                              cols: Map[String, Option[(String, String)]] =
+                                Map.empty,
                               blooms: Seq[(String, Array[Byte])] = Seq.empty)
 private case class SinkCommitMessage(files: Seq[StagedFile])
     extends WriterCommitMessage
@@ -645,10 +590,10 @@ private case class SinkCommitMessage(files: Seq[StagedFile])
   * default 131072, strings additionally capped at 8 MB cumulative —
   * overflow drops the filter for that file-column: degraded to a scan,
   * never wrong) and serialize a right-sized filter at task commit
-  * (`bloomFpp`, default 1 %). Publish writes them to per-leaf
-  * `_bloom-<token>.tsv` manifests (same append-only, rename-last
-  * discipline as the stats manifests); the scan probes them for
-  * EqualTo/In skip filters after the min/max pass.
+  * (`bloomFpp`, default 1 %). Publish writes them to one
+  * [[SinkBlooms]] blob per commit, named by each file's manifest line;
+  * the scan probes them for EqualTo/In skip filters after the min/max
+  * pass.
   */
 private[graft] object SinkBloomConf {
   final val ColumnsKey = "spark.graft.sink.bloomColumns"
@@ -689,17 +634,22 @@ private[graft] object SinkBloomConf {
   }
 }
 
-/** Per-leaf bloom manifests: `_bloom-<token>.tsv`, one line per
-  * (file, column): `file \t col \t base64(filter)`. Same lifecycle as
-  * the stats manifests (publish-appended, dir-scoped, swept with the
-  * leaf); a file without an entry is scanned, never skipped.
+/** Bloom BLOBS: `_blooms/<name>`, one per commit that wrote filters,
+  * one line per (file, column): `file \t col \t base64(filter)`. The
+  * version manifest line of each file names its blob, so a scan opens
+  * exactly the blobs its candidate files name. Blobs are written once
+  * and never copied forward (a live file keeps naming the blob of the
+  * commit that wrote it); vacuum reclaims blobs no retained manifest
+  * names. A file without a filter is scanned, never skipped.
   */
 private[graft] object SinkBlooms {
-  def manifestName(token: String): String =
-    s"_bloom-${TsvCodec.escapeDir(token)}.tsv"
+  def dir(root: String): Path = new Path(root, "_blooms")
 
-  def write(fs: FileSystem, dir: Path, token: String,
-            entries: Seq[(String, Seq[(String, Array[Byte])])]): Unit = {
+  /** Write one commit's filters as blob `name`; false = nothing to
+    * write (no file carried a filter).
+    */
+  def write(fs: FileSystem, root: String, name: String,
+            entries: Seq[(String, Seq[(String, Array[Byte])])]): Boolean = {
     val lines = entries.flatMap { case (file, blooms) =>
       blooms.map { case (col, bytes) =>
         s"${TsvCodec.escape(file)}\t${TsvCodec.escape(col)}\t" +
@@ -707,34 +657,29 @@ private[graft] object SinkBlooms {
       }
     }
     if (lines.nonEmpty) {
-      val out = fs.create(new Path(dir, manifestName(token)), true)
+      val out = fs.create(new Path(dir(root), name), true)
       try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
       finally out.close()
     }
+    lines.nonEmpty
   }
 
-  /** file name → (column → deserialized filter). Unreadable entries
+  /** Blob `name`: file rel path → (column → filter). Unreadable entries
     * are dropped (scanned, never wrong).
     */
-  def readDir(fs: FileSystem, dir: Path)
+  def read(fs: FileSystem, root: String, name: String)
       : Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]] = {
-    val manifests = Option(fs.listStatus(dir)).toSeq.flatten
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_bloom-"))
-    val u = (s: String) =>
-      TsvCodec.unescape(org.apache.spark.unsafe.types.UTF8String
-        .fromString(s)).toString
-    manifests.flatMap { m =>
-      val in = fs.open(m.getPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.split("\n").toSeq.filter(_.nonEmpty).flatMap { line =>
-        line.split("\t", -1) match {
-          case Array(f, c, b64) =>
-            try Some((u(f), u(c), org.apache.spark.util.sketch.BloomFilter
+    val in = fs.open(new Path(dir(root), name))
+    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
+      finally in.close()
+    text.split("\n").toSeq.filter(_.nonEmpty).flatMap { line =>
+      line.split("\t", -1) match {
+        case Array(f, c, b64) =>
+          try Some((TsvCodec.unescape(f), TsvCodec.unescape(c),
+            org.apache.spark.util.sketch.BloomFilter
               .readFrom(java.util.Base64.getDecoder.decode(b64))))
-            catch { case _: Exception => None }
-          case _ => None
-        }
+          catch { case _: Exception => None }
+        case _ => None
       }
     }.groupBy(_._1).map { case (f, es) =>
       f -> es.map { case (_, c, bf) => c -> bf }.toMap
@@ -742,212 +687,187 @@ private[graft] object SinkBlooms {
   }
 }
 
-/** Per-file statistics as read back from the manifests: exact row
-  * count (None when unrecorded) and per-column min/max over non-null
-  * values (inner None = the column is entirely NULL in the file).
+/** One live data file as its version manifest records it: relative
+  * path, raw partition tuple, size in bytes, exact row count, per-column
+  * min/max over non-null values (inner None = the column is entirely
+  * NULL in the file; a column without an entry carries no stats) and
+  * the bloom blob naming its filters.
   */
-private[graft] case class SinkFileStats(
-    rows: Option[Long],
-    cols: Map[String, Option[(String, String)]])
+private[graft] case class SinkFileEntry(
+    rel: String, values: Seq[String], size: Long, rows: Long,
+    cols: Map[String, Option[(String, String)]] = Map.empty,
+    bloom: Option[String] = None)
 
-/** Per-partition-dir stats manifests: `_stats-<token>.tsv`, one per
-  * PUBLISH into the dir (append-friendly — no read-modify-write of a
-  * shared manifest, so concurrent appends stay conflict-free under the
-  * same rename protocol as the data). One line per (file, column):
-  * `file \t col \t min \t max`, TsvCodec-escaped fields, `\N` min/max
-  * for the all-NULL case; one ROW-COUNT line per file with the raw
-  * `\N` token in the column field (unambiguous — a real column named
-  * "\N" escapes to "\\N"): `file \t \N \t <rows> \t \N`. Keyed by
-  * destination FILE NAME: a dynamic overwrite deletes the whole dir
-  * (stats go with it), a compaction republished through the sink
-  * regenerates them, and an entry whose file no longer exists is
-  * simply never looked up. Written AFTER the data renames — a crash in
-  * between leaves a file without stats, which readers scan instead of
-  * skip (degraded, never wrong).
+/** One parsed version manifest: the live files, the ACTIVE
+  * position-delete manifests, the commit's row-grain change dir, the
+  * retention flag and the commit wall clock.
   */
-private[graft] object SinkStats {
-  def manifestName(token: String): String =
-    s"_stats-${TsvCodec.escapeDir(token)}.tsv"
+private[graft] case class SinkManifest(
+    version: Long, entries: Seq[SinkFileEntry],
+    dels: Seq[String] = Seq.empty, changesDir: Option[String] = None,
+    keepHistory: Boolean = false, ts: Option[Long] = None)
 
-  def write(fs: FileSystem, dir: Path, token: String,
-            entries: Seq[(String, Option[Long], Seq[SinkColStat])]): Unit = {
-    val lines = entries.flatMap { case (file, rows, stats) =>
-      val f = TsvCodec.escape(file)
-      rows.map(n =>
-        s"$f\t${PartitionedSink.NullToken}\t$n\t${PartitionedSink.NullToken}")
-        .toSeq ++
-        stats.map { st =>
-          // bounds are ESCAPED (string bounds can contain the layout's
-          // own delimiters); the all-NULL marker stays the raw token —
-          // a real bound value "\N" escapes to "\\N", never colliding
-          val (mn, mx) = st.minMax
-            .map { case (a, b) => (TsvCodec.escape(a), TsvCodec.escape(b)) }
-            .getOrElse((PartitionedSink.NullToken, PartitionedSink.NullToken))
-          s"$f\t${TsvCodec.escape(st.col)}\t$mn\t$mx"
-        }
-    }
-    if (lines.nonEmpty) {
-      val out = fs.create(new Path(dir, manifestName(token)), true)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
-  }
-
-  /** file name → its recorded statistics. */
-  def readDir(fs: FileSystem, dir: Path): Map[String, SinkFileStats] = {
-    val manifests = Option(fs.listStatus(dir)).toSeq.flatten
-      .filter(s => s.isFile && s.getPath.getName.startsWith("_stats-"))
-    val u = (s: String) =>
-      TsvCodec.unescape(org.apache.spark.unsafe.types.UTF8String
-        .fromString(s)).toString
-    val parsed = manifests.flatMap { m =>
-      val in = fs.open(m.getPath)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-        finally in.close()
-      text.split("\n").toSeq.filter(_.nonEmpty).flatMap { line =>
-        line.split("\t", -1) match {
-          case Array(f, c, mn, mx) => Some((u(f), c, mn, mx))
-          case _ => None // malformed line: no stats, never wrong
-        }
-      }
-    }
-    parsed.groupBy(_._1).map { case (f, es) =>
-      val rows = es.collectFirst {
-        case (_, c, n, _) if c == PartitionedSink.NullToken &&
-          n.forall(_.isDigit) && n.nonEmpty => n.toLong
-      }
-      val cols = es.filter(_._2 != PartitionedSink.NullToken)
-        .map { case (_, c, mn, mx) =>
-          // unescape is identity on the numeric renderings older
-          // manifests wrote raw — backward compatible
-          u(c) -> (if (mn == PartitionedSink.NullToken) None
-                   else Some((u(mn), u(mx))))
-        }.toMap
-      f -> SinkFileStats(rows, cols)
-    }
-  }
-}
-
-/** Version manifests for time travel — `_versions/<v>` at the table
-  * root, each an immutable FULL SNAPSHOT of the live data files after
-  * publish v (one line per file: `relPath \t v1 [\t v2 ...]` — the
-  * partition TUPLE, escaped, one field per partition column; a
-  * single-column table's manifests are byte-identical to the pre-
-  * multi-level format, so old tables read unchanged).
-  * On a VERSIONED table, overwrite modes retire files LOGICALLY (they
-  * drop out of the next manifest; nothing is physically deleted), so
-  * `VERSION AS OF v` replans exactly manifest v's files; reads of the
-  * LATEST version are manifest-driven too, which is what makes the
-  * deferred deletes invisible. [[graft.ops.Compaction.vacuumVersions]]
-  * reclaims: drop expired manifests, then delete any data file no
-  * retained manifest references. Versioning is opt-in per catalog
-  * (`spark.sql.catalog.<name>.versioned=true`) and STICKY per table
-  * (once `_versions/` exists, every publish maintains it) — the
-  * default layout keeps its delete-on-overwrite behavior and its
-  * listing-based readers (the V1 readBack glob cannot see manifests,
-  * so it must not be pointed at a versioned table that has ever
-  * overwritten).
+/** Version manifests — `_versions/<v>` at the table root, each an
+  * immutable FULL SNAPSHOT of the live data files after publish v. They
+  * are the only membership source: every read (latest, `VERSION AS OF`,
+  * `TIMESTAMP AS OF`, the stream tail, the change feed, `readBack`,
+  * the metadata tables) plans from one manifest and opens nothing per
+  * leaf or per file, because each line carries the file's facts:
+  *
+  *   `relPath \t size \t rows \t bloomBlob \t stats \t v1 [\t v2 ...]`
+  *
+  * (TsvCodec-escaped fields; `\N` = no bloom blob; `stats` is ONE
+  * escaped field holding `col \t min \t max` triples, themselves
+  * escaped, `\N` min/max for an all-NULL column; the partition TUPLE
+  * trails, one field per partition column). Header lines start with a
+  * bare `#` FIELD (a data line's first field is a relative path, which
+  * always contains '/'): `#\tlayout\t2` marks this line shape, `#\tts`
+  * the commit wall clock, `#\thistory\tall` a table that keeps its
+  * history, `#\tdel`/`#\tchanges` the delete and change linkage.
+  *
+  * Every publish writes a manifest. A table that keeps history (its
+  * catalog sets `versioned=true`; sticky through the header flag)
+  * retires files LOGICALLY — they drop out of the next manifest, so
+  * `VERSION AS OF v` replans exactly manifest v's files, and
+  * [[graft.ops.Compaction.vacuumVersions]] reclaims. Any other table
+  * retains only the latest version: right after its commit, the
+  * publisher deletes the older manifests and every file they name that
+  * the new one does not. Tables in the older listing layout (partition
+  * dirs without `_versions/`, or manifests without the `layout`
+  * header) fail loudly, naming the path.
   */
 private[graft] object SinkVersions {
   def dir(root: String): Path = new Path(root, "_versions")
 
-  def isVersioned(fs: FileSystem, root: String): Boolean =
-    fs.exists(dir(root))
+  private final val Layout = "#\tlayout\t2"
+  private final val History = "#\thistory\tall"
 
-  def latest(fs: FileSystem, root: String): Option[Long] = {
-    val d = dir(root)
-    if (!fs.exists(d)) None
-    else Option(fs.listStatus(d)).toSeq.flatten
-      .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-      .map(_.getPath.getName.toLong) match {
-      case Seq() => None
-      case vs => Some(vs.max)
-    }
+  /** Retained version numbers, ascending — one listing of `_versions/`.
+    * A table dir without `_versions/` that holds partition dirs is the
+    * older listing layout: rejected loudly (the check costs a root
+    * listing only when `_versions/` is absent).
+    */
+  def list(fs: FileSystem, root: String): Seq[Long] = {
+    val names =
+      try fs.listStatus(dir(root)).toSeq.map(_.getPath.getName)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          val leaves =
+            try fs.listStatus(new Path(root)).toSeq
+              .filter(s => s.isDirectory && s.getPath.getName.contains("="))
+            catch { case _: java.io.FileNotFoundException => Seq.empty }
+          if (leaves.nonEmpty) throw new IllegalStateException(
+            s"$root holds partition directories but no _versions/ manifest " +
+              "log: tables in the listing layout are no longer readable " +
+              "(every sink table reads through its version manifest) — " +
+              "rewrite the table from its source")
+          Seq.empty
+      }
+    names.filter(n => n.nonEmpty && n.forall(_.isDigit)).map(_.toLong).sorted
   }
 
-  /** Header lines start with a bare `#` FIELD (collision-free: a data
-    * line's first field is a relative path, which always contains
-    * '/'). `#\tts\t<epoch-millis>` records the commit wall clock —
-    * the resolution target of `TIMESTAMP AS OF`. Pre-header manifests
-    * (older tables) parse unchanged and simply carry no timestamp.
+  def latest(fs: FileSystem, root: String): Option[Long] =
+    list(fs, root).lastOption
+
+  /** Manifest v, parsed once; None when it does not exist (never
+    * published, or retired). `headersOnly` stops at the first data
+    * line — the `TIMESTAMP AS OF` resolution reads nothing else.
     */
-  private def rawLines(fs: FileSystem, root: String, v: Long): Seq[String] = {
+  def find(fs: FileSystem, root: String, v: Long,
+           headersOnly: Boolean = false): Option[SinkManifest] = {
     val p = new Path(dir(root), v.toString)
-    if (!fs.exists(p)) throw new IllegalArgumentException(
+    val in = try fs.open(p) catch {
+      case _: java.io.FileNotFoundException => return None
+    }
+    try {
+      val lines = new java.io.BufferedReader(
+        new java.io.InputStreamReader(in, "UTF-8")).lines().iterator().asScala
+        .filter(_.nonEmpty).buffered
+      val headers = Iterator.continually(lines)
+        .takeWhile(l => l.hasNext && l.head.startsWith("#\t"))
+        .map(_.next()).toSeq
+      if (!headers.contains(Layout)) legacy(p)
+      val fields = headers.map(_.split("\t", -1).map(TsvCodec.unescape))
+      def all(key: String) = fields.collect { case Array("#", `key`, x) => x }
+      Some(SinkManifest(v,
+        if (headersOnly) Seq.empty else lines.map(entry(p, _)).toSeq,
+        all("del"), all("changes").headOption, all("history").nonEmpty,
+        all("ts").headOption.filter(t => t.nonEmpty && t.forall(_.isDigit))
+          .map(_.toLong)))
+    } finally in.close()
+  }
+
+  private def legacy(p: Path): Nothing = throw new IllegalStateException(
+    s"$p is a version manifest without per-file sizes, row counts and " +
+      "stats (the older table layout): the table is no longer readable " +
+      "— rewrite it from its source")
+
+  private def entry(p: Path, line: String): SinkFileEntry = {
+    val f = line.split("\t", -1)
+    if (f.length < 6) throw new IllegalStateException(
+      s"malformed version manifest line in $p: $line")
+    val triples = TsvCodec.unescape(f(4))
+    val cols =
+      if (triples.isEmpty) Map.empty[String, Option[(String, String)]]
+      else triples.split("\t", -1).grouped(3).map {
+        case Array(c, mn, mx) => TsvCodec.unescape(c) ->
+          (if (mn == PartitionedSink.NullToken) None
+           else Some((TsvCodec.unescape(mn), TsvCodec.unescape(mx))))
+        case other => throw new IllegalStateException(
+          s"malformed stats field in $p: ${other.mkString("\t")}")
+      }.toMap
+    SinkFileEntry(TsvCodec.unescape(f(0)), f.drop(5).toSeq.map(TsvCodec.unescape),
+      f(1).toLong, f(2).toLong, cols,
+      if (f(3) == PartitionedSink.NullToken) None
+      else Some(TsvCodec.unescape(f(3))))
+  }
+
+  private def render(e: SinkFileEntry): String = {
+    val triples = e.cols.toSeq.sortBy(_._1).map { case (c, mm) =>
+      // bounds are ESCAPED; the all-NULL marker stays the raw token — a
+      // real bound "\N" escapes to "\\N", never colliding
+      val (mn, mx) = mm.map { case (a, b) =>
+        (TsvCodec.escape(a), TsvCodec.escape(b))
+      }.getOrElse((PartitionedSink.NullToken, PartitionedSink.NullToken))
+      s"${TsvCodec.escape(c)}\t$mn\t$mx"
+    }.mkString("\t")
+    (Seq(TsvCodec.escape(e.rel), e.size.toString, e.rows.toString,
+      e.bloom.map(TsvCodec.escape).getOrElse(PartitionedSink.NullToken),
+      TsvCodec.escape(triples)) ++ e.values.map(TsvCodec.escape))
+      .mkString("\t")
+  }
+
+  /** Manifest v, which must exist. */
+  def read(fs: FileSystem, root: String, v: Long): SinkManifest =
+    find(fs, root, v).getOrElse(throw new IllegalArgumentException(
       s"version $v of $root does not exist (expired by vacuum, or never " +
-        "published)")
-    val in = fs.open(p)
-    val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString
-      finally in.close()
-    text.split("\n").toSeq.filter(_.nonEmpty)
-  }
+        "published)"))
 
-  /** Manifest v: (relative data-file path, raw partition tuple). */
-  def read(fs: FileSystem, root: String,
-           v: Long): Seq[(String, Seq[String])] = {
-    val u = (s: String) => TsvCodec.unescape(
-      org.apache.spark.unsafe.types.UTF8String.fromString(s)).toString
-    rawLines(fs, root, v).filterNot(_.startsWith("#\t")).map { line =>
-      val fields = line.split("\t", -1)
-      require(fields.length >= 2, s"malformed version manifest line: $line")
-      (u(fields.head), fields.tail.toSeq.map(u))
-    }
-  }
-
-  /** Commit wall clock of manifest v (epoch millis); None on manifests
-    * written before timestamps existed.
+  /** The newest manifest: one `_versions/` listing and one manifest
+    * open. A manifest retired between the listing and the open (a
+    * latest-only table's next commit) re-lists and reads the newer one.
     */
-  def readTimestamp(fs: FileSystem, root: String, v: Long): Option[Long] =
-    rawLines(fs, root, v).collectFirst {
-      case line if line.startsWith("#\tts\t") =>
-        line.split("\t", -1) match {
-          case Array("#", "ts", ms) if ms.nonEmpty && ms.forall(_.isDigit) =>
-            Some(ms.toLong)
-          case _ => None
-        }
-    }.flatten
-
-  /** ACTIVE position-delete manifests of snapshot v (`#\tdel\t<name>`
-    * headers): file names under `_deletes/`, in header order. Carried
-    * forward by every publish until a truncate clears them or vacuum
-    * retires them with their last referencing snapshot; a scan of
-    * snapshot v anti-filters its rows through exactly these.
-    */
-  def readDeletes(fs: FileSystem, root: String, v: Long): Seq[String] =
-    rawLines(fs, root, v).collect {
-      case line if line.startsWith("#\tdel\t") =>
-        TsvCodec.unescape(org.apache.spark.unsafe.types.UTF8String
-          .fromString(line.split("\t", -1)(2))).toString
-    }
-
-  /** Row-grain CHANGE directory of the commit that produced snapshot v
-    * (`#\tchanges\t<dirname>` header): a dir name under `_changes/`
-    * holding per-change-type parquet subdirs — written by row-level
-    * commits when `graft.rowChanges` is on; the change feed emits its
-    * rows instead of the file-grain manifest diff for that transition.
-    */
-  def readChangesDir(fs: FileSystem, root: String, v: Long): Option[String] =
-    rawLines(fs, root, v).collectFirst {
-      case line if line.startsWith("#\tchanges\t") =>
-        TsvCodec.unescape(org.apache.spark.unsafe.types.UTF8String
-          .fromString(line.split("\t", -1)(2))).toString
+  @annotation.tailrec
+  def readLatest(fs: FileSystem, root: String,
+                 attempt: Int = 1): Option[SinkManifest] =
+    latest(fs, root) match {
+      case None => None
+      case Some(v) => find(fs, root, v) match {
+        case found @ Some(_) => found
+        case None if attempt < 100 => readLatest(fs, root, attempt + 1)
+        case None => throw new java.io.IOException(
+          s"latest manifest of $root retired under 100 reads in a row")
+      }
     }
 
   /** Newest version whose commit timestamp is ≤ `tsMillis` — the
-    * `TIMESTAMP AS OF` resolution (Delta's contract). Fails loudly
-    * when the table has no timestamped commit at or before the asked
-    * instant (travel before the first commit), and ignores
-    * pre-timestamp manifests (they cannot prove their wall clock).
+    * `TIMESTAMP AS OF` resolution (Delta's contract), reading only
+    * manifest header lines. Fails loudly when the table has no commit
+    * at or before the asked instant (travel before the first commit).
     */
   def resolveTimestamp(fs: FileSystem, root: String, tsMillis: Long): Long = {
-    val d = dir(root)
-    val versions =
-      if (!fs.exists(d)) Seq.empty[Long]
-      else Option(fs.listStatus(d)).toSeq.flatten
-        .filter(s => s.isFile && s.getPath.getName.forall(_.isDigit))
-        .map(_.getPath.getName.toLong).sorted
-    val stamped = versions.flatMap(v =>
-      readTimestamp(fs, root, v).map(v -> _))
+    val stamped = list(fs, root).flatMap(v =>
+      find(fs, root, v, headersOnly = true).flatMap(_.ts).map(v -> _))
     stamped.filter(_._2 <= tsMillis).map(_._1).maxOption.getOrElse {
       throw new IllegalArgumentException(
         s"no version of $root committed at or before epoch-millis " +
@@ -956,48 +876,32 @@ private[graft] object SinkVersions {
     }
   }
 
-  /** The current PHYSICAL layout as manifest entries — the seed for a
-    * table whose versioning was enabled after it already had data.
-    */
-  def listingEntries(fs: FileSystem, root: String,
-                     partCols: Seq[String]): Seq[(String, Seq[String])] =
-    SinkLayout.listLeaves(fs, new Path(root), partCols)
-      .flatMap { case (values, leaf) =>
-        val rel = SinkLayout.leafRel(partCols, values)
-        SinkLayout.dataFiles(fs, leaf)
-          .map(f => s"$rel/${f.getPath.getName}" -> values)
-      }
-
-  /** Attempt to commit manifest v. Returns false when version v was
-    * taken by a concurrent publisher — the CAS signal for the retry
-    * loop in [[SinkCommit.publish]]. The commit is a no-overwrite
+  /** Attempt to commit `m` as manifest `m.version`. Returns false when
+    * that version was taken by a concurrent publisher — the CAS signal
+    * for the retry loop in [[SinkCommit]]. The commit is a no-overwrite
     * rename through [[org.apache.hadoop.fs.FileContext]] (whose
     * Rename.NONE contract REJECTS an existing destination — plain
     * `FileSystem.rename` on a local FS silently replaces it, which
     * would lose the racing publisher's snapshot).
     */
-  def tryWrite(fs: FileSystem, root: String, v: Long,
-               entries: Seq[(String, Seq[String])],
-               dels: Seq[String] = Seq.empty,
-               changesDir: Option[String] = None): Boolean = {
+  def tryWrite(fs: FileSystem, root: String, m: SinkManifest): Boolean = {
     val d = dir(root)
     fs.mkdirs(d)
-    val tmp = new Path(d, s".tmp-$v-${java.util.UUID.randomUUID()}")
+    val tmp = new Path(d, s".tmp-${m.version}-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
-    // commit wall clock + delete/changes linkage ride the SAME
-    // CAS-renamed file as the entries (a sibling written after the
+    // commit wall clock + retention + delete/changes linkage ride the
+    // SAME CAS-renamed file as the entries (a sibling written after the
     // rename could be torn off by a crash)
-    val header = s"#\tts\t${System.currentTimeMillis()}\n" +
-      dels.map(n => s"#\tdel\t${TsvCodec.escape(n)}\n").mkString +
-      changesDir.map(n => s"#\tchanges\t${TsvCodec.escape(n)}\n")
-        .getOrElse("")
-    try out.write((header + entries.map { case (rel, values) =>
-      (TsvCodec.escape(rel) +: values.map(TsvCodec.escape)).mkString("\t")
-    }.mkString("", "\n", "\n")).getBytes("UTF-8"))
+    val header = Seq(Layout, s"#\tts\t${System.currentTimeMillis()}") ++
+      (if (m.keepHistory) Seq(History) else Nil) ++
+      m.dels.map(n => s"#\tdel\t${TsvCodec.escape(n)}") ++
+      m.changesDir.map(n => s"#\tchanges\t${TsvCodec.escape(n)}")
+    try out.write((header ++ m.entries.map(render))
+      .mkString("", "\n", "\n").getBytes("UTF-8"))
     finally out.close()
     val fc = org.apache.hadoop.fs.FileContext.getFileContext(
       d.toUri, fs.getConf)
-    try { fc.rename(tmp, new Path(d, v.toString)); true }
+    try { fc.rename(tmp, new Path(d, m.version.toString)); true }
     catch {
       case _: org.apache.hadoop.fs.FileAlreadyExistsException |
            _: java.nio.file.FileAlreadyExistsException |
@@ -1090,15 +994,6 @@ private[graft] object SinkDeletes {
   }
 }
 
-/** The shared driver-side publish: clear whatever the mode says must
-  * go, then move exactly the manifest-listed staged files to their
-  * destination names. Batch prefixes the staged (taskId-unique) name
-  * with a query-unique token (task ids restart per application —
-  * without the token, appends from two driver JVMs could collide and
-  * the delete-before-rename below would clobber the first's file);
-  * streaming passes an (epoch, partition)-deterministic name so an
-  * epoch REPLAY overwrites its own files instead of duplicating them.
-  */
 /** Read-snapshot guard for commits whose CONTENT was derived from
   * reading the table (row-level rewrites, compaction): `scanDels` =
   * the position-delete manifest names active when the operation READ,
@@ -1171,13 +1066,114 @@ private object SinkCommit {
         .exists { case (rel, _) => nextRels(rel) }
     }
 
+  /** The commit base: the latest manifest, read BEFORE anything is
+    * renamed into the layout (so the older-layout check never sees this
+    * commit's own leaves). A table's first publish creates `_versions/`
+    * first, for the same reason.
+    */
+  def base(fs: FileSystem, path: String): Option[SinkManifest] = {
+    val b = SinkVersions.readLatest(fs, path)
+    if (b.isEmpty) fs.mkdirs(SinkVersions.dir(path))
+    b
+  }
+
+  /** Rename the staged files to their destination names and write this
+    * commit's bloom blob; returns the files' manifest entries. A crash
+    * after this leaves renamed-but-unreferenced files — invisible to
+    * every reader, reclaimed by vacuum.
+    */
+  def stage(fs: FileSystem, path: String, partCols: Seq[String],
+            files: Seq[StagedFile],
+            destName: StagedFile => String): Seq[SinkFileEntry] = {
+    val rels = files.map(f =>
+      f -> s"${SinkLayout.leafRel(partCols, f.partValues)}/${destName(f)}")
+    rels.foreach { case (f, rel) =>
+      val src = new Path(f.stagedPath)
+      val target = new Path(path, rel)
+      fs.mkdirs(target.getParent)
+      fs.delete(target, false) // streaming replay: same target name
+      if (!fs.rename(src, target))
+        throw new java.io.IOException(s"publish rename failed for $src")
+    }
+    val blob = s"bloom-${java.util.UUID.randomUUID()}.tsv"
+    val wrote = SinkBlooms.write(fs, path, blob,
+      rels.map { case (f, rel) => rel -> f.blooms })
+    rels.map { case (f, rel) =>
+      SinkFileEntry(rel, f.partValues, f.size, f.rows, f.cols,
+        if (wrote && f.blooms.nonEmpty) Some(blob) else None)
+    }
+  }
+
+  /** The CAS loop every commit runs: compute the next snapshot from the
+    * base, try to claim the next version number, and on a lost race
+    * recompute from the winner's snapshot (so neither publisher's files
+    * are lost). A table that does not keep history then retires what
+    * the committed snapshot no longer references. Returns the version.
+    */
+  @annotation.tailrec
+  private def commit(fs: FileSystem, path: String, versioned: Boolean,
+                     b: Option[SinkManifest], attempt: Int = 1)
+                    (next: Option[SinkManifest] => SinkManifest): Long = {
+    val keep = versioned || b.exists(_.keepHistory)
+    val m = next(b).copy(version = b.map(_.version).getOrElse(0L) + 1,
+      keepHistory = keep)
+    if (SinkVersions.tryWrite(fs, path, m)) {
+      if (!keep) retire(fs, path, m, b)
+      m.version
+    } else if (attempt >= 100) throw new java.io.IOException(
+      s"version manifest commit lost the CAS race 100 times: $path")
+    else commit(fs, path, versioned, SinkVersions.readLatest(fs, path),
+      attempt + 1)(next)
+  }
+
+  /** Latest-only retention: after committing `m`, delete every older
+    * manifest, then the data files, delete manifests, change dirs and
+    * bloom blobs they name that `m` does not (manifest first — a crash
+    * part-way leaves only unreferenced files, which vacuum reclaims),
+    * and the leaf dirs that empties. A manifest another committer
+    * already retired is skipped.
+    */
+  private def retire(fs: FileSystem, path: String, m: SinkManifest,
+                     base: Option[SinkManifest]): Unit = {
+    val root = new Path(path)
+    val live = m.entries.map(_.rel).toSet
+    val liveBlooms = m.entries.flatMap(_.bloom).toSet
+    SinkVersions.list(fs, path).filter(_ < m.version).foreach { u =>
+      base.filter(_.version == u).orElse(SinkVersions.find(fs, path, u))
+        .foreach { old =>
+          fs.delete(new Path(SinkVersions.dir(path), u.toString), false)
+          val gone = old.entries.filterNot(e => live(e.rel))
+          gone.foreach(e => fs.delete(new Path(root, e.rel), false))
+          gone.map(e => new Path(root, e.rel).getParent).distinct
+            .foreach(SinkLayout.pruneEmpty(fs, root, _))
+          old.dels.filterNot(m.dels.contains).foreach(n =>
+            fs.delete(new Path(SinkDeletes.dir(path), n), false))
+          old.changesDir.filterNot(m.changesDir.contains).foreach(n =>
+            fs.delete(new Path(root, s"_changes/$n"), true))
+          old.entries.flatMap(_.bloom).distinct.filterNot(liveBlooms)
+            .foreach(n => fs.delete(new Path(SinkBlooms.dir(path), n), false))
+        }
+    }
+  }
+
+  /** The shared driver-side publish: move exactly the commit-message
+    * staged files to their destination names, then commit the next
+    * snapshot = the base minus whatever the mode clears plus this
+    * publish, keyed by relative path (a streaming crash-replay that
+    * re-published the same deterministic names replaces, not
+    * duplicates). Manifest LAST: a crash before it leaves the data
+    * renamed but unreferenced — the table still reads its previous
+    * version. Batch prefixes the staged (taskId-unique) name with a
+    * query-unique token (task ids restart per application — without it,
+    * appends from two driver JVMs could collide and the
+    * delete-before-rename would clobber the first's file); streaming
+    * passes an (epoch, partition)-deterministic name so an epoch REPLAY
+    * overwrites its own files instead of duplicating them.
+    */
   def publish(fs: FileSystem, path: String, partCols: Seq[String],
               mode: SinkMode, files: Seq[StagedFile],
               destName: StagedFile => String,
-              statsToken: String, versioned: Boolean = false): Unit = {
-    // versioning is sticky: once a table has manifests, every publish
-    // maintains them, whatever write path reached it
-    val vMode = versioned || SinkVersions.isVersioned(fs, path)
+              versioned: Boolean = false): Unit = {
     // which partition TUPLES must be cleared, as a predicate (an
     // OverwriteEq over a strict subset of the columns matches many
     // leaves; Dynamic matches exactly the tuples being published)
@@ -1191,214 +1187,94 @@ private object SinkCommit {
           values(partCols.indexOf(c)) == want }
       case Dynamic => values => dynamicTuples(values)
     }
-    // versioned tables never physically delete at publish: retired
-    // files just drop out of the next manifest (old versions keep
-    // reading them until vacuumVersions reclaims)
-    if (!vMode && mode != Append) {
-      val root = new Path(path)
-      SinkLayout.listLeaves(fs, root, partCols)
-        .filter { case (values, _) => clearMatch(values) }
-        .foreach { case (_, leaf) => SinkLayout.deleteLeaf(fs, root, leaf) }
-    }
-    files.foreach { f =>
-      val dest = new Path(path, SinkLayout.leafRel(partCols, f.partValues))
-      fs.mkdirs(dest)
-      val src = new Path(f.stagedPath)
-      val target = new Path(dest, destName(f))
-      fs.delete(target, false) // streaming replay: same target name
-      if (!fs.rename(src, target))
-        throw new java.io.IOException(s"publish rename failed for $src")
-    }
-    // stats AFTER the data renames: a crash here leaves published files
-    // without stats — scanned instead of skipped, degraded never wrong
-    files.groupBy(_.partValues).foreach { case (values, fsOfV) =>
-      val dir = new Path(path, SinkLayout.leafRel(partCols, values))
-      SinkStats.write(fs, dir, statsToken,
-        fsOfV.map(f => (destName(f), Some(f.rows), f.stats)))
-      SinkBlooms.write(fs, dir, statsToken,
-        fsOfV.map(f => (destName(f), f.blooms)))
-    }
-    if (vMode) {
-      // next snapshot = previous minus cleared partitions plus this
-      // publish, keyed by relative path (a streaming crash-replay that
-      // re-published the same deterministic names replaces, not
-      // duplicates). Manifest LAST: a crash before this line leaves
-      // the data renamed but unreferenced — invisible to every
-      // manifest-driven reader, reclaimed by vacuum; never a torn read.
-      // CAS loop: concurrent publishers race on the version number —
-      // a taken slot (tryWrite false) means another snapshot landed
-      // first; recompute from ITS state and try the next number, so
-      // neither publisher's files are lost
-      val fresh = files.map { f =>
-        (s"${SinkLayout.leafRel(partCols, f.partValues)}/${destName(f)}",
-          f.partValues)
-      }
-      var committed = false
-      var attempts = 0
-      while (!committed) {
-        attempts += 1
-        if (attempts > 100) throw new java.io.IOException(
-          s"version manifest commit lost the CAS race 100 times: $path")
-        val base = SinkVersions.latest(fs, path)
-        // no prior manifest = versioning was just ENABLED: seed the
-        // first snapshot from the directory listing, or a table with
-        // pre-versioning history would lose its existing files to the
-        // manifest-driven readers (the listing already includes this
-        // publish's renamed files — the map union dedups them)
-        val prev = base.map(SinkVersions.read(fs, path, _))
-          .getOrElse(SinkVersions.listingEntries(fs, path, partCols))
-        val kept = prev.filterNot { case (_, values) => clearMatch(values) }
-        val next = (kept.toMap ++ fresh.toMap).toSeq.sortBy(_._1)
-        // position-delete manifests CARRY FORWARD across ordinary
-        // publishes (their rows stay deleted); a truncate clears them
-        // with everything else; manifests whose every target file
-        // retired with this publish GC out of the headers (they can no
-        // longer affect any scan of the new snapshot).
-        val carried =
-          if (mode == Truncate) Seq.empty
-          else base.map(SinkVersions.readDeletes(fs, path, _))
-            .getOrElse(Seq.empty)
-        // a derived commit (compaction) arms the thread-local guard:
-        // abort when a merge-on-read delete landed on files it read
-        // after it read them — its output lacks those deletes
-        SinkGuard.current.get().foreach(snap =>
-          checkDeleteConflicts(fs, path, carried, snap))
-        val dels = liveDeleteManifests(fs, path, carried,
-          next.map(_._1).toSet)
-        committed = SinkVersions.tryWrite(fs, path, base.getOrElse(0L) + 1,
-          next, dels)
-      }
+    val b0 = base(fs, path)
+    val fresh = stage(fs, path, partCols, files, destName)
+    val freshRels = fresh.map(_.rel).toSet
+    commit(fs, path, versioned, b0) { b =>
+      val kept = b.toSeq.flatMap(_.entries)
+        .filterNot(e => clearMatch(e.values) || freshRels(e.rel))
+      val next = (kept ++ fresh).sortBy(_.rel)
+      // position-delete manifests CARRY FORWARD across ordinary
+      // publishes (their rows stay deleted); a truncate clears them
+      // with everything else; manifests whose every target file
+      // retired with this publish GC out of the headers
+      val carried = if (mode == Truncate) Seq.empty else b.toSeq.flatMap(_.dels)
+      // a derived commit (compaction) arms the thread-local guard:
+      // abort when a merge-on-read delete landed on files it read
+      // after it read them — its output lacks those deletes
+      SinkGuard.current.get().foreach(snap =>
+        checkDeleteConflicts(fs, path, carried, snap))
+      SinkManifest(0L, next,
+        liveDeleteManifests(fs, path, carried, next.map(_.rel).toSet))
     }
   }
 
-  /** FILE-GRAIN replace, the commit half of a row-level rewrite:
-    * publish the fresh files (rename + stats, the normal protocol),
-    * then retire EXACTLY `replaced` — always atomically, via the
-    * manifest CAS (next = previous minus replaced plus fresh; a
-    * concurrent publish keeps its files because the CAS recomputes
-    * from the winner's state). A table that was not yet versioned is
-    * UPGRADED by its first row-level commit: the seed snapshot is the
-    * post-rewrite state (the directory listing at commit time minus
-    * the replaced files plus the fresh ones), after which every
-    * publish maintains manifests and reads are manifest-driven. The
-    * alternative — physical delete after the renames — gave a racing
-    * listing-based reader a transient-duplicate window; versioning is
-    * the only publish that retires files atomically, so row-level ops
-    * simply require it. Retired files stay on disk until
-    * [[graft.ops.Compaction.vacuumVersions]] reclaims them.
-    *
-    * `newDeleteManifest` is the merge-on-read commit's position-delete
-    * manifest (its name under `_deletes/`, plus the rel paths of the
-    * data files it touches — those join the conflict check: a
-    * concurrent rewrite of one means our positions are stale).
-    * `changesDir` links a pre-written row-grain change directory (see
-    * [[SinkVersions.readChangesDir]]) into the committed snapshot.
-    *
-    * Returns the committed version (None for the no-op commit).
+  /** The commit of a merge-on-read row-level op: publish the inserted
+    * files (see [[stage]]) and link the position-delete manifest
+    * through the CAS of [[replaceCommit]], retiring nothing. Returns
+    * the committed version (None for the no-op commit).
     */
   def replacePublish(fs: FileSystem, path: String, partCols: Seq[String],
                      files: Seq[StagedFile],
-                     replaced: Seq[(String, Seq[String], String)],
-                     destName: StagedFile => String,
-                     statsToken: String, versioned: Boolean,
-                     newDeleteManifest: Option[(String, Seq[String])] = None,
-                     changesDir: Option[String] = None,
-                     readSnapshot: Option[SinkReadSnapshot] = None)
+                     destName: StagedFile => String, versioned: Boolean,
+                     newDeleteManifest: Option[(String, Seq[String])],
+                     readSnapshot: Option[SinkReadSnapshot])
       : Option[Long] = {
-    if (files.isEmpty && replaced.isEmpty && newDeleteManifest.isEmpty)
-      return None
-    val fresh = replaceStage(fs, path, partCols, files, destName, statsToken)
-    replaceCommit(fs, path, partCols, fresh, replaced.map(_._1),
-      newDeleteManifest, changesDir, readSnapshot)
+    if (files.isEmpty && newDeleteManifest.isEmpty) return None
+    val b0 = base(fs, path)
+    val fresh = stage(fs, path, partCols, files, destName)
+    Some(replaceCommit(fs, path, versioned, fresh, Seq.empty,
+      newDeleteManifest, readSnapshot = readSnapshot, base0 = b0))
   }
 
-  /** First half of the replace: rename the staged files into the
-    * layout and write their stats/bloom manifests. Returns the fresh
-    * (relative path, partition tuple) entries. A crash after this
-    * leaves renamed-but-unreferenced files — invisible to every
-    * manifest-driven reader, reclaimed by vacuum. Split from the CAS
-    * half so a commit can compute row-grain CHANGE FILES between the
-    * two (the fresh files are readable in their final partitioned
-    * locations, but nothing references them yet).
+  /** The CAS commit of a row-level op: next = previous minus
+    * `retiredSeq` plus `fresh`, always atomic (a concurrent publish
+    * keeps its files because the CAS recomputes from the winner's
+    * state). `newDeleteManifest` is a merge-on-read commit's
+    * position-delete manifest (its name under `_deletes/`, plus the rel
+    * paths of the data files it touches — those join the conflict
+    * check: a concurrent rewrite of one means our positions are stale).
+    * `changesDir` links a pre-written row-grain change directory into
+    * the committed snapshot.
     */
-  def replaceStage(fs: FileSystem, path: String, partCols: Seq[String],
-                   files: Seq[StagedFile], destName: StagedFile => String,
-                   statsToken: String): Seq[(String, Seq[String])] = {
-    files.foreach { f =>
-      val dest = new Path(path, SinkLayout.leafRel(partCols, f.partValues))
-      fs.mkdirs(dest)
-      val src = new Path(f.stagedPath)
-      val target = new Path(dest, destName(f))
-      fs.delete(target, false)
-      if (!fs.rename(src, target))
-        throw new java.io.IOException(s"replace-publish rename failed for $src")
-    }
-    files.groupBy(_.partValues).foreach { case (values, fsOfV) =>
-      val dir = new Path(path, SinkLayout.leafRel(partCols, values))
-      SinkStats.write(fs, dir, statsToken,
-        fsOfV.map(f => (destName(f), Some(f.rows), f.stats)))
-      SinkBlooms.write(fs, dir, statsToken,
-        fsOfV.map(f => (destName(f), f.blooms)))
-    }
-    files.map { f =>
-      (s"${SinkLayout.leafRel(partCols, f.partValues)}/${destName(f)}",
-        f.partValues)
-    }
-  }
-
-  /** Second half: the CAS manifest commit retiring `retiredSeq` and
-    * adding `fresh` — see [[replacePublish]] for the contract.
-    */
-  def replaceCommit(fs: FileSystem, path: String, partCols: Seq[String],
-                    fresh: Seq[(String, Seq[String])],
-                    retiredSeq: Seq[String],
+  def replaceCommit(fs: FileSystem, path: String, versioned: Boolean,
+                    fresh: Seq[SinkFileEntry], retiredSeq: Seq[String],
                     newDeleteManifest: Option[(String, Seq[String])] = None,
                     changesDir: Option[String] = None,
-                    readSnapshot: Option[SinkReadSnapshot] = None): Option[Long] = {
+                    readSnapshot: Option[SinkReadSnapshot] = None,
+                    base0: Option[SinkManifest] = None): Long = {
     val retired = retiredSeq.toSet
-    var committed: Option[Long] = None
-    var attempts = 0
-    while (committed.isEmpty) {
-      attempts += 1
-      if (attempts > 100) throw new java.io.IOException(
-        s"replace manifest commit lost the CAS race 100 times: $path")
-      val base = SinkVersions.latest(fs, path)
-      // no prior manifest = the table's FIRST row-level commit upgrades
-      // it to versioned: seed from the listing (which already includes
-      // this publish's renamed files — the map union below dedups)
-      val prev = base.map(SinkVersions.read(fs, path, _))
-        .getOrElse(SinkVersions.listingEntries(fs, path, partCols))
+    val freshRels = fresh.map(_.rel).toSet
+    commit(fs, path, versioned,
+      base0.orElse(SinkVersions.readLatest(fs, path))) { b =>
+      val prev = b.toSeq.flatMap(_.entries)
       // WRITE-WRITE CONFLICT CHECK (the serializable guard Delta and
       // Iceberg apply): every file this rewrite read must still be
       // live in the snapshot we're replacing — a concurrent commit
       // that already replaced one means our kept-rows were computed
       // from stale data; committing anyway would duplicate the rows
       // both rewrites carried forward and drop the winner's edits.
-      val prevSet = prev.map(_._1).toSet
+      val prevSet = prev.map(_.rel).toSet
       val mustBeLive = retired ++ newDeleteManifest.toSeq.flatMap(_._2)
       val gone = mustBeLive.filterNot(prevSet)
       if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
         s"row-level rewrite of $path conflicts with a concurrent commit: " +
           s"${gone.take(3).mkString(", ")} no longer in the latest snapshot" +
           " — retry the operation against current data")
-      val baseDels = base.map(SinkVersions.readDeletes(fs, path, _))
-        .getOrElse(Seq.empty)
+      val baseDels = b.toSeq.flatMap(_.dels)
       // the MOR half of the conflict check: a concurrent merge-on-read
       // commit retires no files, so `gone` cannot see it — compare the
       // base's delete manifests against the operation's READ snapshot
       readSnapshot.foreach(snap =>
         checkDeleteConflicts(fs, path, baseDels, snap))
-      val kept = prev.filterNot { case (rel, _) => retired(rel) }
-      val next = (kept.toMap ++ fresh.toMap).toSeq.sortBy(_._1)
+      val next = (prev.filterNot(e => retired(e.rel) || freshRels(e.rel)) ++
+        fresh).sortBy(_.rel)
       // GC carried manifests whose files all retired with this commit
       // (a COW rewrite FOLDS their deletes into the fresh files)
       val dels = liveDeleteManifests(fs, path, baseDels,
-        next.map(_._1).toSet) ++ newDeleteManifest.map(_._1).toSeq
-      val v = base.getOrElse(0L) + 1
-      if (SinkVersions.tryWrite(fs, path, v, next, dels, changesDir))
-        committed = Some(v)
+        next.map(_.rel).toSet) ++ newDeleteManifest.map(_._1).toSeq
+      SinkManifest(0L, next, dels, changesDir)
     }
-    committed
   }
 
   /** Delete `dir`, then remove each ancestor up to (and including)
@@ -1452,7 +1328,7 @@ private class PartitionedSinkBatchWrite(path: String, partCols: Seq[String],
     SinkCommit.publish(fs, path, partCols, mode, files.toSeq,
       f => s"part-$qTok-" +
         new Path(f.stagedPath).getName.stripPrefix("part-"),
-      statsToken = queryId, versioned = versioned)
+      versioned = versioned)
     sweepStaging(fs)
   }
 
@@ -1729,13 +1605,13 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
     val files = open.map { case (pvs, o) =>
       o.w.close()
       val colStats = dataFields.zip(o.stats).flatMap { case ((fld, _), st) =>
-        if (st == null) None
-        else st.render.map(mm => SinkColStat(fld.name, mm))
-      }.toSeq
+        if (st == null) None else st.render.map(fld.name -> _)
+      }.toMap
       val colBlooms = bloomPlan.zip(o.blooms).flatMap {
         case ((name, _, _), acc) => acc.render.map(name -> _)
       }.toSeq
-      StagedFile(pvs, o.p.toString, o.rows, partitionId, colStats, colBlooms)
+      StagedFile(pvs, o.p.toString, o.rows, fs.getFileStatus(o.p).getLen,
+        partitionId, colStats, colBlooms)
     }.toSeq
     open.clear()
     SinkCommitMessage(files)
@@ -1801,7 +1677,7 @@ private class PartitionedSinkStreamingWrite(path: String, partCols: Seq[String],
       SinkCommit.publish(fs, path, partCols, mode, files.toSeq,
         f => s"part-e$epochId-p${f.partitionId}-" +
           s"${SinkLayout.valueTag(f.partValues)}.parquet",
-        statsToken = s"e$epochId", versioned = versioned)
+        versioned = versioned)
       fs.mkdirs(marker(epochId).getParent)
       fs.create(marker(epochId), true).close()
     }

@@ -99,10 +99,11 @@ class PartitionedSinkCatalog extends TableCatalog
     root = Option(options.get("root")).getOrElse(
       throw new IllegalArgumentException(
         s"catalog $name needs spark.sql.catalog.$name.root=<dir>"))
-    // opt-in snapshot retention: every publish writes a version
-    // manifest and overwrites retire files logically (VERSION AS OF
-    // becomes readable; vacuumVersions reclaims). Sticky per table
-    // once the first manifest exists.
+    // history retention: every publish writes a version manifest; with
+    // `versioned=true` retired files stay until vacuumVersions reclaims
+    // them (VERSION AS OF reads every retained version), otherwise each
+    // commit deletes what the latest version no longer references.
+    // Sticky per table once a versioned catalog has committed to it.
     versioned = Option(options.get("versioned")).exists(_.toBoolean)
   }
 
@@ -240,7 +241,7 @@ class PartitionedSinkCatalog extends TableCatalog
     // atomic publish of the sidecar: concurrent CREATEs race on the
     // rename, not on a half-written file
     val dir = tableDir(ident)
-    fs.mkdirs(dir)
+    fs.mkdirs(SinkVersions.dir(dir.toString))
     val staged = new Path(dir, s"_table.json.tmp-${util.UUID.randomUUID()}")
     val out = fs.create(staged, true)
     try out.write(renderSidecar(partCols, schema, persisted)

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.read._
@@ -14,13 +14,14 @@ import org.apache.spark.unsafe.types.UTF8String
   *
   *   - PARTITION PRUNING ([[SupportsPushDownFilters]]): `pCol = v`,
   *     `pCol IN (...)` and `IsNotNull(pCol)` on ANY of the partition
-  *     columns are consumed at planning time — pruned subtrees
-  *     contribute ZERO input splits, and a predicate on any SUBSET of
-  *     a multi-level layout's columns prunes at its own level (a
-  *     `month = 3` filter on a year/month/day table skips eleven
-  *     twelfths of every year without touching the day listings).
+  *     columns are consumed at planning time against the version
+  *     manifest's tuples — pruned partitions contribute ZERO input
+  *     splits, and a predicate on any SUBSET of a multi-level layout's
+  *     columns prunes (a `month = 3` filter on a year/month/day table
+  *     skips eleven twelfths of every year).
   *     Data-column comparisons stay post-scan filters, and also skip
-  *     files (stats/bloom manifests) and row groups (parquet footers).
+  *     files (manifest stats, bloom blobs) and row groups (parquet
+  *     footers).
   *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): only the
   *     requested columns' chunks are read and decoded; partition
   *     columns cost nothing (they come from the dir names, one
@@ -112,10 +113,9 @@ private[sources] class PartitionedSinkScanBuilder(
     }
     partitionFilters = pushable
     // DATA-column comparisons become FILE-SKIP candidates against the
-    // per-file min/max manifests the write side publishes (SinkStats):
-    // a file whose recorded range provably excludes the predicate
-    // contributes zero splits — the row-group pruning a Parquet lake
-    // gets from footers, recovered for the text layout
+    // per-file min/max the version manifest records: a file whose
+    // recorded range provably excludes the predicate contributes zero
+    // splits
     skipFilters = filters.filter {
       case GreaterThan(c, _) => !partCols.contains(c)
       case GreaterThanOrEqual(c, _) => !partCols.contains(c)
@@ -222,58 +222,25 @@ private[sources] object SinkAggPushdown {
       }
     val fs = FileSystem.get(new java.net.URI(path),
       SparkSession.active.sessionState.newHadoopConf())
-    val root = new Path(path)
-    // live membership: pinned/latest snapshot on a versioned table,
-    // the listing otherwise; ACTIVE POSITION DELETES disqualify (a
-    // deleted row may hold the min; counts would overstate)
-    val entries: Seq[(String, Seq[String])] =
-      if (!fs.exists(root)) Seq.empty
-      else asOfVersion match {
-        case Some(v) =>
-          if (SinkVersions.readDeletes(fs, path, v).nonEmpty) return None
-          SinkVersions.read(fs, path, v)
-        case None if SinkVersions.isVersioned(fs, path) =>
-          SinkVersions.latest(fs, path) match {
-            case None => Seq.empty
-            case Some(v) =>
-              if (SinkVersions.readDeletes(fs, path, v).nonEmpty) return None
-              SinkVersions.read(fs, path, v)
-          }
-        case None =>
-          SinkLayout.listLeaves(fs, root, partCols).flatMap {
-            case (values, leaf) =>
-              val rel = SinkLayout.leafRel(partCols, values)
-              SinkLayout.dataFiles(fs, leaf).map(f =>
-                (s"$rel/${f.getPath.getName}", values))
-          }
-      }
-    // per-dir stats manifests, loaded once per dir
-    val statsByDir = scala.collection.mutable.Map[
-      String, Map[String, SinkFileStats]]()
-    val perFile: Seq[(Seq[String], SinkFileStats)] = entries.map {
-      case (rel, values) =>
-        val slash = rel.lastIndexOf('/')
-        val name = rel.drop(slash + 1)
-        val dir = rel.take(math.max(slash, 0))
-        statsByDir.getOrElseUpdate(dir,
-          SinkStats.readDir(fs, new Path(path, rel).getParent))
-          .get(name) match {
-          case Some(st) => (values, st)
-          case None => return None // a file without stats: cannot prove
-        }
+    // the pinned or latest snapshot's entries carry every needed fact;
+    // ACTIVE POSITION DELETES disqualify (a deleted row may hold the
+    // min; counts would overstate)
+    val snap = asOfVersion match {
+      case Some(v) => Some(SinkVersions.read(fs, path, v))
+      case None => SinkVersions.readLatest(fs, path)
     }
+    if (snap.exists(_.dels.nonEmpty)) return None
+    val perFile = snap.toSeq.flatMap(_.entries)
     val groupIdx = groupCols.map(partCols.indexOf)
 
-    def aggValues(files: Seq[SinkFileStats]): Option[Seq[Any]] = Some(wanted.map {
-      case Left(()) =>
-        val counts = files.map(_.rows)
-        if (!counts.forall(_.isDefined)) return None
-        counts.flatten.sum
+    def aggValues(files: Seq[SinkFileEntry]): Option[Seq[Any]] = Some(wanted.map {
+      case Left(()) => files.map(_.rows).sum
       case Right((c, wantMax)) =>
         val dt = fullSchema(c).dataType
         // every file must CARRY an entry for the column (Some(None) =
         // provably all-NULL contributes nothing; a MISSING entry —
-        // poisoned NaN/Inf stats or a pre-stats file — is unprovable)
+        // poisoned NaN/Inf stats, or a column the file predates — is
+        // unprovable)
         val bounds = files.map { st =>
           st.cols.get(c) match {
             case Some(b) => b
@@ -302,15 +269,15 @@ private[sources] object SinkAggPushdown {
     val rows: Array[InternalRow] =
       if (groupCols.isEmpty)
         Array(org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-          aggValues(perFile.map(_._2)).getOrElse(return None).toIndexedSeq))
-      else perFile.groupBy { case (values, _) => groupIdx.map(values) }
+          aggValues(perFile).getOrElse(return None).toIndexedSeq))
+      else perFile.groupBy(e => groupIdx.map(e.values))
         .toSeq.sortBy(_._1.mkString("\u0000"))
         .map { case (key, files) =>
           val keyVals = groupCols.zip(key).map { case (c, raw) =>
             SinkParquetResolve.castValue(raw, fullSchema(c).dataType)
           }
           org.apache.spark.sql.catalyst.InternalRow.fromSeq(
-            (keyVals ++ aggValues(files.map(_._2)).getOrElse(return None))
+            (keyVals ++ aggValues(files).getOrElse(return None))
               .toIndexedSeq)
         }.toArray
     val schema = StructType(
@@ -386,8 +353,8 @@ private[sources] class PartitionedSinkScan(
     * The keys land as a per-column allow-set of RENDERED partition
     * values (the writer's own string rendering, so comparison is
     * exact), applied in [[planInputPartitions]] ON TOP of the cached
-    * static plan — planning may have forced the lazy pruning walk
-    * long before the runtime filter arrives, and re-walking would
+    * static plan — planning may have forced the lazy pruning pass
+    * long before the runtime filter arrives, and re-planning would
     * race the snapshot. Runtime pruning only ever DROPS splits, so
     * every static guarantee (manifest snapshot, delete manifests,
     * key-grouped output — Spark backfills empty groups for dropped
@@ -399,7 +366,7 @@ private[sources] class PartitionedSinkScan(
 
   /** Runtime DATA-column predicates, kept as v1 `In` filters for
     * [[SinkFileSkip.mayMatch]] against the per-file min/max retained
-    * from the pruning walk — a join keyed on a CLUSTERED (or
+    * from the pruning pass — a join keyed on a CLUSTERED (or
     * naturally ordered) column then skips whole files at runtime,
     * the same way DPP skips whole partitions. Bounded: an IN-set
     * beyond [[SinkRuntimePrune.MaxSkipValues]] is ignored (the
@@ -453,17 +420,16 @@ private[sources] class PartitionedSinkScan(
   }
   /** Active position-delete manifests (absolute paths) of the snapshot
     * being read — every split anti-filters its rows through them.
-    * Filled by the pruning walk (versioned tables only).
+    * Filled by the pruning pass.
     */
   @volatile protected var activeDeleteManifests: Seq[String] = Seq.empty
 
   /** Surviving files' recorded column bounds (abs path → col →
-    * min/max), retained from the pruning walk for runtime file
-    * skipping. Files without a stats entry are absent — and always
-    * kept.
+    * min/max), for runtime file skipping.
     */
-  @volatile private var fileStatsForRuntime
-      : Map[String, Map[String, Option[(String, String)]]] = Map.empty
+  private lazy val fileStatsForRuntime
+      : Map[String, Map[String, Option[(String, String)]]] =
+    prunedFilesWithStats.map(e => abs(e) -> e.cols).toMap
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -480,148 +446,80 @@ private[sources] class PartitionedSinkScan(
       "filesSkippedRuntime" -> skippedByRuntime)
   }
 
-  /** (tuple, file, recorded rows) for every partition SURVIVING the
-    * pushed filters — shared by split planning and statistics, so both
-    * see the same pruned view. Membership comes from the pruned
-    * recursive directory walk, or — on a VERSIONED table — from the
-    * snapshot manifest (the requested `VERSION AS OF`, else the
-    * latest), which is what makes logically retired files invisible
-    * without physical deletes.
+  protected lazy val fs: FileSystem = FileSystem.get(
+    new java.net.URI(path), SparkSession.active.sessionState.newHadoopConf())
+  private lazy val root: Path = fs.makeQualified(new Path(path))
+  /** Absolute path of a manifest entry's data file. */
+  protected def abs(e: SinkFileEntry): String = new Path(root, e.rel).toString
+
+  /** Every file SURVIVING the pushed filters, with its manifest facts —
+    * shared by split planning and statistics, so both see the same
+    * pruned view. Membership and facts come from ONE snapshot manifest
+    * (the requested `VERSION AS OF`, else the latest): partition
+    * pruning on its tuples, min/max skipping on its stats, bloom
+    * skipping on the blobs the surviving files name. Nothing is listed
+    * or opened per leaf or per file.
     */
-  private lazy val prunedFilesWithStats
-      : Seq[(Seq[String], FileStatus, Option[Long])] = {
-    val fs = FileSystem.get(new java.net.URI(path),
-      SparkSession.active.sessionState.newHadoopConf())
-    val root = new Path(path)
-    if (!fs.exists(root)) Seq.empty
-    else {
-      // resolve one manifest's entries to FileStatuses. For an EXPLICIT
-      // `VERSION AS OF` a missing file is a hard error (the user asked
-      // for a specific snapshot; serving part of it would be a silent
-      // wrong answer). For a LATEST read, a missing file means a
-      // vacuum/publish raced this scan's planning — None signals the
-      // caller to re-resolve the newest manifest and retry, rather
-      // than turning a benign race into a query failure.
-      def resolve(v: Long, strict: Boolean)
-          : Option[Seq[(Seq[String], FileStatus)]] = {
-        activeDeleteManifests = SinkVersions.readDeletes(fs, path, v)
-          .map(n => new Path(root, s"_deletes/$n").toString)
-        val entries = SinkVersions.read(fs, path, v)
-          .filter { case (_, values) => keepTuple(values) }
-        val resolved = entries.map { case (rel, values) =>
-          val p = new Path(path, rel)
-          if (fs.exists(p)) Some(values -> fs.getFileStatus(p))
-          else if (strict) throw new IllegalStateException(
-            s"version $v of $path references $rel, which no longer " +
-              "exists — vacuumed beyond retention?")
-          else None
-        }
-        if (resolved.forall(_.isDefined)) Some(resolved.flatten)
-        else None
-      }
-      // (tuple, data file) after partition pruning, before file skipping
-      val candidates: Seq[(Seq[String], FileStatus)] =
-        asOfVersion match {
-          case Some(v) => resolve(v, strict = true).get
-          case None if SinkVersions.isVersioned(fs, path) =>
-            SinkVersions.latest(fs, path) match {
-              case None => Seq.empty
-              case Some(v1) => resolve(v1, strict = false).getOrElse {
-                // raced a vacuum/publish: one retry against whatever is
-                // newest NOW; files still missing then are tolerated
-                // (replaced since) — a latest read serves latest state
-                SinkVersions.latest(fs, path).toSeq.flatMap { v2 =>
-                  activeDeleteManifests = SinkVersions
-                    .readDeletes(fs, path, v2)
-                    .map(n => new Path(root, s"_deletes/$n").toString)
-                  SinkVersions.read(fs, path, v2)
-                    .filter { case (_, values) => keepTuple(values) }
-                    .flatMap { case (rel, values) =>
-                      val p = new Path(path, rel)
-                      if (fs.exists(p)) Some(values -> fs.getFileStatus(p))
-                      else None
-                    }
-                }
-              }
-            }
-          case None =>
-            SinkLayout.listLeaves(fs, root, partCols,
-              (level, v) => keepAt(partCols(level), v)) // partition pruning
-              .flatMap { case (values, leaf) =>
-                SinkLayout.dataFiles(fs, leaf).map(values -> _)
-              }
-        }
-      // a versioned table's manifest names files without a listing
-      candidates.foreach { case (_, f) => SinkLayout.requireParquet(f.getPath) }
-      // per-dir stats manifests (driver-side, small — one per publish
-      // per dir): used for FILE SKIPPING (drop every file whose
-      // recorded min/max provably excludes a skip filter; files
-      // without stats are always kept) and for the exact ROW COUNTS
-      // estimateStatistics reports. Loaded once per dir per scan.
-      val wantBloom = SinkFileSkip.wantsBloom(skipFilters)
-      val statsAcc = Map.newBuilder[String,
-        Map[String, Option[(String, String)]]]
-      val out = candidates.groupBy(_._2.getPath.getParent).toSeq
-        .flatMap { case (dir, inDir) =>
-          val stats = SinkStats.readDir(fs, dir)
-          // bloom manifests load only for scans with point predicates
-          val blooms =
-            if (wantBloom) SinkBlooms.readDir(fs, dir)
-            else Map.empty[String,
-              Map[String, org.apache.spark.util.sketch.BloomFilter]]
-          inDir.flatMap { case (values, f) =>
-            val st = stats.get(f.getPath.getName)
-            val keepStats = st.forall(s =>
-              skipFilters.forall(SinkFileSkip.mayMatch(_, s.cols)))
-            val keepBloom = keepStats &&
-              blooms.get(f.getPath.getName).forall(bm =>
-                skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
-            if (!keepStats) skippedByStats += 1
-            else if (!keepBloom) skippedByBloom += 1
-            if (keepStats && keepBloom) {
-              // retain surviving files' column bounds for RUNTIME
-              // file skipping (join-key IN-sets arriving after static
-              // planning probe these without re-reading a manifest)
-              st.foreach(s => statsAcc += f.getPath.toString -> s.cols)
-              Some((values, f, st.flatMap(_.rows)))
-            } else None
-          }
-        }
-      fileStatsForRuntime = statsAcc.result()
-      filesScanned = out.size
-      out
+  private lazy val prunedFilesWithStats: Seq[SinkFileEntry] = {
+    val snap = asOfVersion match {
+      case Some(v) => Some(SinkVersions.read(fs, path, v))
+      case None => SinkVersions.readLatest(fs, path)
     }
+    activeDeleteManifests = snap.toSeq.flatMap(_.dels)
+      .map(n => new Path(root, s"_deletes/$n").toString)
+    // partition pruning, then FILE SKIPPING: drop every file whose
+    // recorded min/max provably excludes a skip filter (a column
+    // without stats is always kept)
+    val afterStats = snap.toSeq.flatMap(_.entries)
+      .filter(e => keepTuple(e.values))
+      .filter { e =>
+        val keep = skipFilters.forall(SinkFileSkip.mayMatch(_, e.cols))
+        if (!keep) skippedByStats += 1
+        keep
+      }
+    // bloom blobs load only for scans with point predicates, and only
+    // the blobs the surviving files name
+    val out =
+      if (!SinkFileSkip.wantsBloom(skipFilters)) afterStats
+      else {
+        val blobs = afterStats.flatMap(_.bloom).distinct
+          .map(b => b -> SinkBlooms.read(fs, path, b)).toMap
+        afterStats.filter { e =>
+          val keep = e.bloom.flatMap(blobs(_).get(e.rel)).forall(bm =>
+            skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
+          if (!keep) skippedByBloom += 1
+          keep
+        }
+      }
+    filesScanned = out.size
+    out
   }
 
-  /** Statically pruned (partition pruning + file skipping) file
-    * groups — the subclassable seam the COW row-level scan filters
-    * further at runtime.
+  /** Statically pruned (partition pruning + file skipping) files — the
+    * subclassable seam the COW row-level scan filters further at
+    * runtime.
     */
-  protected lazy val staticPrunedFiles: Seq[(Seq[String], FileStatus)] =
-    prunedFilesWithStats.map(t => (t._1, t._2))
-  private def prunedFiles: Seq[(Seq[String], FileStatus)] = staticPrunedFiles
+  protected lazy val staticPrunedFiles: Seq[SinkFileEntry] =
+    prunedFilesWithStats
+  private def prunedFiles: Seq[SinkFileEntry] = staticPrunedFiles
 
   private lazy val keyTypes: Seq[DataType] =
     partCols.map(c => fullSchema(c).dataType)
 
   /** LIMIT-driven file trimming: the shortest deterministic PREFIX of
     * files whose recorded rows cover the pushed limit. Only when
-    * provable: every surviving file carries a count and no position
-    * deletes are active (they make counts overstate live rows).
+    * provable: no position deletes are active (they make counts
+    * overstate live rows).
     */
-  private lazy val limitedFiles: Seq[(Seq[String], FileStatus)] =
+  private lazy val limitedFiles: Seq[SinkFileEntry] =
     limitHint match {
-      case Some(n) if activeDeleteManifests.isEmpty &&
-        prunedFilesWithStats.nonEmpty &&
-        prunedFilesWithStats.forall(_._3.isDefined) =>
-        val sorted = prunedFilesWithStats.sortBy(_._2.getPath.toString)
+      case Some(n) if activeDeleteManifests.isEmpty =>
         var acc = 0L
-        val taken = sorted.takeWhile { t =>
+        prunedFiles.sortBy(abs).takeWhile { e =>
           val need = acc < n
-          acc += t._3.get
+          acc += e.rows
           need
         }
-        taken.map(t => (t._1, t._2))
       case _ => prunedFiles
     }
 
@@ -633,17 +531,15 @@ private[sources] class PartitionedSinkScan(
     */
   private lazy val inputSplits: Array[InputPartition] = {
     val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
-    limitedFiles.flatMap { case (values, f) =>
-      val len = f.getLen
-      val rel = s"${SinkLayout.leafRel(partCols, values)}/${f.getPath.getName}"
-      if (len <= maxSplit)
-        Seq(SinkFileSplit(f.getPath.toString, values, keyTypes,
-          relPath = rel, delManifests = activeDeleteManifests)
+    limitedFiles.flatMap { e =>
+      if (e.size <= maxSplit)
+        Seq(SinkFileSplit(abs(e), e.values, keyTypes,
+          relPath = e.rel, delManifests = activeDeleteManifests)
           : InputPartition)
-      else (0L until len by maxSplit).map(s =>
-        SinkFileSplit(f.getPath.toString, values, keyTypes,
-          s, math.min(maxSplit, len - s),
-          relPath = rel, delManifests = activeDeleteManifests)
+      else (0L until e.size by maxSplit).map(s =>
+        SinkFileSplit(abs(e), e.values, keyTypes,
+          s, math.min(maxSplit, e.size - s),
+          relPath = e.rel, delManifests = activeDeleteManifests)
           : InputPartition)
     }.toArray
   }
@@ -656,7 +552,7 @@ private[sources] class PartitionedSinkScan(
         val tupleOk = runtimeTupleKeep.forall(keep =>
           partCols.zip(s.partValues).forall { case (c, v) =>
             keep.get(c).forall(_.contains(v)) })
-        // stats-less files always pass (mayMatch's own contract)
+        // stats-less columns always pass (mayMatch's own contract)
         tupleOk && fileStatsForRuntime.get(s.file).forall(st =>
           runtimeSkipFilters.forall(SinkFileSkip.mayMatch(_, st)))
       }
@@ -682,17 +578,13 @@ private[sources] class PartitionedSinkScan(
       : org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(prunedFiles.map(_._2.getLen).sum)
+        java.util.OptionalLong.of(prunedFiles.map(_.size).sum)
       override def numRows(): java.util.OptionalLong =
         // exact only while no position deletes are active (recorded
         // per-file counts would overestimate — worse for the CBO than
         // no estimate)
-        if (prunedFilesWithStats.nonEmpty &&
-            prunedFilesWithStats.forall(_._3.isDefined) &&
-            activeDeleteManifests.isEmpty)
-          java.util.OptionalLong.of(prunedFilesWithStats.flatMap(_._3).sum)
-        else if (prunedFilesWithStats.isEmpty)
-          java.util.OptionalLong.of(0L)
+        if (activeDeleteManifests.isEmpty)
+          java.util.OptionalLong.of(prunedFilesWithStats.map(_.rows).sum)
         else java.util.OptionalLong.empty()
     }
 
@@ -721,7 +613,7 @@ private[sources] class PartitionedSinkScan(
         partCols.map(c => org.apache.spark.sql.connector.expressions
           .Expressions.identity(c)
           : org.apache.spark.sql.connector.expressions.Expression).toArray,
-        limitedFiles.map(_._1).distinct.size)
+        limitedFiles.map(_.values).distinct.size)
 
   override def createReaderFactory(): PartitionReaderFactory =
     // the pushed data-column comparisons ride to the parquet reader
@@ -877,9 +769,9 @@ private object SinkSplitConf {
   * own FileStreamSource: the OFFSET is a single generation number
   * (constant-size JSON, independent of table file count), and the
   * files of each generation live in an immutable per-generation log
-  * under the source's checkpoint directory. `latestOffset` lists the
-  * layout (the sink's commit protocol makes publication atomic, so a
-  * listing never sees a half-written file), diffs against the seen
+  * under the source's checkpoint directory. `latestOffset` reads the
+  * latest version manifest (publication is atomic, so it never names
+  * a half-written file), diffs against the seen
   * set, and — when new files exist — writes them as log entry
   * `<gen+1>` (atomic tmp+rename). A micro-batch (s, e] is the union of
   * log entries s+1..e — deterministic under replay: the same offsets
@@ -888,12 +780,13 @@ private object SinkSplitConf {
   * An array-form (file-list) offset comes from a checkpoint written
   * before generations existed, over TSV data files nothing reads now:
   * it is rejected, not migrated.
-  * Append-only semantics — files removed by a dynamic overwrite after
-  * being logged are skipped at planning (already-emitted rows are NOT
+  * Append-only semantics — files retired by an overwrite or rewrite
+  * after being logged are skipped at planning, which takes sizes and
+  * stats from the latest manifest (already-emitted rows are NOT
   * retracted; a reader of a table being rewritten wants a CDC log, not
   * a file tail — [[graft.ops.Compaction.tableChanges]] is that log).
   * Pushed partition filters drop pruned values' files
-  * at listing AND planning time, and pushed data-column comparisons
+  * at logging AND planning time, and pushed data-column comparisons
   * skip provably-excluded files at planning (same residual contract
   * as the batch scan) — with the honest caveat that Spark's streaming
   * planner does not run V2ScanRelationPushDown, so `.filter` above
@@ -965,31 +858,19 @@ private class PartitionedSinkMicroBatchStream(
       throw new java.io.IOException(s"file-log commit failed for gen $gen")
   }
 
-  private def listFiles(): Seq[(String, Seq[String])] = {
-    val f = fs
-    val root = new Path(path)
-    if (!f.exists(root)) Seq.empty
-    // VERSIONED table: live membership is the latest snapshot manifest
-    // (logically retired files must not re-enter the tail)
-    else if (SinkVersions.isVersioned(f, path))
-      SinkVersions.latest(f, path).toSeq
-        .flatMap(SinkVersions.read(f, path, _))
-        .filter { case (_, values) => keepTuple(values) }
-        .map { case (rel, values) => new Path(path, rel).toString -> values }
-        .sortBy(_._1)
-    else SinkLayout.listLeaves(f, root, partCols)
-      .filter { case (values, _) => keepTuple(values) }
-      .flatMap { case (values, leaf) =>
-        SinkLayout.dataFiles(f, leaf).map(_.getPath.toString -> values)
-      }
-      .sortBy(_._1)
-  }
+  /** The latest snapshot's files that survive the pushed partition
+    * filters, by absolute path. */
+  private def liveFiles(f: FileSystem): Map[String, SinkFileEntry] =
+    SinkVersions.readLatest(f, path).toSeq.flatMap(_.entries)
+      .filter(e => keepTuple(e.values))
+      .map(e => new Path(path, e.rel).toString -> e).toMap
 
   override def initialOffset(): Offset = GenOffset(0L)
 
   override def latestOffset(): Offset = {
     val (seen, maxGen) = state
-    val fresh = listFiles().filterNot { case (file, _) => seen(file) }
+    val fresh = liveFiles(fs).toSeq.sortBy(_._1)
+      .collect { case (file, e) if !seen(file) => file -> e.values }
     if (fresh.nonEmpty) {
       val gen = maxGen.incrementAndGet()
       writeLog(fs, gen, fresh)
@@ -1024,32 +905,24 @@ private class PartitionedSinkMicroBatchStream(
       val p = new Path(logDir, g.toString)
       if (!f.exists(p)) Seq.empty else readLog(f, p)
     }
-    val present = live
-      .filter { case (file, values) =>
-        keepTuple(values) && f.exists(new Path(file)) }
+    // the logged files still live in the latest snapshot, with its
+    // facts: a file retired since it was logged is skipped
+    val latest = liveFiles(f)
+    val present = live.flatMap { case (file, _) => latest.get(file).map(file -> _) }
     // FILE SKIPPING on the tail, same contract as the batch scan: the
     // query's data-column comparisons stay residual, so dropping a
     // provably-excluded file removes only rows the filter would
-    // discard anyway — a replay without stats (vacuumed manifests)
-    // reads the file and post-scan-filters to the identical output
-    val wantBloom = SinkFileSkip.wantsBloom(skipFilters)
-    val kept =
-      if (skipFilters.isEmpty) present
-      else present.groupBy(t => new Path(t._1).getParent).toSeq
-        .flatMap { case (dir, inDir) =>
-          val stats = SinkStats.readDir(f, dir)
-          val blooms =
-            if (wantBloom) SinkBlooms.readDir(f, dir)
-            else Map.empty[String,
-              Map[String, org.apache.spark.util.sketch.BloomFilter]]
-          inDir.filter { case (file, _) =>
-            stats.get(new Path(file).getName)
-              .forall(st => skipFilters.forall(
-                SinkFileSkip.mayMatch(_, st.cols))) &&
-              blooms.get(new Path(file).getName).forall(bm =>
-                skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
-          }
-        }
+    // discard anyway
+    val blobs =
+      if (!SinkFileSkip.wantsBloom(skipFilters)) Map.empty[String,
+        Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]]
+      else present.flatMap(_._2.bloom).distinct
+        .map(b => b -> SinkBlooms.read(f, path, b)).toMap
+    val kept = present.filter { case (_, e) =>
+      skipFilters.forall(SinkFileSkip.mayMatch(_, e.cols)) &&
+        e.bloom.flatMap(blobs.get(_).flatMap(_.get(e.rel))).forall(bm =>
+          skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
+    }
     // byte-range carving, same contract as the batch scan: a giant
     // epoch file must not become one task. Deterministic under replay
     // because published files are immutable — the same file always
@@ -1057,13 +930,12 @@ private class PartitionedSinkMicroBatchStream(
     val keyTypes = partCols.map(c => fullSchema(c).dataType)
     val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
     kept.sortBy(_._1)
-      .flatMap { case (file, values) =>
-        val len = f.getFileStatus(new Path(file)).getLen
-        if (len <= maxSplit)
-          Seq(SinkFileSplit(file, values, keyTypes): InputPartition)
-        else (0L until len by maxSplit).map(s =>
-          SinkFileSplit(file, values, keyTypes,
-            s, math.min(maxSplit, len - s)): InputPartition)
+      .flatMap { case (file, e) =>
+        if (e.size <= maxSplit)
+          Seq(SinkFileSplit(file, e.values, keyTypes): InputPartition)
+        else (0L until e.size by maxSplit).map(s =>
+          SinkFileSplit(file, e.values, keyTypes,
+            s, math.min(maxSplit, e.size - s)): InputPartition)
       }.toArray
   }
 
@@ -1197,7 +1069,7 @@ private[sources] object SinkFileSkip {
     }
 
   /** Do any of the skip filters need a bloom probe? (Blooms answer
-    * only point predicates — load the `_bloom-` manifests for exactly
+    * only point predicates — load bloom blobs for exactly
     * the scans that can use them.)
     */
   def wantsBloom(filters: Array[Filter]): Boolean = filters.exists {

@@ -1,6 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
@@ -38,14 +38,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *   - a REPLACE write: the kept/updated/inserted rows stage and
   *     publish through the sink's normal stage-then-publish protocol,
   *     and the commit retires EXACTLY the files the scan planned —
-  *     ALWAYS atomically, via the version-manifest CAS (next manifest
-  *     = previous minus replaced plus fresh; time travel and
-  *     [[graft.ops.Compaction.tableChanges]] see the rewrite as
-  *     delete+insert of those files). A table that was not yet
-  *     versioned is UPGRADED by its first row-level commit (seed
-  *     snapshot = the post-rewrite state): physical retirement would
-  *     give racing readers a transient-duplicate window, so the
-  *     atomic publish is simply required, not optional.
+  *     atomically, via the version-manifest CAS like every publish
+  *     (next manifest = previous minus replaced plus fresh; time
+  *     travel and [[graft.ops.Compaction.tableChanges]] see the
+  *     rewrite as delete+insert of those files). On a table that
+  *     keeps no history the replaced files are deleted right after
+  *     the commit.
   *
   * Partition-grain deletes never reach this path: the table also
   * implements [[org.apache.spark.sql.connector.catalog.SupportsDelete]],
@@ -255,14 +253,10 @@ private[sources] class SinkCowScan(
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val groups = staticPrunedFiles.filter { case (_, f) =>
-      runtimeKeep.forall(_.contains(f.getPath.toString))
-    }
+    val groups = staticPrunedFiles.filter(e =>
+      runtimeKeep.forall(_.contains(abs(e))))
     groupsPlanned = Some(groups.size.toLong)
-    op.plannedGroups = groups.map { case (values, f) =>
-      (s"${SinkLayout.leafRel(partCols, values)}/${f.getPath.getName}",
-        values, f.getPath.toString)
-    }
+    op.plannedGroups = groups.map(e => (e.rel, e.values, abs(e)))
     op.scanDeleteManifests = Some(activeDeleteManifests
       .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet)
     // whole files, never byte-carved: a group must be read and
@@ -271,11 +265,9 @@ private[sources] class SinkCowScan(
     // rewrite of a file with MOR deletes FOLDS them in (the rewritten
     // file omits those rows; the stale positions retire with it).
     val keyTypes = partCols.map(c => fullSchema(c).dataType)
-    groups.map { case (values, f) =>
-      SinkFileSplit(f.getPath.toString, values, keyTypes,
-        relPath = s"${SinkLayout.leafRel(partCols, values)}/${f.getPath.getName}",
-        delManifests = activeDeleteManifests): InputPartition
-    }.toArray
+    groups.map(e => SinkFileSplit(abs(e), e.values, keyTypes,
+      relPath = e.rel, delManifests = activeDeleteManifests): InputPartition)
+      .toArray
   }
 
   override def outputPartitioning()
@@ -324,7 +316,7 @@ private[sources] class SinkCowScan(
 private[sources] object SinkCowChanges {
   def write(path: String, partCols: Seq[String], schema: StructType,
             oldGroups: Seq[(String, Seq[String], String)],
-            fresh: Seq[(String, Seq[String])],
+            fresh: Seq[SinkFileEntry],
             cmd: RowLevelOperation.Command,
             qTok: String,
             fieldIds: Map[String, Int],
@@ -338,10 +330,9 @@ private[sources] object SinkCowChanges {
       SinkFileSplit(abs, values, keyTypes, relPath = rel,
         delManifests = scanDelManifests)
     }
-    val afterSplits = fresh.map { case (rel, values) =>
-      SinkFileSplit(new Path(path, rel).toString, values, keyTypes,
-        relPath = rel)
-    }
+    val afterSplits = fresh.map(e =>
+      SinkFileSplit(new Path(path, e.rel).toString, e.values, keyTypes,
+        relPath = e.rel))
     def side(splits: Seq[SinkFileSplit], tag: Int) =
       SinkSplitsRead.dataFrame(spark, splits, schema, partCols, fieldIds)
         .withColumn("_side", lit(tag.toLong))
@@ -582,13 +573,9 @@ private class SinkDeltaBatchWrite(
       else op.scanDeleteManifests.map(seen =>
         SinkReadSnapshot(seen, deletes.map(_._1).toSet))
     SinkCommit.replacePublish(fs, path, partCols, files,
-      replaced = Seq.empty,
       f => s"part-$qTok-" +
         new Path(f.stagedPath).getName.stripPrefix("part-"),
-      statsToken = queryId, versioned = versioned,
-      newDeleteManifest = manifest,
-      changesDir = None,
-      readSnapshot = readSnapshot)
+      versioned, manifest, readSnapshot)
     sweepStaging(fs)
   }
 
@@ -605,8 +592,8 @@ private class SinkDeltaBatchWrite(
 
 /** Commit half of the rewrite: publish the fresh files through the
   * sink's normal rename protocol, then retire exactly the scanned
-  * groups atomically via the manifest CAS (auto-upgrading a
-  * not-yet-versioned table — see [[SinkCommit.replacePublish]]).
+  * groups atomically via the manifest CAS (see
+  * [[SinkCommit.replaceCommit]]).
   */
 private class SinkReplaceBatchWrite(
     path: String, partCols: Seq[String], schema: StructType,
@@ -633,8 +620,8 @@ private class SinkReplaceBatchWrite(
     val destName = (f: StagedFile) => s"part-$qTok-" +
       new Path(f.stagedPath).getName.stripPrefix("part-")
     if (files.isEmpty && op.plannedGroups.isEmpty) { sweepStaging(fs); return }
-    val fresh = SinkCommit.replaceStage(fs, path, partCols, files,
-      destName, statsToken = queryId)
+    val base = SinkCommit.base(fs, path)
+    val fresh = SinkCommit.stage(fs, path, partCols, files, destName)
     // ROW-GRAIN CHANGE FILES (`graft.rowChanges`): the one-job net
     // diff between the replaced groups' rows and the fresh ones is
     // exactly what the rewrite changed — carried-forward rows cancel.
@@ -650,10 +637,11 @@ private class SinkReplaceBatchWrite(
         SinkFormat.fieldIds(props),
         op.scanDeleteManifests.getOrElse(Set.empty).toSeq.sorted
           .map(n => new Path(path, s"_deletes/$n").toString))
-    SinkCommit.replaceCommit(fs, path, partCols, fresh,
+    SinkCommit.replaceCommit(fs, path, versioned, fresh,
       op.plannedGroups.map(_._1), changesDir = changesDir,
       readSnapshot = op.scanDeleteManifests.map(seen =>
-        SinkReadSnapshot(seen, op.plannedGroups.map(_._1).toSet)))
+        SinkReadSnapshot(seen, op.plannedGroups.map(_._1).toSet)),
+      base0 = base)
     sweepStaging(fs)
   }
 

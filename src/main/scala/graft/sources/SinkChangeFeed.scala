@@ -89,11 +89,11 @@ private[graft] object SinkChangeFeed {
     val fs = FileSystem.get(new java.net.URI(path),
       SparkSession.active.sessionState.newHadoopConf())
     val (partCols, schema, props) = SinkSidecar.readDir(fs, path)
-    // the feed's offsets are VERSION numbers: an unversioned table has
-    // no commit log to tail — latest/initial would both resolve to 0
-    // and the feed would sit silently empty forever. Fail at
-    // construction instead, pointing at the fix.
-    require(SinkVersions.isVersioned(fs, path),
+    // the feed's offsets are VERSION numbers: a table that keeps only
+    // its latest version has no commit log to tail. Fail at
+    // construction, pointing at the fix.
+    require(SinkVersions.latest(fs, path).flatMap(v => SinkVersions.find(
+      fs, path, v, headersOnly = true)).forall(_.keepHistory),
       s"$path is not versioned — the change feed tails the version " +
         "manifest log; create the table through a catalog with " +
         "spark.sql.catalog.<name>.versioned=true")
@@ -214,19 +214,15 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
     val f = fs
     val keyTypes = partCols.map(c => tableSchema(c).dataType)
     val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
-    def manifest(v: Long): Map[String, Seq[String]] =
-      if (v == 0L) Map.empty
-      else SinkVersions.read(f, path, v).toMap
-    def dels(v: Long): Seq[String] =
-      if (v == 0L) Seq.empty else SinkVersions.readDeletes(f, path, v)
-    def carve(file: Path, values: Seq[String], kts: Seq[DataType],
+    // each version's manifest is read once; version 0 is the empty
+    // table before the first commit
+    def manifest(v: Long): SinkManifest =
+      if (v == 0L) SinkManifest(0L, Seq.empty)
+      else SinkVersions.read(f, path, v)
+    def carve(file: Path, len: Long, values: Seq[String], kts: Seq[DataType],
               extras: Seq[(String, String)], inline: Boolean = false,
               rel: String = "", delManifests: Seq[String] = Seq.empty,
               invert: Boolean = false): Seq[InputPartition] = {
-      if (!f.exists(file)) throw new IllegalStateException(
-        s"change feed for $path needs $file (version range ($s, $e]), " +
-          "which no longer exists — vacuumed beyond the feed's start?")
-      val len = f.getFileStatus(file).getLen
       if (len <= maxSplit)
         Seq(SinkFileSplit(file.toString, values, kts, extras = extras,
           inlineParts = inline, relPath = rel, delManifests = delManifests,
@@ -237,16 +233,19 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
           relPath = rel, delManifests = delManifests,
           invertDeletes = invert))
     }
-    var prev = manifest(s)
-    var prevDels = dels(s).toSet
+    def files(m: SinkManifest) = m.entries.map(x => x.rel -> x).toMap
+    val first = manifest(s)
+    var prev = files(first)
+    var prevDels = first.dels.toSet
     (s + 1 to e).flatMap { v =>
-      val cur = manifest(v)
-      val curDels = dels(v).toSet
+      val m = manifest(v)
+      val cur = files(m)
+      val curDels = m.dels.toSet
       val extras = (t: String) => Seq(
         SinkChangeFeed.ChangeTypeCol -> t,
         SinkChangeFeed.CommitVersionCol -> v.toString)
       val out: Seq[InputPartition] =
-        SinkVersions.readChangesDir(f, path, v) match {
+        m.changesDir match {
           case Some(dirName) =>
             // ROW-GRAIN: the commit persisted its exact change rows
             // (graft.rowChanges) — emit those INSTEAD of the
@@ -262,8 +261,8 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
                   .filter(st => st.isFile &&
                     st.getPath.getName.endsWith(".parquet"))
                   .sortBy(_.getPath.getName)
-                  .flatMap(st => carve(st.getPath, Seq.empty, Seq.empty,
-                    extras(changeType), inline = true))
+                  .flatMap(st => carve(st.getPath, st.getLen, Seq.empty,
+                    Seq.empty, extras(changeType), inline = true))
               }
           case None =>
             // FILE-GRAIN manifest diff, plus — for merge-on-read
@@ -284,20 +283,18 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
                 .map(r => (r, cur(r), "insert", manifestPaths(curDels))) ++
                 prev.keySet.diff(cur.keySet).toSeq.sorted
                   .map(r => (r, prev(r), "delete", manifestPaths(prevDels)))
-            val fileGrain = changed.flatMap { case (rel, values, t, dm) =>
-              carve(new Path(path, rel), values, keyTypes, extras(t),
-                rel = rel, delManifests = dm)
+            val fileGrain = changed.flatMap { case (rel, x, t, dm) =>
+              carve(new Path(path, rel), x.size, x.values, keyTypes,
+                extras(t), rel = rel, delManifests = dm)
             }
             val newDels = curDels.diff(prevDels).toSeq.sorted
             val posGrain = newDels.flatMap { m =>
               val abs = new Path(path, s"_deletes/$m")
+              // a delete manifest names only files live at v
               SinkDeletes.read(f, abs).map(_._1).distinct.sorted
-                .flatMap { rel =>
-                  val values = rel.split("/").dropRight(1).toSeq
-                    .map(seg => TsvCodec.unescapeDir(
-                      seg.drop(seg.indexOf('=') + 1)))
-                  carve(new Path(path, rel), values, keyTypes,
-                    extras("delete"), rel = rel,
+                .flatMap(cur.get).flatMap { x =>
+                  carve(new Path(path, x.rel), x.size, x.values, keyTypes,
+                    extras("delete"), rel = x.rel,
                     delManifests = Seq(abs.toString), invert = true)
                 }
             }

@@ -16,7 +16,6 @@ import org.apache.spark.unsafe.types.UTF8String
   *   CALL cat.vacuum_versions(table => 't', keep_last => 3)
   *   CALL cat.vacuum_staging(table => 't')
   *   CALL cat.compact(table => 't')
-  *   CALL cat.compact_stats(table => 't')
   * }}}
   *
   * Each returns a one-row summary (what was reclaimed/rewritten), via
@@ -30,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
 private[graft] object SinkProcedures {
 
   val names: Seq[String] =
-    Seq("vacuum_versions", "vacuum_staging", "compact", "compact_stats")
+    Seq("vacuum_versions", "vacuum_staging", "compact")
 
   def load(catalogName: String, proc: String): UnboundProcedure =
     proc match {
@@ -62,13 +61,6 @@ private[graft] object SinkProcedures {
             catalogName, argString(args, 0), argInt(args, 1, 1),
             recluster = argBool(args, 2, dflt = false))
           Array(InternalRow(byPart.size))
-        })
-      case "compact_stats" => unbound(proc,
-        Seq(required("table"), optionalInt("min_manifests", 2)),
-        StructType(Seq(StructField("dirs_rewritten", IntegerType))),
-        (spark, args) => {
-          Array(InternalRow(graft.ops.Compaction.compactStats(spark,
-            catalogName, argString(args, 0), argInt(args, 1, 2))))
         })
       case other => throw new IllegalArgumentException(
         s"procedure $other is not defined by this catalog; available: " +

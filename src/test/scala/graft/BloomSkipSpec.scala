@@ -9,8 +9,8 @@ import org.apache.spark.sql.functions._
   * column, where min/max ranges are useless because every file spans
   * the whole key domain. Opt-in via
   * `spark.graft.sink.bloomColumns=<col>[,<col>]`; a per-file Spark
-  * BloomFilter per named column rides the publish into `_bloom-`
-  * manifests, and EqualTo/In scan filters probe it after the min/max
+  * BloomFilter per named column rides the publish into a `_blooms/`
+  * blob, and EqualTo/In scan filters probe it after the min/max
   * pass. Pins: fewer splits on interleaved (range-overlapping) files,
   * zero false negatives, IN multi-probe, string columns, the
   * distinct-count overflow degrade, and off-by-default.
@@ -106,11 +106,11 @@ class BloomSkipSpec extends SparkSpec {
       val one = spark.table("bl3.t").filter(col("k") === 31L)
       assert(splits(one) === 3, "overflowed blooms must not skip")
       assert(one.count() === 1L)
-      // and no bloom manifest carries a k entry (the cap dropped it)
+      // and no bloom blob carries a k entry (the cap dropped it)
       def walk(f: File): Seq[File] =
         if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
       val bloomLines = walk(new File(root))
-        .filter(_.getName.startsWith("_bloom-"))
+        .filter(_.getName.startsWith("bloom-"))
         .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines())
       assert(bloomLines.isEmpty)
     }
@@ -167,6 +167,6 @@ class BloomSkipSpec extends SparkSpec {
     assert(splits(spark.table("bl4.t").filter(col("k") === 31L)) === 3)
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    assert(!walk(new File(root)).exists(_.getName.startsWith("_bloom-")))
+    assert(!walk(new File(root)).exists(_.getName.startsWith("bloom-")))
   }
 }

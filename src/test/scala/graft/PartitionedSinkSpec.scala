@@ -44,9 +44,10 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(readBack(path) === Set(
       (1L, 1.5, "a", "A"), (2L, 0.1 + 0.2, "b", "B"),
       (3L, -7.25, null, "A"), (4L, 4.0, "d", "C")))
-    // layout is hive-style, one dir per value, no staging residue
+    // layout is hive-style, one dir per value, plus the manifest log;
+    // no staging residue
     val dirs = new File(path).listFiles().map(_.getName).toSet
-    assert(dirs === Set("p=A", "p=B", "p=C"))
+    assert(dirs === Set("p=A", "p=B", "p=C", "_versions"))
   }
 
   test("static overwrite truncates every existing partition first") {
@@ -908,9 +909,9 @@ class PartitionedSinkSpec extends SparkSpec {
     spark.sql("DROP TABLE graft_tailrn_spec.t")
   }
 
-  test("compactStats merges per-publish stats manifests into one; skipping still prunes") {
+  test("per-file stats ride the version manifest: no per-leaf stats files, skipping prunes") {
     import spark.implicits._
-    val root = tmpDir("sink_statcmp")
+    val root = tmpDir("sink_statmf")
     spark.conf.set("spark.sql.catalog.graft_sc_spec",
       classOf[graft.sources.PartitionedSinkCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_sc_spec.root", root)
@@ -919,12 +920,19 @@ class PartitionedSinkSpec extends SparkSpec {
       .writeTo("graft_sc_spec.t").partitionedBy(col("p")).create()
     batch(11L to 20L).writeTo("graft_sc_spec.t").append()
     batch(21L to 30L).writeTo("graft_sc_spec.t").append()
-    def manifests() = new File(s"$root/t/p=A").listFiles()
-      .filter(_.getName.startsWith("_stats-"))
-    assert(manifests().length === 3, "one stats manifest per publish")
-    assert(graft.ops.Compaction.compactStats(spark, "graft_sc_spec", "t") === 1)
-    assert(manifests().length === 1, "merged into one")
-    // skipping is unchanged: k > 25 still opens exactly one file
+    assert(new File(s"$root/t/p=A").listFiles().map(_.getName)
+      .filterNot(_.startsWith(".")) // checksum sidecars
+      .forall(_.endsWith(".parquet")), "a leaf holds data files only")
+    val fs = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(root), spark.sessionState.newHadoopConf())
+    val entries = graft.sources.SinkVersions.readLatest(fs, s"$root/t")
+      .get.entries
+    assert(entries.map(e => (e.rows, e.cols("k"))).toSet === Set(
+      (10L, Some(("1", "10"))), (10L, Some(("11", "20"))),
+      (10L, Some(("21", "30")))))
+    assert(entries.forall(e =>
+      e.size == new File(s"$root/t/${e.rel}").length()))
+    // k > 25 opens exactly one file
     def splits(df: org.apache.spark.sql.DataFrame): Int =
       df.queryExecution.executedPlan.collect {
         case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
@@ -932,8 +940,6 @@ class PartitionedSinkSpec extends SparkSpec {
       }.head
     val hi = spark.table("graft_sc_spec.t").filter(col("k") > 25L)
     assert(splits(hi) === 1 && hi.count() === 5)
-    // idempotent: a single manifest is left alone
-    assert(graft.ops.Compaction.compactStats(spark, "graft_sc_spec", "t") === 0)
     spark.sql("DROP TABLE graft_sc_spec.t")
   }
 
@@ -1093,13 +1099,13 @@ class PartitionedSinkSpec extends SparkSpec {
     spark.sql("DROP TABLE graft_vt_spec.t")
   }
 
-  test("enabling versioning on a table with history seeds the first snapshot from the layout") {
+  test("a versioned catalog's commit makes a latest-only table keep its history from then on") {
     import spark.implicits._
     val root = tmpDir("sink_boot")
     // same root through two catalog names (catalog instances are
     // cached per session — a conf flip after first use would not
-    // reinitialize): boot1 writes pre-versioning history, boot2 turns
-    // versioning on
+    // reinitialize): boot1 keeps only the latest version, boot2
+    // keeps history
     spark.conf.set("spark.sql.catalog.graft_boot1",
       classOf[graft.sources.PartitionedSinkCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_boot1.root", root)
@@ -1107,28 +1113,33 @@ class PartitionedSinkSpec extends SparkSpec {
       classOf[graft.sources.PartitionedSinkCatalog].getName)
     spark.conf.set("spark.sql.catalog.graft_boot2.root", root)
     spark.conf.set("spark.sql.catalog.graft_boot2.versioned", "true")
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(root),
+      spark.sessionState.newHadoopConf())
+    def versions() = graft.sources.SinkVersions.list(fs, s"$root/t")
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getString(3))).toSet
     Seq((1L, 1.0, "old", "A")).toDF("k", "v", "s", "p")
       .writeTo("graft_boot1.t").partitionedBy(col("p")).create()
     Seq((2L, 2.0, "older", "B")).toDF("k", "v", "s", "p")
       .writeTo("graft_boot1.t").append()
-    // first VERSIONED publish: its snapshot must carry the history,
-    // not just its own files
+    assert(versions() === Seq(2L), "latest-only: version 1 retired")
+    // first VERSIONED publish: its snapshot carries the table, and no
+    // version is retired from here on
     Seq((3L, 3.0, "new", "A")).toDF("k", "v", "s", "p")
       .writeTo("graft_boot2.t").append()
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getString(3))).toSet
-    assert(rows(spark.read.option("versionAsOf", "1").table("graft_boot2.t"))
-      === Set((1L, "A"), (2L, "B"), (3L, "A")),
-      "version 1 = pre-versioning layout + the enabling publish")
+    assert(versions() === Seq(2L, 3L))
     assert(rows(spark.table("graft_boot2.t"))
       === Set((1L, "A"), (2L, "B"), (3L, "A")))
-    // and overwrites from here retire logically as usual
+    // overwrites retire logically, through either catalog (sticky)
     Seq((9L, 9.0, "z", "A")).toDF("k", "v", "s", "p")
       .writeTo("graft_boot2.t").overwritePartitions()
-    assert(rows(spark.table("graft_boot2.t")) === Set((9L, "A"), (2L, "B")))
-    assert(rows(spark.read.option("versionAsOf", "1").table("graft_boot2.t"))
+    Seq((8L, 8.0, "y", "B")).toDF("k", "v", "s", "p")
+      .writeTo("graft_boot1.t").overwritePartitions()
+    assert(versions() === Seq(2L, 3L, 4L, 5L))
+    assert(rows(spark.table("graft_boot2.t")) === Set((9L, "A"), (8L, "B")))
+    assert(rows(spark.read.option("versionAsOf", "3").table("graft_boot2.t"))
       === Set((1L, "A"), (2L, "B"), (3L, "A")),
-      "the seeded snapshot survives the later overwrite")
+      "the first versioned snapshot survives later overwrites")
     spark.sql("DROP TABLE graft_boot2.t")
   }
 
@@ -1322,15 +1333,15 @@ class PartitionedSinkSpec extends SparkSpec {
       .select("payload").collect()
       .map(r => Option(r.get(0)).map(_.asInstanceOf[Array[Byte]].toSeq))
       .toSet === Set(want(3L), want(4L)))
-    // stats manifests never record the binary column (a MB-sized image
-    // has no meaningful min/max; k still skips)
-    val statsText = new java.io.File(s"$root/t/p=A").listFiles()
-      .filter(_.getName.startsWith("_stats-"))
-      .map(f => new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8"))
-      .mkString("\n")
-    assert(statsText.contains("\tk\t"), "numeric columns keep their stats")
-    assert(!statsText.contains("\tpayload\t"),
-      s"binary columns must carry no stats, got:\n$statsText")
+    // the manifest never records the binary column's bounds (a MB-sized
+    // image has no meaningful min/max; k still skips)
+    val fsb = org.apache.hadoop.fs.FileSystem.get(
+      new java.net.URI(root), spark.sessionState.newHadoopConf())
+    val cols = graft.sources.SinkVersions.readLatest(fsb, s"$root/t").get
+      .entries.map(_.cols)
+    assert(cols.forall(_.contains("k")), "numeric columns keep their stats")
+    assert(!cols.exists(_.contains("payload")),
+      s"binary columns must carry no stats, got: $cols")
     // TSV is no longer a table format: CREATE rejects it, loudly
     val eT = intercept[Exception] {
       spark.sql("""CREATE TABLE graft_bin_spec.tsv_t (k BIGINT, b BINARY,
@@ -1468,7 +1479,8 @@ class PartitionedSinkSpec extends SparkSpec {
       (3L, -7.25, "", "B")),
       "parquet publish must carry exactly the winner's rows, bytes intact")
     assert(!new File(path, "_staging").exists(), "staging swept at commit")
-    val dataFiles = new File(path).listFiles().filter(_.isDirectory)
+    val dataFiles = new File(path).listFiles()
+      .filter(f => f.isDirectory && !f.getName.startsWith("_"))
       .flatMap(_.listFiles()).map(_.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith("."))
     assert(dataFiles.nonEmpty && dataFiles.forall(_.endsWith(".parquet")),

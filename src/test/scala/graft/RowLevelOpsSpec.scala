@@ -49,26 +49,26 @@ class RowLevelOpsSpec extends SparkSpec {
     data.tail.foreach(_.toDF("k", "v", "p").coalesce(1).writeTo(t).append())
   }
 
+  /** Data files on disk: everything under the partition dirs (the
+    * `_`-prefixed metadata dirs — manifests, deletes — excluded).
+    */
   private def dataFileNames(root: String): Set[String] = {
     def walk(f: File): Seq[File] =
-      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      if (f.isDirectory && f.getName.startsWith("_")) Seq.empty
+      else if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
     walk(new File(root)).map(_.getName)
       .filter(n => !n.startsWith("_") && !n.startsWith(".")).toSet
   }
 
-  /** LIVE data files: the latest version manifest's names when the
-    * table is versioned (row-level commits auto-upgrade — retired
-    * files stay on disk until vacuum), the physical listing otherwise.
+  /** LIVE data files: the latest version manifest's names (on a
+    * versioned table retired files stay on disk until vacuum).
     */
   private def liveFileNames(root: String, table: String): Set[String] = {
     val dir = s"$root/$table"
     val fs = new org.apache.hadoop.fs.Path(dir)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    if (graft.sources.SinkVersions.isVersioned(fs, dir))
-      graft.sources.SinkVersions.latest(fs, dir).toSeq
-        .flatMap(graft.sources.SinkVersions.read(fs, dir, _))
-        .map { case (rel, _) => rel.drop(rel.lastIndexOf('/') + 1) }.toSet
-    else dataFileNames(dir)
+    graft.sources.SinkVersions.readLatest(fs, dir).toSeq.flatMap(_.entries)
+      .map(e => e.rel.drop(e.rel.lastIndexOf('/') + 1)).toSet
   }
 
   test("a copy-on-write rewrite writes parquet files with field ids: a later RENAME keeps the rewritten rows") {
@@ -107,8 +107,7 @@ class RowLevelOpsSpec extends SparkSpec {
     val before = dataFileNames(root)
     assert(before.size === 2)
     spark.sql("DELETE FROM rl2.t WHERE k = 99")
-    // LIVE set: the delete auto-versioned the table, so retirement is
-    // logical — the matchless file must keep its identity in the
+    // LIVE set: the matchless file must keep its identity in the
     // snapshot, the matching one must be replaced
     val after = liveFileNames(root, "t")
     assert((before intersect after).size === 1)
@@ -220,28 +219,25 @@ class RowLevelOpsSpec extends SparkSpec {
       "both rewritten files must coalesce into one per tuple")
   }
 
-  test("a row-level op on an unversioned table upgrades it to versioned: " +
-    "the commit is atomic, retired files are vacuum-fodder, never served") {
+  test("a row-level op on an unversioned table commits one manifest and deletes the replaced file after it") {
     import spark.implicits._
     val root = freshCatalog("rl9") // NOT versioned
     seed("rl9.t", Seq((1L, 1.0, "A"), (2L, 2.0, "A"), (3L, 3.0, "B")))
     val fs = new org.apache.hadoop.fs.Path(root)
       .getFileSystem(spark.sessionState.newHadoopConf())
-    assert(!graft.sources.SinkVersions.isVersioned(fs, s"$root/t"))
+    assert(graft.sources.SinkVersions.list(fs, s"$root/t") === Seq(1L))
+    val before = dataFileNames(s"$root/t")
     spark.sql("DELETE FROM rl9.t WHERE k = 2")
-    // upgraded: version 1 exists and IS the post-rewrite state
-    assert(graft.sources.SinkVersions.isVersioned(fs, s"$root/t"))
+    // one atomic commit; only the latest version is retained
+    assert(graft.sources.SinkVersions.list(fs, s"$root/t") === Seq(2L))
     assert(rows("rl9.t") === Set((1L, 1.0, "A"), (3L, 3.0, "B")))
-    val v1 = spark.read.option("versionAsOf", "1").table("rl9.t")
-      .select("k").collect().map(_.getLong(0)).toSet
-    assert(v1 === Set(1L, 3L), "the seed snapshot is post-rewrite")
-    // the retired file is still on disk (vacuum's job) but never read
-    assert(dataFileNames(s"$root/t").size >
-      liveFileNames(root, "t").size,
-      "retirement is logical until vacuumVersions")
-    // subsequent appends keep maintaining manifests (sticky)
+    // the replaced file is gone from disk, not just from the manifest
+    assert(dataFileNames(s"$root/t") === liveFileNames(root, "t"))
+    assert((before -- dataFileNames(s"$root/t")).size === 1)
+    intercept[Exception](
+      spark.read.option("versionAsOf", "1").table("rl9.t").collect())
     Seq((9L, 9.0, "B")).toDF("k", "v", "p").writeTo("rl9.t").append()
-    assert(graft.sources.SinkVersions.latest(fs, s"$root/t") === Some(2L))
+    assert(graft.sources.SinkVersions.list(fs, s"$root/t") === Seq(3L))
     assert(rows("rl9.t") === Set((1L, 1.0, "A"), (3L, 3.0, "B"), (9L, 9.0, "B")))
   }
 
@@ -327,8 +323,8 @@ class RowLevelOpsSpec extends SparkSpec {
     val fsm = new org.apache.hadoop.fs.Path(s"$root/mor").getFileSystem(
       spark.sessionState.newHadoopConf())
     val latestV = graft.sources.SinkVersions.latest(fsm, s"$root/mor").get
-    assert(graft.sources.SinkVersions.readDeletes(fsm, s"$root/mor", latestV)
-      .isEmpty, "the folded position manifest must GC out of the new snapshot")
+    assert(graft.sources.SinkVersions.read(fsm, s"$root/mor", latestV)
+      .dels.isEmpty, "the folded position manifest must GC out of the new snapshot")
     assert(graft.ops.Compaction.tableFiles(spark, "rlm", "mor")
       .select("deleted_positions").collect().map(_.getLong(0)).sum === 0L,
       "the density signal drops to zero after compaction")

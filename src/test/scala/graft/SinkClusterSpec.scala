@@ -84,17 +84,13 @@ class SinkClusterSpec extends SparkSpec {
     val root = freshCatalog("cl2")
     seedInterleaved("cl2.t", sorted = true)
     recluster("cl2")
-    // stats manifests now hold one [min,max] per live file — ranges
+    // the manifest now holds one [min,max] per live file — ranges
     // must be pairwise disjoint (that disjointness IS the skipping)
     val fs = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(root), spark.sessionState.newHadoopConf())
-    val dir = new org.apache.hadoop.fs.Path(s"$root/t/p=A")
-    val live = graft.sources.SinkLayout.dataFiles(fs, dir)
-      .map(_.getPath.getName).toSet
-    val stats = graft.sources.SinkStats.readDir(fs, dir)
-      .filter { case (f, _) => live.contains(f) }
-    val ranges = stats.values.toSeq
-      .flatMap(_.cols.get("k")).flatten
+    val live = graft.sources.SinkVersions.readLatest(fs, s"$root/t").toSeq
+      .flatMap(_.entries).filter(_.values == Seq("A"))
+    val ranges = live.flatMap(_.cols.get("k")).flatten
       .map { case (lo, hi) => (lo.toLong, hi.toLong) }.sortBy(_._1)
     assert(ranges.size === live.size, "every live file records k bounds")
     assert(ranges.size > 1)

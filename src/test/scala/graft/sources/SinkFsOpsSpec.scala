@@ -1,0 +1,85 @@
+package graft.sources
+
+import org.apache.spark.sql.functions.col
+import org.scalatest.funsuite.AnyFunSuite
+
+/** Filesystem operations of a LATEST scan's planning, counted through
+  * [[FaultyFileSystem]] on the driver thread: the version manifest is
+  * the only membership and stats source, so planning costs one
+  * `_versions/` listing and one manifest open whatever the leaf count,
+  * and never lists a leaf or stats a data file.
+  */
+class SinkFsOpsSpec extends AnyFunSuite {
+  private lazy val spark = graft.TestSpark.spark
+
+  private def catalog(name: String): String = {
+    FaultyFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val root = FaultyFileSystem.tempDir(s"sink_ops_$name")
+    spark.conf.set(s"spark.sql.catalog.$name",
+      classOf[PartitionedSinkCatalog].getName)
+    spark.conf.set(s"spark.sql.catalog.$name.root", root)
+    s"${new java.net.URI(root).getPath}/t"
+  }
+
+  private def assertManifestOnly(dir: String, ops: Seq[FaultyFileSystem.Op],
+                                 what: String): Unit = {
+    val lists = ops.filter(_.kind == "list").map(_.path)
+    assert(lists === Seq(s"$dir/_versions"),
+      s"$what: one _versions/ listing and no other, got $lists")
+    val manifests = ops.filter(o => o.kind == "open" &&
+      o.path.startsWith(s"$dir/_versions/"))
+    assert(manifests.size === 1, s"$what: one manifest open, got $manifests")
+    val perFile = ops.filter(o => o.kind == "status" &&
+      o.path.startsWith(dir) && !o.path.endsWith("/_table.json"))
+    assert(perFile.isEmpty, s"$what: no per-file exists/status, got $perFile")
+  }
+
+  test("a latest scan plans from one _versions/ listing and one manifest open, at 24 leaves") {
+    import spark.implicits._
+    val dir = catalog("graft_ops_spec")
+    (for (y <- 1 to 2; d <- 1 to 12) yield (y * 100L + d, y, d)).toDF("k", "y", "d")
+      .repartition(col("y"), col("d"))
+      .writeTo("graft_ops_spec.t").partitionedBy(col("y"), col("d")).create()
+    val t = "graft_ops_spec.t"
+    val (all, fullOps) = FaultyFileSystem.driverOps(spark.table(t).collect())
+    assert(all.length === 24)
+    assertManifestOnly(dir, fullOps, "full scan")
+    val (pruned, prunedOps) = FaultyFileSystem.driverOps(
+      spark.table(t).filter(col("y") === 2 && col("d") === 7).collect())
+    assert(pruned.map(_.getLong(0)).toSeq === Seq(207L))
+    assertManifestOnly(dir, prunedOps, "partition-pruned scan")
+    val (n, countOps) = FaultyFileSystem.driverOps(
+      spark.sql(s"SELECT count(*) FROM $t").collect())
+    assert(n.head.getLong(0) === 24L)
+    assertManifestOnly(dir, countOps, "count(*) pushdown")
+    assert(spark.sql(s"SELECT count(*) FROM $t").queryExecution.executedPlan
+      .collect { case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b }
+      .isEmpty, "count(*) must answer from the manifest, planning no scan")
+  }
+
+  test("a point-predicate scan opens only the bloom blobs its candidate files name") {
+    import spark.implicits._
+    val dir = catalog("graft_opsbl_spec")
+    val t = "graft_opsbl_spec.t"
+    def batch(ks: Range, p: String) =
+      ks.map(k => (k.toLong, p)).toDF("k", "p").coalesce(1)
+    batch(0 until 100, "A").writeTo(t)
+      .tableProperty(SinkBloomConf.PropColumns, "k")
+      .partitionedBy(col("p")).create()
+    batch(1000 until 1100, "A").writeTo(t).append() // min/max excludes k = 31
+    batch(0 until 100 by 2, "B").writeTo(t).append() // bloom excludes k = 31
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(s"faulty:$dir"),
+      spark.sessionState.newHadoopConf())
+    val entries = SinkVersions.readLatest(fs, s"faulty:$dir").get.entries
+    assert(entries.flatMap(_.bloom).distinct.size === 3, "one blob per commit")
+    val (hit, ops) = FaultyFileSystem.driverOps(
+      spark.table(t).filter(col("k") === 31L).collect())
+    assert(hit.map(_.getLong(0)).toSeq === Seq(31L))
+    val opened = ops.filter(o => o.kind == "open" &&
+      o.path.startsWith(s"$dir/_blooms/")).map(_.path.split('/').last).toSet
+    val candidates = entries.filterNot(_.cols("k").exists(_._1 == "1000"))
+    assert(opened === candidates.flatMap(_.bloom).toSet,
+      "only the stats survivors' blobs are opened")
+    assert(opened.size === 2)
+  }
+}

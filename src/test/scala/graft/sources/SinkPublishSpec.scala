@@ -17,21 +17,32 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class SinkPublishSpec extends AnyFunSuite {
 
+  /** Commit manifest v naming `rels` (leaf `p=<value>/...`) and `dels`
+    * straight through the CAS, as a racing publisher would.
+    */
+  private def commitAt(fs: FileSystem, root: String, v: Long,
+                       rels: Seq[String], dels: Seq[String] = Nil): Boolean =
+    SinkVersions.tryWrite(fs, root, SinkManifest(v, rels.map(entry), dels))
+
+  private def entry(rel: String): SinkFileEntry =
+    SinkFileEntry(rel, Seq(rel.takeWhile(_ != '/').stripPrefix("p=")), 1L, 1L)
+
+  private def relsAt(fs: FileSystem, root: String, v: Long): Seq[String] =
+    SinkVersions.read(fs, root, v).entries.map(_.rel)
+
   test("a merge-on-read delete landing after the rewrite's scan aborts the commit") {
     val root = Files.createTempDirectory("sink_mor_conflict").toString
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-    assert(SinkVersions.tryWrite(fs, root, 1L,
-      Seq(("p=A/f1.tsv", Seq("A")), ("p=A/f2.tsv", Seq("A")))))
+    assert(commitAt(fs, root, 1L, Seq("p=A/f1.tsv", "p=A/f2.tsv")))
     // our rewrite READ f1 at v1 (no delete manifests active); a
     // concurrent MOR delete then landed positions in f1 as v2
     SinkDeletes.write(fs, root, "del-race.tsv", Seq(("p=A/f1.tsv", 0L)))
-    assert(SinkVersions.tryWrite(fs, root, 2L,
-      Seq(("p=A/f1.tsv", Seq("A")), ("p=A/f2.tsv", Seq("A"))),
+    assert(commitAt(fs, root, 2L, Seq("p=A/f1.tsv", "p=A/f2.tsv"),
       dels = Seq("del-race.tsv")))
     // f1 is still live, so the retired-files check alone would pass —
     // the read-snapshot guard must catch the unseen manifest
     val ex = intercept[java.util.ConcurrentModificationException] {
-      SinkCommit.replaceCommit(fs, root, Seq("p"),
+      SinkCommit.replaceCommit(fs, root, versioned = true,
         fresh = Seq.empty, retiredSeq = Seq("p=A/f1.tsv"),
         readSnapshot = Some(SinkReadSnapshot(
           scanDels = Set.empty, readRels = Set("p=A/f1.tsv"))))
@@ -39,18 +50,17 @@ class SinkPublishSpec extends AnyFunSuite {
     assert(ex.getMessage.contains("del-race.tsv"))
     // a rewrite whose SCAN already saw the manifest (and anti-filtered
     // through it) commits fine
-    SinkCommit.replaceCommit(fs, root, Seq("p"),
+    SinkCommit.replaceCommit(fs, root, versioned = true,
       fresh = Seq.empty, retiredSeq = Seq("p=A/f1.tsv"),
       readSnapshot = Some(SinkReadSnapshot(
         scanDels = Set("del-race.tsv"), readRels = Set("p=A/f1.tsv"))))
-    assert(SinkVersions.read(fs, root, 3L).map(_._1) === Seq("p=A/f2.tsv"))
+    assert(relsAt(fs, root, 3L) === Seq("p=A/f2.tsv"))
     // and one reading OTHER files than the manifest touches is no
     // conflict either
     SinkDeletes.write(fs, root, "del-other.tsv", Seq(("p=A/f9.tsv", 4L)))
-    assert(SinkVersions.tryWrite(fs, root, 4L,
-      Seq(("p=A/f2.tsv", Seq("A")), ("p=A/f9.tsv", Seq("A"))),
+    assert(commitAt(fs, root, 4L, Seq("p=A/f2.tsv", "p=A/f9.tsv"),
       dels = Seq("del-other.tsv")))
-    SinkCommit.replaceCommit(fs, root, Seq("p"),
+    SinkCommit.replaceCommit(fs, root, versioned = true,
       fresh = Seq.empty, retiredSeq = Seq("p=A/f2.tsv"),
       readSnapshot = Some(SinkReadSnapshot(
         scanDels = Set.empty, readRels = Set("p=A/f2.tsv"))))
@@ -61,24 +71,23 @@ class SinkPublishSpec extends AnyFunSuite {
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
     SinkDeletes.write(fs, root, "del-f1.tsv", Seq(("p=A/f1.tsv", 0L)))
     SinkDeletes.write(fs, root, "del-f2.tsv", Seq(("p=A/f2.tsv", 7L)))
-    assert(SinkVersions.tryWrite(fs, root, 1L,
-      Seq(("p=A/f1.tsv", Seq("A")), ("p=A/f2.tsv", Seq("A"))),
+    assert(commitAt(fs, root, 1L, Seq("p=A/f1.tsv", "p=A/f2.tsv"),
       dels = Seq("del-f1.tsv", "del-f2.tsv")))
     // a COW rewrite retires f1 (folding del-f1's positions in): the
     // carried manifest list must drop del-f1 — nothing it touches
     // survives — and keep del-f2, whose file lives on
-    SinkCommit.replaceCommit(fs, root, Seq("p"),
-      fresh = Seq(("p=A/f1b.tsv", Seq("A"))), retiredSeq = Seq("p=A/f1.tsv"),
+    SinkCommit.replaceCommit(fs, root, versioned = true,
+      fresh = Seq(entry("p=A/f1b.tsv")), retiredSeq = Seq("p=A/f1.tsv"),
       readSnapshot = Some(SinkReadSnapshot(
         scanDels = Set("del-f1.tsv", "del-f2.tsv"),
         readRels = Set("p=A/f1.tsv"))))
-    assert(SinkVersions.readDeletes(fs, root, 2L) === Seq("del-f2.tsv"),
+    assert(SinkVersions.read(fs, root, 2L).dels === Seq("del-f2.tsv"),
       "fully-folded manifests must GC out of the headers")
     // the ordinary publish path GCs the same way (here: a truncate-free
     // dynamic-style commit that retires f2 via the replace path)
-    SinkCommit.replaceCommit(fs, root, Seq("p"),
+    SinkCommit.replaceCommit(fs, root, versioned = true,
       fresh = Seq.empty, retiredSeq = Seq("p=A/f2.tsv"))
-    assert(SinkVersions.readDeletes(fs, root, 3L) === Seq.empty,
+    assert(SinkVersions.read(fs, root, 3L).dels === Seq.empty,
       "the last manifest retires with its file")
   }
 
@@ -193,24 +202,6 @@ class SinkPublishSpec extends AnyFunSuite {
     assertTsvRejection(intercept[Exception](SinkSidecar.readDir(fs, dir)), dir)
   }
 
-  test("a .tsv data file in a leaf fails scans and read-back loudly, naming the file") {
-    val spark = graft.TestSpark.spark
-    val dir = freshTable("graft_tsvdf_spec")
-    val stray = new java.io.File(s"$dir/p=A/part-0-0-A.tsv")
-    Files.write(stray.toPath, "2\n".getBytes("UTF-8"))
-    assertTsvRejection(
-      intercept[Exception](spark.table("graft_tsvdf_spec.t").count()),
-      stray.getName)
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k",
-        org.apache.spark.sql.types.LongType)))
-    assertTsvRejection(intercept[Exception](
-      PartitionedSink.readBack(spark, dir, schema, "p").count()),
-      stray.getName)
-    stray.delete()
-    assert(spark.table("graft_tsvdf_spec.t").count() === 1L)
-  }
-
   test("a file-list stream offset from a pre-generation checkpoint is rejected, naming the table") {
     val spark = graft.TestSpark.spark
     val dir = freshTable("graft_tsvof_spec")
@@ -228,6 +219,50 @@ class SinkPublishSpec extends AnyFunSuite {
     val off = stream.latestOffset()
     assert(stream.deserializeOffset(off.json()) === off)
     assert(spark.table("graft_tsvof_spec.t").count() === 1L)
+  }
+
+  private def assertRejection(e: Throwable, phrase: String, names: String): Unit = {
+    val msgs = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(t => String.valueOf(t.getMessage)).mkString(" | ")
+    assert(msgs.contains(phrase) && msgs.contains(names), msgs)
+  }
+
+  test("a table in the listing layout (leaves, no _versions/) fails scans, writes and read-back loudly, naming it") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val dir = freshTable("graft_listing_spec")
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    fs.delete(new Path(dir, "_versions"), true)
+    val phrase = "no _versions/ manifest log"
+    assertRejection(intercept[Exception](
+      spark.table("graft_listing_spec.t").count()), phrase, dir)
+    assertRejection(intercept[Exception](
+      Seq((2L, "B")).toDF("k", "p").writeTo("graft_listing_spec.t").append()),
+      phrase, dir)
+    val schema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("k",
+        org.apache.spark.sql.types.LongType)))
+    assertRejection(intercept[Exception](
+      PartitionedSink.readBack(spark, dir, schema, "p").count()), phrase, dir)
+    // the append published nothing into the rejected table
+    assert(!fs.exists(new Path(dir, "p=B")))
+  }
+
+  test("a version manifest without per-file facts fails scans and history loudly, naming it") {
+    val spark = graft.TestSpark.spark
+    val dir = freshTable("graft_oldmf_spec")
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    // the older line shape: path and tuple only, no layout header
+    val old = new Path(dir, "_versions/2")
+    val out = fs.create(old, true)
+    try out.write("#\tts\t1\np=A/part-old.parquet\tA\n".getBytes("UTF-8"))
+    finally out.close()
+    val phrase = "without per-file sizes, row counts and stats"
+    assertRejection(intercept[Exception](
+      spark.table("graft_oldmf_spec.t").count()), phrase, old.getName)
+    assertRejection(intercept[Exception](
+      graft.ops.Compaction.tableHistory(spark, "graft_oldmf_spec", "t")),
+      phrase, dir)
   }
 
   test("graft.format is not an option: path-API writes, CREATE and ALTER reject it") {
@@ -268,15 +303,14 @@ class SinkPublishSpec extends AnyFunSuite {
       fs.mkdirs(p.getParent)
       val out = fs.create(p, true)
       try out.write(content.getBytes("UTF-8")) finally out.close()
-      StagedFile(Seq("A"), p.toString, 1, 0)
+      StagedFile(Seq("A"), p.toString, 1, content.length, 0)
     }
     // mirror PartitionedSinkBatchWrite.commit's naming exactly
     def publishAs(queryId: String, f: StagedFile): Unit = {
       val qTok = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
       SinkCommit.publish(fs, root, Seq("p"), Append, Seq(f),
         sf => s"part-$qTok-" +
-          new Path(sf.stagedPath).getName.stripPrefix("part-"),
-        statsToken = queryId)
+          new Path(sf.stagedPath).getName.stripPrefix("part-"))
     }
     publishAs("query-one-uuid", stage("query-one-uuid", "1\t1.0\n"))
     publishAs("query-two-uuid", stage("query-two-uuid", "2\t2.0\n"))
@@ -299,18 +333,51 @@ class SinkPublishSpec extends AnyFunSuite {
   test("version manifest commit is compare-and-swap: a taken version number is rejected, not replaced") {
     val root = Files.createTempDirectory("sink_cas").toString
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
-    assert(SinkVersions.tryWrite(fs, root, 1L, Seq(("p=A/f1.tsv", Seq("A")))),
+    assert(commitAt(fs, root, 1L, Seq("p=A/f1.tsv")),
       "first writer claims version 1")
     // a racing publisher computed the same next version from the same
     // base — its commit must FAIL (plain FileSystem.rename on a local
     // FS would silently replace the file and lose the first snapshot)
-    assert(!SinkVersions.tryWrite(fs, root, 1L, Seq(("p=B/f2.tsv", Seq("B")))),
+    assert(!commitAt(fs, root, 1L, Seq("p=B/f2.tsv")),
       "second writer's CAS on the taken version must lose")
-    assert(SinkVersions.read(fs, root, 1L) === Seq(("p=A/f1.tsv", Seq("A"))),
+    assert(SinkVersions.read(fs, root, 1L).entries === Seq(entry("p=A/f1.tsv")),
       "the winning snapshot is untouched")
-    assert(SinkVersions.tryWrite(fs, root, 2L, Seq(("p=B/f2.tsv", Seq("B")))),
+    assert(commitAt(fs, root, 2L, Seq("p=B/f2.tsv")),
       "the loser retries at the next number and lands")
     assert(SinkVersions.latest(fs, root) === Some(2L))
+  }
+
+  test("two concurrent unversioned appends both land: a publisher whose base manifest was retired re-reads and retries") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    FaultyFileSystem.register(spark.sparkContext.hadoopConfiguration)
+    val root = FaultyFileSystem.tempDir("sink_retire_race")
+    spark.conf.set("spark.sql.catalog.graft_race_spec",
+      classOf[PartitionedSinkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_race_spec.root", root)
+    val t = "graft_race_spec.t"
+    Seq((1L, "A")).toDF("k", "p").writeTo(t)
+      .partitionedBy(org.apache.spark.sql.functions.col("p")).create() // v1
+    // between this publisher's listing (latest = 1) and its open of
+    // manifest 1, a concurrent append commits v2 and retires v1
+    val fired = new java.util.concurrent.atomic.AtomicBoolean(false)
+    FaultyFileSystem.beforeOpen = p =>
+      if (p.toString.endsWith("/t/_versions/1") && fired.compareAndSet(false, true)) {
+        val other = new Thread(() => {
+          spark.sparkContext.setLocalProperty("spark.sql.execution.id", null)
+          Seq((2L, "B")).toDF("k", "p").writeTo(t).append()
+        })
+        other.start()
+        other.join()
+      }
+    try Seq((3L, "A")).toDF("k", "p").writeTo(t).append()
+    finally FaultyFileSystem.reset()
+    assert(fired.get, "the race window was exercised")
+    assert(spark.table(t).collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L),
+      "both appends land")
+    val fs = FileSystem.get(new java.net.URI(root), spark.sessionState.newHadoopConf())
+    assert(SinkVersions.list(fs, s"$root/t") === Seq(3L),
+      "only the latest version is retained")
   }
 
   test("row-level replace conflict-detects: a retired file already replaced by a concurrent commit aborts") {
@@ -320,18 +387,16 @@ class SinkPublishSpec extends AnyFunSuite {
     // snapshot 2 with f2 — our rewrite ALSO read f1, so its kept-rows
     // are stale: the commit must abort, not silently co-publish both
     // rewrites' carried-forward copies of f1's rows
-    assert(SinkVersions.tryWrite(fs, root, 1L, Seq(("p=A/f1.tsv", Seq("A")))))
-    assert(SinkVersions.tryWrite(fs, root, 2L, Seq(("p=A/f2.tsv", Seq("A")))))
+    assert(commitAt(fs, root, 1L, Seq("p=A/f1.tsv")))
+    assert(commitAt(fs, root, 2L, Seq("p=A/f2.tsv")))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      SinkCommit.replacePublish(fs, root, Seq("p"), files = Seq.empty,
-        replaced = Seq(("p=A/f1.tsv", Seq("A"), s"$root/p=A/f1.tsv")),
-        destName = _ => "", statsToken = "t", versioned = true)
+      SinkCommit.replaceCommit(fs, root, versioned = true, fresh = Seq.empty,
+        retiredSeq = Seq("p=A/f1.tsv"))
     }
     assert(ex.getMessage.contains("f1.tsv"))
     // a retire of a file that IS live commits: pure-delete rewrite
-    SinkCommit.replacePublish(fs, root, Seq("p"), files = Seq.empty,
-      replaced = Seq(("p=A/f2.tsv", Seq("A"), s"$root/p=A/f2.tsv")),
-      destName = _ => "", statsToken = "t", versioned = true)
-    assert(SinkVersions.read(fs, root, 3L) === Seq.empty)
+    SinkCommit.replaceCommit(fs, root, versioned = true, fresh = Seq.empty,
+      retiredSeq = Seq("p=A/f2.tsv"))
+    assert(SinkVersions.read(fs, root, 3L).entries === Seq.empty)
   }
 }
