@@ -113,9 +113,11 @@ object Compaction {
       // ARM the read-snapshot guard around the rewrite: compaction's
       // output is DERIVED from reading the fragmented partitions, so a
       // merge-on-read delete that lands on those files after this
-      // point (and before the publish) must abort the commit — the
+      // point (and before the commit) must abort the commit — the
       // compacted files were computed without it and would resurrect
-      // the deleted rows. The commit runs driver-side on this thread
+      // the deleted rows — and so must a file appended to those
+      // partitions meanwhile, which the dynamic overwrite would clear
+      // without its rows. The commit runs driver-side on this thread
       // (V2 write exec), which is what makes the thread-local sound.
       val guard = snap.map(m => graft.sources.SinkGuard.snapshot(m.dels.toSet,
         m.entries.filter(e => fragmented.contains(e.values)).map(_.rel).toSet))

@@ -2096,9 +2096,9 @@ object ParityQueries {
     * lookup pruning min/max ranges cannot give: the three appends
     * interleave o_orderkey by residue (mod 3), so every file's
     * [min, max] spans the whole key domain and range skipping keeps
-    * all of them, while the per-file Bloom filters
-    * (`spark.graft.sink.bloomColumns=o_orderkey`, written into
-    * bloom blobs at publish) prove two of three files free of
+    * all of them, while the per-file Bloom filters (the table's
+    * `graft.bloomColumns = 'o_orderkey'`, set at CREATE and written
+    * into bloom blobs at commit) prove two of three files free of
     * each probed key. Bloom false positives only ever SCAN a file;
     * false negatives are impossible — so the oracle (the same keys
     * straight from orders) catches any wrongly-skipped file as a
@@ -2113,18 +2113,16 @@ object ParityQueries {
         classOf[graft.sources.PartitionedSinkCatalog].getName)
       s.conf.set("spark.sql.catalog.graft_dyn.root", root)
       s.sql("DROP TABLE IF EXISTS graft_dyn.bloom_orders")
-      s.conf.set(graft.sources.SinkBloomConf.ColumnsKey, "o_orderkey")
-      try {
-        def residue(r: Int) = ord(s, d)
-          .filter(pmod(col("o_orderkey"), lit(3)) === r)
-          .select(col("o_orderkey"), col("o_totalprice"),
-            col("o_orderstatus"), col("o_orderpriority"))
-        residue(0)
-          .writeTo("graft_dyn.bloom_orders")
-          .partitionedBy(col("o_orderpriority")).create()
-        residue(1).writeTo("graft_dyn.bloom_orders").append()
-        residue(2).writeTo("graft_dyn.bloom_orders").append()
-      } finally s.conf.unset(graft.sources.SinkBloomConf.ColumnsKey)
+      def residue(r: Int) = ord(s, d)
+        .filter(pmod(col("o_orderkey"), lit(3)) === r)
+        .select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderstatus"), col("o_orderpriority"))
+      residue(0)
+        .writeTo("graft_dyn.bloom_orders")
+        .tableProperty(graft.sources.SinkBloomConf.PropColumns, "o_orderkey")
+        .partitionedBy(col("o_orderpriority")).create()
+      residue(1).writeTo("graft_dyn.bloom_orders").append()
+      residue(2).writeTo("graft_dyn.bloom_orders").append()
       s.table("graft_dyn.bloom_orders")
         .filter(col("o_orderkey").isin(7L, 1234L, 9876L))
         .select(col("o_orderkey"), col("o_totalprice"),

@@ -32,34 +32,39 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * The part that matters at 100 TB is the COMMIT PROTOCOL — a job
   * that writes for an hour from 1000 executors must publish all-or-
-  * nothing, under task retry, speculative duplicates, and job abort:
+  * nothing, under task retry, speculative duplicates, and job abort.
+  * Every write — append, overwrite, a streaming epoch, a copy-on-write
+  * rewrite, a merge-on-read delta — takes ONE path: one [[SinkWrite]],
+  * one [[PartitionedSinkWriterFactory]] and one [[SinkCommit.commit]]:
   *
-  *   - Every task writes only under `_staging/<queryId>/`, one file
-  *     per (task, partition-tuple), named by (partitionId, taskId) —
-  *     task attempts NEVER touch the published layout.
+  *   - Every task writes only under `_staging/<queryId>/` (a streaming
+  *     epoch under `_staging/<queryId>/epoch-<e>/`), one file per
+  *     (task, partition-tuple), named by (partitionId, taskId) — task
+  *     attempts NEVER touch the published layout.
   *   - A task's [[DataWriter.commit]] returns a manifest (its staged
-  *     files + row counts) as the WriterCommitMessage. Spark's
+  *     files + row counts, plus a merge-on-read write's deleted
+  *     positions) as the WriterCommitMessage. Spark's
   *     OutputCommitCoordinator (useCommitCoordinator=true) guarantees
   *     at most ONE attempt per partition commits; a speculative twin
   *     that loses the race gets abort() and deletes its files.
-  *   - Driver-side [[BatchWrite.commit]] publishes EXACTLY the files
-  *     named in the commit messages — a zombie attempt's orphan
-  *     staging file (its executor died before abort could run) is
-  *     swept with the staging dir, never published. Exactly-once is
-  *     therefore a property of the manifest, not of task scheduling.
-  *   - Overwrite semantics run at publish time, inside the one
-  *     driver-side commit: TRUNCATE/OverwriteByExpression(true)
-  *     clears the whole table, filter overwrite clears the leaves
-  *     matching the equality conjunction (ANY SUBSET of the partition
-  *     columns — `month = 3` on a y/m/d table clears March of every
-  *     year), dynamic overwrite clears exactly the partition TUPLES
-  *     present in the commit messages. The cleared files drop out of
-  *     the next version manifest, which is committed LAST by a
-  *     compare-and-swap rename: readers see the old or the new
-  *     version, never a mix, and a publish that dies before its commit
-  *     leaves the old version intact.
-  *   - [[BatchWrite.abort]] deletes the staging dir; the published
-  *     layout is untouched (all-or-nothing).
+  *   - The driver-side commit publishes EXACTLY the files named in the
+  *     commit messages — a zombie attempt's orphan staging file (its
+  *     executor died before abort could run) is swept with the staging
+  *     dir, never published. Exactly-once is therefore a property of
+  *     the manifest, not of task scheduling.
+  *   - What a commit CLEARS is one decision ([[SinkMode]]):
+  *     TRUNCATE/OverwriteByExpression(true) clears the whole table,
+  *     filter overwrite clears the leaves matching the equality
+  *     conjunction (ANY SUBSET of the partition columns — `month = 3`
+  *     on a y/m/d table clears March of every year), dynamic overwrite
+  *     clears exactly the partition TUPLES present in the commit
+  *     messages, and a row-level rewrite clears exactly the files its
+  *     scan planned. The cleared files drop out of the next version
+  *     manifest, which is committed LAST by a compare-and-swap rename:
+  *     readers see the old or the new version, never a mix, and a
+  *     commit that dies before its CAS leaves the old version intact.
+  *   - Abort deletes the staging dir; the published layout is
+  *     untouched (all-or-nothing).
   *
   * All FS traffic goes through the Hadoop FileSystem API (task-side
   * writers get the SESSION's Hadoop configuration, serialized into the
@@ -353,32 +358,40 @@ private[sources] class PartitionedSinkTable(path: String,
           return
         OverwriteEq(eqs.toMap)
       }
-    SinkCommit.publish(SinkCommit.fsFor(path), path, partCols, mode,
-      Seq.empty, _ => "", versioned = versioned)
+    SinkCommit.commit(SinkCommit.fsFor(path), path, partCols, versioned,
+      java.util.UUID.randomUUID().toString, mode, Seq.empty)
   }
 }
 
-/** Overwrite mode resolved at build time from which mix-in Spark
-  * calls: none = append, truncate()/overwrite(AlwaysTrue) = full
-  * replace, overwrite(p1 = v1 [, p2 = v2 ...]) = replace the leaf
-  * partitions matching the conjunction (any SUBSET of the partition
-  * columns), overwriteDynamicPartitions() = replace the partition
-  * tuples the job writes.
+/** The one write builder of every sink write. The overwrite mode is
+  * resolved at build time from which mix-in Spark calls: none =
+  * append, truncate()/overwrite(AlwaysTrue) = full replace,
+  * overwrite(p1 = v1 [, p2 = v2 ...]) = replace the leaf partitions
+  * matching the conjunction (any SUBSET of the partition columns),
+  * overwriteDynamicPartitions() = replace the partition tuples the job
+  * writes. A row-level operation passes itself as `op`; its commit
+  * decides what is cleared.
   */
 private class PartitionedSinkWriteBuilder(path: String, partCols: Seq[String],
                                           info: LogicalWriteInfo,
                                           versioned: Boolean = false,
                                           props: Map[String, String] =
-                                            Map.empty)
-    extends WriteBuilder with SupportsOverwrite with SupportsDynamicOverwrite {
+                                            Map.empty,
+                                          op: Option[SinkRowLevelOperation] =
+                                            None)
+    extends DeltaWriteBuilder with SupportsOverwrite
+    with SupportsDynamicOverwrite {
 
   private var mode: SinkMode = Append
-  partCols.foreach(pc => require(info.schema().fieldNames.contains(pc),
-    s"partition column $pc not in written schema ${info.schema().sql}"))
-  // loud at plan time: binary and nested columns can never partition,
-  // and MAP columns are not supported
-  info.schema().fields.foreach(f => SinkFormat.validateColumnType(
-    f.name, f.dataType, partCols.contains(f.name)))
+  // a delete-only merge-on-read write projects no row columns
+  if (op.isEmpty || info.schema().nonEmpty) {
+    partCols.foreach(pc => require(info.schema().fieldNames.contains(pc),
+      s"partition column $pc not in written schema ${info.schema().sql}"))
+    // loud at plan time: binary and nested columns can never partition,
+    // and MAP columns are not supported
+    info.schema().fields.foreach(f => SinkFormat.validateColumnType(
+      f.name, f.dataType, partCols.contains(f.name)))
+  }
 
   override def truncate(): WriteBuilder = { mode = Truncate; this }
 
@@ -404,91 +417,22 @@ private class PartitionedSinkWriteBuilder(path: String, partCols: Seq[String],
     mode = Dynamic; this
   }
 
-  override def build(): Write = {
-    // OPT-IN clustered writes (`graft.writeDistribution = 'hash'`,
-    // Iceberg's write.distribution-mode shape): request a cluster-by-
-    // partition-tuple exchange before the write, so each tuple lands
-    // in few tasks → few files, instead of one file per (task, tuple)
-    // — at 1000 executors an unclustered append fragments every
-    // partition 1000 ways. Default stays unclustered ('none'): small
-    // pipelines prefer no extra shuffle, and the compact() procedure
-    // exists for repair. The rewrite (row-level) write clusters
-    // unconditionally — see SinkRowLevelOperation.
-    val clustered = props.get("graft.writeDistribution") match {
-      case Some("hash") => true
-      case Some("none") | None => false
-      case Some(other) => throw new IllegalArgumentException(
-        s"graft.writeDistribution must be 'hash' or 'none', got '$other'")
-    }
-    // SORT-ORDER CLUSTERING (`graft.sortOrder`): range-distribute on
-    // (partition tuple, sort columns) and sort within tasks — files in
-    // a partition then carve the sort domain into DISJOINT ranges, so
-    // the stats manifests' min/max skip files on a non-partition
-    // column and parquet row groups carry tight bounds. Subsumes the
-    // 'hash' mode when both are set (an ordered distribution is
-    // clustered on its prefix).
-    val sortCols = SinkFormat.sortOrder(props, partCols, info.schema())
-    if (sortCols.nonEmpty) new Write with RequiresDistributionAndOrdering {
-      private def orders
-          : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-        (partCols ++ sortCols).map(c =>
-          org.apache.spark.sql.connector.expressions.Expressions.sort(
-            org.apache.spark.sql.connector.expressions.Expressions.column(c),
-            org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING)
-          : org.apache.spark.sql.connector.expressions.SortOrder).toArray
-      override def requiredDistribution()
-          : org.apache.spark.sql.connector.distributions.Distribution =
-        org.apache.spark.sql.connector.distributions.Distributions
-          .ordered(orders)
-      override def distributionStrictlyRequired(): Boolean = false
-      override def requiredOrdering()
-          : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-        orders
-      override def toBatch: BatchWrite =
-        new PartitionedSinkBatchWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-      override def toStreaming:
-          org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-        new PartitionedSinkStreamingWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-    } else if (clustered) new Write with RequiresDistributionAndOrdering {
-      override def requiredDistribution()
-          : org.apache.spark.sql.connector.distributions.Distribution =
-        org.apache.spark.sql.connector.distributions.Distributions
-          .clustered(partCols.map(c =>
-            org.apache.spark.sql.connector.expressions.Expressions
-              .identity(c)
-              : org.apache.spark.sql.connector.expressions.Expression)
-            .toArray)
-      override def distributionStrictlyRequired(): Boolean = false
-      override def requiredOrdering()
-          : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-        Array.empty
-      override def toBatch: BatchWrite =
-        new PartitionedSinkBatchWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-      override def toStreaming:
-          org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-        new PartitionedSinkStreamingWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-    } else new Write {
-      override def toBatch: BatchWrite =
-        new PartitionedSinkBatchWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-      override def toStreaming:
-          org.apache.spark.sql.connector.write.streaming.StreamingWrite =
-        new PartitionedSinkStreamingWrite(path, partCols, info.schema(),
-          info.queryId(), mode, versioned, props)
-    }
-  }
+  override def build(): DeltaWrite =
+    new SinkWrite(path, partCols, info, mode, versioned, props, op)
 }
 
+/** What a commit clears from its base snapshot. */
 private sealed trait SinkMode extends Serializable
 private case object Append extends SinkMode
 private case object Truncate extends SinkMode
 /** Equality conjunction over a SUBSET of the partition columns. */
 private case class OverwriteEq(eqs: Map[String, String]) extends SinkMode
+/** The partition tuples the commit publishes. */
 private case object Dynamic extends SinkMode
+/** A row-level commit: exactly the files `rels`, each of which must
+  * still be live (merge-on-read clears none).
+  */
+private case class Replace(rels: Set[String]) extends SinkMode
 
 /** Truncated STRING bounds for the skipping manifests, Iceberg-style:
   * a string column's recorded min is the 16-code-point PREFIX of the
@@ -567,7 +511,11 @@ private case class StagedFile(partValues: Seq[String], stagedPath: String,
                               cols: Map[String, Option[(String, String)]] =
                                 Map.empty,
                               blooms: Seq[(String, Array[Byte])] = Seq.empty)
-private case class SinkCommitMessage(files: Seq[StagedFile])
+/** One task's report: its staged files and, for a merge-on-read write,
+  * the (relative path, position) of every row it deleted.
+  */
+private case class SinkCommitMessage(files: Seq[StagedFile],
+                                     deletes: Seq[(String, Long)] = Seq.empty)
     extends WriterCommitMessage
 
 /** BLOOM-FILTER file skipping for POINT lookups — the pruning min/max
@@ -583,22 +531,23 @@ private case class SinkCommitMessage(files: Seq[StagedFile])
   * filter here is Spark's own [[org.apache.spark.util.sketch.BloomFilter]]
   * (the sketch behind Spark's runtime bloom-join pruning).
   *
-  * Opt-in per session: `spark.graft.sink.bloomColumns=c1,c2` names the
-  * columns (integral and string types; others are silently ineligible —
-  * float equality is a precision trap, bbee179). Writers accumulate
-  * each file's DISTINCT values (bounded: `bloomMaxDistinct` values,
-  * default 131072, strings additionally capped at 8 MB cumulative —
-  * overflow drops the filter for that file-column: degraded to a scan,
-  * never wrong) and serialize a right-sized filter at task commit
-  * (`bloomFpp`, default 1 %). Publish writes them to one
-  * [[SinkBlooms]] blob per commit, named by each file's manifest line;
-  * the scan probes them for EqualTo/In skip filters after the min/max
-  * pass.
+  * Opt-in per table: the `graft.bloomColumns = 'c1,c2'` table property
+  * names the columns (integral and string types; others are silently
+  * ineligible — float equality is a precision trap, bbee179). It is
+  * persisted in the catalog sidecar (or set as a path-API option), so
+  * it binds every writer of the table. Writers accumulate each file's
+  * DISTINCT values (bounded: `graft.bloomMaxDistinct` values, default
+  * 131072, strings additionally capped at 8 MB cumulative — overflow
+  * drops the filter for that file-column: degraded to a scan, never
+  * wrong) and serialize a right-sized filter at task commit (1 % false
+  * positives). The commit writes them to one [[SinkBlooms]] blob,
+  * named by each file's manifest line; the scan probes them for
+  * EqualTo/In skip filters after the min/max pass.
   */
 private[graft] object SinkBloomConf {
-  final val ColumnsKey = "spark.graft.sink.bloomColumns"
-  final val FppKey = "spark.graft.sink.bloomFpp"
-  final val MaxDistinctKey = "spark.graft.sink.bloomMaxDistinct"
+  final val PropColumns = "graft.bloomColumns"
+  final val PropMaxDistinct = "graft.bloomMaxDistinct"
+  final val Fpp = 0.01
   final val MaxStringBytes = 8L << 20
 
   def eligible(dt: DataType): Boolean = dt match {
@@ -606,31 +555,14 @@ private[graft] object SinkBloomConf {
     case _ => false
   }
 
-  /** Table-property keys (persisted in the catalog sidecar —
-    * `TBLPROPERTIES ('graft.bloomColumns' = 'k')` outlives the
-    * session and binds every writer of the table; the session conf
-    * remains the path-API/global fallback).
-    */
-  final val PropColumns = "graft.bloomColumns"
-  final val PropFpp = "graft.bloomFpp"
-  final val PropMaxDistinct = "graft.bloomMaxDistinct"
-
-  /** (columns, fpp, maxDistinct), driver-side: table properties first,
-    * session conf as the fallback for each knob independently.
-    */
-  def fromSession(props: Map[String, String] = Map.empty)
-      : (Seq[String], Double, Int) = {
-    val conf = SparkSession.active.conf
-    val cols = props.get(PropColumns).orElse(conf.getOption(ColumnsKey))
+  /** (columns, maxDistinct) from the table's properties. */
+  def fromProps(props: Map[String, String]): (Seq[String], Int) = {
+    val cols = props.get(PropColumns)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    val fpp = props.get(PropFpp).orElse(conf.getOption(FppKey))
-      .map(_.toDouble).getOrElse(0.01)
-    require(fpp > 0 && fpp < 1, s"$FppKey must be in (0, 1), got $fpp")
-    val maxD = props.get(PropMaxDistinct).orElse(conf.getOption(MaxDistinctKey))
-      .map(_.toInt).getOrElse(131072)
-    require(maxD > 0, s"$MaxDistinctKey must be positive, got $maxD")
-    (cols, fpp, maxD)
+    val maxD = props.get(PropMaxDistinct).map(_.toInt).getOrElse(131072)
+    require(maxD > 0, s"$PropMaxDistinct must be positive, got $maxD")
+    (cols, maxD)
   }
 }
 
@@ -1002,7 +934,9 @@ private[graft] object SinkDeletes {
   * the operation read — MOR commits never retire files, so the
   * retired-files-live check cannot see them, and committing anyway
   * would resurrect the newly-deleted rows in the rewritten files (or
-  * duplicate a concurrently-updated row's post-image).
+  * duplicate a concurrently-updated row's post-image). It must also
+  * abort when it would clear a live file outside `readRels` (one
+  * committed after the read): that file's rows are not in its output.
   */
 private[graft] case class SinkReadSnapshot(scanDels: Set[String],
                                            readRels: Set[String])
@@ -1068,30 +1002,62 @@ private object SinkCommit {
 
   /** The commit base: the latest manifest, read BEFORE anything is
     * renamed into the layout (so the older-layout check never sees this
-    * commit's own leaves). A table's first publish creates `_versions/`
+    * commit's own leaves). A table's first commit creates `_versions/`
     * first, for the same reason.
     */
-  def base(fs: FileSystem, path: String): Option[SinkManifest] = {
+  private def base(fs: FileSystem, path: String): Option[SinkManifest] = {
     val b = SinkVersions.readLatest(fs, path)
     if (b.isEmpty) fs.mkdirs(SinkVersions.dir(path))
     b
   }
 
-  /** Rename the staged files to their destination names and write this
-    * commit's bloom blob; returns the files' manifest entries. A crash
+  /** A query's short token: it prefixes the query's published file
+    * names and names its delete manifest and change dir.
+    */
+  def queryToken(queryId: String): String =
+    queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
+
+  /** The one published-name rule. A batch or row-level commit prefixes
+    * the staged name (`part-<partitionId>-<taskId>-<tuple>.parquet`,
+    * unique within its query) with the query token: Spark's task ids
+    * restart at 0 per APPLICATION, so two appends from different driver
+    * JVMs could otherwise mint one name. Such a name never exists yet.
+    * A streaming epoch's names are (epoch, partition, tuple)-
+    * deterministic instead, so a REPLAYED epoch (the checkpoint
+    * committed the sink write but crashed before the offset commit)
+    * publishes onto its own earlier files rather than duplicating
+    * them — a replay recomputes the same rows into the same partition
+    * layout from the same checkpointed offsets.
+    */
+  def publishedName(queryId: String, epoch: Option[Long])(f: StagedFile): String =
+    epoch match {
+      case None => s"part-${queryToken(queryId)}-" +
+        new Path(f.stagedPath).getName.stripPrefix("part-")
+      case Some(e) =>
+        s"part-e$e-p${f.partitionId}-${SinkLayout.valueTag(f.partValues)}.parquet"
+    }
+
+  /** Where a query's tasks (or one streaming epoch's) stage files. */
+  def stagingDir(path: String, queryId: String, epoch: Option[Long]): Path =
+    new Path(path, s"_staging/$queryId" + epoch.map(e => s"/epoch-$e").getOrElse(""))
+
+  /** Rename the staged files to their published names (one `mkdirs` per
+    * leaf) and write this commit's bloom blob; returns the files'
+    * manifest entries. Only a streaming epoch (`replay`) can find its
+    * target already there, so only it deletes before renaming. A crash
     * after this leaves renamed-but-unreferenced files — invisible to
     * every reader, reclaimed by vacuum.
     */
-  def stage(fs: FileSystem, path: String, partCols: Seq[String],
-            files: Seq[StagedFile],
-            destName: StagedFile => String): Seq[SinkFileEntry] = {
-    val rels = files.map(f =>
-      f -> s"${SinkLayout.leafRel(partCols, f.partValues)}/${destName(f)}")
+  private def stage(fs: FileSystem, path: String, partCols: Seq[String],
+                    files: Seq[StagedFile], name: StagedFile => String,
+                    replay: Boolean): Seq[SinkFileEntry] = {
+    val leaves = files.map(f => f -> SinkLayout.leafRel(partCols, f.partValues))
+    leaves.map(_._2).distinct.foreach(leaf => fs.mkdirs(new Path(path, leaf)))
+    val rels = leaves.map { case (f, leaf) => f -> s"$leaf/${name(f)}" }
     rels.foreach { case (f, rel) =>
       val src = new Path(f.stagedPath)
       val target = new Path(path, rel)
-      fs.mkdirs(target.getParent)
-      fs.delete(target, false) // streaming replay: same target name
+      if (replay) fs.delete(target, false)
       if (!fs.rename(src, target))
         throw new java.io.IOException(s"publish rename failed for $src")
     }
@@ -1104,25 +1070,24 @@ private object SinkCommit {
     }
   }
 
-  /** The CAS loop every commit runs: compute the next snapshot from the
-    * base, try to claim the next version number, and on a lost race
-    * recompute from the winner's snapshot (so neither publisher's files
-    * are lost). A table that does not keep history then retires what
-    * the committed snapshot no longer references. Returns the version.
+  /** The CAS loop: compute the next snapshot from the base, try to
+    * claim the next version number, and on a lost race recompute from
+    * the winner's snapshot (so neither committer's files are lost). A
+    * table that does not keep history then retires what the committed
+    * snapshot no longer references.
     */
   @annotation.tailrec
-  private def commit(fs: FileSystem, path: String, versioned: Boolean,
-                     b: Option[SinkManifest], attempt: Int = 1)
-                    (next: Option[SinkManifest] => SinkManifest): Long = {
+  private def cas(fs: FileSystem, path: String, versioned: Boolean,
+                  b: Option[SinkManifest], attempt: Int = 1)
+                 (next: Option[SinkManifest] => SinkManifest): Unit = {
     val keep = versioned || b.exists(_.keepHistory)
     val m = next(b).copy(version = b.map(_.version).getOrElse(0L) + 1,
       keepHistory = keep)
     if (SinkVersions.tryWrite(fs, path, m)) {
       if (!keep) retire(fs, path, m, b)
-      m.version
     } else if (attempt >= 100) throw new java.io.IOException(
       s"version manifest commit lost the CAS race 100 times: $path")
-    else commit(fs, path, versioned, SinkVersions.readLatest(fs, path),
+    else cas(fs, path, versioned, SinkVersions.readLatest(fs, path),
       attempt + 1)(next)
   }
 
@@ -1156,245 +1121,296 @@ private object SinkCommit {
     }
   }
 
-  /** The shared driver-side publish: move exactly the commit-message
-    * staged files to their destination names, then commit the next
-    * snapshot = the base minus whatever the mode clears plus this
-    * publish, keyed by relative path (a streaming crash-replay that
-    * re-published the same deterministic names replaces, not
-    * duplicates). Manifest LAST: a crash before it leaves the data
-    * renamed but unreferenced — the table still reads its previous
-    * version. Batch prefixes the staged (taskId-unique) name with a
-    * query-unique token (task ids restart per application — without it,
-    * appends from two driver JVMs could collide and the
-    * delete-before-rename would clobber the first's file); streaming
-    * passes an (epoch, partition)-deterministic name so an epoch REPLAY
-    * overwrites its own files instead of duplicating them.
+  /** The one driver-side commit of every sink write:
+    *
+    *   1. read the base snapshot;
+    *   2. rename exactly the staged `files` to their published names;
+    *   3. write the merge-on-read `deletes` (relative path, position) as
+    *      a position-delete manifest, and `changes` — a row-grain
+    *      change dir computed from the published files; both stay
+    *      unreferenced until the CAS;
+    *   4. CAS the next snapshot = base − what `clear` clears + the
+    *      published files, after the conflict checks, recomputing from
+    *      the winner's snapshot on a lost race;
+    *   5. on a table that keeps no history, retire what that snapshot
+    *      no longer references;
+    *   6. sweep the query's (or the streaming `epoch`'s) staging dir.
+    *
+    * Manifest LAST: a crash before the CAS leaves the data renamed but
+    * unreferenced — the table still reads its previous version. A
+    * row-level commit that changes nothing commits nothing.
+    * `readSnapshot` is what a derived commit's content was computed
+    * from (a row-level op's scan, compaction's read): the commit
+    * aborts when it would clear a live file outside that read, or when
+    * a position-delete manifest landed since on a file it read.
     */
-  def publish(fs: FileSystem, path: String, partCols: Seq[String],
-              mode: SinkMode, files: Seq[StagedFile],
-              destName: StagedFile => String,
-              versioned: Boolean = false): Unit = {
-    // which partition TUPLES must be cleared, as a predicate (an
-    // OverwriteEq over a strict subset of the columns matches many
-    // leaves; Dynamic matches exactly the tuples being published)
-    val dynamicTuples: Set[Seq[String]] =
-      if (mode == Dynamic) files.map(_.partValues).toSet else Set.empty
-    val clearMatch: Seq[String] => Boolean = mode match {
-      case Append => _ => false
-      case Truncate => _ => true
-      case OverwriteEq(eqs) => values =>
-        eqs.forall { case (c, want) =>
-          values(partCols.indexOf(c)) == want }
-      case Dynamic => values => dynamicTuples(values)
+  def commit(fs: FileSystem, path: String, partCols: Seq[String],
+             versioned: Boolean, queryId: String, clear: SinkMode,
+             files: Seq[StagedFile],
+             deletes: Seq[(String, Long)] = Seq.empty,
+             readSnapshot: Option[SinkReadSnapshot] = None,
+             changes: Seq[SinkFileEntry] => Option[String] = _ => None,
+             epoch: Option[Long] = None): Unit = {
+    val noop = clear == Replace(Set.empty) && files.isEmpty && deletes.isEmpty
+    if (!noop) {
+      val b0 = base(fs, path)
+      val fresh = stage(fs, path, partCols, files,
+        publishedName(queryId, epoch), replay = epoch.nonEmpty)
+      val freshRels = fresh.map(_.rel).toSet
+      val delManifest = Option.when(deletes.nonEmpty) {
+        val name = s"del-${queryToken(queryId)}-${java.util.UUID.randomUUID()}.tsv"
+        SinkDeletes.write(fs, path, name, deletes)
+        name
+      }
+      val changesDir = changes(fresh)
+      val clears: SinkFileEntry => Boolean = clear match {
+        case Append => _ => false
+        case Truncate => _ => true
+        case OverwriteEq(eqs) => e =>
+          eqs.forall { case (c, want) => e.values(partCols.indexOf(c)) == want }
+        case Dynamic =>
+          val tuples = files.map(_.partValues).toSet
+          e => tuples(e.values)
+        case Replace(rels) => e => rels(e.rel)
+      }
+      val mustBeLive = (clear match {
+        case Replace(rels) => rels
+        case _ => Set.empty[String]
+      }) ++ deletes.map(_._1)
+      cas(fs, path, versioned, b0) { b =>
+        val prev = b.toSeq.flatMap(_.entries)
+        // WRITE-WRITE CONFLICT CHECK (the serializable guard Delta and
+        // Iceberg apply): every file a rewrite replaces, and every file
+        // a delete manifest positions into, must still be live — a
+        // concurrent commit that already replaced one means the kept
+        // rows (or the positions) were computed from stale data;
+        // committing anyway would duplicate the rows both rewrites
+        // carried forward and drop the winner's edits.
+        val live = prev.map(_.rel).toSet
+        val gone = mustBeLive.filterNot(live)
+        if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
+          s"row-level rewrite of $path conflicts with a concurrent commit: " +
+            s"${gone.take(3).mkString(", ")} no longer in the latest snapshot" +
+            " — retry the operation against current data")
+        // position-delete manifests CARRY FORWARD (their rows stay
+        // deleted); a truncate clears them with everything else
+        val carried = if (clear == Truncate) Seq.empty else b.toSeq.flatMap(_.dels)
+        readSnapshot.foreach { snap =>
+          // a derived commit must not clear a file it never read (one
+          // appended after its read): that file's rows are not in its
+          // output, and clearing it would drop them
+          val unread = prev.filter(clears).map(_.rel).filterNot(snap.readRels)
+          if (unread.nonEmpty) throw new java.util.ConcurrentModificationException(
+            s"commit to $path would clear ${unread.take(3).mkString(", ")}, " +
+              "committed after this operation read the table — its output " +
+              "lacks those rows; retry against current data")
+          // the merge-on-read half: a concurrent MOR commit retires no
+          // files, so `gone` cannot see it
+          checkDeleteConflicts(fs, path, carried, snap)
+        }
+        val next = (prev.filterNot(e => clears(e) || freshRels(e.rel)) ++ fresh)
+          .sortBy(_.rel)
+        // manifests whose every target file left with this commit (a
+        // COW rewrite FOLDS their deletes into the fresh files) GC out
+        SinkManifest(0L, next,
+          liveDeleteManifests(fs, path, carried, next.map(_.rel).toSet) ++
+            delManifest, changesDir)
+      }
     }
-    val b0 = base(fs, path)
-    val fresh = stage(fs, path, partCols, files, destName)
-    val freshRels = fresh.map(_.rel).toSet
-    commit(fs, path, versioned, b0) { b =>
-      val kept = b.toSeq.flatMap(_.entries)
-        .filterNot(e => clearMatch(e.values) || freshRels(e.rel))
-      val next = (kept ++ fresh).sortBy(_.rel)
-      // position-delete manifests CARRY FORWARD across ordinary
-      // publishes (their rows stay deleted); a truncate clears them
-      // with everything else; manifests whose every target file
-      // retired with this publish GC out of the headers
-      val carried = if (mode == Truncate) Seq.empty else b.toSeq.flatMap(_.dels)
-      // a derived commit (compaction) arms the thread-local guard:
-      // abort when a merge-on-read delete landed on files it read
-      // after it read them — its output lacks those deletes
-      SinkGuard.current.get().foreach(snap =>
-        checkDeleteConflicts(fs, path, carried, snap))
-      SinkManifest(0L, next,
-        liveDeleteManifests(fs, path, carried, next.map(_.rel).toSet))
-    }
+    sweep(fs, path, stagingDir(path, queryId, epoch))
   }
 
-  /** The commit of a merge-on-read row-level op: publish the inserted
-    * files (see [[stage]]) and link the position-delete manifest
-    * through the CAS of [[replaceCommit]], retiring nothing. Returns
-    * the committed version (None for the no-op commit).
+  /** The one staging cleanup, for commit and abort alike: delete `dir`,
+    * then each ancestor up to `_staging` while empty — keeps `_staging`
+    * from accumulating empty query/epoch skeletons.
     */
-  def replacePublish(fs: FileSystem, path: String, partCols: Seq[String],
-                     files: Seq[StagedFile],
-                     destName: StagedFile => String, versioned: Boolean,
-                     newDeleteManifest: Option[(String, Seq[String])],
-                     readSnapshot: Option[SinkReadSnapshot])
-      : Option[Long] = {
-    if (files.isEmpty && newDeleteManifest.isEmpty) return None
-    val b0 = base(fs, path)
-    val fresh = stage(fs, path, partCols, files, destName)
-    Some(replaceCommit(fs, path, versioned, fresh, Seq.empty,
-      newDeleteManifest, readSnapshot = readSnapshot, base0 = b0))
-  }
-
-  /** The CAS commit of a row-level op: next = previous minus
-    * `retiredSeq` plus `fresh`, always atomic (a concurrent publish
-    * keeps its files because the CAS recomputes from the winner's
-    * state). `newDeleteManifest` is a merge-on-read commit's
-    * position-delete manifest (its name under `_deletes/`, plus the rel
-    * paths of the data files it touches — those join the conflict
-    * check: a concurrent rewrite of one means our positions are stale).
-    * `changesDir` links a pre-written row-grain change directory into
-    * the committed snapshot.
-    */
-  def replaceCommit(fs: FileSystem, path: String, versioned: Boolean,
-                    fresh: Seq[SinkFileEntry], retiredSeq: Seq[String],
-                    newDeleteManifest: Option[(String, Seq[String])] = None,
-                    changesDir: Option[String] = None,
-                    readSnapshot: Option[SinkReadSnapshot] = None,
-                    base0: Option[SinkManifest] = None): Long = {
-    val retired = retiredSeq.toSet
-    val freshRels = fresh.map(_.rel).toSet
-    commit(fs, path, versioned,
-      base0.orElse(SinkVersions.readLatest(fs, path))) { b =>
-      val prev = b.toSeq.flatMap(_.entries)
-      // WRITE-WRITE CONFLICT CHECK (the serializable guard Delta and
-      // Iceberg apply): every file this rewrite read must still be
-      // live in the snapshot we're replacing — a concurrent commit
-      // that already replaced one means our kept-rows were computed
-      // from stale data; committing anyway would duplicate the rows
-      // both rewrites carried forward and drop the winner's edits.
-      val prevSet = prev.map(_.rel).toSet
-      val mustBeLive = retired ++ newDeleteManifest.toSeq.flatMap(_._2)
-      val gone = mustBeLive.filterNot(prevSet)
-      if (gone.nonEmpty) throw new java.util.ConcurrentModificationException(
-        s"row-level rewrite of $path conflicts with a concurrent commit: " +
-          s"${gone.take(3).mkString(", ")} no longer in the latest snapshot" +
-          " — retry the operation against current data")
-      val baseDels = b.toSeq.flatMap(_.dels)
-      // the MOR half of the conflict check: a concurrent merge-on-read
-      // commit retires no files, so `gone` cannot see it — compare the
-      // base's delete manifests against the operation's READ snapshot
-      readSnapshot.foreach(snap =>
-        checkDeleteConflicts(fs, path, baseDels, snap))
-      val next = (prev.filterNot(e => retired(e.rel) || freshRels(e.rel)) ++
-        fresh).sortBy(_.rel)
-      // GC carried manifests whose files all retired with this commit
-      // (a COW rewrite FOLDS their deletes into the fresh files)
-      val dels = liveDeleteManifests(fs, path, baseDels,
-        next.map(_.rel).toSet) ++ newDeleteManifest.map(_._1).toSeq
-      SinkManifest(0L, next, dels, changesDir)
-    }
-  }
-
-  /** Delete `dir`, then remove each ancestor up to (and including)
-    * `stopAt` while empty — keeps `_staging` from accumulating empty
-    * query/epoch skeletons over a long-running stream.
-    */
-  def sweep(fs: FileSystem, dir: Path, stopAt: Path): Unit = {
+  def sweep(fs: FileSystem, path: String, dir: Path): Unit = {
     fs.delete(dir, true)
-    var p = dir.getParent
-    while (p != null && fs.exists(p) && fs.listStatus(p).isEmpty) {
-      fs.delete(p, true)
-      p = if (p == stopAt) null else p.getParent
-    }
+    SinkLayout.pruneEmpty(fs, new Path(path), dir.getParent)
   }
 }
 
-private class PartitionedSinkBatchWrite(path: String, partCols: Seq[String],
-                                        schema: StructType, queryId: String,
-                                        mode: SinkMode,
-                                        versioned: Boolean = false,
-                                        props: Map[String, String] = Map.empty)
-    extends BatchWrite {
+/** The one Write of every sink write — append, overwrite, streaming,
+  * copy-on-write and merge-on-read alike — and its own batch and
+  * streaming write. The distribution it requires follows from what it
+  * can observe: ORDERED on (partition tuple, sort columns) when the
+  * table has a `graft.sortOrder` (files in a partition then carve the
+  * sort domain into DISJOINT ranges, so min/max skips files on a
+  * non-partition column and parquet row groups carry tight bounds);
+  * CLUSTERED on the partition tuple for a row-level write (a rewrite
+  * then leaves the layout no more fragmented than it found it, instead
+  * of one file per (task, tuple)); otherwise — and for a delete-only
+  * merge-on-read write, which projects no row columns — UNSPECIFIED:
+  * appends take no extra shuffle, and `CALL compact` repairs the
+  * fragmentation. Never strictly required: on a single-partition input
+  * Spark may skip the exchange.
+  *
+  * Streaming is per-epoch exactly-once on top of the same commit. Two
+  * mechanisms compose: deterministic published names (see
+  * [[SinkCommit.publishedName]]) make a replayed epoch re-publish onto
+  * its own files, and a COMMIT MARKER `_commits/epoch-<e>`, written
+  * after the commit, makes a replay that finds it skip the commit
+  * entirely (cheap, and it keeps a complete-mode replay from
+  * re-clearing newer data). Modes map to output modes: Append =
+  * append, Truncate = complete (each epoch replaces the whole layout),
+  * Dynamic = per-partition replace (the update-mode rendition for a
+  * partition-grained sink).
+  */
+private class SinkWrite(path: String, partCols: Seq[String],
+                        info: LogicalWriteInfo, mode: SinkMode,
+                        versioned: Boolean, props: Map[String, String],
+                        op: Option[SinkRowLevelOperation])
+    extends DeltaWrite with RequiresDistributionAndOrdering
+    with DeltaBatchWrite
+    with org.apache.spark.sql.connector.write.streaming.StreamingWrite {
+  import org.apache.spark.sql.connector.{expressions => x}
+  import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
+  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
 
-  private def stagingDir = new Path(path, s"_staging/$queryId")
+  private val schema = info.schema()
+  private val queryId = info.queryId()
+  private val sortCols =
+    if (schema.isEmpty) Seq.empty else SinkFormat.sortOrder(props, partCols, schema)
 
-  override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
-    new PartitionedSinkWriterFactory(path, partCols, schema, queryId,
-      PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
-      SinkParquetWrite.rowGroupBytesFromSession())
+  override def requiredDistribution(): Distribution =
+    if (sortCols.nonEmpty) Distributions.ordered(requiredOrdering())
+    else if (op.nonEmpty && schema.nonEmpty) Distributions.clustered(
+      partCols.map(c => x.Expressions.identity(c): x.Expression).toArray)
+    else Distributions.unspecified()
+  override def distributionStrictlyRequired(): Boolean = false
+  override def requiredOrdering(): Array[x.SortOrder] =
+    if (sortCols.isEmpty) Array.empty
+    else (partCols ++ sortCols).map(c => x.Expressions.sort(
+      x.Expressions.column(c), x.SortDirection.ASCENDING): x.SortOrder).toArray
+
+  override def toBatch: DeltaBatchWrite = this
+  override def toStreaming
+      : org.apache.spark.sql.connector.write.streaming.StreamingWrite = this
+
+  // a merge-on-read write's row identity: the (`_file`, `_pos`) ordinals
+  // (only a row-level write has a row-id schema to ask for)
+  private val rowId = op.flatMap { _ =>
+    import scala.jdk.OptionConverters._
+    info.rowIdSchema().toScala.map(_.fieldNames)
+      .filter(n => n.contains(SinkMeta.FileCol) && n.contains(SinkMeta.PosCol))
+      .map(n => (n.indexOf(SinkMeta.FileCol), n.indexOf(SinkMeta.PosCol)))
+  }
+
+  private def factory() = new PartitionedSinkWriterFactory(path, partCols,
+    schema, queryId, props, rowId)
+  override def createBatchWriterFactory(info: PhysicalWriteInfo)
+      : DeltaWriterFactory = factory()
+  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
+      : StreamingDataWriterFactory = factory()
 
   // at most one committed attempt per task partition — the scheduler
-  // half of exactly-once; the manifest publish below is the other half
+  // half of exactly-once; the commit's manifest is the other half
   override def useCommitCoordinator(): Boolean = true
 
+  private def staged(messages: Array[WriterCommitMessage]) = {
+    val ms = messages.toSeq.collect { case m: SinkCommitMessage => m }
+    (ms.flatMap(_.files), ms.flatMap(_.deletes))
+  }
+
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
+    val (files, deletes) = staged(messages)
+    op match {
+      case Some(o) => o.commit(queryId, schema, files, deletes)
+      // a derived commit (compaction) arms the thread-local guard: the
+      // V2 write exec commits driver-side on the calling thread
+      case None => SinkCommit.commit(SinkCommit.fsFor(path), path, partCols,
+        versioned, queryId, mode, files, readSnapshot = SinkGuard.current.get())
+    }
+  }
+
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    SinkCommit.sweep(SinkCommit.fsFor(path), path,
+      SinkCommit.stagingDir(path, queryId, None))
+
+  private def marker(epochId: Long) = new Path(path, s"_commits/epoch-$epochId")
+
+  override def commit(epochId: Long,
+                      messages: Array[WriterCommitMessage]): Unit = {
     val fs = SinkCommit.fsFor(path)
-    val files = messages.collect { case m: SinkCommitMessage => m.files }.flatten
-    // publish exactly the manifest-listed files; a zombie attempt's
-    // orphan staging file is NOT in any commit message and is swept
-    // with the staging dir below.
-    // The published name carries a QUERY-UNIQUE token: the staged name
-    // alone is part-<partitionId>-<taskId>-<tuple>.parquet, and Spark's
-    // task ids restart at 0 per APPLICATION — two appends from
-    // different driver JVMs can mint the same (partitionId, taskId)
-    // pair, and publish's delete-before-rename (needed for streaming
-    // epoch replay) would silently clobber the first app's file. The
-    // queryId prefix makes batch names globally unique, so an append
-    // can never overwrite another append's data.
-    val qTok = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
-    SinkCommit.publish(fs, path, partCols, mode, files.toSeq,
-      f => s"part-$qTok-" +
-        new Path(f.stagedPath).getName.stripPrefix("part-"),
-      versioned = versioned)
-    sweepStaging(fs)
+    // a replay of an epoch whose commit landed only sweeps its staging
+    if (fs.exists(marker(epochId))) abort(epochId, messages)
+    else {
+      SinkCommit.commit(fs, path, partCols, versioned, queryId, mode,
+        staged(messages)._1, epoch = Some(epochId))
+      fs.create(marker(epochId), true).close()
+    }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    // all-or-nothing: staged data vanishes, the published layout is
-    // exactly what it was before the job
-    sweepStaging(SinkCommit.fsFor(path))
-  }
-
-  /** Remove this query's staging dir, and the `_staging` parent when
-    * this was its last query (a zero-row job never creates either —
-    * both probes are existence-guarded).
-    */
-  private def sweepStaging(fs: FileSystem): Unit = {
-    fs.delete(stagingDir, true)
-    val stagingParent = stagingDir.getParent
-    if (fs.exists(stagingParent) && fs.listStatus(stagingParent).isEmpty)
-      fs.delete(stagingParent, true)
-  }
+  override def abort(epochId: Long,
+                     messages: Array[WriterCommitMessage]): Unit =
+    SinkCommit.sweep(SinkCommit.fsFor(path), path,
+      SinkCommit.stagingDir(path, queryId, Some(epochId)))
 }
 
 private object PartitionedSinkWriterFactory {
   /** The SESSION's Hadoop configuration, serialized for the executors:
     * a task-side `new Configuration()` would drop per-session FS
     * settings (s3a credentials, defaultFS overrides) that the
-    * driver-side publish sees — inconsistent on any non-local FS.
-    * Called on the driver at factory-creation time.
+    * driver-side commit sees. Called on the driver.
     */
   def sessionConf(): org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
 }
 
+/** The one writer factory, for batch and streaming tasks alike: they
+  * differ only in their staging sub-directory. The session's Hadoop
+  * configuration, the table's bloom settings and field ids and the
+  * row-group size resolve once, on the driver, and ship with it.
+  * `rowId` = the (`_file`, `_pos`) ordinals of a merge-on-read write's
+  * row identity.
+  */
 private class PartitionedSinkWriterFactory(
     path: String, partCols: Seq[String], schema: StructType, queryId: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    bloom: (Seq[String], Double, Int), fieldIds: Map[String, Int],
-    rowGroupBytes: Long)
-    extends DataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
-    new PartitionedSinkWriter(path, partCols, schema, queryId, partitionId,
-      taskId, conf, bloom, fieldIds, rowGroupBytes)
+    props: Map[String, String], rowId: Option[(Int, Int)])
+    extends DeltaWriterFactory
+    with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
+  private val conf = PartitionedSinkWriterFactory.sessionConf()
+  private val bloom = SinkBloomConf.fromProps(props)
+  private val fieldIds = SinkFormat.fieldIds(props)
+  private val rowGroupBytes = SinkParquetWrite.rowGroupBytesFromSession()
+
+  private def writer(partitionId: Int, taskId: Long, epoch: Option[Long]) =
+    new PartitionedSinkWriter(path, partCols, schema,
+      SinkCommit.stagingDir(path, queryId, epoch), partitionId, taskId, conf,
+      bloom, fieldIds, rowGroupBytes, rowId)
+
+  override def createWriter(partitionId: Int, taskId: Long)
+      : DeltaWriter[InternalRow] = writer(partitionId, taskId, None)
+  override def createWriter(partitionId: Int, taskId: Long,
+                            epochId: Long): DataWriter[InternalRow] =
+    writer(partitionId, taskId, Some(epochId))
 }
 
 /** Task-side writer: buffers one open staged file per partition TUPLE
   * seen (the incoming rows need not be clustered by the partition
-  * columns), stages under `_staging/<stagingSub>/` (query dir for batch,
-  * query/epoch dir for streaming), and reports its files in the commit
-  * message. abort() deletes everything it staged.
+  * columns), stages under `staging` (the query's dir for batch, its
+  * epoch's for streaming), and reports its files — and a merge-on-read
+  * write's deleted positions — in the commit message. abort() deletes
+  * everything it staged.
   */
 private class PartitionedSinkWriter(path: String, partCols: Seq[String],
-                                    schema: StructType, stagingSub: String,
+                                    schema: StructType, staging: Path,
                                     partitionId: Int, taskId: Long,
                                     conf: org.apache.spark.util.SerializableConfiguration,
-                                    bloom: (Seq[String], Double, Int),
+                                    bloom: (Seq[String], Int),
                                     fieldIds: Map[String, Int],
-                                    rowGroupBytes: Long)
-    extends DataWriter[InternalRow] {
+                                    rowGroupBytes: Long,
+                                    rowId: Option[(Int, Int)])
+    extends DeltaWriter[InternalRow] {
 
   private val fs = FileSystem.get(new java.net.URI(path), conf.value)
-  private val partIdxs: Array[Int] = partCols.map(schema.fieldIndex).toArray
-  private val partIdxSet = partIdxs.toSet
+  // lazy: a delete-only merge-on-read write has no row columns
+  private lazy val partIdxs: Array[Int] = partCols.map(schema.fieldIndex).toArray
   private val dataFields = schema.fields.zipWithIndex
-    .filter { case (_, i) => !partIdxSet.contains(i) }
+    .filterNot { case (f, _) => partCols.contains(f.name) }
 
-  private val (bloomCols, bloomFpp, bloomMaxDistinct) = bloom
+  private val (bloomCols, bloomMaxDistinct) = bloom
   /** (column name, schema ordinal, string?) per bloom-enabled column
     * present in the data fields with an eligible type.
     */
@@ -1433,7 +1449,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
       if (over || seen.isEmpty) None
       else {
         val bf = org.apache.spark.util.sketch.BloomFilter
-          .create(seen.size.toLong, bloomFpp)
+          .create(seen.size.toLong, SinkBloomConf.Fpp)
         seen.forEach {
           case l: java.lang.Long => bf.putLong(l)
           case s: String => bf.putString(s)
@@ -1549,6 +1565,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
       val blooms: Array[BloomAcc])
 
   private val open = scala.collection.mutable.Map[Seq[String], OpenOut]()
+  private val deletes = scala.collection.mutable.ArrayBuffer[(String, Long)]()
 
   /** Partition-value rendering: the raw string the manifest carries
     * and the directory name escapes (partition columns are non-null
@@ -1567,16 +1584,15 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
       s"PartitionedSink partition columns must be atomic, got $other")
   }
 
-  override def write(row: InternalRow): Unit = {
+  override def insert(row: InternalRow): Unit = {
     val pvs: Seq[String] = partIdxs.toSeq.map { i =>
       require(!row.isNullAt(i),
         s"NULL partition value in ${schema.fields(i).name}")
       rawStr(row, i, schema.fields(i).dataType)
     }
     val o = open.getOrElseUpdate(pvs, {
-      val f = new Path(path,
-        s"_staging/$stagingSub/part-$partitionId-$taskId-" +
-          s"${SinkLayout.valueTag(pvs)}.parquet")
+      val f = new Path(staging,
+        s"part-$partitionId-$taskId-${SinkLayout.valueTag(pvs)}.parquet")
       fs.mkdirs(f.getParent)
       new OpenOut(SinkParquetWrite.open(conf.value, f, dataFields.toSeq,
         fieldIds, rowGroupBytes), f, 0L, newStats(),
@@ -1614,8 +1630,25 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
         partitionId, colStats, colBlooms)
     }.toSeq
     open.clear()
-    SinkCommitMessage(files)
+    SinkCommitMessage(files, deletes.toSeq)
   }
+
+  /** A merge-on-read delete: the row's (`_file`, `_pos`) identity, its
+    * absolute path made table-relative (the leaf layout is exactly
+    * `partCols.length` directories plus the file name).
+    */
+  override def delete(meta: InternalRow, id: InternalRow): Unit = {
+    val (fileOrd, posOrd) = rowId.getOrElse(
+      throw new IllegalStateException("delete on a write without a row id"))
+    val rel = id.getUTF8String(fileOrd).toString.split("/").filter(_.nonEmpty)
+      .takeRight(partCols.length + 1).mkString("/")
+    deletes += ((rel, id.getLong(posOrd)))
+  }
+
+  override def update(meta: InternalRow, id: InternalRow,
+                      row: InternalRow): Unit =
+    throw new UnsupportedOperationException(
+      "updates are represented as delete+insert")
 
   override def abort(): Unit = {
     open.values.foreach { o =>
@@ -1629,79 +1662,4 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
     open.values.foreach { o =>
       try o.w.close() catch { case _: Throwable => () }
     }
-}
-
-/** Streaming half of the sink: per-epoch exactly-once on top of the
-  * same stage-then-publish protocol. Two mechanisms compose:
-  *
-  *   - DETERMINISTIC TARGET NAMES: epoch e's files publish as
-  *     `part-e<e>-p<partitionId>-<tuple>.parquet` — a REPLAYED epoch (the
-  *     checkpoint committed the sink write but crashed before the
-  *     offset commit, so Spark re-runs the batch) overwrites its own
-  *     files instead of appending duplicates. This holds because a
-  *     replay recomputes the same rows into the same partition layout
-  *     from the same checkpointed offsets.
-  *   - COMMIT MARKERS: `_commits/epoch-<e>` is written after publish;
-  *     a replay that finds its marker skips the publish entirely
-  *     (cheap, and also protects Truncate/complete-mode replays from
-  *     re-clearing newer data if epochs could ever interleave).
-  *
-  * Modes map to streaming output modes: Append = append,
-  * Truncate = complete (each epoch replaces the whole layout),
-  * Dynamic = per-partition replace (the update-mode rendition for a
-  * partition-grained sink).
-  */
-private class PartitionedSinkStreamingWrite(path: String, partCols: Seq[String],
-                                            schema: StructType, queryId: String,
-                                            mode: SinkMode,
-                                            versioned: Boolean = false,
-                                            props: Map[String, String] =
-                                              Map.empty)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
-  import org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory
-
-  private def marker(epochId: Long) = new Path(path, s"_commits/epoch-$epochId")
-
-  override def createStreamingWriterFactory(info: PhysicalWriteInfo)
-      : StreamingDataWriterFactory =
-    new PartitionedSinkStreamingWriterFactory(path, partCols, schema, queryId,
-      PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
-      SinkParquetWrite.rowGroupBytesFromSession())
-
-  override def commit(epochId: Long,
-                      messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SinkCommit.fsFor(path)
-    val files = messages.collect { case m: SinkCommitMessage => m.files }.flatten
-    if (!fs.exists(marker(epochId))) {
-      SinkCommit.publish(fs, path, partCols, mode, files.toSeq,
-        f => s"part-e$epochId-p${f.partitionId}-" +
-          s"${SinkLayout.valueTag(f.partValues)}.parquet",
-        versioned = versioned)
-      fs.mkdirs(marker(epochId).getParent)
-      fs.create(marker(epochId), true).close()
-    }
-    SinkCommit.sweep(fs, new Path(path, s"_staging/$queryId/epoch-$epochId"),
-      new Path(path, "_staging"))
-  }
-
-  override def abort(epochId: Long,
-                     messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SinkCommit.fsFor(path)
-    SinkCommit.sweep(fs, new Path(path, s"_staging/$queryId/epoch-$epochId"),
-      new Path(path, "_staging"))
-  }
-}
-
-private class PartitionedSinkStreamingWriterFactory(
-    path: String, partCols: Seq[String], schema: StructType, queryId: String,
-    conf: org.apache.spark.util.SerializableConfiguration,
-    bloom: (Seq[String], Double, Int), fieldIds: Map[String, Int],
-    rowGroupBytes: Long)
-    extends org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long,
-                            epochId: Long): DataWriter[InternalRow] =
-    new PartitionedSinkWriter(path, partCols, schema,
-      s"$queryId/epoch-$epochId", partitionId, taskId, conf, bloom,
-      fieldIds, rowGroupBytes)
 }

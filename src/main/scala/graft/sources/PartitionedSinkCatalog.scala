@@ -223,8 +223,8 @@ class PartitionedSinkCatalog extends TableCatalog
     // TABLE PROPERTIES: the engine's own (`graft.`-namespaced) keys
     // persist in the sidecar — `TBLPROPERTIES ('graft.bloomColumns' =
     // 'k')` survives restarts and applies to every writer of the
-    // table, unlike the session conf. Spark's bookkeeping properties
-    // (provider, owner, location...) are not ours to store.
+    // table. Spark's bookkeeping properties (provider, owner,
+    // location...) are not ours to store.
     val declared = SinkFormat.userProps(s"CREATE TABLE $ident",
       Option(properties).map(_.asScala.toMap).getOrElse(Map.empty)
         .filter { case (k, _) => k.startsWith("graft.") })
@@ -282,9 +282,8 @@ class PartitionedSinkCatalog extends TableCatalog
     var nextId = props.get(SinkFormat.PropNextFieldId).map(_.toInt)
       .getOrElse(ids.values.maxOption.getOrElse(0) + 1)
     // the field-id registry is engine-managed state, not a user knob:
-    // hand-editing it would silently transpose columns (the retired
-    // format key is not settable either)
-    val reserved = Set(SinkFormat.PropFormat, SinkFormat.PropFieldIds,
+    // hand-editing it would silently transpose columns
+    val settable = SinkFormat.Options -- Set(SinkFormat.PropFieldIds,
       SinkFormat.PropNextFieldId)
     def oneLevel(fieldNames: Array[String]): String = {
       require(fieldNames.length == 1,
@@ -352,14 +351,14 @@ class PartitionedSinkCatalog extends TableCatalog
       // engine-namespaced properties are settable/unsettable DDL:
       // `ALTER TABLE t SET TBLPROPERTIES ('graft.bloomColumns' = 'k')`
       case p: TableChange.SetProperty =>
-        require(p.property.startsWith("graft.") && !reserved(p.property),
+        require(settable(p.property),
           s"table property ${p.property} is not user-settable " +
-            "(graft.* keys outside the engine-managed format registry are)")
+            s"(options: ${settable.toSeq.sorted.mkString(", ")})")
         props = props + (p.property -> p.value)
       case p: TableChange.RemoveProperty =>
-        require(p.property.startsWith("graft.") && !reserved(p.property),
+        require(settable(p.property),
           s"table property ${p.property} is not user-removable " +
-            "(graft.* keys outside the engine-managed format registry are)")
+            s"(options: ${settable.toSeq.sorted.mkString(", ")})")
         props = props - p.property
       case other => throw new UnsupportedOperationException(
         s"PartitionedSinkCatalog tables support ADD COLUMNS " +

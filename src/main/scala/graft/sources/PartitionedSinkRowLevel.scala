@@ -1,7 +1,6 @@
 package graft.sources
 
-import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
 import org.apache.spark.sql.connector.expressions.filter.Predicate
@@ -127,35 +126,37 @@ private[sources] class SinkRowLevelOperation(
     new SinkCowScanBuilder(path, partCols, fullSchema, this,
       SinkFormat.fieldIds(props))
 
-  override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
-    new WriteBuilder {
-      override def build(): Write = new Write
-          with RequiresDistributionAndOrdering {
-        // CLUSTER the rewrite on the partition tuple: without this the
-        // kept rows arrive in whatever task layout the rewrite query
-        // had, and each task opens a file per tuple it touches — a
-        // DELETE over K files in T tasks would fragment the rewritten
-        // partitions into up to K·T files. Clustering lands each tuple
-        // in few tasks (AQE sizes the exchange), so a rewrite leaves
-        // the layout no more fragmented than it found it. Not strictly
-        // required: on a single-partition rewrite Spark may skip the
-        // exchange entirely.
-        override def requiredDistribution()
-            : org.apache.spark.sql.connector.distributions.Distribution =
-          org.apache.spark.sql.connector.distributions.Distributions
-            .clustered(partCols.map(c =>
-              Expressions.identity(c)
-                : org.apache.spark.sql.connector.expressions.Expression)
-              .toArray)
-        override def distributionStrictlyRequired(): Boolean = false
-        override def requiredOrdering()
-            : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-          Array.empty
-        override def toBatch: BatchWrite =
-          new SinkReplaceBatchWrite(path, partCols, info.schema(),
-            info.queryId(), versioned, SinkRowLevelOperation.this, props)
-      }
-    }
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder =
+    new PartitionedSinkWriteBuilder(path, partCols, info, versioned, props,
+      Some(this))
+
+  /** The scan's read snapshot over `readRels` (None until planning ran). */
+  protected def readSnapshot(readRels: Set[String]): Option[SinkReadSnapshot] =
+    scanDeleteManifests.map(SinkReadSnapshot(_, readRels))
+
+  /** The copy-on-write commit: clear exactly the planned groups (each
+    * must still be live), guarded by the scan's read snapshot. With
+    * `graft.rowChanges`, the one-job net diff between the replaced
+    * groups' rows and the published ones — exactly what the rewrite
+    * changed; carried-forward rows cancel — is written before the CAS
+    * and linked by the manifest's `#\tchanges` header, so a feed sees
+    * the commit with its change rows or not at all. Labels come from
+    * the command — see [[SinkCowChanges]] for the MERGE caveat.
+    */
+  private[sources] def commit(queryId: String, schema: StructType,
+                              files: Seq[StagedFile],
+                              deletes: Seq[(String, Long)]): Unit = {
+    val groups = plannedGroups
+    val rels = groups.map(_._1).toSet
+    SinkCommit.commit(SinkCommit.fsFor(path), path, partCols, versioned,
+      queryId, Replace(rels), files, readSnapshot = readSnapshot(rels),
+      changes = fresh =>
+        if (!SinkFormat.rowChanges(props)) None
+        else SinkCowChanges.write(path, partCols, schema, groups, fresh, cmd,
+          SinkCommit.queryToken(queryId), SinkFormat.fieldIds(props),
+          scanDeleteManifests.getOrElse(Set.empty).toSeq.sorted
+            .map(n => new Path(path, s"_deletes/$n").toString)))
+  }
 }
 
 private[sources] class SinkCowScanBuilder(
@@ -412,246 +413,30 @@ private[sources] class SinkRowLevelDeltaOperation(
     Expressions.column(SinkMeta.FileCol),
     Expressions.column(SinkMeta.PosCol))
 
-  override def newWriteBuilder(info: LogicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriteBuilder = {
-    // rowId projection ordinals, read from the declared schema rather
-    // than assumed: (file, pos)
-    val idSchema = info.rowIdSchema.orElseThrow(() =>
-      new IllegalStateException("delta write without a rowId schema"))
-    val fileOrd = idSchema.fieldIndex(SinkMeta.FileCol)
-    val posOrd = idSchema.fieldIndex(SinkMeta.PosCol)
-    // a pure DELETE projects no row schema (positions only); anything
-    // carrying inserts/updates must match the table layout exactly
+  /** A pure DELETE projects no row schema (positions only); anything
+    * carrying inserts/updates must match the table layout exactly.
+    */
+  override def newWriteBuilder(info: LogicalWriteInfo): DeltaWriteBuilder = {
     val names = info.schema().fields.map(_.name).toSeq
     val expected = fullSchema.fields.map(_.name).toSeq
     require(names.isEmpty || names == expected,
       s"row-level write schema $names must match table schema $expected")
-    new org.apache.spark.sql.connector.write.DeltaWriteBuilder {
-      override def build(): org.apache.spark.sql.connector.write.DeltaWrite =
-        if (names.isEmpty)
-          // delete-only: the incoming projection is (operation, rowId)
-          // — no partition columns to cluster on, nothing staged
-          new org.apache.spark.sql.connector.write.DeltaWrite {
-            override def toBatch
-                : org.apache.spark.sql.connector.write.DeltaBatchWrite =
-              new SinkDeltaBatchWrite(path, partCols, info.schema(),
-                info.queryId(), versioned, props, fileOrd, posOrd,
-                cmd, SinkRowLevelDeltaOperation.this)
-          }
-        else new org.apache.spark.sql.connector.write.DeltaWrite
-            with RequiresDistributionAndOrdering {
-          // cluster INSERTED rows by partition tuple, same anti-
-          // fragmentation trade as the COW rewrite
-          override def requiredDistribution()
-              : org.apache.spark.sql.connector.distributions.Distribution =
-            org.apache.spark.sql.connector.distributions.Distributions
-              .clustered(partCols.map(c =>
-                Expressions.identity(c)
-                  : org.apache.spark.sql.connector.expressions.Expression)
-                .toArray)
-          override def distributionStrictlyRequired(): Boolean = false
-          override def requiredOrdering()
-              : Array[org.apache.spark.sql.connector.expressions.SortOrder] =
-            Array.empty
-          override def toBatch
-              : org.apache.spark.sql.connector.write.DeltaBatchWrite =
-            new SinkDeltaBatchWrite(path, partCols, info.schema(),
-              info.queryId(), versioned, props, fileOrd, posOrd,
-              cmd, SinkRowLevelDeltaOperation.this)
-        }
-    }
-  }
-}
-
-/** Per-task delta writer: inserts ride the ordinary staged-file
-  * writer; deletes accumulate as (absolute file path, position) pairs
-  * in the commit message. `update` never fires —
-  * representUpdateAsDeleteAndInsert splits it upstream.
-  */
-private class SinkDeltaWriter(
-    inner: DataWriter[InternalRow], fileOrd: Int, posOrd: Int)
-    extends org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] {
-  private val deletes =
-    scala.collection.mutable.ArrayBuffer[(String, Long)]()
-
-  override def insert(row: InternalRow): Unit = inner.write(row)
-
-  override def delete(meta: InternalRow, id: InternalRow): Unit =
-    deletes += ((id.getUTF8String(fileOrd).toString, id.getLong(posOrd)))
-
-  override def update(meta: InternalRow, id: InternalRow,
-                      row: InternalRow): Unit =
-    throw new UnsupportedOperationException(
-      "updates are represented as delete+insert")
-
-  override def commit(): WriterCommitMessage =
-    SinkDeltaCommitMessage(
-      inner.commit().asInstanceOf[SinkCommitMessage],
-      deletes.toSeq)
-  override def abort(): Unit = inner.abort()
-  override def close(): Unit = inner.close()
-}
-
-private case class SinkDeltaCommitMessage(
-    inserts: SinkCommitMessage,
-    deletes: Seq[(String, Long)]) extends WriterCommitMessage
-
-private class SinkDeltaWriterFactory(
-    inner: Option[PartitionedSinkWriterFactory], fileOrd: Int, posOrd: Int)
-    extends org.apache.spark.sql.connector.write.DeltaWriterFactory {
-  override def createWriter(partitionId: Int, taskId: Long)
-      : org.apache.spark.sql.connector.write.DeltaWriter[InternalRow] = {
-    val innerWriter = inner
-      .map(_.createWriter(partitionId, taskId))
-      .getOrElse(new DataWriter[InternalRow] {
-        override def write(row: InternalRow): Unit =
-          throw new IllegalStateException(
-            "delete-only delta write received an insert row")
-        override def commit(): WriterCommitMessage =
-          SinkCommitMessage(Seq.empty)
-        override def abort(): Unit = ()
-        override def close(): Unit = ()
-      })
-    new SinkDeltaWriter(innerWriter, fileOrd, posOrd)
-  }
-}
-
-private class SinkDeltaBatchWrite(
-    path: String, partCols: Seq[String], schema: StructType,
-    queryId: String, versioned: Boolean, props: Map[String, String],
-    fileOrd: Int, posOrd: Int, cmd: RowLevelOperation.Command,
-    op: SinkRowLevelOperation)
-    extends org.apache.spark.sql.connector.write.DeltaBatchWrite {
-
-  private def stagingDir = new Path(path, s"_staging/$queryId")
-
-  override def createBatchWriterFactory(info: PhysicalWriteInfo)
-      : org.apache.spark.sql.connector.write.DeltaWriterFactory = {
-    // pure DELETE (empty schema): no insert rows can arrive — the
-    // factory stages nothing and only accumulates positions
-    val innerFactory =
-      if (schema.isEmpty) None
-      else Some(new PartitionedSinkWriterFactory(path, partCols,
-        schema, queryId, PartitionedSinkWriterFactory.sessionConf(),
-        SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
-        SinkParquetWrite.rowGroupBytesFromSession()))
-    new SinkDeltaWriterFactory(innerFactory, fileOrd, posOrd)
+    super.newWriteBuilder(info)
   }
 
-  override def useCommitCoordinator(): Boolean = true
-
-  /** Absolute data-file path → table-relative path: the leaf layout is
-    * exactly `partCols.length` directories plus the file name.
+  /** The merge-on-read commit: clears nothing and links the position-
+    * delete manifest. Conflict guard: an UPDATE/MERGE (carries inserts)
+    * derived its post-image rows from reading the deleted positions'
+    * files — a delete manifest that landed since the scan and touches
+    * them means a concurrent update of the same rows (duplicate
+    * post-image hazard). A pure DELETE commits without the guard:
+    * concurrent position deletes are idempotent by construction.
     */
-  private def relOf(abs: String): String = {
-    val segs = abs.split("/").filter(_.nonEmpty)
-    segs.takeRight(partCols.length + 1).mkString("/")
-  }
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SinkCommit.fsFor(path)
-    val deltas = messages.collect { case m: SinkDeltaCommitMessage => m }
-    val files = deltas.flatMap(_.inserts.files).toSeq
-    val deletes = deltas.flatMap(_.deletes).toSeq
-      .map { case (abs, pos) => (relOf(abs), pos) }
-    val qTok = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
-    val manifest =
-      if (deletes.isEmpty) None
-      else {
-        val name = s"del-$qTok-${java.util.UUID.randomUUID()}.tsv"
-        SinkDeletes.write(fs, path, name, deletes)
-        Some((name, deletes.map(_._1).distinct))
-      }
-    // conflict guard: an UPDATE/MERGE (carries inserts) derived its
-    // post-image rows from reading the deleted positions' files — a
-    // delete manifest that landed since the scan and touches them
-    // means a concurrent update of the same rows (duplicate
-    // post-image hazard). A pure DELETE commits without the guard:
-    // concurrent position deletes are idempotent by construction.
-    val readSnapshot =
-      if (files.isEmpty) None
-      else op.scanDeleteManifests.map(seen =>
-        SinkReadSnapshot(seen, deletes.map(_._1).toSet))
-    SinkCommit.replacePublish(fs, path, partCols, files,
-      f => s"part-$qTok-" +
-        new Path(f.stagedPath).getName.stripPrefix("part-"),
-      versioned, manifest, readSnapshot)
-    sweepStaging(fs)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    sweepStaging(SinkCommit.fsFor(path))
-
-  private def sweepStaging(fs: FileSystem): Unit = {
-    fs.delete(stagingDir, true)
-    val parent = stagingDir.getParent
-    if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-      fs.delete(parent, true)
-  }
-}
-
-/** Commit half of the rewrite: publish the fresh files through the
-  * sink's normal rename protocol, then retire exactly the scanned
-  * groups atomically via the manifest CAS (see
-  * [[SinkCommit.replaceCommit]]).
-  */
-private class SinkReplaceBatchWrite(
-    path: String, partCols: Seq[String], schema: StructType,
-    queryId: String, versioned: Boolean, op: SinkRowLevelOperation,
-    props: Map[String, String] = Map.empty)
-    extends BatchWrite {
-
-  private def stagingDir = new Path(path, s"_staging/$queryId")
-
-  override def createBatchWriterFactory(
-      info: PhysicalWriteInfo): DataWriterFactory =
-    new PartitionedSinkWriterFactory(path, partCols, schema, queryId,
-      PartitionedSinkWriterFactory.sessionConf(),
-      SinkBloomConf.fromSession(props), SinkFormat.fieldIds(props),
-      SinkParquetWrite.rowGroupBytesFromSession())
-
-  override def useCommitCoordinator(): Boolean = true
-
-  override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    val fs = SinkCommit.fsFor(path)
-    val files = messages.collect { case m: SinkCommitMessage => m.files }
-      .flatten.toSeq
-    val qTok = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
-    val destName = (f: StagedFile) => s"part-$qTok-" +
-      new Path(f.stagedPath).getName.stripPrefix("part-")
-    if (files.isEmpty && op.plannedGroups.isEmpty) { sweepStaging(fs); return }
-    val base = SinkCommit.base(fs, path)
-    val fresh = SinkCommit.stage(fs, path, partCols, files, destName)
-    // ROW-GRAIN CHANGE FILES (`graft.rowChanges`): the one-job net
-    // diff between the replaced groups' rows and the fresh ones is
-    // exactly what the rewrite changed — carried-forward rows cancel.
-    // Written BEFORE the CAS under a uuid dir and linked by the
-    // manifest's `#\tchanges` header, so a feed either sees the
-    // commit with its change rows or not at all (a crash in between
-    // leaves an unreferenced dir for vacuum). Labels come from the
-    // command — see [[SinkCowChanges]] for the MERGE caveat.
-    val changesDir =
-      if (!SinkFormat.rowChanges(props)) None
-      else SinkCowChanges.write(path, partCols, schema,
-        op.plannedGroups, fresh, op.command(), qTok,
-        SinkFormat.fieldIds(props),
-        op.scanDeleteManifests.getOrElse(Set.empty).toSeq.sorted
-          .map(n => new Path(path, s"_deletes/$n").toString))
-    SinkCommit.replaceCommit(fs, path, versioned, fresh,
-      op.plannedGroups.map(_._1), changesDir = changesDir,
-      readSnapshot = op.scanDeleteManifests.map(seen =>
-        SinkReadSnapshot(seen, op.plannedGroups.map(_._1).toSet)),
-      base0 = base)
-    sweepStaging(fs)
-  }
-
-  override def abort(messages: Array[WriterCommitMessage]): Unit =
-    sweepStaging(SinkCommit.fsFor(path))
-
-  private def sweepStaging(fs: FileSystem): Unit = {
-    fs.delete(stagingDir, true)
-    val parent = stagingDir.getParent
-    if (fs.exists(parent) && fs.listStatus(parent).isEmpty)
-      fs.delete(parent, true)
-  }
+  override private[sources] def commit(queryId: String, schema: StructType,
+                                       files: Seq[StagedFile],
+                                       deletes: Seq[(String, Long)]): Unit =
+    SinkCommit.commit(SinkCommit.fsFor(path), path, partCols, versioned,
+      queryId, Replace(Set.empty), files, deletes,
+      readSnapshot =
+        if (files.isEmpty) None else readSnapshot(deletes.map(_._1).toSet))
 }

@@ -101,21 +101,32 @@ private[graft] object SinkFormat {
         c
       }
 
+  /** Every `graft.*` table option. The field-id registry is engine
+    * state: it rides CREATE but is not user-settable afterwards.
+    */
+  final val Options: Set[String] = Set(SinkBloomConf.PropColumns,
+    SinkBloomConf.PropMaxDistinct, PropDeleteMode, PropRowChanges,
+    PropSortOrder, PropFieldIds, PropNextFieldId)
+
   /** User-supplied `graft.*` properties (path-API options, CREATE
-    * TBLPROPERTIES), unchanged: `graft.format` is rejected — the sink
-    * has one data-file format.
+    * TBLPROPERTIES), unchanged: any other key is rejected, naming it —
+    * `graft.format` among them (the sink has one data-file format).
     */
   def userProps(where: String,
                 props: Map[String, String]): Map[String, String] = {
     require(!props.contains(PropFormat),
       s"$where: $PropFormat is not an option (sink data files are " +
         "always parquet)")
+    props.keys.filterNot(Options).foreach(k =>
+      throw new IllegalArgumentException(s"$where: $k is not a sink table " +
+        s"option (options: ${Options.toSeq.sorted.mkString(", ")})"))
     props
   }
 
-  /** Properties persisted in a table's sidecar, minus the retired
-    * format key. Tables created while the key existed recorded
-    * 'parquet' (fine) or 'tsv', whose data files nothing reads now.
+  /** Properties persisted in a table's sidecar, minus keys that are no
+    * longer options. Tables created while the format key existed
+    * recorded 'parquet' (fine) or 'tsv', whose data files nothing reads
+    * now.
     */
   def storedProps(table: String,
                   props: Map[String, String]): Map[String, String] = {
@@ -123,7 +134,7 @@ private[graft] object SinkFormat {
       s"table $table is '$f'-format: TSV data files are no longer " +
         "readable (the sink reads and writes parquet only) — rewrite " +
         "the table from its source"))
-    props - PropFormat
+    props.filter { case (k, _) => Options(k) }
   }
 
   /** Iceberg-legal type WIDENING: every old file's physical values

@@ -7,15 +7,17 @@ import org.apache.spark.sql.functions._
 /** Bloom-filter FILE SKIPPING on sink tables (SinkBloomConf /
   * SinkBlooms): point-lookup pruning on a high-cardinality UNCLUSTERED
   * column, where min/max ranges are useless because every file spans
-  * the whole key domain. Opt-in via
-  * `spark.graft.sink.bloomColumns=<col>[,<col>]`; a per-file Spark
-  * BloomFilter per named column rides the publish into a `_blooms/`
+  * the whole key domain. Opt-in per table via the
+  * `graft.bloomColumns = '<col>[,<col>]'` property; a per-file Spark
+  * BloomFilter per named column rides the commit into a `_blooms/`
   * blob, and EqualTo/In scan filters probe it after the min/max
   * pass. Pins: fewer splits on interleaved (range-overlapping) files,
   * zero false negatives, IN multi-probe, string columns, the
-  * distinct-count overflow degrade, and off-by-default.
+  * distinct-count overflow degrade (`graft.bloomMaxDistinct`), and
+  * off-by-default.
   */
 class BloomSkipSpec extends SparkSpec {
+  private val Columns = graft.sources.SinkBloomConf.PropColumns
 
   private def freshCatalog(name: String): String = {
     val root = tmpDir(s"bloom_$name")
@@ -23,16 +25,6 @@ class BloomSkipSpec extends SparkSpec {
       classOf[graft.sources.PartitionedSinkCatalog].getName)
     spark.conf.set(s"spark.sql.catalog.$name.root", root)
     root
-  }
-
-  private def withBloom[T](cols: String, extra: (String, String)*)(body: => T): T = {
-    spark.conf.set("spark.graft.sink.bloomColumns", cols)
-    extra.foreach { case (k, v) => spark.conf.set(k, v) }
-    try body
-    finally {
-      spark.conf.unset("spark.graft.sink.bloomColumns")
-      extra.foreach { case (k, _) => spark.conf.unset(k) }
-    }
   }
 
   private def splits(df: org.apache.spark.sql.DataFrame): Int =
@@ -45,90 +37,81 @@ class BloomSkipSpec extends SparkSpec {
     * [min, max] spans nearly the whole domain, so range skipping keeps
     * all three and only the blooms can prune a point lookup.
     */
-  private def seedInterleaved(t: String, n: Int = 300): Unit = {
+  private def seedInterleaved(t: String, props: (String, String)*): Unit = {
     import spark.implicits._
-    def batch(r: Int) = (0 until n).filter(_ % 3 == r)
+    def batch(r: Int) = (0 until 300).filter(_ % 3 == r)
       .map(k => (k.toLong, s"id_$k", "A")).toDF("k", "sid", "p").coalesce(1)
-    batch(0).writeTo(t).partitionedBy(col("p")).create()
+    props.foldLeft(batch(0).writeTo(t)) { case (w, (k, v)) =>
+      w.tableProperty(k, v)
+    }.partitionedBy(col("p")).create()
     batch(1).writeTo(t).append()
     batch(2).writeTo(t).append()
   }
 
   test("point lookup on an unclustered column opens one file, not three") {
     freshCatalog("bl1")
-    withBloom("k") {
-      seedInterleaved("bl1.t")
-      val all = spark.table("bl1.t")
-      assert(splits(all) === 3, "unfiltered scan reads every file")
-      // min/max CANNOT prune this (31 is inside every file's range);
-      // only file k≡1's bloom contains it
-      val one = spark.table("bl1.t").filter(col("k") === 31L)
-      assert(splits(one) === 1,
-        "the bloom probe must drop both non-containing files")
-      assert(one.collect().map(_.getLong(0)).toSeq === Seq(31L))
-      // IN straddling two residue classes opens exactly those two
-      val two = spark.table("bl1.t").filter(col("k").isin(31L, 32L))
-      assert(splits(two) === 2)
-      assert(two.count() === 2)
-      // no false negatives: every key finds its row through the probe
-      (0 until 30).foreach { k =>
-        assert(spark.table("bl1.t").filter(col("k") === k.toLong)
-          .count() === 1L, s"bloom skipped the file containing k=$k")
-      }
-      // the skip is OBSERVABLE: custom driver metrics on the scan node
-      val df = spark.table("bl1.t").filter(col("k") === 31L)
-      df.collect()
-      val metrics = df.queryExecution.executedPlan.collect {
-        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
-          b.metrics
-      }.head
-      assert(metrics("filesSkippedBloom").value === 2L,
-        "both non-containing files report as bloom-skipped")
-      assert(metrics("filesScanned").value === 1L)
+    seedInterleaved("bl1.t", Columns -> "k")
+    val all = spark.table("bl1.t")
+    assert(splits(all) === 3, "unfiltered scan reads every file")
+    // min/max CANNOT prune this (31 is inside every file's range);
+    // only file k≡1's bloom contains it
+    val one = spark.table("bl1.t").filter(col("k") === 31L)
+    assert(splits(one) === 1,
+      "the bloom probe must drop both non-containing files")
+    assert(one.collect().map(_.getLong(0)).toSeq === Seq(31L))
+    // IN straddling two residue classes opens exactly those two
+    val two = spark.table("bl1.t").filter(col("k").isin(31L, 32L))
+    assert(splits(two) === 2)
+    assert(two.count() === 2)
+    // no false negatives: every key finds its row through the probe
+    (0 until 30).foreach { k =>
+      assert(spark.table("bl1.t").filter(col("k") === k.toLong)
+        .count() === 1L, s"bloom skipped the file containing k=$k")
     }
+    // the skip is OBSERVABLE: custom driver metrics on the scan node
+    val df = spark.table("bl1.t").filter(col("k") === 31L)
+    df.collect()
+    val metrics = df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.metrics
+    }.head
+    assert(metrics("filesSkippedBloom").value === 2L,
+      "both non-containing files report as bloom-skipped")
+    assert(metrics("filesScanned").value === 1L)
   }
 
   test("string columns probe through the same machinery") {
     freshCatalog("bl2")
-    withBloom("sid") {
-      seedInterleaved("bl2.t")
-      val one = spark.table("bl2.t").filter(col("sid") === "id_40")
-      assert(splits(one) === 1)
-      assert(one.collect().map(_.getString(1)).toSeq === Seq("id_40"))
-    }
+    seedInterleaved("bl2.t", Columns -> "sid")
+    val one = spark.table("bl2.t").filter(col("sid") === "id_40")
+    assert(splits(one) === 1)
+    assert(one.collect().map(_.getString(1)).toSeq === Seq("id_40"))
   }
 
   test("distinct-count overflow degrades to a scan, never a wrong skip") {
     val root = freshCatalog("bl3")
-    withBloom("k", "spark.graft.sink.bloomMaxDistinct" -> "5") {
-      seedInterleaved("bl3.t") // 100 distinct per file >> cap 5
-      // no filter survived the cap: every file scans, results exact
-      val one = spark.table("bl3.t").filter(col("k") === 31L)
-      assert(splits(one) === 3, "overflowed blooms must not skip")
-      assert(one.count() === 1L)
-      // and no bloom blob carries a k entry (the cap dropped it)
-      def walk(f: File): Seq[File] =
-        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-      val bloomLines = walk(new File(root))
-        .filter(_.getName.startsWith("bloom-"))
-        .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines())
-      assert(bloomLines.isEmpty)
-    }
+    // 100 distinct per file >> cap 5
+    seedInterleaved("bl3.t", Columns -> "k",
+      graft.sources.SinkBloomConf.PropMaxDistinct -> "5")
+    // no filter survived the cap: every file scans, results exact
+    val one = spark.table("bl3.t").filter(col("k") === 31L)
+    assert(splits(one) === 3, "overflowed blooms must not skip")
+    assert(one.count() === 1L)
+    // and no bloom blob carries a k entry (the cap dropped it)
+    def walk(f: File): Seq[File] =
+      if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+    val bloomLines = walk(new File(root))
+      .filter(_.getName.startsWith("bloom-"))
+      .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines())
+    assert(bloomLines.isEmpty)
   }
 
   test("table-property blooms bind every writer, no session conf needed") {
-    import spark.implicits._
     freshCatalog("bl5")
-    def batch(r: Int) = (0 until 300).filter(_ % 3 == r)
-      .map(k => (k.toLong, s"id_$k", "A")).toDF("k", "sid", "p").coalesce(1)
     // the property rides the CREATE and persists in the sidecar: the
-    // later appends (fresh loads of the table, no conf set) write
-    // blooms because the TABLE says so
-    batch(0).writeTo("bl5.t")
-      .tableProperty(graft.sources.SinkBloomConf.PropColumns, "k")
-      .partitionedBy(col("p")).create()
-    batch(1).writeTo("bl5.t").append()
-    batch(2).writeTo("bl5.t").append()
+    // later appends (fresh loads of the table) write blooms because the
+    // TABLE says so
+    seedInterleaved("bl5.t", Columns -> "k")
     assert(splits(spark.table("bl5.t").filter(col("k") === 31L)) === 1,
       "a sidecar-persisted bloom property must bind conf-less writers")
     // SQL DDL manages the property: UNSET stops new files' blooms
@@ -137,7 +120,7 @@ class BloomSkipSpec extends SparkSpec {
       .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
       .loadTable(org.apache.spark.sql.connector.catalog.Identifier
         .of(Array.empty, "t")).properties()
-    assert(!props.containsKey(graft.sources.SinkBloomConf.PropColumns))
+    assert(!props.containsKey(Columns))
     // non-graft properties are rejected loudly, not silently dropped
     intercept[Exception] {
       spark.sql("ALTER TABLE bl5.t SET TBLPROPERTIES ('foo' = 'bar')")
@@ -146,19 +129,17 @@ class BloomSkipSpec extends SparkSpec {
 
   test("tableFiles exposes per-file rows, sizes and skip bounds") {
     freshCatalog("bl6")
-    withBloom("k") {
-      seedInterleaved("bl6.t")
-      val files = graft.ops.Compaction.tableFiles(spark, "bl6", "t")
-        .collect()
-      assert(files.length === 3)
-      assert(files.forall(_.getAs[String]("partition") === "p=A"))
-      assert(files.map(_.getAs[Long]("n_rows")).sum === 300L,
-        "exact per-file row counts from the publish manifests")
-      assert(files.forall(_.getAs[Long]("size_bytes") > 0L))
-      val mins = files.map(_.getAs[Map[String, String]]("min_values"))
-      assert(mins.map(_("k")).toSet === Set("0", "1", "2"),
-        "per-column min bounds surface per file")
-    }
+    seedInterleaved("bl6.t", Columns -> "k")
+    val files = graft.ops.Compaction.tableFiles(spark, "bl6", "t")
+      .collect()
+    assert(files.length === 3)
+    assert(files.forall(_.getAs[String]("partition") === "p=A"))
+    assert(files.map(_.getAs[Long]("n_rows")).sum === 300L,
+      "exact per-file row counts from the publish manifests")
+    assert(files.forall(_.getAs[Long]("size_bytes") > 0L))
+    val mins = files.map(_.getAs[Map[String, String]]("min_values"))
+    assert(mins.map(_("k")).toSet === Set("0", "1", "2"),
+      "per-column min bounds surface per file")
   }
 
   test("off by default: no bloom manifests, point lookups scan all files") {

@@ -241,24 +241,41 @@ class RowLevelOpsSpec extends SparkSpec {
     assert(rows("rl9.t") === Set((1L, 1.0, "A"), (3L, 3.0, "B"), (9L, 9.0, "B")))
   }
 
-  test("graft.writeDistribution=hash clusters regular appends") {
+  test("graft.writeDistribution is rejected: CREATE, ALTER and path API") {
     import spark.implicits._
     val root = freshCatalog("rl8")
-    def wide = (1L to 64L).map(k => (k, k.toDouble, if (k % 2 == 0) "A" else "B"))
-      .toDF("k", "v", "p").repartition(8)
-    // default: every task writes every tuple it holds — many files
-    wide.writeTo("rl8.t").partitionedBy(col("p")).create()
-    assert(dataFileNames(root).size > 2,
-      "unclustered 8-task append fragments (the default trade)")
-    spark.sql("DROP TABLE rl8.t")
-    // property-bound: cluster-by-tuple exchange → one file per leaf
-    wide.writeTo("rl8.t")
-      .tableProperty("graft.writeDistribution", "hash")
-      .partitionedBy(col("p")).create()
-    val perLeaf = dataFileNames(root) // names unique per (task, tuple)
-    assert(spark.table("rl8.t").count() === 64L)
-    assert(perLeaf.size <= 2,
-      s"clustered append writes at most one file per tuple, got $perLeaf")
+    val key = "graft.writeDistribution"
+    val one = Seq((1L, 1.0, "A")).toDF("k", "v", "p")
+    def rejects(f: => Any): Unit = {
+      val e = intercept[Exception](f)
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause)
+        .takeWhile(_ != null).map(t => String.valueOf(t.getMessage))
+        .mkString(" | ")
+      assert(msgs.contains(s"$key is not"), msgs)
+    }
+    rejects(one.writeTo("rl8.t").tableProperty(key, "hash")
+      .partitionedBy(col("p")).create())
+    one.writeTo("rl8.t").partitionedBy(col("p")).create()
+    rejects(spark.sql(s"ALTER TABLE rl8.t SET TBLPROPERTIES ('$key' = 'hash')"))
+    rejects(one.write.format("graft.sources.PartitionedSink")
+      .option("partitionBy", "p").option(key, "hash").mode("append")
+      .save(tmpDir("rl8_path")))
+    // a value an older sidecar stored is dropped on load
+    val fs = org.apache.hadoop.fs.FileSystem.getLocal(
+      spark.sessionState.newHadoopConf())
+    val dir = s"$root/t"
+    val (partCols, schema, props) = graft.sources.SinkSidecar.readDir(fs, dir)
+    val out = fs.create(new org.apache.hadoop.fs.Path(dir, "_table.json"), true)
+    try out.write(graft.sources.SinkSidecar.render(partCols, schema,
+      props + (key -> "hash")).getBytes("UTF-8"))
+    finally out.close()
+    val loaded = spark.sessionState.catalogManager.catalog("rl8")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+      .loadTable(org.apache.spark.sql.connector.catalog.Identifier
+        .of(Array.empty, "t")).properties()
+    assert(!loaded.containsKey(key))
+    Seq((2L, 2.0, "A")).toDF("k", "v", "p").writeTo("rl8.t").append()
+    assert(rows("rl8.t") === Set((1L, 1.0, "A"), (2L, 2.0, "A")))
   }
 
   test("merge-on-read DELETE writes O(1) bytes while COW rewrites the " +

@@ -7,11 +7,14 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{DelegateToFileSystem, FSDataInputStream, FSDataOutputStream, FileStatus, FilterFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.util.Progressable
 
 /** Local-disk FileSystem under its own `faulty:` scheme, for protocol
-  * specs: it records every list, open and status call with the calling
-  * thread, can fail the Nth rename, and can run a hook before an open.
+  * specs: it records every list, open, status, create, mkdirs, delete
+  * and rename (by its destination) with the calling thread, can fail
+  * the Nth rename, and can run a hook before an open.
   * Register it with [[FaultyFileSystem.register]], which binds both
   * Hadoop seams — `fs.faulty.impl` for FileSystem and
   * `fs.AbstractFileSystem.faulty.impl` for FileContext, which the
@@ -38,7 +41,31 @@ class FaultyFileSystem extends FilterFileSystem(new FaultyFileSystem.Local) {
     super.getFileStatus(f)
   }
 
+  override def create(f: Path, permission: FsPermission, overwrite: Boolean,
+                      bufferSize: Int, replication: Short, blockSize: Long,
+                      progress: Progressable): FSDataOutputStream = {
+    record("create", f)
+    super.create(f, permission, overwrite, bufferSize, replication,
+      blockSize, progress)
+  }
+
+  override def mkdirs(f: Path): Boolean = {
+    record("mkdirs", f)
+    super.mkdirs(f)
+  }
+
+  override def mkdirs(f: Path, permission: FsPermission): Boolean = {
+    record("mkdirs", f)
+    super.mkdirs(f, permission)
+  }
+
+  override def delete(f: Path, recursive: Boolean): Boolean = {
+    record("delete", f)
+    super.delete(f, recursive)
+  }
+
   override def rename(src: Path, dst: Path): Boolean = {
+    record("rename", dst)
     if (failAtRename.decrementAndGet() == 0)
       throw new java.io.IOException(s"injected rename failure: $src")
     super.rename(src, dst)

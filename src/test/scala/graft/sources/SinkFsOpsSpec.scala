@@ -3,11 +3,13 @@ package graft.sources
 import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Filesystem operations of a LATEST scan's planning, counted through
-  * [[FaultyFileSystem]] on the driver thread: the version manifest is
-  * the only membership and stats source, so planning costs one
+/** Filesystem operations on the driver thread, counted through
+  * [[FaultyFileSystem]]. A LATEST scan's planning: the version manifest
+  * is the only membership and stats source, so planning costs one
   * `_versions/` listing and one manifest open whatever the leaf count,
-  * and never lists a leaf or stats a data file.
+  * and never lists a leaf or stats a data file. A commit: one `mkdirs`
+  * per leaf it publishes into, and no `delete` of a name it renames
+  * onto (batch and row-level names are query-unique).
   */
 class SinkFsOpsSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
@@ -81,5 +83,49 @@ class SinkFsOpsSpec extends AnyFunSuite {
     assert(opened === candidates.flatMap(_.bloom).toSet,
       "only the stats survivors' blobs are opened")
     assert(opened.size === 2)
+  }
+
+  /** The driver's publish ops of one commit into `dir`: it renamed
+    * `files` data files, deleted none of their targets, and made at
+    * most one `mkdirs` per leaf, over `leaves` leaves at most.
+    */
+  private def assertPublishOps(dir: String, ops: Seq[FaultyFileSystem.Op],
+                               files: Int, leaves: Int, what: String): Unit = {
+    val targets = ops.filter(o => o.kind == "rename" &&
+      o.path.endsWith(".parquet")).map(_.path)
+    assert(targets.size === files, s"$what: published files, got $targets")
+    val clobbered = ops.filter(o => o.kind == "delete" &&
+      targets.contains(o.path))
+    assert(clobbered.isEmpty, s"$what: no delete of a rename target, got $clobbered")
+    val leafMkdirs = ops.filter(o => o.kind == "mkdirs" &&
+      o.path.startsWith(dir) && o.path.split('/').last.contains("="))
+      .groupBy(_.path)
+    assert(leafMkdirs.values.forall(_.size == 1) && leafMkdirs.size <= leaves,
+      s"$what: at most one mkdirs per leaf, got " +
+        leafMkdirs.map { case (p, os) => s"$p x${os.size}" })
+  }
+
+  test("a 24-leaf create and a COW DELETE publish with one mkdirs per leaf and no delete-before-rename") {
+    import spark.implicits._
+    val dir = catalog("graft_opsw_spec")
+    val t = "graft_opsw_spec.t"
+    // 8 rows per leaf, dealt over 4 tasks: several files per leaf
+    val rows = for (y <- 1 to 2; d <- 1 to 12; i <- 1 to 8)
+      yield (y * 1000L + d * 10 + i, y, d)
+    val (_, createOps) = FaultyFileSystem.driverOps(
+      rows.toDF("k", "y", "d").repartition(4)
+        .writeTo(t).partitionedBy(col("y"), col("d")).create())
+    val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(s"faulty:$dir"),
+      spark.sessionState.newHadoopConf())
+    val created = SinkVersions.readLatest(fs, s"faulty:$dir").get.entries
+    assert(created.size > 24, "several files per leaf")
+    assertPublishOps(dir, createOps, files = created.size, leaves = 24, "create")
+    // the rewrite of a two-row file publishes its other row
+    val victim = created.find(_.rows >= 2).get
+    val k = victim.cols("k").get._1
+    val (_, deleteOps) = FaultyFileSystem.driverOps(
+      spark.sql(s"DELETE FROM $t WHERE k = $k").collect())
+    assertPublishOps(dir, deleteOps, files = 1, leaves = 1, "COW DELETE")
+    assert(spark.table(t).count() === 191L)
   }
 }

@@ -5,15 +5,13 @@ import java.nio.file.Files
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Publish-protocol pins that need staged names the public API cannot
-  * mint: Spark's task ids restart at 0 per APPLICATION, so two batch
-  * appends from different driver JVMs can stage files with the SAME
-  * `part-<partitionId>-<taskId>-<value>.tsv` name — and publish's
-  * delete-before-rename (required for streaming epoch replay) would
-  * silently clobber the first app's data. The batch commit therefore
-  * prefixes published names with a query-unique token; this spec
-  * drives `SinkCommit.publish` directly with colliding staged names
-  * (same package — the protocol internals are package-private).
+/** Commit-protocol pins that drive [[SinkCommit.commit]] directly (same
+  * package — the protocol internals are package-private): the CAS and
+  * conflict checks against hand-built racing manifests, and staged
+  * names the public API cannot mint — Spark's task ids restart at 0
+  * per APPLICATION, so two batch appends from different driver JVMs
+  * can stage files with the SAME `part-<partitionId>-<taskId>-<tuple>`
+  * name, and the published name must still be unique.
   */
 class SinkPublishSpec extends AnyFunSuite {
 
@@ -30,6 +28,25 @@ class SinkPublishSpec extends AnyFunSuite {
   private def relsAt(fs: FileSystem, root: String, v: Long): Seq[String] =
     SinkVersions.read(fs, root, v).entries.map(_.rel)
 
+  /** A row-level commit of a versioned table that clears `retired` and
+    * publishes `files`, guarded by `read`.
+    */
+  private def replace(fs: FileSystem, root: String, retired: Seq[String],
+                      read: Option[SinkReadSnapshot] = None,
+                      files: Seq[StagedFile] = Nil): Unit =
+    SinkCommit.commit(fs, root, Seq("p"), versioned = true, "q-replace",
+      Replace(retired.toSet), files, readSnapshot = read)
+
+  /** One staged file of `queryId` in tuple (A), holding `content`. */
+  private def stagedFile(fs: FileSystem, root: String, queryId: String,
+                         content: String): StagedFile = {
+    val p = new Path(SinkCommit.stagingDir(root, queryId, None),
+      "part-0-0-A.parquet")
+    val out = fs.create(p, true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
+    StagedFile(Seq("A"), p.toString, 1, content.length, 0)
+  }
+
   test("a merge-on-read delete landing after the rewrite's scan aborts the commit") {
     val root = Files.createTempDirectory("sink_mor_conflict").toString
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
@@ -42,28 +59,22 @@ class SinkPublishSpec extends AnyFunSuite {
     // f1 is still live, so the retired-files check alone would pass —
     // the read-snapshot guard must catch the unseen manifest
     val ex = intercept[java.util.ConcurrentModificationException] {
-      SinkCommit.replaceCommit(fs, root, versioned = true,
-        fresh = Seq.empty, retiredSeq = Seq("p=A/f1.tsv"),
-        readSnapshot = Some(SinkReadSnapshot(
-          scanDels = Set.empty, readRels = Set("p=A/f1.tsv"))))
+      replace(fs, root, Seq("p=A/f1.tsv"), Some(SinkReadSnapshot(
+        scanDels = Set.empty, readRels = Set("p=A/f1.tsv"))))
     }
     assert(ex.getMessage.contains("del-race.tsv"))
     // a rewrite whose SCAN already saw the manifest (and anti-filtered
     // through it) commits fine
-    SinkCommit.replaceCommit(fs, root, versioned = true,
-      fresh = Seq.empty, retiredSeq = Seq("p=A/f1.tsv"),
-      readSnapshot = Some(SinkReadSnapshot(
-        scanDels = Set("del-race.tsv"), readRels = Set("p=A/f1.tsv"))))
+    replace(fs, root, Seq("p=A/f1.tsv"), Some(SinkReadSnapshot(
+      scanDels = Set("del-race.tsv"), readRels = Set("p=A/f1.tsv"))))
     assert(relsAt(fs, root, 3L) === Seq("p=A/f2.tsv"))
     // and one reading OTHER files than the manifest touches is no
     // conflict either
     SinkDeletes.write(fs, root, "del-other.tsv", Seq(("p=A/f9.tsv", 4L)))
     assert(commitAt(fs, root, 4L, Seq("p=A/f2.tsv", "p=A/f9.tsv"),
       dels = Seq("del-other.tsv")))
-    SinkCommit.replaceCommit(fs, root, versioned = true,
-      fresh = Seq.empty, retiredSeq = Seq("p=A/f2.tsv"),
-      readSnapshot = Some(SinkReadSnapshot(
-        scanDels = Set.empty, readRels = Set("p=A/f2.tsv"))))
+    replace(fs, root, Seq("p=A/f2.tsv"), Some(SinkReadSnapshot(
+      scanDels = Set.empty, readRels = Set("p=A/f2.tsv"))))
   }
 
   test("commit-time GC drops position manifests whose every target file retired") {
@@ -76,17 +87,14 @@ class SinkPublishSpec extends AnyFunSuite {
     // a COW rewrite retires f1 (folding del-f1's positions in): the
     // carried manifest list must drop del-f1 — nothing it touches
     // survives — and keep del-f2, whose file lives on
-    SinkCommit.replaceCommit(fs, root, versioned = true,
-      fresh = Seq(entry("p=A/f1b.tsv")), retiredSeq = Seq("p=A/f1.tsv"),
-      readSnapshot = Some(SinkReadSnapshot(
-        scanDels = Set("del-f1.tsv", "del-f2.tsv"),
-        readRels = Set("p=A/f1.tsv"))))
+    replace(fs, root, Seq("p=A/f1.tsv"), Some(SinkReadSnapshot(
+      scanDels = Set("del-f1.tsv", "del-f2.tsv"),
+      readRels = Set("p=A/f1.tsv"))),
+      files = Seq(stagedFile(fs, root, "q-replace", "f1b")))
     assert(SinkVersions.read(fs, root, 2L).dels === Seq("del-f2.tsv"),
       "fully-folded manifests must GC out of the headers")
-    // the ordinary publish path GCs the same way (here: a truncate-free
-    // dynamic-style commit that retires f2 via the replace path)
-    SinkCommit.replaceCommit(fs, root, versioned = true,
-      fresh = Seq.empty, retiredSeq = Seq("p=A/f2.tsv"))
+    // a commit that retires f2 drops the last manifest with it
+    replace(fs, root, Seq("p=A/f2.tsv"))
     assert(SinkVersions.read(fs, root, 3L).dels === Seq.empty,
       "the last manifest retires with its file")
   }
@@ -297,28 +305,21 @@ class SinkPublishSpec extends AnyFunSuite {
     val root = Files.createTempDirectory("sink_pub").toString
     val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
 
-    // both "applications" stage part-0-0-A.tsv (fresh JVM ⇒ taskId 0)
-    def stage(queryId: String, content: String): StagedFile = {
-      val p = new Path(s"$root/_staging/$queryId/part-0-0-A.tsv")
-      fs.mkdirs(p.getParent)
-      val out = fs.create(p, true)
-      try out.write(content.getBytes("UTF-8")) finally out.close()
-      StagedFile(Seq("A"), p.toString, 1, content.length, 0)
+    // both "applications" stage part-0-0-A.parquet (fresh JVM ⇒ taskId 0)
+    def publishAs(queryId: String, content: String): String = {
+      val f = stagedFile(fs, root, queryId, content)
+      SinkCommit.commit(fs, root, Seq("p"), versioned = false, queryId,
+        Append, Seq(f))
+      SinkCommit.publishedName(queryId, None)(f)
     }
-    // mirror PartitionedSinkBatchWrite.commit's naming exactly
-    def publishAs(queryId: String, f: StagedFile): Unit = {
-      val qTok = queryId.replaceAll("[^0-9a-zA-Z]", "").take(8)
-      SinkCommit.publish(fs, root, Seq("p"), Append, Seq(f),
-        sf => s"part-$qTok-" +
-          new Path(sf.stagedPath).getName.stripPrefix("part-"))
-    }
-    publishAs("query-one-uuid", stage("query-one-uuid", "1\t1.0\n"))
-    publishAs("query-two-uuid", stage("query-two-uuid", "2\t2.0\n"))
+    val names = Set(publishAs("query-one-uuid", "1\t1.0\n"),
+      publishAs("query-two-uuid", "2\t2.0\n"))
+    assert(names.size === 2, "the query token makes the published names differ")
 
     val dataFiles = fs.listStatus(new Path(s"$root/p=A"))
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
         !s.getPath.getName.startsWith("."))
-    assert(dataFiles.length === 2,
+    assert(dataFiles.map(_.getPath.getName).toSet === names,
       "the second app's same-named staged file must publish alongside " +
         "the first's, not over it")
     val contents = dataFiles.map { s =>
@@ -328,6 +329,32 @@ class SinkPublishSpec extends AnyFunSuite {
     }.toSet
     assert(contents === Set("1\t1.0\n", "2\t2.0\n"),
       "both appends' rows survive byte-exactly")
+  }
+
+  test("a guarded dynamic overwrite aborts rather than clear a file appended after its read") {
+    val spark = graft.TestSpark.spark
+    import spark.implicits._
+    val dir = freshTable("graft_guard_spec") // f1 holds (1, A)
+    val t = "graft_guard_spec.t"
+    Seq((2L, "A")).toDF("k", "p").writeTo(t).append() // f2
+    val fs = FileSystem.getLocal(new org.apache.hadoop.conf.Configuration())
+    // a compaction-style rewrite of tuple A reads {f1, f2} ...
+    val read = SinkVersions.readLatest(fs, dir).get
+    assert(read.entries.size === 2)
+    // ... a racing append then lands f3 in the same tuple ...
+    Seq((3L, "A")).toDF("k", "p").writeTo(t).append()
+    // ... and the rewrite commits its output — f1's and f2's rows only
+    val e = intercept[Exception] {
+      SinkGuard.armed(Some(SinkGuard.snapshot(read.dels.toSet,
+        read.entries.map(_.rel).toSet))) {
+        Seq((1L, "A"), (2L, "A")).toDF("k", "p").coalesce(1)
+          .writeTo(t).overwritePartitions()
+      }
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[java.util.ConcurrentModificationException]), e)
+    assert(spark.table(t).collect().map(_.getLong(0)).toSet === Set(1L, 2L, 3L),
+      "the racing append's row survives")
   }
 
   test("version manifest commit is compare-and-swap: a taken version number is rejected, not replaced") {
@@ -390,13 +417,11 @@ class SinkPublishSpec extends AnyFunSuite {
     assert(commitAt(fs, root, 1L, Seq("p=A/f1.tsv")))
     assert(commitAt(fs, root, 2L, Seq("p=A/f2.tsv")))
     val ex = intercept[java.util.ConcurrentModificationException] {
-      SinkCommit.replaceCommit(fs, root, versioned = true, fresh = Seq.empty,
-        retiredSeq = Seq("p=A/f1.tsv"))
+      replace(fs, root, Seq("p=A/f1.tsv"))
     }
     assert(ex.getMessage.contains("f1.tsv"))
     // a retire of a file that IS live commits: pure-delete rewrite
-    SinkCommit.replaceCommit(fs, root, versioned = true, fresh = Seq.empty,
-      retiredSeq = Seq("p=A/f2.tsv"))
+    replace(fs, root, Seq("p=A/f2.tsv"))
     assert(SinkVersions.read(fs, root, 3L).entries === Seq.empty)
   }
 }
