@@ -1,31 +1,89 @@
 package graft
 
 import graft.queries.Q
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
+import org.apache.spark.scheduler._
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
-/** Accumulates shuffle-read bytes, spill bytes, and peak task memory
-  * across all tasks — the per-query deltas are the numbers that
-  * actually predict 100 TB behavior (wall time at sf0.1 mostly
-  * measures fixed overheads; shuffle volume scales, spill marks a
-  * partition-sizing failure, and peak task memory is the executor-
-  * sizing input). Spill in particular closes the r13 adjudication
-  * loop: the sf10 "superlinear" slopes were partition spill at the
-  * 4-partition default, a verdict that had to be established by a
-  * manual rerun because the artifact recorded no spill — now it does.
+/** Counts what a query's Spark jobs did: jobs, completed stages and
+  * tasks, executor CPU and GC seconds, shuffle-read bytes, spill bytes,
+  * peak task memory, and one line per job (id, seconds, tasks, call
+  * site). Shuffle volume is what scales to 100 TB (wall time at sf0.1
+  * mostly measures fixed overheads), spill marks a partition-sizing
+  * failure (the sf10 "superlinear" slopes were partition spill at the
+  * 4-partition default, established only by a manual rerun while the
+  * artifact recorded no spill), peak task memory is the executor-sizing
+  * input, and CPU beside wall time tells compute from waiting. A job
+  * line's call site is its SQL execution's (the action that ran it,
+  * also for the stages adaptive execution submits from its own
+  * threads), else its last stage's name, so a multi-job query
+  * decomposes phase by phase without the Spark UI.
+  *
+  * Events arrive on the listener bus thread; [[reset]] and [[counts]]
+  * bracket one query on the caller's, after [[Bench.drainListenerBus]].
   */
-private final class ShuffleTally extends SparkListener {
-  val read = new AtomicLong
-  val spilled = new AtomicLong
-  val peakMem = new AtomicLong
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-    val m = e.taskMetrics
-    if (m != null) {
-      read.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      spilled.addAndGet(m.memoryBytesSpilled + m.diskBytesSpilled)
-      peakMem.getAndAccumulate(m.peakExecutionMemory, math.max(_, _))
+private[graft] final class JobTally extends SparkListener {
+  import JobTally.Counts
+  private var c = Counts()
+  private val jobs = scala.collection.mutable.Map[Int, (Long, String)]()
+  private val stageJob = scala.collection.mutable.Map[Int, Int]()
+  private val jobTasks = scala.collection.mutable.Map[Int, Int]()
+  private val execSites = scala.collection.mutable.Map[Long, String]()
+
+  def reset(): Unit = synchronized {
+    c = Counts(); jobs.clear(); stageJob.clear(); jobTasks.clear()
+    execSites.clear()
+  }
+
+  def counts: Counts = synchronized(c)
+
+  override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+    c = c.copy(jobs = c.jobs + 1)
+    val site = Option(e.properties)
+      .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+      .flatMap(id => execSites.get(id.toLong))
+      .orElse(e.stageInfos.lastOption.map(_.name))
+    jobs(e.jobId) = (e.time, site.getOrElse("?"))
+    e.stageIds.foreach(stageJob(_) = e.jobId)
+  }
+
+  override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+    jobs.remove(e.jobId).foreach { case (t0, site) =>
+      val tasks = jobTasks.getOrElse(e.jobId, 0)
+      c = c.copy(jobLines = c.jobLines :+
+        f"[job ${e.jobId}%3d] ${(e.time - t0) / 1e3}%6.3f s tasks=$tasks%3d  $site")
     }
   }
+
+  override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+    case s: SparkListenerSQLExecutionStart =>
+      synchronized { execSites(s.executionId) = s.description }
+    case _ =>
+  }
+
+  override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+    synchronized { c = c.copy(stages = c.stages + 1) }
+
+  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+    stageJob.get(e.stageId).foreach(j =>
+      jobTasks(j) = jobTasks.getOrElse(j, 0) + 1)
+    val m = e.taskMetrics
+    c = if (m == null) c.copy(tasks = c.tasks + 1)
+      else c.copy(tasks = c.tasks + 1,
+        cpuNanos = c.cpuNanos + m.executorCpuTime,
+        gcMillis = c.gcMillis + m.jvmGCTime,
+        shuffleRead = c.shuffleRead + m.shuffleReadMetrics.totalBytesRead,
+        spilled = c.spilled + m.memoryBytesSpilled + m.diskBytesSpilled,
+        peakMem = math.max(c.peakMem, m.peakExecutionMemory))
+  }
+}
+
+private[graft] object JobTally {
+  final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
+                          cpuNanos: Long = 0L, gcMillis: Long = 0L,
+                          shuffleRead: Long = 0L, spilled: Long = 0L,
+                          peakMem: Long = 0L,
+                          jobLines: Vector[String] = Vector.empty)
 }
 
 /** The bench artifact's self-adjudication tier, factored out so the
@@ -104,10 +162,17 @@ object Bench {
   /** Materialize the complete result through a noop sink. `.count()`
     * would let Catalyst drop the final orderBy/projection, undertiming
     * the query the oracle actually checks; the noop writer consumes every
-    * row of the exact plan at zero sink cost.
+    * row of the exact plan at zero sink cost. Returns the seconds
+    * `q.run` took (build_s: plan construction plus any job it runs
+    * eagerly).
     */
-  private def exec(q: Q, spark: org.apache.spark.sql.SparkSession, sfDir: String): Unit =
-    q.run(spark, sfDir).write.format("noop").mode("overwrite").save()
+  private def exec(q: Q, spark: org.apache.spark.sql.SparkSession, sfDir: String): Double = {
+    val t0 = System.nanoTime()
+    val df = q.run(spark, sfDir)
+    val built = (System.nanoTime() - t0) / 1e9
+    df.write.format("noop").mode("overwrite").save()
+    built
+  }
 
   private def loadAvg(): Double = java.lang.management.ManagementFactory
     .getOperatingSystemMXBean.getSystemLoadAverage
@@ -154,30 +219,25 @@ object Bench {
       .map(_.split(",").toSet)
     val headline = SparkEntry.registry.filter(_.headline)
       .filter(q => only.forall(_.contains(q.name)))
-    // untimed warm-up pass, doubling as the shuffle-byte measurement:
+    // untimed warm-up pass, doubling as the execution measurement:
     // metering the FIRST (cold) execution is what captures the
     // exchanges that build cached relations — a warmed re-run would
     // read those from cache and report ~0 for exactly the
-    // shuffle-heaviest queries. Sequential execution attributes deltas
-    // to the right query; the short sleep drains the async listener
-    // bus (a stray late event misattributes a few KB, not the shape of
-    // the number). The listener is removed before the timed reps.
-    val tally = new ShuffleTally
+    // shuffle-heaviest queries. Sequential execution attributes the
+    // counts to the right query once the listener bus is drained. A
+    // diagnostic run (SPARK_GRAFT_BENCH_ONLY) keeps the listener for
+    // the timed reps and prints their job lines; a full sweep removes
+    // it first.
+    val tally = new JobTally
     spark.sparkContext.addSparkListener(tally)
-    case class ColdMetrics(shuffleMb: Double, spillMb: Double,
-                           peakMemMb: Double)
     val coldMetrics = headline.map { q =>
-      val r0 = tally.read.get
-      val s0 = tally.spilled.get
-      tally.peakMem.set(0)
+      tally.reset()
       try exec(q, spark, sfDir) catch { case _: Throwable => }
       drainListenerBus(spark.sparkContext)
       spark.catalog.clearCache() // see timed-loop comment
-      q.name -> ColdMetrics((tally.read.get - r0) / 1e6,
-        (tally.spilled.get - s0) / 1e6, tally.peakMem.get / 1e6)
+      q.name -> tally.counts
     }.toMap
-    val shuffleMb = coldMetrics.map { case (k, v) => k -> v.shuffleMb }
-    spark.sparkContext.removeSparkListener(tally)
+    if (only.isEmpty) spark.sparkContext.removeSparkListener(tally)
     // n timed runs per query, report the MEDIAN: single-shot numbers have
     // twice been re-adjudicated as ambient-load noise (a one-off GC or a
     // background process lands entirely in one sample; the median of 3
@@ -201,17 +261,29 @@ object Bench {
     // a same-HEAD builder sweep (the r14 q_tpch_q5 episode: reps
     // 4.7–6.7 s under load 0.90→4.33, builder 0.85 s)
     val repLoads = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val buildTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val repTimes = headline.map { q =>
       val loads = scala.collection.mutable.ArrayBuffer[Double]()
-      val times = Seq.fill(reps) {
+      val builds = scala.collection.mutable.ArrayBuffer[Double]()
+      val times = (1 to reps).map { rep =>
         loads += loadAvg()
+        tally.reset()
         val t0 = System.nanoTime()
-        try { exec(q, spark, sfDir); (System.nanoTime() - t0) / 1e9 }
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] ${q.name} FAILED: ${t.getMessage}")
-          -1.0
+        val rt =
+          try { builds += exec(q, spark, sfDir); (System.nanoTime() - t0) / 1e9 }
+          catch { case t: Throwable =>
+            System.err.println(s"[bench] ${q.name} FAILED: ${t.getMessage}")
+            -1.0
+          }
+        if (only.isDefined) {
+          drainListenerBus(spark.sparkContext)
+          if (rt >= 0) System.err.println(f"[bench] ${q.name} rep $rep: " +
+            f"build_s ${builds.last}%.3f exec_s ${rt - builds.last}%.3f")
+          tally.counts.jobLines.foreach(l => System.err.println("    " + l))
         }
+        rt
       }
+      buildTimes(q.name) = builds.toSeq
       repLoads(q.name) = loads.toSeq
       // Drop this query's cached relations BEFORE the next query runs.
       // cachedOnce registers entries in the session CacheManager, whose
@@ -259,13 +331,23 @@ object Bench {
     val ccRounds = graft.dedup.Dedup.lastClusterRounds
     // locale-independent 2-dp rendering (an f"%.2f" would emit comma
     // decimals — malformed JSON — under a comma-decimal default locale)
-    def mbMap(get: ColdMetrics => Double): String = results.map { case (k, _) =>
-      "\"" + k + "\":" + math.round(
-        coldMetrics.get(k).map(get).getOrElse(-1.0) * 100) / 100.0 }
+    def mbMap(get: JobTally.Counts => Long): String = results.map { case (k, _) =>
+      "\"" + k + "\":" + coldMetrics.get(k)
+        .map(c => math.round(get(c) / 1e4) / 100.0).getOrElse(-1.0) }
       .mkString("{", ",", "}")
-    val sh = mbMap(_.shuffleMb)
-    val sp = mbMap(_.spillMb)
-    val pm = mbMap(_.peakMemMb)
+    val sh = mbMap(_.shuffleRead)
+    val sp = mbMap(_.spilled)
+    val pm = mbMap(_.peakMem)
+    // per query: the cold pass's jobs, stages, tasks, executor CPU and
+    // GC seconds, and the timed reps' median build_s
+    val countsJson = results.map { case (k, _) =>
+      val c = coldMetrics.getOrElse(k, JobTally.Counts())
+      val b = buildTimes.getOrElse(k, Seq.empty).sorted
+      "\"" + k + "\":{\"jobs\":" + c.jobs + ",\"stages\":" + c.stages +
+        ",\"tasks\":" + c.tasks + ",\"executor_cpu_s\":" + ms(c.cpuNanos / 1e9) +
+        ",\"gc_s\":" + ms(c.gcMillis / 1e3) +
+        ",\"build_s\":" + (if (b.isEmpty) -1.0 else ms(b(b.size / 2))) + "}"
+    }.mkString("{", ",", "}")
     // a run with ANY -1.0 sentinel must not read as "ok": automation
     // keying on status treated r8's 4 broken queries as a clean bench
     val nFailed = results.count(_._2 < 0)
@@ -322,6 +404,7 @@ object Bench {
     println(s"""{"detail":"shuffle_read_mb","queries":$sh,"load_avg_before":$loadBefore,"load_avg":$load}""")
     println(s"""{"detail":"spill_mb","queries":$sp}""")
     println(s"""{"detail":"peak_task_mem_mb","queries":$pm}""")
+    println(s"""{"detail":"query_counts","queries":$countsJson}""")
     println(s"""{"total":$total,"status":$status,"ambient_ok":$ambientOk,"ambient_flagged":$flaggedJson,"origin":"$origin","total_core":$totalCore,"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","reps":$reps,"cc_rounds":$ccRounds}""")
     // Durable artifact: the driver records only the last ~2000 chars of
     // stdout, so the per-rep times and shuffle bytes that make
@@ -346,6 +429,7 @@ object Bench {
          |"shuffle_read_mb":$sh,
          |"spill_mb":$sp,
          |"peak_task_mem_mb":$pm,
+         |"query_counts":$countsJson,
          |"shuffle_partitions":${spark.conf.get("spark.sql.shuffle.partitions")}}""".stripMargin
     val diagnostic = only.isDefined || reps != 3
     // Round inference: max over the recorded BENCH_r*.json (driver-

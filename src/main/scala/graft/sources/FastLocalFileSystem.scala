@@ -22,9 +22,9 @@ import org.apache.hadoop.fs.permission.FsPermission
   * The sink's write path creates many small files per commit — staged
   * data files, their checksum sidecars, per-leaf stats/bloom manifests,
   * version manifests, table sidecars — so a single 16-leaf corpus
-  * create was paying ~0.4 s of pure fork/exec (measured,
-  * `graft.tools.ProfileWriter`: open 9–12 ms/file, of which
-  * create-stream 7.5–8 ms; write 0.2 ms, close 1 ms).
+  * create was paying ~0.4 s of pure fork/exec (measured per sink file
+  * on a JVM without libhadoop: open 9–12 ms, of which create-stream
+  * 7.5–8 ms; write 0.2 ms, close 1 ms).
   *
   * The fix is semantic-preserving: the standard nine rwx bits are set
   * through `java.nio.file.Files.setPosixFilePermissions` (same syscall

@@ -28,7 +28,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * and a version manifest per commit (`_versions/<v>`, see
   * [[SinkVersions]]) naming the live files with their facts.
   * Readable back through [[PartitionedSink.readBack]] (the manifest's
-  * files through plain `spark.read.parquet` + partition discovery).
+  * files through the engine's own split reader).
   *
   * The part that matters at 100 TB is the COMMIT PROTOCOL — a job
   * that writes for an hour from 1000 executors must publish all-or-
@@ -76,7 +76,7 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * columns ([[SinkFormat.validateColumnType]]). Partition columns must
   * be non-null atomics; their VALUES are hive-escaped in directory
   * names (`ExternalCatalogUtils.escapePathName` — `/`, `=`, `%`,
-  * control chars), which Spark's partition discovery unescapes on read.
+  * control chars); readers take the raw values from the manifest.
   */
 /** Lossless string codec for the sink's text METADATA — version,
   * position-delete manifests, bloom blobs, catalog sidecars and
@@ -201,11 +201,13 @@ object PartitionedSink {
   final val NullToken = "\\N"
 
   /** Read a sink layout back as a DataFrame: the latest version
-    * manifest's files through Spark's parquet reader, with partition
-    * discovery over the hive-style dirs plus an explicit data schema
-    * (no inference — deterministic types). A table with no commit
-    * (e.g. the job wrote zero rows) returns a schema-correct empty
-    * frame.
+    * manifest's files through the engine's own split reader
+    * ([[SinkSplitsRead]]), with an explicit data schema (no inference —
+    * deterministic types). The read is the table's: the snapshot's
+    * merge-on-read position deletes apply, and a catalog table's field
+    * ids (its `_table.json` sidecar) resolve renamed columns in older
+    * files. A table with no commit (e.g. the job wrote zero rows)
+    * returns a schema-correct empty frame.
     */
   def readBack(spark: SparkSession, root: String, dataSchema: StructType,
                partCol: String, partType: DataType = StringType): DataFrame =
@@ -219,36 +221,19 @@ object PartitionedSink {
                     partCols: Seq[(String, DataType)]): DataFrame = {
     val fs = FileSystem.get(new java.net.URI(root),
       spark.sparkContext.hadoopConfiguration)
-    val files = SinkVersions.readLatest(fs, root).toSeq
-      .flatMap(_.entries.map(e => new Path(root, e.rel).toString))
-    readPaths(spark, root, files, dataSchema, partCols)
-  }
-
-  private def emptyFrame(spark: SparkSession, dataSchema: StructType,
-                         partCols: Seq[(String, DataType)]): DataFrame = {
-    val full = StructType(dataSchema.fields ++
-      partCols.map { case (c, t) => StructField(c, t) })
-    spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], full)
-  }
-
-  /** EXPLICIT data-file paths of one sink layout as rows, through
-    * Spark's own (name-based) parquet reader. Partition columns come
-    * from partition discovery against `basePath` (the dir names), data
-    * columns from the parquet files.
-    */
-  private[graft] def readPaths(spark: SparkSession, root: String,
-                               paths: Seq[String], dataSchema: StructType,
-                               partCols: Seq[(String, DataType)]): DataFrame = {
-    if (paths.isEmpty) return emptyFrame(spark, dataSchema, partCols)
-    import org.apache.spark.sql.functions.col
-    partCols.foldLeft(
-      spark.read
-        .schema(dataSchema)
-        .option("basePath", root)
-        .parquet(paths: _*)) { case (df, (c, t)) =>
-      df.withColumn(c, col(c).cast(t))
+    val fieldIds =
+      if (!fs.exists(new Path(root, "_table.json"))) Map.empty[String, Int]
+      else SinkFormat.fieldIds(SinkSidecar.readDir(fs, root)._3)
+    val keyTypes = partCols.map(_._2)
+    val splits = SinkVersions.readLatest(fs, root).toSeq.flatMap { m =>
+      val dels = m.dels.map(n => new Path(SinkDeletes.dir(root), n).toString)
+      m.entries.map(e => SinkFileSplit(new Path(root, e.rel).toString,
+        e.values, keyTypes, relPath = e.rel, delManifests = dels))
     }
+    SinkSplitsRead.dataFrame(spark, splits,
+      StructType(dataSchema.fields ++
+        partCols.map { case (c, t) => StructField(c, t) }),
+      partCols.map(_._1), fieldIds)
   }
 }
 
@@ -817,8 +802,9 @@ private[graft] object SinkVersions {
     * would lose the racing publisher's snapshot).
     */
   def tryWrite(fs: FileSystem, root: String, m: SinkManifest): Boolean = {
+    // `_versions/` exists: the catalog's CREATE or the first commit's
+    // base made it
     val d = dir(root)
-    fs.mkdirs(d)
     val tmp = new Path(d, s".tmp-${m.version}-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     // commit wall clock + retention + delete/changes linkage ride the
@@ -860,8 +846,8 @@ private[graft] object SinkDeletes {
 
   def write(fs: FileSystem, root: String, name: String,
             entries: Seq[(String, Long)]): Unit = {
+    // `create` makes a missing `_deletes/`
     val d = dir(root)
-    fs.mkdirs(d)
     val tmp = new Path(d, s".tmp-${java.util.UUID.randomUUID()}")
     val out = fs.create(tmp, true)
     try out.write(entries.sortBy(e => (e._1, e._2)).map { case (rel, pos) =>
@@ -1003,11 +989,12 @@ private object SinkCommit {
   /** The commit base: the latest manifest, read BEFORE anything is
     * renamed into the layout (so the older-layout check never sees this
     * commit's own leaves). A table's first commit creates `_versions/`
-    * first, for the same reason.
+    * first, for the same reason, unless the catalog's CREATE already did.
     */
   private def base(fs: FileSystem, path: String): Option[SinkManifest] = {
     val b = SinkVersions.readLatest(fs, path)
-    if (b.isEmpty) fs.mkdirs(SinkVersions.dir(path))
+    val d = SinkVersions.dir(path)
+    if (b.isEmpty && !fs.exists(d)) fs.mkdirs(d)
     b
   }
 
@@ -1360,8 +1347,9 @@ private object PartitionedSinkWriterFactory {
 
 /** The one writer factory, for batch and streaming tasks alike: they
   * differ only in their staging sub-directory. The session's Hadoop
-  * configuration, the table's bloom settings and field ids and the
-  * row-group size resolve once, on the driver, and ship with it.
+  * configuration (which carries parquet's row-group size), the table's
+  * bloom settings and field ids resolve once, on the driver, and ship
+  * with it.
   * `rowId` = the (`_file`, `_pos`) ordinals of a merge-on-read write's
   * row identity.
   */
@@ -1373,12 +1361,11 @@ private class PartitionedSinkWriterFactory(
   private val conf = PartitionedSinkWriterFactory.sessionConf()
   private val bloom = SinkBloomConf.fromProps(props)
   private val fieldIds = SinkFormat.fieldIds(props)
-  private val rowGroupBytes = SinkParquetWrite.rowGroupBytesFromSession()
 
   private def writer(partitionId: Int, taskId: Long, epoch: Option[Long]) =
     new PartitionedSinkWriter(path, partCols, schema,
       SinkCommit.stagingDir(path, queryId, epoch), partitionId, taskId, conf,
-      bloom, fieldIds, rowGroupBytes, rowId)
+      bloom, fieldIds, rowId)
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = writer(partitionId, taskId, None)
@@ -1400,7 +1387,6 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
                                     conf: org.apache.spark.util.SerializableConfiguration,
                                     bloom: (Seq[String], Int),
                                     fieldIds: Map[String, Int],
-                                    rowGroupBytes: Long,
                                     rowId: Option[(Int, Int)])
     extends DeltaWriter[InternalRow] {
 
@@ -1595,7 +1581,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
         s"part-$partitionId-$taskId-${SinkLayout.valueTag(pvs)}.parquet")
       fs.mkdirs(f.getParent)
       new OpenOut(SinkParquetWrite.open(conf.value, f, dataFields.toSeq,
-        fieldIds, rowGroupBytes), f, 0L, newStats(),
+        fieldIds), f, 0L, newStats(),
         bloomPlan.map { case (_, _, isStr) => new BloomAcc(isStr) })
     })
     o.w.write(row)

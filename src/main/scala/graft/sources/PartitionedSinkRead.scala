@@ -523,26 +523,9 @@ private[sources] class PartitionedSinkScan(
       case _ => prunedFiles
     }
 
-  /** Byte-range split carving: a scan that cannot split a 10 GB file
-    * is one task at 100 TB. A range reads the row groups whose
-    * midpoint lies inside it (ParquetReadOptions.withRange), so
-    * contiguous ranges partition a file's row groups exactly. Files at
-    * or under the threshold stay whole.
-    */
-  private lazy val inputSplits: Array[InputPartition] = {
-    val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
-    limitedFiles.flatMap { e =>
-      if (e.size <= maxSplit)
-        Seq(SinkFileSplit(abs(e), e.values, keyTypes,
-          relPath = e.rel, delManifests = activeDeleteManifests)
-          : InputPartition)
-      else (0L until e.size by maxSplit).map(s =>
-        SinkFileSplit(abs(e), e.values, keyTypes,
-          s, math.min(maxSplit, e.size - s),
-          relPath = e.rel, delManifests = activeDeleteManifests)
-          : InputPartition)
-    }.toArray
-  }
+  private lazy val inputSplits: Array[InputPartition] =
+    SinkFileSplit.carve(limitedFiles.map(e => SinkFileSplit(abs(e), e.values,
+      keyTypes, relPath = e.rel, delManifests = activeDeleteManifests) -> e.size))
 
   override def planInputPartitions(): Array[InputPartition] =
     if (runtimeTupleKeep.isEmpty && runtimeSkipFilters.isEmpty) inputSplits
@@ -749,21 +732,6 @@ private[sources] object SinkRuntimePrune {
   }
 }
 
-/** Split-size knob shared by the batch scan and the streaming tail. */
-private object SinkSplitConf {
-  def maxSplitBytes(sess: SparkSession): Long = {
-    val v = sess.conf.getOption("spark.graft.sink.maxSplitBytes")
-      .map(_.toLong)
-      .getOrElse(sess.sessionState.conf.filesMaxPartitionBytes)
-    // reject instead of clamp: a non-positive threshold would carve one
-    // InputPartition per byte — task-count and driver-memory blowup on
-    // any real file; mirrors Spark's validation of filesMaxPartitionBytes
-    require(v > 0,
-      s"spark.graft.sink.maxSplitBytes must be positive, got $v")
-    v
-  }
-}
-
 /** Streaming READ of a sink table — `spark.readStream.table("cat.t")`
   * tails the layout with the seen-map + batch-log design of Spark's
   * own FileStreamSource: the OFFSET is a single generation number
@@ -923,20 +891,9 @@ private class PartitionedSinkMicroBatchStream(
         e.bloom.flatMap(blobs.get(_).flatMap(_.get(e.rel))).forall(bm =>
           skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
     }
-    // byte-range carving, same contract as the batch scan: a giant
-    // epoch file must not become one task. Deterministic under replay
-    // because published files are immutable — the same file always
-    // carves into the same ranges
     val keyTypes = partCols.map(c => fullSchema(c).dataType)
-    val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
-    kept.sortBy(_._1)
-      .flatMap { case (file, e) =>
-        if (e.size <= maxSplit)
-          Seq(SinkFileSplit(file, e.values, keyTypes): InputPartition)
-        else (0L until e.size by maxSplit).map(s =>
-          SinkFileSplit(file, e.values, keyTypes,
-            s, math.min(maxSplit, e.size - s)): InputPartition)
-      }.toArray
+    SinkFileSplit.carve(kept.sortBy(_._1).map { case (file, e) =>
+      SinkFileSplit(file, e.values, keyTypes) -> e.size })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
@@ -969,6 +926,32 @@ private[sources] case class SinkFileSplit(file: String, partValues: Seq[String],
   override def partitionKey(): InternalRow =
     InternalRow.fromSeq(partValues.zip(keyTypes).map { case (v, t) =>
       SinkParquetResolve.castValue(v, t) })
+}
+
+/** Byte-range split carving, shared by the batch scan, the micro-batch
+  * tail and the change feed: a scan that cannot split a 10 GB file is
+  * one task at 100 TB. A range reads the row groups whose midpoint lies
+  * inside it (ParquetReadOptions.withRange), so contiguous ranges
+  * partition a file's row groups exactly, and the same file always
+  * carves into the same ranges (deterministic under streaming replay).
+  * Files at or under Spark's own `spark.sql.files.maxPartitionBytes`
+  * stay whole.
+  */
+private[sources] object SinkFileSplit {
+  /** Each whole-file split with its file's byte size, carved. */
+  def carve(files: Seq[(SinkFileSplit, Long)]): Array[InputPartition] = {
+    val max = SparkSession.active.sessionState.conf.filesMaxPartitionBytes
+    // reject instead of clamp: a non-positive threshold would carve one
+    // split per byte — task-count and driver-memory blowup on any real
+    // file
+    require(max > 0,
+      s"spark.sql.files.maxPartitionBytes must be positive, got $max")
+    files.flatMap { case (whole, size) =>
+      if (size <= max) Seq(whole)
+      else (0L until size by max).map(s =>
+        whole.copy(start = s, length = math.min(max, size - s)))
+    }.toArray
+  }
 }
 
 /** Every sink split decodes through the one columnar reader

@@ -213,38 +213,23 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
       end.asInstanceOf[VersionOffset].v)
     val f = fs
     val keyTypes = partCols.map(c => tableSchema(c).dataType)
-    val maxSplit = SinkSplitConf.maxSplitBytes(SparkSession.active)
     // each version's manifest is read once; version 0 is the empty
     // table before the first commit
     def manifest(v: Long): SinkManifest =
       if (v == 0L) SinkManifest(0L, Seq.empty)
       else SinkVersions.read(f, path, v)
-    def carve(file: Path, len: Long, values: Seq[String], kts: Seq[DataType],
-              extras: Seq[(String, String)], inline: Boolean = false,
-              rel: String = "", delManifests: Seq[String] = Seq.empty,
-              invert: Boolean = false): Seq[InputPartition] = {
-      if (len <= maxSplit)
-        Seq(SinkFileSplit(file.toString, values, kts, extras = extras,
-          inlineParts = inline, relPath = rel, delManifests = delManifests,
-          invertDeletes = invert))
-      else (0L until len by maxSplit).map(o =>
-        SinkFileSplit(file.toString, values, kts,
-          o, math.min(maxSplit, len - o), extras, inlineParts = inline,
-          relPath = rel, delManifests = delManifests,
-          invertDeletes = invert))
-    }
     def files(m: SinkManifest) = m.entries.map(x => x.rel -> x).toMap
     val first = manifest(s)
     var prev = files(first)
     var prevDels = first.dels.toSet
-    (s + 1 to e).flatMap { v =>
+    val whole = (s + 1 to e).flatMap { v =>
       val m = manifest(v)
       val cur = files(m)
       val curDels = m.dels.toSet
       val extras = (t: String) => Seq(
         SinkChangeFeed.ChangeTypeCol -> t,
         SinkChangeFeed.CommitVersionCol -> v.toString)
-      val out: Seq[InputPartition] =
+      val out: Seq[(SinkFileSplit, Long)] =
         m.changesDir match {
           case Some(dirName) =>
             // ROW-GRAIN: the commit persisted its exact change rows
@@ -261,8 +246,9 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
                   .filter(st => st.isFile &&
                     st.getPath.getName.endsWith(".parquet"))
                   .sortBy(_.getPath.getName)
-                  .flatMap(st => carve(st.getPath, st.getLen, Seq.empty,
-                    Seq.empty, extras(changeType), inline = true))
+                  .map(st => SinkFileSplit(st.getPath.toString, Seq.empty,
+                    Seq.empty, extras = extras(changeType),
+                    inlineParts = true) -> st.getLen)
               }
           case None =>
             // FILE-GRAIN manifest diff, plus — for merge-on-read
@@ -283,19 +269,20 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
                 .map(r => (r, cur(r), "insert", manifestPaths(curDels))) ++
                 prev.keySet.diff(cur.keySet).toSeq.sorted
                   .map(r => (r, prev(r), "delete", manifestPaths(prevDels)))
-            val fileGrain = changed.flatMap { case (rel, x, t, dm) =>
-              carve(new Path(path, rel), x.size, x.values, keyTypes,
-                extras(t), rel = rel, delManifests = dm)
+            val fileGrain = changed.map { case (rel, x, t, dm) =>
+              SinkFileSplit(new Path(path, rel).toString, x.values, keyTypes,
+                extras = extras(t), relPath = rel, delManifests = dm) -> x.size
             }
             val newDels = curDels.diff(prevDels).toSeq.sorted
             val posGrain = newDels.flatMap { m =>
               val abs = new Path(path, s"_deletes/$m")
               // a delete manifest names only files live at v
               SinkDeletes.read(f, abs).map(_._1).distinct.sorted
-                .flatMap(cur.get).flatMap { x =>
-                  carve(new Path(path, x.rel), x.size, x.values, keyTypes,
-                    extras("delete"), rel = x.rel,
-                    delManifests = Seq(abs.toString), invert = true)
+                .flatMap(cur.get).map { x =>
+                  SinkFileSplit(new Path(path, x.rel).toString, x.values,
+                    keyTypes, extras = extras("delete"), relPath = x.rel,
+                    delManifests = Seq(abs.toString),
+                    invertDeletes = true) -> x.size
                 }
             }
             fileGrain ++ posGrain
@@ -303,7 +290,8 @@ private class SinkChangeFeedStream(path: String, partCols: Seq[String],
       prev = cur
       prevDels = curDels
       out
-    }.toArray
+    }
+    SinkFileSplit.carve(whole)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =

@@ -4,7 +4,7 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.ParquetWriter
+import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
 import org.apache.parquet.hadoop.api.WriteSupport
 import org.apache.parquet.hadoop.metadata.CompressionCodecName
 import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
@@ -373,25 +373,18 @@ private[graft] object SinkParquetWrite {
         : WriteSupport[InternalRow] = ws
   }
 
-  /** Row-group size knob (session conf, driver-resolved): smaller
-    * groups = finer row-group skipping and lower task memory, larger
-    * = better scan throughput. Parquet's 128 MB default otherwise.
+  /** The row-group size is parquet's own `parquet.block.size` (128 MB
+    * by default): smaller groups = finer row-group skipping and lower
+    * task memory, larger = better scan throughput. A session setting
+    * reaches `conf` through the session's Hadoop configuration.
     */
-  final val RowGroupBytesKey = "spark.graft.sink.parquet.rowGroupBytes"
-
-  def rowGroupBytesFromSession(): Long = {
-    val v = org.apache.spark.sql.SparkSession.active.conf
-      .getOption(RowGroupBytesKey).map(_.toLong)
-      .getOrElse(ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
-    require(v > 0, s"$RowGroupBytesKey must be positive, got $v")
-    v
-  }
-
   def open(conf: Configuration, path: Path,
            dataFields: Seq[(StructField, Int)],
-           fieldIds: Map[String, Int],
-           rowGroupBytes: Long = ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
-      : ParquetWriter[InternalRow] = {
+           fieldIds: Map[String, Int]): ParquetWriter[InternalRow] = {
+    val rowGroupBytes = conf.getLong(ParquetOutputFormat.BLOCK_SIZE,
+      ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
+    require(rowGroupBytes > 0,
+      s"${ParquetOutputFormat.BLOCK_SIZE} must be positive, got $rowGroupBytes")
     val schema = messageType(dataFields.map(_._1), fieldIds)
     new Builder(HadoopOutputFile.fromPath(path, conf),
       new RowWriteSupport(schema, dataFields))

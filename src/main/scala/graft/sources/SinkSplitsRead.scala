@@ -7,14 +7,13 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
 /** Driver-assembled DataFrame over EXPLICIT sink splits, for internal
-  * jobs that need the resolution graft puts in front of Spark's
-  * parquet decoder, which a plain name-based `spark.read.parquet`
-  * does not have:
+  * jobs ([[PartitionedSink.readBack]], the row-grain change diff) that
+  * need the resolution graft puts in front of Spark's parquet decoder,
+  * which a plain name-based `spark.read.parquet` does not have:
   *
   *   - FIELD-ID column resolution, so a table that RENAMEd a column
-  *     reads its pre-rename files correctly (the name-based
-  *     [[PartitionedSink.readPaths]] would serve NULL — wrong
-  *     row-grain CDC rows after a rename);
+  *     reads its pre-rename files correctly (a name-based read would
+  *     serve NULL — wrong row-grain CDC rows after a rename);
   *   - the merge-on-read POSITION-DELETE mask, so a diff's "before"
   *     side sees exactly the rows a table scan of that snapshot saw
   *     (rows already MOR-deleted must not re-delete).

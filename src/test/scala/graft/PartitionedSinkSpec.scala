@@ -86,6 +86,31 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(back.count() === 0)
   }
 
+  test("readBack reads the table: merge-on-read deletes stay deleted, renamed columns keep their values") {
+    import spark.implicits._
+    val root = tmpDir("sink_rb_table")
+    spark.conf.set("spark.sql.catalog.graft_rbt_spec",
+      classOf[graft.sources.PartitionedSinkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_rbt_spec.root", root)
+    Seq((1L, 1.0, "a", "A"), (2L, 2.0, "b", "A"), (3L, 3.0, "c", "B"))
+      .toDF("k", "v", "s", "p").coalesce(1)
+      .writeTo("graft_rbt_spec.t").partitionedBy(col("p"))
+      .tableProperty("graft.deleteMode", "mor").create()
+    spark.sql("DELETE FROM graft_rbt_spec.t WHERE k = 2")
+    spark.sql("ALTER TABLE graft_rbt_spec.t RENAME COLUMN s TO label")
+    val renamed = StructType(Seq(StructField("k", LongType),
+      StructField("v", DoubleType), StructField("label", StringType)))
+    val back = PartitionedSink.readBack(spark, s"$root/t", renamed, "p")
+      .collect().map(r => (r.getLong(0), r.getDouble(1),
+        r.getString(2), r.getString(3))).toSet
+    assert(back === Set((1L, 1.0, "a", "A"), (3L, 3.0, "c", "B")),
+      "readBack must agree with a scan of the table")
+    assert(back === spark.table("graft_rbt_spec.t").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
+        r.getString(3))).toSet)
+    spark.sql("DROP TABLE graft_rbt_spec.t")
+  }
+
   /** Rewrite a catalog table's sidecar as if CREATE had recorded
     * `graft.format = <format>` (what tables created while the key
     * existed carry).
@@ -550,7 +575,7 @@ class PartitionedSinkSpec extends SparkSpec {
     assert(after.count() === 6)
     assert(!new File(s"$root/t/y=2024/m=1/dd=2").exists,
       "cleared leaves (and their emptied parents, if any) are gone")
-    // multi-col readBack round-trips through plain partition discovery
+    // multi-col readBack round-trips the manifest's partition values
     val rb = graft.sources.PartitionedSink.readBackParts(spark, s"$root/t",
       StructType(Seq(StructField("k", LongType))),
       Seq("y" -> IntegerType, "m" -> IntegerType, "dd" -> IntegerType))
@@ -801,7 +826,7 @@ class PartitionedSinkSpec extends SparkSpec {
       // the classic boundary sweep: prime-ish thresholds place the
       // range cut at line starts, line ends, and every mid-line offset
       for (threshold <- Seq(7, 23, 64, 301, 999)) {
-        spark.conf.set("spark.graft.sink.maxSplitBytes", threshold.toString)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", threshold.toString)
         assert(read() === expected,
           s"threshold=$threshold must read every row exactly once")
         assert(splits(spark.table("graft_rg_spec.t")) > 2,
@@ -810,10 +835,10 @@ class PartitionedSinkSpec extends SparkSpec {
       // carved scans must NOT report key-grouped clustering (grouping
       // would re-serialize the ranges into one task per value): the
       // row-RDD partition count exceeds the 2 partition values
-      spark.conf.set("spark.graft.sink.maxSplitBytes", "64")
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
       assert(spark.table("graft_rg_spec.t").rdd.getNumPartitions > 2,
         "carved ranges must execute in parallel, not one task per value")
-    } finally spark.conf.unset("spark.graft.sink.maxSplitBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     // default threshold: whole files, key grouping restored
     assert(splits(spark.table("graft_rg_spec.t")) === 2)
     assert(spark.table("graft_rg_spec.t").rdd.getNumPartitions === 2)
@@ -1546,12 +1571,12 @@ class PartitionedSinkSpec extends SparkSpec {
     // ONE file, many small row groups, k naturally banded by write
     // order — the manifest-level file skip cannot help (one file spans
     // the whole range); only the row-group grain can
-    spark.conf.set(graft.sources.SinkParquetWrite.RowGroupBytesKey, "65536")
+    spark.conf.set("parquet.block.size", "65536")
     try {
       (1L to 60000L).map(i => (i, s"v-$i-${"w" * 20}", "A"))
         .toDF("k", "s", "p").coalesce(1)
         .writeTo("graft_rgs_spec.t").partitionedBy(col("p")).create()
-    } finally spark.conf.unset(graft.sources.SinkParquetWrite.RowGroupBytesKey)
+    } finally spark.conf.unset("parquet.block.size")
     // several row groups actually materialized?
     val file = new File(s"$root/t/p=A").listFiles()
       .filter(f => f.getName.endsWith(".parquet")).head
@@ -1591,10 +1616,10 @@ class PartitionedSinkSpec extends SparkSpec {
     rows.toDF("k", "s", "p").coalesce(1)
       .writeTo("graft_pqcv_spec.t").partitionedBy(col("p")).create()
     val expected = rows.map(_._1).sum
-    val prev = spark.conf.getOption("spark.graft.sink.maxSplitBytes")
+    val prev = spark.conf.getOption("spark.sql.files.maxPartitionBytes")
     try {
       for (threshold <- Seq(1L << 14, 1L << 16, 1L << 20, Long.MaxValue / 2)) {
-        spark.conf.set("spark.graft.sink.maxSplitBytes", threshold.toString)
+        spark.conf.set("spark.sql.files.maxPartitionBytes", threshold.toString)
         val got = spark.table("graft_pqcv_spec.t")
           .agg(org.apache.spark.sql.functions.sum("k")).collect()(0).getLong(0)
         assert(got === expected,
@@ -1602,8 +1627,8 @@ class PartitionedSinkSpec extends SparkSpec {
       }
     } finally {
       prev match {
-        case Some(v) => spark.conf.set("spark.graft.sink.maxSplitBytes", v)
-        case None => spark.conf.unset("spark.graft.sink.maxSplitBytes")
+        case Some(v) => spark.conf.set("spark.sql.files.maxPartitionBytes", v)
+        case None => spark.conf.unset("spark.sql.files.maxPartitionBytes")
       }
     }
     spark.sql("DROP TABLE graft_pqcv_spec.t")

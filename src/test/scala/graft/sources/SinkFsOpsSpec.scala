@@ -8,8 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * is the only membership and stats source, so planning costs one
   * `_versions/` listing and one manifest open whatever the leaf count,
   * and never lists a leaf or stats a data file. A commit: one `mkdirs`
-  * per leaf it publishes into, and no `delete` of a name it renames
-  * onto (batch and row-level names are query-unique).
+  * per leaf it publishes into, none elsewhere once the table exists
+  * (CREATE makes `_versions/` once), and no `delete` of a name it
+  * renames onto (batch and row-level names are query-unique).
   */
 class SinkFsOpsSpec extends AnyFunSuite {
   private lazy val spark = graft.TestSpark.spark
@@ -127,5 +128,35 @@ class SinkFsOpsSpec extends AnyFunSuite {
       spark.sql(s"DELETE FROM $t WHERE k = $k").collect())
     assertPublishOps(dir, deleteOps, files = 1, leaves = 1, "COW DELETE")
     assert(spark.table(t).count() === 191L)
+  }
+
+  /** The driver's `mkdirs` of paths under `dir` that are not partition
+    * leaves.
+    */
+  private def nonLeafMkdirs(dir: String, ops: Seq[FaultyFileSystem.Op]): Seq[String] =
+    ops.filter(o => o.kind == "mkdirs" && o.path.startsWith(dir) &&
+      !o.path.split('/').last.contains("=")).map(_.path)
+
+  test("a 24-leaf create makes _versions/ once; an append and a merge-on-read DELETE mkdirs only their leaves") {
+    import spark.implicits._
+    val dir = catalog("graft_opsmk_spec")
+    val t = "graft_opsmk_spec.t"
+    val rows = for (y <- 1 to 2; d <- 1 to 12) yield (y * 100L + d, y, d)
+    val (_, createOps) = FaultyFileSystem.driverOps(
+      rows.toDF("k", "y", "d").repartition(col("y"), col("d"))
+        .writeTo(t).tableProperty("graft.deleteMode", "mor")
+        .partitionedBy(col("y"), col("d")).create())
+    assert(nonLeafMkdirs(dir, createOps) === Seq(s"$dir/_versions"),
+      "create: one mkdirs of _versions/ and none elsewhere outside the leaves")
+    assertPublishOps(dir, createOps, files = 24, leaves = 24, "create")
+    val (_, appendOps) = FaultyFileSystem.driverOps(
+      Seq((999L, 1, 1)).toDF("k", "y", "d").writeTo(t).append())
+    assert(nonLeafMkdirs(dir, appendOps).isEmpty, "append: leaves only")
+    assertPublishOps(dir, appendOps, files = 1, leaves = 1, "append")
+    val (_, deleteOps) = FaultyFileSystem.driverOps(
+      spark.sql(s"DELETE FROM $t WHERE k = 107").collect())
+    assert(deleteOps.count(_.kind == "mkdirs") === 0,
+      s"merge-on-read DELETE: no mkdirs, got ${deleteOps.filter(_.kind == "mkdirs")}")
+    assert(spark.table(t).count() === 24L)
   }
 }

@@ -141,7 +141,7 @@ class SinkPublishSpec extends AnyFunSuite {
       .length === 3)
     // and a giant epoch file carves into byte ranges on the tail too —
     // rows exactly once across the ranges (batch-twin read compares)
-    spark.conf.set("spark.graft.sink.maxSplitBytes", "16")
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
     try {
       val b3 = new PartitionedSinkScanBuilder(s"$root/t", Seq("p"), schema)
       val s3 = b3.build().toMicroBatchStream(ckpt("stail_ck3"))
@@ -158,7 +158,7 @@ class SinkPublishSpec extends AnyFunSuite {
       }
       assert(rows.sorted.toSeq === (1L to 30L),
         "ranged tail reads every row exactly once")
-    } finally spark.conf.unset("spark.graft.sink.maxSplitBytes")
+    } finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
     spark.sql("DROP TABLE graft_st_spec.t")
   }
 
