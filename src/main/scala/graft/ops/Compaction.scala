@@ -3,20 +3,19 @@ package graft.ops
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
-/** Small-file compaction — the standing maintenance job of any
-  * long-lived lake. Streaming micro-batches and daily incremental
-  * appends (the reference's write pattern) accumulate files far below
-  * the scan-efficient size; at scale the file count, not the byte
-  * count, becomes the bottleneck (driver listing time, task-per-file
-  * scheduling, parquet footer overhead).
+/** Small-file compaction and table maintenance for sink tables — the
+  * standing jobs of any long-lived lake. Streaming micro-batches and
+  * daily incremental appends (the reference's write pattern)
+  * accumulate files far below the scan-efficient size; at scale the
+  * file count, not the byte count, becomes the bottleneck (driver
+  * listing time, task-per-file scheduling, parquet footer overhead).
   *
-  * Strategy: read the directory, repartition to ⌈bytes/target⌉, write
-  * to a sibling temp dir, then swap via two FileSystem renames (the
-  * closest a generic FS offers to atomicity; object stores with
-  * non-atomic rename want a manifest/table format instead — out of
-  * scope here, noted for honesty). Readers racing the swap see the old
-  * or the new listing, never a mix. Partitioned layouts compose: run
-  * per leaf partition directory.
+  * Compaction is a write like any other: [[compactSinkTable]] rewrites
+  * fragmented partitions through the table's own dynamic overwrite,
+  * so it publishes with the same all-or-nothing version-manifest
+  * commit every sink write uses — readers see the old or the new
+  * files, never a mix, on any filesystem. Alongside it: the per-file
+  * view ([[tableFiles]]) and the staging/vacuum sweeps.
   */
 object Compaction {
 
@@ -26,44 +25,16 @@ object Compaction {
     */
   final val MinVacuumAgeMs: Long = 10L * 60 * 1000
 
-  /** Compact one flat parquet directory. Returns (filesBefore,
-    * filesAfter). Row content is preserved exactly; file boundaries
-    * are not (repartition redistributes rows round-robin).
-    */
-  def compactParquet(spark: SparkSession, dir: String,
-                     targetBytes: Long = 128L * 1024 * 1024): (Int, Int) = {
-    val path = new Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    def dataFiles(p: Path): Int =
-      fs.listStatus(p).count(s => s.isFile && s.getPath.getName.endsWith(".parquet"))
-    val before = dataFiles(path)
-    val totalBytes = fs.getContentSummary(path).getLength
-    val parts = math.max(1L, (totalBytes + targetBytes - 1) / targetBytes).toInt
-    if (parts >= before) return (before, before) // already compact enough
-    val tmp = new Path(path.getParent, path.getName + "__compact_tmp")
-    val old = new Path(path.getParent, path.getName + "__compact_old")
-    spark.read.parquet(dir).repartition(parts)
-      .write.mode("overwrite").parquet(tmp.toString)
-    if (!fs.rename(path, old))
-      throw new java.io.IOException(s"compaction swap failed: $path -> $old")
-    if (!fs.rename(tmp, path)) {
-      fs.rename(old, path) // roll back; original data untouched
-      throw new java.io.IOException(s"compaction swap failed: $tmp -> $path")
-    }
-    fs.delete(old, true)
-    (before, dataFiles(path))
-  }
-
   /** Compact a [[graft.sources.PartitionedSinkCatalog]] table's
     * fragmented partitions THROUGH THE TABLE'S OWN COMMIT PROTOCOL —
     * compaction is literally a dynamic partition overwrite of the
     * partitions being compacted: read the fragmented partitions via
     * `spark.table`, cluster rows by the partition column (one task per
     * value ⇒ one file per value), and publish with
-    * `writeTo(...).overwritePartitions()`. Unlike the rename-swap of
-    * [[compactParquet]], readers never race even on object stores —
-    * the publish is the same all-or-nothing manifest commit every sink
-    * write uses, and untouched partitions are untouched files.
+    * `writeTo(...).overwritePartitions()`. Readers never race, even on
+    * object stores: the publish is the same all-or-nothing manifest
+    * commit every sink write uses, and untouched partitions are
+    * untouched files.
     *
     * Only partitions with more than `maxFilesPerPartition` data files
     * are rewritten. Returns (partitionValue → filesBefore) for the

@@ -1102,35 +1102,45 @@ object EventQueries {
       // fixed-point integer recurrence (long division truncates
       // identically on the all-positive values), so the oracle's
       // unrolled CTEs still hash-match.
+      // The edge list is persisted once, already partitioned; the 20-row
+      // result is collected here and both persisted RDDs are released
+      // before the query returns (nothing later reads them).
       val sc = s.sparkContext
-      val biR = bi.rdd.map(r => (r.getString(0), r.getString(1)))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       // node count ~ catalog-sized; a handful of partitions keeps late
       // stages dense (the CC loop's rowsPerPartition discipline)
       val p = new org.apache.spark.HashPartitioner(
         math.min(sc.defaultParallelism, 8))
-      val biP = biR.partitionBy(p)
+      val biP = bi.rdd.map(r => (r.getString(0), r.getString(1)))
+        .partitionBy(p)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      val degR = biR.mapValues(_ => 1L).reduceByKey(p, _ + _)
+      // co-partitioned with biP: the degree count shuffles nothing
+      val degR = biP.mapValues(_ => 1L).reduceByKey(p, _ + _)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      // bounded driver scalar: the node COUNT only. Floored at 1 so an
-      // edgeless corpus (empty/sparse input) divides safely — deg is
-      // empty then, so every downstream relation is empty regardless.
-      val n = math.max(degR.count(), 1L)
-      val base = (15L * unit) / (100L * n)
-      var ranksR = degR.mapValues(dg => (dg, unit / n)) // (outdeg, r)
-      for (_ <- 1 to iters) {
-        val contrib = biP.join(ranksR)
-          .map { case (_, (dst, (dg, r))) => (dst, r / dg) }
-          .reduceByKey(p, _ + _)
-        ranksR = degR.leftOuterJoin(contrib).mapValues { case (dg, c) =>
-          (dg, base + (85L * c.getOrElse(0L)) / 100L)
-        }
-      }
       import s.implicits._
-      s.createDataset(ranksR.map { case (node, (_, r)) => (node, r) })
-        .toDF("node", "rank_units")
-        .orderBy(col("rank_units").desc, col("node")).limit(20)
+      val top = try {
+        // bounded driver scalar: the node COUNT only. Floored at 1 so an
+        // edgeless corpus (empty/sparse input) divides safely — deg is
+        // empty then, so every downstream relation is empty regardless.
+        val n = math.max(degR.count(), 1L)
+        val base = (15L * unit) / (100L * n)
+        var ranksR = degR.mapValues(dg => (dg, unit / n)) // (outdeg, r)
+        for (_ <- 1 to iters) {
+          val contrib = biP.join(ranksR)
+            .map { case (_, (dst, (dg, r))) => (dst, r / dg) }
+            .reduceByKey(p, _ + _)
+          ranksR = degR.leftOuterJoin(contrib).mapValues { case (dg, c) =>
+            (dg, base + (85L * c.getOrElse(0L)) / 100L)
+          }
+        }
+        s.createDataset(ranksR.map { case (node, (_, r)) => (node, r) })
+          .toDF("node", "rank_units")
+          .orderBy(col("rank_units").desc, col("node")).limit(20)
+          .as[(String, Long)].collect()
+      } finally {
+        biP.unpersist(blocking = false)
+        degR.unpersist(blocking = false)
+      }
+      top.toSeq.toDF("node", "rank_units")
     },
     Some("""
       WITH edges AS (

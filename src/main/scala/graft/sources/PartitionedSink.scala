@@ -24,7 +24,8 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * — MULTI-LEVEL nested partition directories, one LEAF directory per
   * partition-value TUPLE (the reference's own lake is three-level
   * `flight_year/flight_month/flight_day`, extract_flights.py:96-99),
-  * parquet data files holding the data columns (see [[SinkParquetWrite]]),
+  * parquet data files holding the data columns (written by Spark's own
+  * parquet writer, see [[SinkFormat]]),
   * and a version manifest per commit (`_versions/<v>`, see
   * [[SinkVersions]]) naming the live files with their facts.
   * Readable back through [[PartitionedSink.readBack]] (the manifest's
@@ -521,17 +522,20 @@ private case class SinkCommitMessage(files: Seq[StagedFile],
   * ineligible — float equality is a precision trap, bbee179). It is
   * persisted in the catalog sidecar (or set as a path-API option), so
   * it binds every writer of the table. Writers accumulate each file's
-  * DISTINCT values (bounded: `graft.bloomMaxDistinct` values, default
-  * 131072, strings additionally capped at 8 MB cumulative — overflow
-  * drops the filter for that file-column: degraded to a scan, never
-  * wrong) and serialize a right-sized filter at task commit (1 % false
-  * positives). The commit writes them to one [[SinkBlooms]] blob,
-  * named by each file's manifest line; the scan probes them for
-  * EqualTo/In skip filters after the min/max pass.
+  * DISTINCT values (bounded: [[SinkBloomConf.MaxDistinct]] values,
+  * strings additionally capped at 8 MB cumulative — overflow drops the
+  * filter for that file-column: degraded to a scan, never wrong) and
+  * serialize a right-sized filter at task commit (1 % false positives).
+  * The commit writes them to one [[SinkBlooms]] blob, named by each
+  * file's manifest line; the scan probes them for EqualTo/In skip
+  * filters after the min/max pass.
   */
 private[graft] object SinkBloomConf {
   final val PropColumns = "graft.bloomColumns"
-  final val PropMaxDistinct = "graft.bloomMaxDistinct"
+  /** Distinct values per file-column past which the filter is dropped:
+    * a 1 % filter over 131,072 keys is ~160 KB.
+    */
+  final val MaxDistinct = 131072
   final val Fpp = 0.01
   final val MaxStringBytes = 8L << 20
 
@@ -540,15 +544,11 @@ private[graft] object SinkBloomConf {
     case _ => false
   }
 
-  /** (columns, maxDistinct) from the table's properties. */
-  def fromProps(props: Map[String, String]): (Seq[String], Int) = {
-    val cols = props.get(PropColumns)
+  /** The bloom columns named by the table's properties. */
+  def columns(props: Map[String, String]): Seq[String] =
+    props.get(PropColumns)
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
       .getOrElse(Seq.empty)
-    val maxD = props.get(PropMaxDistinct).map(_.toInt).getOrElse(131072)
-    require(maxD > 0, s"$PropMaxDistinct must be positive, got $maxD")
-    (cols, maxD)
-  }
 }
 
 /** Bloom BLOBS: `_blooms/<name>`, one per commit that wrote filters,
@@ -1343,13 +1343,55 @@ private object PartitionedSinkWriterFactory {
   def sessionConf(): org.apache.spark.util.SerializableConfiguration =
     new org.apache.spark.util.SerializableConfiguration(
       SparkSession.active.sessionState.newHadoopConf())
+
+  /** The data columns as Spark's parquet writer sees them: every level
+    * nullable (optional fields, as every sink file has always had) and
+    * the table's field id as `parquet.field.id` metadata on top-level
+    * columns only (nested fields are not independently renameable).
+    */
+  def dataSchema(fields: Seq[StructField],
+                 fieldIds: Map[String, Int]): StructType = {
+    def optional(dt: DataType): DataType = dt match {
+      case s: StructType => StructType(s.fields.map(f =>
+        StructField(f.name, optional(f.dataType))))
+      case a: ArrayType => ArrayType(optional(a.elementType))
+      case other => other
+    }
+    StructType(fields.map { f =>
+      StructField(f.name, optional(f.dataType), nullable = true,
+        fieldIds.get(f.name).fold(Metadata.empty)(id =>
+          new MetadataBuilder().putLong("parquet.field.id", id.toLong).build()))
+    })
+  }
+
+  /** Spark's own parquet output path for `dataSchema`, prepared on the
+    * driver: the writer factory plus the session's Hadoop configuration
+    * with the writer's settings (codec, schema, field-id writing) set.
+    * The row-group size is parquet's `parquet.block.size`.
+    */
+  def prepareParquet(dataSchema: StructType)
+      : (org.apache.spark.sql.execution.datasources.OutputWriterFactory,
+         org.apache.spark.util.SerializableConfiguration) = {
+    import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
+    val spark = SparkSession.active
+    val job = org.apache.hadoop.mapreduce.Job.getInstance(
+      spark.sessionState.newHadoopConf())
+    val rowGroupBytes = job.getConfiguration.getLong(
+      ParquetOutputFormat.BLOCK_SIZE, ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
+    require(rowGroupBytes > 0,
+      s"${ParquetOutputFormat.BLOCK_SIZE} must be positive, got $rowGroupBytes")
+    val out = new org.apache.spark.sql.execution.datasources.parquet
+      .ParquetFileFormat().prepareWrite(spark, job, Map.empty, dataSchema)
+    (out, new org.apache.spark.util.SerializableConfiguration(
+      job.getConfiguration))
+  }
 }
 
 /** The one writer factory, for batch and streaming tasks alike: they
-  * differ only in their staging sub-directory. The session's Hadoop
-  * configuration (which carries parquet's row-group size), the table's
-  * bloom settings and field ids resolve once, on the driver, and ship
-  * with it.
+  * differ only in their staging sub-directory. Spark's parquet writer
+  * (with the session's Hadoop configuration, see
+  * [[PartitionedSinkWriterFactory.prepareParquet]]) and the table's
+  * bloom columns resolve once, on the driver, and ship with it.
   * `rowId` = the (`_file`, `_pos`) ordinals of a merge-on-read write's
   * row identity.
   */
@@ -1358,14 +1400,17 @@ private class PartitionedSinkWriterFactory(
     props: Map[String, String], rowId: Option[(Int, Int)])
     extends DeltaWriterFactory
     with org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory {
-  private val conf = PartitionedSinkWriterFactory.sessionConf()
-  private val bloom = SinkBloomConf.fromProps(props)
-  private val fieldIds = SinkFormat.fieldIds(props)
+  private val dataSchema = PartitionedSinkWriterFactory.dataSchema(
+    schema.fields.filterNot(f => partCols.contains(f.name)).toSeq,
+    SinkFormat.fieldIds(props))
+  private val (parquetOut, conf) =
+    PartitionedSinkWriterFactory.prepareParquet(dataSchema)
+  private val bloomCols = SinkBloomConf.columns(props)
 
   private def writer(partitionId: Int, taskId: Long, epoch: Option[Long]) =
-    new PartitionedSinkWriter(path, partCols, schema,
-      SinkCommit.stagingDir(path, queryId, epoch), partitionId, taskId, conf,
-      bloom, fieldIds, rowId)
+    new PartitionedSinkWriter(path, partCols, schema, dataSchema,
+      SinkCommit.stagingDir(path, queryId, epoch), partitionId, taskId,
+      parquetOut, conf, bloomCols, rowId)
 
   override def createWriter(partitionId: Int, taskId: Long)
       : DeltaWriter[InternalRow] = writer(partitionId, taskId, None)
@@ -1382,11 +1427,12 @@ private class PartitionedSinkWriterFactory(
   * everything it staged.
   */
 private class PartitionedSinkWriter(path: String, partCols: Seq[String],
-                                    schema: StructType, staging: Path,
+                                    schema: StructType, dataSchema: StructType,
+                                    staging: Path,
                                     partitionId: Int, taskId: Long,
+                                    parquetOut: org.apache.spark.sql.execution.datasources.OutputWriterFactory,
                                     conf: org.apache.spark.util.SerializableConfiguration,
-                                    bloom: (Seq[String], Int),
-                                    fieldIds: Map[String, Int],
+                                    bloomCols: Seq[String],
                                     rowId: Option[(Int, Int)])
     extends DeltaWriter[InternalRow] {
 
@@ -1395,8 +1441,12 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
   private lazy val partIdxs: Array[Int] = partCols.map(schema.fieldIndex).toArray
   private val dataFields = schema.fields.zipWithIndex
     .filterNot { case (f, _) => partCols.contains(f.name) }
-
-  private val (bloomCols, bloomMaxDistinct) = bloom
+  /** The data columns of the incoming row, as the parquet writer's row. */
+  private val dataRow = org.apache.spark.sql.catalyst.ProjectingInternalRow(
+    dataSchema, dataFields.map(_._2).toIndexedSeq)
+  private lazy val taskContext =
+    new org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl(conf.value,
+      new org.apache.hadoop.mapreduce.TaskAttemptID())
   /** (column name, schema ordinal, string?) per bloom-enabled column
     * present in the data fields with an eligible type.
     */
@@ -1427,7 +1477,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
         }
       if (seen.add(v)) {
         if (isString) strBytes += v.asInstanceOf[String].length
-        if (seen.size > bloomMaxDistinct ||
+        if (seen.size > SinkBloomConf.MaxDistinct ||
           strBytes > SinkBloomConf.MaxStringBytes) { over = true; seen.clear() }
       }
     }
@@ -1546,7 +1596,7 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
   }
 
   private final class OpenOut(
-      val w: org.apache.parquet.hadoop.ParquetWriter[InternalRow],
+      val w: org.apache.spark.sql.execution.datasources.OutputWriter,
       val p: Path, var rows: Long, val stats: Array[ColAcc],
       val blooms: Array[BloomAcc])
 
@@ -1580,11 +1630,12 @@ private class PartitionedSinkWriter(path: String, partCols: Seq[String],
       val f = new Path(staging,
         s"part-$partitionId-$taskId-${SinkLayout.valueTag(pvs)}.parquet")
       fs.mkdirs(f.getParent)
-      new OpenOut(SinkParquetWrite.open(conf.value, f, dataFields.toSeq,
-        fieldIds), f, 0L, newStats(),
+      new OpenOut(parquetOut.newInstance(f.toString, dataSchema, taskContext),
+        f, 0L, newStats(),
         bloomPlan.map { case (_, _, isStr) => new BloomAcc(isStr) })
     })
-    o.w.write(row)
+    dataRow.project(row)
+    o.w.write(dataRow)
     o.rows += 1
     var j = 0
     while (j < dataFields.length) {

@@ -2,15 +2,9 @@ package graft.sources
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.hadoop.{ParquetOutputFormat, ParquetWriter}
-import org.apache.parquet.hadoop.api.WriteSupport
-import org.apache.parquet.hadoop.metadata.CompressionCodecName
-import org.apache.parquet.hadoop.util.{HadoopInputFile, HadoopOutputFile}
-import org.apache.parquet.io.api.{Binary, RecordConsumer}
-import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Type, Types}
-import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -23,17 +17,21 @@ import org.apache.spark.unsafe.types.UTF8String
   * part that does). Every data file is parquet: there is no format
   * option (see [[SinkFormat.userProps]]).
   *
-  * Why a hand-rolled WRITE support instead of Spark's internal
-  * ParquetWriteSupport: the sink's type surface is deliberately small
-  * — the atomic set (string/boolean/int/long/float/double/short/byte),
-  * opaque BINARY, and NESTED struct/array compositions of those
-  * (parquet's standard group and 3-level LIST shapes) — which the
-  * public parquet-mr API covers compactly, and owning the writer is
-  * what stamps each top-level field with its FIELD ID (rename/drop
-  * evolution). READS decode through Spark's own vectorized reader
-  * ([[SinkParquetSplitReader]]); graft adds only the field-id column
-  * resolution, split constants, row-group skip predicate and
-  * merge-on-read mask in front of it.
+  * One encoder, one decoder, both Spark's own. WRITES go through
+  * Spark's parquet output path ([[PartitionedSinkWriterFactory]]
+  * prepares `ParquetFileFormat.prepareWrite` once per write): the
+  * codec is Spark's `spark.sql.parquet.compression.codec` (snappy),
+  * the row-group size parquet's `parquet.block.size` (128 MB), and
+  * each top-level data column carries the table's FIELD ID as
+  * `parquet.field.id` metadata, which Spark stamps into the file
+  * (`spark.sql.parquet.fieldId.write.enabled`, on by default) — what
+  * rename/drop evolution resolves by. READS decode through Spark's
+  * vectorized reader ([[SinkParquetSplitReader]]); graft adds only
+  * the field-id column resolution, split constants, row-group skip
+  * predicate and merge-on-read mask in front of it. The sink's type
+  * surface stays deliberately small (see [[SinkFormat.validateColumnType]]):
+  * the atomic set, opaque BINARY, and nested struct/array compositions
+  * of those (parquet's standard group and 3-level LIST shapes).
   *
   * What this buys at 100 TB: a narrow projection reads only its
   * columns' chunks (I/O pruning, not just decode pruning), values are dictionary/RLE-encoded and snappy-compressed
@@ -105,8 +103,8 @@ private[graft] object SinkFormat {
     * state: it rides CREATE but is not user-settable afterwards.
     */
   final val Options: Set[String] = Set(SinkBloomConf.PropColumns,
-    SinkBloomConf.PropMaxDistinct, PropDeleteMode, PropRowChanges,
-    PropSortOrder, PropFieldIds, PropNextFieldId)
+    PropDeleteMode, PropRowChanges, PropSortOrder, PropFieldIds,
+    PropNextFieldId)
 
   /** User-supplied `graft.*` properties (path-API options, CREATE
     * TBLPROPERTIES), unchanged: any other key is rejected, naming it —
@@ -153,41 +151,41 @@ private[graft] object SinkFormat {
       case _ => false
     }
 
-  /** Create/evolve-time type gate: BINARY and NESTED (struct / array)
+  /** Create/evolve/write-time type gate, at plan time (not at the
+    * first row a task writes): every column, at every nesting level,
+    * is atomic (string/boolean/byte/short/int/long/float/double),
+    * BINARY, a struct or an array of those — decimal, date, timestamp
+    * and map are rejected, naming the column. BINARY and nested
     * columns are never partition columns (partition values name
-    * directories), and MAP columns are rejected. Loud at DDL time, not
-    * first-row write time. Nested element types recurse — a struct of
-    * decimals is as unsupported as a top-level decimal.
+    * directories).
     */
-  def validateColumnType(name: String,
-                         dt: org.apache.spark.sql.types.DataType,
-                         isPartition: Boolean): Unit = dt match {
-    case BinaryType =>
-      require(!isPartition,
+  def validateColumnType(name: String, dt: DataType,
+                         isPartition: Boolean): Unit = {
+    def walk(n: String, t: DataType): Unit = t match {
+      case s: StructType =>
+        s.fields.foreach(f => walk(s"$n.${f.name}", f.dataType))
+      case a: ArrayType => walk(s"$n.element", a.elementType)
+      case m: MapType => throw new IllegalArgumentException(
+        s"column $n: MAP columns are not supported — model the " +
+          s"${m.keyType.simpleString}→${m.valueType.simpleString} pairs " +
+          "as array<struct<key,value>>")
+      case StringType | LongType | IntegerType | DoubleType | FloatType |
+           BooleanType | ShortType | ByteType | BinaryType => ()
+      case other => throw new IllegalArgumentException(
+        s"column $n has unsupported type ${other.simpleString} (sink " +
+          "columns are string, boolean, byte, short, int, long, float, " +
+          "double, binary, struct or array)")
+    }
+    walk(name, dt)
+    if (isPartition) dt match {
+      case BinaryType => throw new IllegalArgumentException(
         s"partition column $name cannot be BINARY (its rendered values " +
           "name the directory layout)")
-    case _: StructType | _: ArrayType =>
-      require(!isPartition,
+      case _: StructType | _: ArrayType => throw new IllegalArgumentException(
         s"partition column $name cannot be nested (its rendered values " +
           "name the directory layout)")
-      def walk(n: String, t: org.apache.spark.sql.types.DataType): Unit =
-        t match {
-          case s: StructType =>
-            s.fields.foreach(f => walk(s"$n.${f.name}", f.dataType))
-          case a: ArrayType => walk(s"$n.element", a.elementType)
-          case StringType | LongType | IntegerType | DoubleType |
-               FloatType | BooleanType | ShortType | ByteType |
-               BinaryType => ()
-          case other => throw new IllegalArgumentException(
-            s"nested field $n has unsupported type $other (atomic " +
-              "types, binary, struct and array only)")
-        }
-      walk(name, dt)
-    case m: MapType => throw new IllegalArgumentException(
-      s"column $name: MAP columns are not supported — model the " +
-        s"${m.keyType.simpleString}→${m.valueType.simpleString} pairs " +
-        "as array<struct<key,value>>")
-    case _ => ()
+      case _ => ()
+    }
   }
 
   /** Field-id registry rendering: `<id>:<name>` pairs, comma-joined.
@@ -224,174 +222,6 @@ private[graft] object SinkFormat {
       PropFieldIds -> renderIds(dataCols.zipWithIndex.map {
         case (n, i) => n -> (i + 1) }.toSeq),
       PropNextFieldId -> (dataCols.length + 1).toString)
-  }
-}
-
-/** Write half: a [[WriteSupport]] over [[InternalRow]] for the sink's
-  * atomic type set. One writer per (task, partition tuple); stats/bloom
-  * accumulation stays in [[PartitionedSinkWriter]].
-  */
-private[graft] object SinkParquetWrite {
-
-  /** Parquet field for one Catalyst column; `id` < 0 = no id (ids
-    * attach to TOP-LEVEL fields only — nested fields are not
-    * independently renameable). Nested types use the standard
-    * shapes readers interoperate on: struct = plain group, array =
-    * 3-level LIST (`group (LIST) { repeated group list { <element> } }`),
-    * map = `group (MAP) { repeated group key_value { required key; value } }`.
-    */
-  private[sources] def field(name: String, dt: DataType, id: Int): Type = {
-    val t: Type = dt match {
-      case StringType => Types.optional(PrimitiveTypeName.BINARY)
-        .as(LogicalTypeAnnotation.stringType()).named(name)
-      case LongType => Types.optional(PrimitiveTypeName.INT64).named(name)
-      case IntegerType => Types.optional(PrimitiveTypeName.INT32).named(name)
-      case ShortType => Types.optional(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(16, true)).named(name)
-      case ByteType => Types.optional(PrimitiveTypeName.INT32)
-        .as(LogicalTypeAnnotation.intType(8, true)).named(name)
-      case DoubleType => Types.optional(PrimitiveTypeName.DOUBLE).named(name)
-      case FloatType => Types.optional(PrimitiveTypeName.FLOAT).named(name)
-      case BooleanType => Types.optional(PrimitiveTypeName.BOOLEAN).named(name)
-      // opaque bytes — the multimodal payload column: parquet BINARY
-      // with NO string annotation (stats/bloom manifests never record
-      // it; skipping a 1 MB image by min/max is meaningless)
-      case BinaryType => Types.optional(PrimitiveTypeName.BINARY).named(name)
-      case s: StructType =>
-        s.fields.foldLeft(Types.optionalGroup()) {
-          (g, f) => g.addField(field(f.name, f.dataType, -1))
-        }.named(name)
-      case a: ArrayType =>
-        Types.optionalGroup()
-          .as(LogicalTypeAnnotation.listType())
-          .addField(Types.repeatedGroup()
-            .addField(field("element", a.elementType, -1))
-            .named("list"))
-          .named(name)
-      case other => throw new UnsupportedOperationException(
-        s"PartitionedSink supports atomic, binary and nested " +
-          s"(struct/array) column types only, got $other")
-    }
-    if (id >= 0) t.withId(id) else t
-  }
-
-  def messageType(dataFields: Seq[StructField],
-                  fieldIds: Map[String, Int]): MessageType =
-    new MessageType("graft_sink",
-      dataFields.map(f =>
-        field(f.name, f.dataType, fieldIds.getOrElse(f.name, -1))).asJava)
-
-  /** dataFields carry (field, ordinal in the FULL write schema). */
-  private class RowWriteSupport(schema: MessageType,
-                                dataFields: Seq[(StructField, Int)])
-      extends WriteSupport[InternalRow] {
-    private var consumer: RecordConsumer = _
-    private val plan = dataFields.toArray
-
-    override def init(configuration: Configuration)
-        : WriteSupport.WriteContext =
-      new WriteSupport.WriteContext(schema,
-        java.util.Collections.emptyMap[String, String]())
-
-    override def prepareForWrite(rc: RecordConsumer): Unit = consumer = rc
-
-    /** One NON-NULL value from any row-shaped container (InternalRow
-      * and ArrayData share SpecializedGetters), recursing into
-      * struct/array groups with the standard start/end protocol.
-      */
-    private def writeValue(
-        g: org.apache.spark.sql.catalyst.expressions.SpecializedGetters,
-        ord: Int, dt: DataType): Unit = dt match {
-      case StringType => consumer.addBinary(
-        Binary.fromConstantByteArray(g.getUTF8String(ord).getBytes))
-      case LongType => consumer.addLong(g.getLong(ord))
-      case IntegerType => consumer.addInteger(g.getInt(ord))
-      case ShortType => consumer.addInteger(g.getShort(ord).toInt)
-      case ByteType => consumer.addInteger(g.getByte(ord).toInt)
-      case DoubleType => consumer.addDouble(g.getDouble(ord))
-      case FloatType => consumer.addFloat(g.getFloat(ord))
-      case BooleanType => consumer.addBoolean(g.getBoolean(ord))
-      case BinaryType => consumer.addBinary(
-        Binary.fromConstantByteArray(g.getBinary(ord)))
-      case s: StructType =>
-        val nested = g.getStruct(ord, s.fields.length)
-        consumer.startGroup()
-        var j = 0
-        while (j < s.fields.length) {
-          if (!nested.isNullAt(j)) {
-            consumer.startField(s.fields(j).name, j)
-            writeValue(nested, j, s.fields(j).dataType)
-            consumer.endField(s.fields(j).name, j)
-          }
-          j += 1
-        }
-        consumer.endGroup()
-      case a: ArrayType =>
-        val arr = g.getArray(ord)
-        consumer.startGroup()
-        if (arr.numElements() > 0) {
-          consumer.startField("list", 0)
-          var j = 0
-          while (j < arr.numElements()) {
-            consumer.startGroup()
-            if (!arr.isNullAt(j)) {
-              consumer.startField("element", 0)
-              writeValue(arr, j, a.elementType)
-              consumer.endField("element", 0)
-            }
-            consumer.endGroup()
-            j += 1
-          }
-          consumer.endField("list", 0)
-        }
-        consumer.endGroup()
-      case other => throw new UnsupportedOperationException(
-        s"PartitionedSink supports atomic, binary and nested " +
-          s"(struct/array) column types only, got $other")
-    }
-
-    override def write(row: InternalRow): Unit = {
-      consumer.startMessage()
-      var i = 0
-      while (i < plan.length) {
-        val (fld, ord) = plan(i)
-        if (!row.isNullAt(ord)) {
-          consumer.startField(fld.name, i)
-          writeValue(row, ord, fld.dataType)
-          consumer.endField(fld.name, i)
-        }
-        i += 1
-      }
-      consumer.endMessage()
-    }
-  }
-
-  private class Builder(out: HadoopOutputFile, ws: WriteSupport[InternalRow])
-      extends ParquetWriter.Builder[InternalRow, Builder](out) {
-    override def self(): Builder = this
-    override def getWriteSupport(conf: Configuration)
-        : WriteSupport[InternalRow] = ws
-  }
-
-  /** The row-group size is parquet's own `parquet.block.size` (128 MB
-    * by default): smaller groups = finer row-group skipping and lower
-    * task memory, larger = better scan throughput. A session setting
-    * reaches `conf` through the session's Hadoop configuration.
-    */
-  def open(conf: Configuration, path: Path,
-           dataFields: Seq[(StructField, Int)],
-           fieldIds: Map[String, Int]): ParquetWriter[InternalRow] = {
-    val rowGroupBytes = conf.getLong(ParquetOutputFormat.BLOCK_SIZE,
-      ParquetWriter.DEFAULT_BLOCK_SIZE.toLong)
-    require(rowGroupBytes > 0,
-      s"${ParquetOutputFormat.BLOCK_SIZE} must be positive, got $rowGroupBytes")
-    val schema = messageType(dataFields.map(_._1), fieldIds)
-    new Builder(HadoopOutputFile.fromPath(path, conf),
-      new RowWriteSupport(schema, dataFields))
-      .withConf(conf)
-      .withCompressionCodec(CompressionCodecName.SNAPPY)
-      .withRowGroupSize(rowGroupBytes)
-      .build()
   }
 }
 

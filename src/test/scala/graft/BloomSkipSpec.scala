@@ -13,7 +13,7 @@ import org.apache.spark.sql.functions._
   * blob, and EqualTo/In scan filters probe it after the min/max
   * pass. Pins: fewer splits on interleaved (range-overlapping) files,
   * zero false negatives, IN multi-probe, string columns, the
-  * distinct-count overflow degrade (`graft.bloomMaxDistinct`), and
+  * distinct-count overflow degrade (`SinkBloomConf.MaxDistinct`), and
   * off-by-default.
   */
 class BloomSkipSpec extends SparkSpec {
@@ -89,21 +89,44 @@ class BloomSkipSpec extends SparkSpec {
   }
 
   test("distinct-count overflow degrades to a scan, never a wrong skip") {
+    import spark.implicits._
     val root = freshCatalog("bl3")
-    // 100 distinct per file >> cap 5
-    seedInterleaved("bl3.t", Columns -> "k",
-      graft.sources.SinkBloomConf.PropMaxDistinct -> "5")
-    // no filter survived the cap: every file scans, results exact
-    val one = spark.table("bl3.t").filter(col("k") === 31L)
-    assert(splits(one) === 3, "overflowed blooms must not skip")
-    assert(one.count() === 1L)
-    // and no bloom blob carries a k entry (the cap dropped it)
+    // one file per table of even keys 0, 2, ...: at the cap (131,072
+    // distinct) the file keeps its filter, one past it the filter is
+    // dropped. An odd key inside the range is absent from the file:
+    // min/max cannot skip it, only a bloom can
+    def evens(t: String, distinct: Int): Unit =
+      spark.range(0, distinct).select((col("id") * 2).as("k"), lit("A").as("p"))
+        .coalesce(1).writeTo(t).tableProperty(Columns, "k")
+        .partitionedBy(col("p")).create()
+    val cap = graft.sources.SinkBloomConf.MaxDistinct
+    evens("bl3.at_cap", cap)
+    evens("bl3.over", cap + 1)
+    assert(splits(spark.table("bl3.at_cap").filter(col("k") === 31L)) === 0,
+      "a file at the cap keeps its bloom and skips an absent key")
+    // no filter survived the cap: the file scans, results exact
+    val absent = spark.table("bl3.over").filter(col("k") === 31L)
+    assert(splits(absent) === 1, "an overflowed bloom must not skip")
+    assert(absent.count() === 0L)
+    assert(spark.table("bl3.over").filter(col("k") === 2L * cap)
+      .collect().map(_.getLong(0)).toSeq === Seq(2L * cap))
+    // and no bloom blob of the overflowed table carries a line (the cap
+    // dropped its only filter)
     def walk(f: File): Seq[File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
-    val bloomLines = walk(new File(root))
+    def bloomLines(table: String) = walk(new File(root, table))
       .filter(_.getName.startsWith("bloom-"))
       .flatMap(f => scala.io.Source.fromFile(f, "UTF-8").getLines())
-    assert(bloomLines.isEmpty)
+    assert(bloomLines("at_cap").length === 1)
+    assert(bloomLines("over").isEmpty)
+    // the cap is a constant, not a table option
+    val e = intercept[Exception] {
+      Seq((1L, "A")).toDF("k", "p").writeTo("bl3.opt")
+        .tableProperty("graft.bloomMaxDistinct", "5")
+        .partitionedBy(col("p")).create()
+    }
+    assert(e.getMessage.contains("graft.bloomMaxDistinct is not a sink table option"),
+      e.getMessage)
   }
 
   test("table-property blooms bind every writer, no session conf needed") {

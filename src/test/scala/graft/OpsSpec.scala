@@ -6,21 +6,6 @@ import graft.ops._
 
 class OpsSpec extends SparkSpec {
 
-  test("compaction: merges small files, preserves rows exactly, no-ops when compact") {
-    val src = Tables.load(spark, "/root/testdata/sf0.001", "customer")
-    val dir = tmpDir("compact") + "/t"
-    src.repartition(8).write.parquet(dir)
-    val (before, after) = graft.ops.Compaction.compactParquet(spark, dir)
-    assert(before == 8 && after == 1, s"8 small files -> 1, got $before -> $after")
-    val back = spark.read.parquet(dir)
-    assert(back.except(src).isEmpty && src.except(back).isEmpty)
-    // second run: already compact -> untouched
-    assert(graft.ops.Compaction.compactParquet(spark, dir) == ((1, 1)))
-    // and no stray tmp/backup dirs survive
-    val parent = new java.io.File(dir).getParentFile.list().toSeq
-    assert(parent == Seq("t"), s"leftover dirs: $parent")
-  }
-
   test("kthSmallest: exact across narrowing rounds, duplicates, boundary buckets") {
     import spark.implicits._
     // values 1.5, 3.0, ..., 7500.0 shuffled; tiny threshold/buckets
@@ -158,24 +143,6 @@ class OpsSpec extends SparkSpec {
     }
   }
 
-  test("compaction composes over a partitioned layout, one leaf at a time") {
-    import org.apache.spark.sql.functions.col
-    val src = Tables.load(spark, "/root/testdata/sf0.001", "orders")
-      .withColumn("o_year", org.apache.spark.sql.functions.year(col("o_orderdate")))
-    val root = tmpDir("compact-part") + "/t"
-    src.repartition(6).write.partitionBy("o_year").parquet(root)
-    val leaves = new java.io.File(root).listFiles()
-      .filter(f => f.isDirectory && f.getName.startsWith("o_year=")).map(_.toString)
-    assert(leaves.nonEmpty)
-    leaves.foreach(graft.ops.Compaction.compactParquet(spark, _))
-    val back = spark.read.parquet(root)
-    assert(back.drop("o_year").except(src.drop("o_year")).isEmpty)
-    assert(back.count() == src.count())
-    leaves.foreach { l =>
-      val files = new java.io.File(l).listFiles().count(_.getName.endsWith(".parquet"))
-      assert(files == 1, s"$l not compacted: $files files")
-    }
-  }
   import spark.implicits._
 
   test("Fs.exists is scheme-aware: bare path and file: URI agree") {
