@@ -197,9 +197,7 @@ object Compaction {
     val root = spark.conf.get(s"spark.sql.catalog.$catalog.root")
     val dir = new Path(s"$root/${graft.sources.TsvCodec.escapeDir(table)}")
     val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
-    val snap = asOfVersion
-      .map(graft.sources.SinkVersions.read(fs, dir.toString, _))
-      .orElse(graft.sources.SinkVersions.readLatest(fs, dir.toString))
+    val snap = graft.sources.SinkVersions.snapshot(fs, dir.toString, asOfVersion)
     // MERGE-ON-READ density signal: active position deletes per file,
     // from the snapshot's manifests (driver-side metadata only). Every
     // scan of a file pays its delete set until `compactSinkTable`

@@ -777,6 +777,16 @@ private[graft] object SinkVersions {
       }
     }
 
+  /** The snapshot a read plans from: manifest `asOf` when pinned (it
+    * must exist), else the newest (None before the first commit).
+    */
+  def snapshot(fs: FileSystem, root: String,
+               asOf: Option[Long]): Option[SinkManifest] =
+    asOf match {
+      case Some(v) => Some(read(fs, root, v))
+      case None => readLatest(fs, root)
+    }
+
   /** Newest version whose commit timestamp is ≤ `tsMillis` — the
     * `TIMESTAMP AS OF` resolution (Delta's contract), reading only
     * manifest header lines. Fails loudly when the table has no commit

@@ -21,16 +21,25 @@ import org.apache.spark.unsafe.types.UTF8String
   *     skips eleven twelfths of every year).
   *     Data-column comparisons stay post-scan filters, and also skip
   *     files (manifest stats, bloom blobs) and row groups (parquet
-  *     footers).
+  *     footers). Runtime (DPP) filters arrive later, on the built
+  *     scan; every file decision, static or runtime, is
+  *     [[SinkFileSkip.mayHold]].
   *   - COLUMN PRUNING ([[SupportsPushDownRequiredColumns]]): only the
   *     requested columns' chunks are read and decoded; partition
   *     columns cost nothing (they come from the dir names, one
   *     constant tuple per split).
   *
+  * The builder reads ONE snapshot manifest (the requested `VERSION AS
+  * OF`, else the latest), lazily: the aggregate pushdown decision and
+  * the built scan both use it, so a declined aggregate costs no second
+  * read and both see the same version.
+  *
   * One [[InputPartition]] per data FILE — the natural split grain of
   * the layout (files are per-(task, partition-tuple) from the write
   * side, so sizes track write parallelism). Executors get the session
-  * Hadoop conf the same way the writer does.
+  * Hadoop conf the same way the writer does. Spark never pushes a
+  * filter into a streaming read, so the micro-batch tail
+  * (`toMicroBatchStream`) takes none.
   */
 private[sources] class PartitionedSinkScanBuilder(
     path: String, partCols: Seq[String], fullSchema: StructType,
@@ -46,6 +55,12 @@ private[sources] class PartitionedSinkScanBuilder(
   private var required: StructType = fullSchema
   private var pushedAgg: Option[(StructType, Array[InternalRow], String)] = None
   private var limitHint: Option[Int] = None
+
+  /** The snapshot this builder's pushdown and scan read. */
+  protected lazy val snapshot: Option[SinkManifest] = SinkVersions.snapshot(
+    FileSystem.get(new java.net.URI(path),
+      SparkSession.active.sessionState.newHadoopConf()),
+    path, asOfVersion)
 
   /** LIMIT pushdown, PARTIAL by contract (Spark keeps its own limit on
     * top, so serving extra rows is fine; serving fewer than
@@ -84,8 +99,8 @@ private[sources] class PartitionedSinkScanBuilder(
       agg: org.apache.spark.sql.connector.expressions.aggregate.Aggregation)
       : Boolean = {
     if (pushedAgg.isEmpty)
-      pushedAgg = SinkAggPushdown.compute(path, partCols, fullSchema,
-        asOfVersion, agg,
+      pushedAgg = SinkAggPushdown.compute(path, snapshot, partCols,
+        fullSchema, agg,
         noFilters = partitionFilters.isEmpty && skipFilters.isEmpty)
     pushedAgg.isDefined
   }
@@ -147,7 +162,7 @@ private[sources] class PartitionedSinkScanBuilder(
   override def build(): Scan = pushedAgg match {
     case Some((schema, rows, desc)) => new SinkLocalAggScan(schema, rows, desc)
     case None =>
-      new PartitionedSinkScan(path, partCols, fullSchema, required,
+      new PartitionedSinkScan(path, snapshot, partCols, fullSchema, required,
         partitionFilters, skipFilters, asOfVersion, fieldIds, limitHint)
   }
 }
@@ -186,9 +201,10 @@ private[sources] object SinkAggPushdown {
     case _ => false
   }
 
-  def compute(path: String, partCols: Seq[String], fullSchema: StructType,
-              asOfVersion: Option[Long], agg: Aggregation,
-              noFilters: Boolean)
+  /** `snap` is read only once the aggregate is known answerable. */
+  def compute(path: String, snap: => Option[SinkManifest],
+              partCols: Seq[String], fullSchema: StructType,
+              agg: Aggregation, noFilters: Boolean)
       : Option[(StructType, Array[InternalRow], String)] = {
     if (!noFilters || agg.aggregateExpressions.isEmpty) return None
     // GROUP BY is answerable when every group key is a PARTITION
@@ -220,15 +236,9 @@ private[sources] object SinkAggPushdown {
         }
         case _ => return None
       }
-    val fs = FileSystem.get(new java.net.URI(path),
-      SparkSession.active.sessionState.newHadoopConf())
     // the pinned or latest snapshot's entries carry every needed fact;
     // ACTIVE POSITION DELETES disqualify (a deleted row may hold the
     // min; counts would overstate)
-    val snap = asOfVersion match {
-      case Some(v) => Some(SinkVersions.read(fs, path, v))
-      case None => SinkVersions.readLatest(fs, path)
-    }
     if (snap.exists(_.dels.nonEmpty)) return None
     val perFile = snap.toSeq.flatMap(_.entries)
     val groupIdx = groupCols.map(partCols.indexOf)
@@ -298,9 +308,9 @@ private[sources] object SinkAggPushdown {
 }
 
 private[sources] class PartitionedSinkScan(
-    path: String, partCols: Seq[String], fullSchema: StructType,
-    required: StructType, partitionFilters: Array[Filter],
-    skipFilters: Array[Filter] = Array.empty,
+    path: String, snapshot: => Option[SinkManifest], partCols: Seq[String],
+    fullSchema: StructType, required: StructType,
+    partitionFilters: Array[Filter], skipFilters: Array[Filter],
     asOfVersion: Option[Long] = None,
     fieldIds: Map[String, Int] = Map.empty,
     limitHint: Option[Int] = None)
@@ -318,19 +328,6 @@ private[sources] class PartitionedSinkScan(
       partitionFilters.mkString("[", ", ", "]") +
       " FileSkipFilters: " + skipFilters.mkString("[", ", ", "]")
 
-  /** Do the pushed filters accept value `v` for partition column
-    * `colName`? Filters on OTHER partition columns don't constrain it.
-    */
-  private def keepAt(colName: String, v: String): Boolean =
-    partitionFilters.forall {
-      case EqualTo(c, want) => c != colName || v == want.toString
-      case In(c, vs) => c != colName || vs.exists(w => v == w.toString)
-      case _ => true
-    }
-
-  private def keepTuple(values: Seq[String]): Boolean =
-    partCols.zip(values).forall { case (c, v) => keepAt(c, v) }
-
   // driver-side skip accounting, surfaced as CUSTOM METRICS in the SQL
   // UI node ("why didn't this skip?" without a debugger): filled when
   // the lazy pruning below runs, reported by reportDriverMetrics
@@ -339,41 +336,36 @@ private[sources] class PartitionedSinkScan(
   @volatile private var filesScanned = 0L
   @volatile private var skippedByRuntime = 0L
 
-  /** RUNTIME partition pruning (DPP through
+  /** RUNTIME pruning (DPP through
     * [[org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering]]):
-    * when a join's key is one of this scan's PARTITION columns,
-    * Catalyst plans a DynamicPruning subquery on the other side (the
-    * classic star shape — a filtered dim, usually an already-built
-    * broadcast, decides which fact partitions matter at all) and
-    * delivers the surviving keys here as an `IN` predicate between
-    * physical planning and execution. At warehouse scale this is the
-    * difference between scanning a 100 TB fact table's every
-    * partition and scanning the three the dim filter actually joins.
+    * when a join's key is one of [[filterAttributes]], Catalyst plans a
+    * DynamicPruning subquery on the other side (the classic star shape
+    * — a filtered dim, usually an already-built broadcast, decides
+    * which fact partitions matter at all) and delivers the surviving
+    * keys here as an `IN` predicate between physical planning and
+    * execution. At warehouse scale this is the difference between
+    * scanning a 100 TB fact table's every partition and scanning the
+    * three the dim filter actually joins; on a CLUSTERED (or naturally
+    * ordered) data column the same keys skip whole files by their
+    * manifest stats.
     *
-    * The keys land as a per-column allow-set of RENDERED partition
-    * values (the writer's own string rendering, so comparison is
-    * exact), applied in [[planInputPartitions]] ON TOP of the cached
-    * static plan — planning may have forced the lazy pruning pass
-    * long before the runtime filter arrives, and re-planning would
-    * race the snapshot. Runtime pruning only ever DROPS splits, so
-    * every static guarantee (manifest snapshot, delete manifests,
-    * key-grouped output — Spark backfills empty groups for dropped
-    * keys) still holds. Unknown predicate shapes are IGNORED: scan
-    * more than strictly needed, never less.
-    */
-  @volatile private var runtimeTupleKeep
-      : Option[Map[String, Set[String]]] = None
-
-  /** Runtime DATA-column predicates, kept as v1 `In` filters for
-    * [[SinkFileSkip.mayMatch]] against the per-file min/max retained
-    * from the pruning pass — a join keyed on a CLUSTERED (or
-    * naturally ordered) column then skips whole files at runtime,
-    * the same way DPP skips whole partitions. Bounded: an IN-set
-    * beyond [[SinkRuntimePrune.MaxSkipValues]] is ignored (the
+    * Spark's own V2 → V1 conversion turns the predicates into the
+    * filters [[SinkFileSkip.mayHold]] takes, applied in
+    * [[planInputPartitions]] ON TOP of the cached static plan —
+    * planning may have forced the lazy pruning pass long before the
+    * runtime filter arrives, and re-planning would race the snapshot.
+    * Runtime pruning only ever DROPS splits, so every static guarantee
+    * (manifest snapshot, delete manifests, key-grouped output — Spark
+    * backfills empty groups for dropped keys) still holds. Runtime
+    * skipping is by tuple and stats only (blooms are a static-pass
+    * step). A shape the conversion cannot express is IGNORED: scan
+    * more than strictly needed, never less. A data-column IN-set
+    * beyond [[SinkFileSkip.MaxSkipValues]] is ignored too (the
     * per-file probe is values × files driver work, and a join wide
-    * enough to carry 10k+ distinct keys rarely skips anything).
+    * enough to carry 10k+ distinct keys rarely skips anything);
+    * partition and `_file` sets are never bounded.
     */
-  @volatile private var runtimeSkipFilters: Seq[Filter] = Seq.empty
+  @volatile protected var runtimeFilters: Seq[Filter] = Seq.empty
 
   /** A LIMIT-trimmed scan must not runtime-filter: the trimmed file
     * prefix covers the limit by ROW COUNT, and dropping any of its
@@ -396,40 +388,26 @@ private[sources] class PartitionedSinkScan(
     if (limitHint.isDefined) Array.empty
     else required.fields
       .filter(f => partCols.contains(f.name) ||
-        (SinkRuntimePrune.statsEligible(f.dataType) &&
+        (SinkFileSkip.statsEligible(f.dataType) &&
           f.name != SinkMeta.FileCol && f.name != SinkMeta.PosCol))
       .map(f => org.apache.spark.sql.connector.expressions
         .Expressions.column(f.name)).toArray
 
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions
-        .filter.Predicate]): Unit = {
-    val declared = filterAttributes().map(_.fieldNames()(0)).toSet
-    val parsed = predicates.toSeq
-      .flatMap(SinkRuntimePrune.parse(declared, _))
-    val (onPart, onData) = parsed.partition(p => partCols.contains(p._1))
-    if (onPart.nonEmpty)
-      runtimeTupleKeep = Some(onPart.groupBy(_._1)
-        .map { case (c, vs) =>
-          c -> vs.map(_._2.map(_.toString).toSet).reduce(_ intersect _) })
-    runtimeSkipFilters = onData.collect {
-      case (c, vs) if vs.nonEmpty &&
-        vs.length <= SinkRuntimePrune.MaxSkipValues =>
-        In(c, vs.toArray): Filter
-    }
-  }
+        .filter.Predicate]): Unit =
+    runtimeFilters = org.apache.spark.sql.GraftColumnShim.toV1(predicates)
+      .toSeq.filter {
+        case In(c, vs) if !partCols.contains(c) && c != SinkMeta.FileCol =>
+          vs.length <= SinkFileSkip.MaxSkipValues
+        case _ => true
+      }
+
   /** Active position-delete manifests (absolute paths) of the snapshot
     * being read — every split anti-filters its rows through them.
     * Filled by the pruning pass.
     */
   @volatile protected var activeDeleteManifests: Seq[String] = Seq.empty
-
-  /** Surviving files' recorded column bounds (abs path → col →
-    * min/max), for runtime file skipping.
-    */
-  private lazy val fileStatsForRuntime
-      : Map[String, Map[String, Option[(String, String)]]] =
-    prunedFilesWithStats.map(e => abs(e) -> e.cols).toMap
 
   override def supportedCustomMetrics()
       : Array[org.apache.spark.sql.connector.metric.CustomMetric] =
@@ -446,37 +424,35 @@ private[sources] class PartitionedSinkScan(
       "filesSkippedRuntime" -> skippedByRuntime)
   }
 
-  protected lazy val fs: FileSystem = FileSystem.get(
+  private lazy val fs: FileSystem = FileSystem.get(
     new java.net.URI(path), SparkSession.active.sessionState.newHadoopConf())
   private lazy val root: Path = fs.makeQualified(new Path(path))
   /** Absolute path of a manifest entry's data file. */
   protected def abs(e: SinkFileEntry): String = new Path(root, e.rel).toString
 
+  /** The entries of `files` that may hold a row matching every filter. */
+  protected def holding(filters: Seq[Filter],
+                        files: Seq[SinkFileEntry]): Seq[SinkFileEntry] =
+    files.filter(SinkFileSkip.mayHold(filters, partCols, root))
+
   /** Every file SURVIVING the pushed filters, with its manifest facts —
     * shared by split planning and statistics, so both see the same
-    * pruned view. Membership and facts come from ONE snapshot manifest
-    * (the requested `VERSION AS OF`, else the latest): partition
-    * pruning on its tuples, min/max skipping on its stats, bloom
-    * skipping on the blobs the surviving files name. Nothing is listed
-    * or opened per leaf or per file.
+    * pruned view. Membership and facts come from the builder's ONE
+    * snapshot manifest: partition pruning on its tuples, min/max
+    * skipping on its stats, bloom skipping on the blobs the surviving
+    * files name. Nothing is listed or opened per leaf or per file.
     */
-  private lazy val prunedFilesWithStats: Seq[SinkFileEntry] = {
-    val snap = asOfVersion match {
-      case Some(v) => Some(SinkVersions.read(fs, path, v))
-      case None => SinkVersions.readLatest(fs, path)
-    }
+  protected lazy val prunedFilesWithStats: Seq[SinkFileEntry] = {
+    val snap = snapshot
     activeDeleteManifests = snap.toSeq.flatMap(_.dels)
       .map(n => new Path(root, s"_deletes/$n").toString)
     // partition pruning, then FILE SKIPPING: drop every file whose
     // recorded min/max provably excludes a skip filter (a column
     // without stats is always kept)
-    val afterStats = snap.toSeq.flatMap(_.entries)
-      .filter(e => keepTuple(e.values))
-      .filter { e =>
-        val keep = skipFilters.forall(SinkFileSkip.mayMatch(_, e.cols))
-        if (!keep) skippedByStats += 1
-        keep
-      }
+    val inTuples =
+      holding(partitionFilters.toSeq, snap.toSeq.flatMap(_.entries))
+    val afterStats = holding(skipFilters.toSeq, inTuples)
+    skippedByStats = inTuples.size - afterStats.size
     // bloom blobs load only for scans with point predicates, and only
     // the blobs the surviving files name
     val out =
@@ -495,14 +471,6 @@ private[sources] class PartitionedSinkScan(
     out
   }
 
-  /** Statically pruned (partition pruning + file skipping) files — the
-    * subclassable seam the COW row-level scan filters further at
-    * runtime.
-    */
-  protected lazy val staticPrunedFiles: Seq[SinkFileEntry] =
-    prunedFilesWithStats
-  private def prunedFiles: Seq[SinkFileEntry] = staticPrunedFiles
-
   private lazy val keyTypes: Seq[DataType] =
     partCols.map(c => fullSchema(c).dataType)
 
@@ -515,12 +483,12 @@ private[sources] class PartitionedSinkScan(
     limitHint match {
       case Some(n) if activeDeleteManifests.isEmpty =>
         var acc = 0L
-        prunedFiles.sortBy(abs).takeWhile { e =>
+        prunedFilesWithStats.sortBy(abs).takeWhile { e =>
           val need = acc < n
           acc += e.rows
           need
         }
-      case _ => prunedFiles
+      case _ => prunedFilesWithStats
     }
 
   private lazy val inputSplits: Array[InputPartition] =
@@ -528,22 +496,12 @@ private[sources] class PartitionedSinkScan(
       keyTypes, relPath = e.rel, delManifests = activeDeleteManifests) -> e.size))
 
   override def planInputPartitions(): Array[InputPartition] =
-    if (runtimeTupleKeep.isEmpty && runtimeSkipFilters.isEmpty) inputSplits
+    if (runtimeFilters.isEmpty) inputSplits
     else {
-      val kept = inputSplits.filter { p =>
-        val s = p.asInstanceOf[SinkFileSplit]
-        val tupleOk = runtimeTupleKeep.forall(keep =>
-          partCols.zip(s.partValues).forall { case (c, v) =>
-            keep.get(c).forall(_.contains(v)) })
-        // stats-less columns always pass (mayMatch's own contract)
-        tupleOk && fileStatsForRuntime.get(s.file).forall(st =>
-          runtimeSkipFilters.forall(SinkFileSkip.mayMatch(_, st)))
-      }
       // count FILES, not splits (giant files may be byte-carved)
-      def files(a: Array[InputPartition]) =
-        a.map(_.asInstanceOf[SinkFileSplit].file).distinct.length
-      skippedByRuntime = (files(inputSplits) - files(kept)).toLong
-      kept
+      val kept = holding(runtimeFilters, limitedFiles).map(abs).toSet
+      skippedByRuntime = (limitedFiles.size - kept.size).toLong
+      inputSplits.filter(p => kept(p.asInstanceOf[SinkFileSplit].file))
     }
 
   private lazy val carved: Boolean = inputSplits.length > limitedFiles.size
@@ -561,7 +519,7 @@ private[sources] class PartitionedSinkScan(
       : org.apache.spark.sql.connector.read.Statistics =
     new org.apache.spark.sql.connector.read.Statistics {
       override def sizeInBytes(): java.util.OptionalLong =
-        java.util.OptionalLong.of(prunedFiles.map(_.size).sum)
+        java.util.OptionalLong.of(prunedFilesWithStats.map(_.size).sum)
       override def numRows(): java.util.OptionalLong =
         // exact only while no position deletes are active (recorded
         // per-file counts would overestimate — worse for the CBO than
@@ -614,7 +572,7 @@ private[sources] class PartitionedSinkScan(
     require(asOfVersion.isEmpty,
       "cannot stream-read a time-travel (VERSION AS OF) table reference")
     new PartitionedSinkMicroBatchStream(path, partCols, fullSchema, required,
-      partitionFilters, keepTuple, checkpointLocation, skipFilters, fieldIds)
+      checkpointLocation, fieldIds)
   }
 }
 
@@ -659,79 +617,6 @@ private[sources] final class FilesSkippedRuntimeMetric
     extends SinkSumMetric("filesSkippedRuntime",
       "files skipped by runtime (dynamic) partition pruning")
 
-/** Parses the runtime predicates Catalyst delivers through
-  * SupportsRuntimeV2Filtering — `IN`/`=` over a declared column with
-  * literal values — into (column, EXTERNAL values). External means
-  * the v1-Filter value space (String not UTF8String, boxed numerics),
-  * so the result feeds both consumers directly: partition-tuple
-  * membership renders each value via `toString`, which mirrors the
-  * writer's `rawStr` rendering exactly (strings raw, numerics and
-  * booleans via toString — the strings the layout and manifests
-  * store), and data-column file skipping wraps the values as a
-  * v1 `In` for [[SinkFileSkip.mayMatch]]. NULL literals drop out of
-  * the set (the writer rejects NULL partition values, and a stats
-  * comparison with NULL never matches); any other unparseable shape
-  * makes the whole predicate parse to None, which the caller treats
-  * as "keep everything" — sound, never wrong.
-  */
-private[sources] object SinkRuntimePrune {
-  import org.apache.spark.sql.connector.expressions.{Expression => V2Expr, Literal => V2Literal, NamedReference}
-  import org.apache.spark.sql.connector.expressions.filter.Predicate
-
-  /** IN-sets larger than this skip nothing (values × files of driver
-    * probing for a join already too wide to prune much).
-    */
-  final val MaxSkipValues = 1000
-
-  /** Types the stats manifests record bounds for — the data columns
-    * worth declaring as runtime-filterable.
-    */
-  def statsEligible(dt: DataType): Boolean = dt match {
-    case StringType | LongType | IntegerType | DoubleType | FloatType |
-         BooleanType | ShortType | ByteType => true
-    case _ => false
-  }
-
-  private def external(v: Any): Option[Option[Any]] = v match {
-    case null => Some(None)
-    case u: UTF8String => Some(Some(u.toString))
-    case _: java.lang.Long | _: java.lang.Integer | _: java.lang.Short |
-         _: java.lang.Byte | _: java.lang.Double | _: java.lang.Float |
-         _: java.lang.Boolean => Some(Some(v))
-    case _ => None
-  }
-
-  private def lit(e: V2Expr): Option[Option[Any]] = e match {
-    case l: V2Literal[_] => external(l.value)
-    case _ => None
-  }
-
-  private def ref(cols: Set[String], e: V2Expr): Option[String] = e match {
-    case r: NamedReference if r.fieldNames.length == 1 &&
-      cols.contains(r.fieldNames()(0)) => Some(r.fieldNames()(0))
-    case _ => None
-  }
-
-  def parse(cols: Set[String], p: Predicate)
-      : Option[(String, Seq[Any])] = p.name() match {
-    case "IN" if p.children().nonEmpty =>
-      ref(cols, p.children()(0)).flatMap { c =>
-        val vals = p.children().drop(1).toSeq.map(lit)
-        if (vals.forall(_.isDefined)) Some(c -> vals.flatten.flatten)
-        else None
-      }
-    case "=" if p.children().length == 2 =>
-      (ref(cols, p.children()(0)), ref(cols, p.children()(1))) match {
-        case (Some(c), None) =>
-          lit(p.children()(1)).map(v => c -> v.toSeq)
-        case (None, Some(c)) =>
-          lit(p.children()(0)).map(v => c -> v.toSeq)
-        case _ => None
-      }
-    case _ => None
-  }
-}
-
 /** Streaming READ of a sink table — `spark.readStream.table("cat.t")`
   * tails the layout with the seen-map + batch-log design of Spark's
   * own FileStreamSource: the OFFSET is a single generation number
@@ -749,25 +634,19 @@ private[sources] object SinkRuntimePrune {
   * before generations existed, over TSV data files nothing reads now:
   * it is rejected, not migrated.
   * Append-only semantics — files retired by an overwrite or rewrite
-  * after being logged are skipped at planning, which takes sizes and
-  * stats from the latest manifest (already-emitted rows are NOT
-  * retracted; a reader of a table being rewritten wants a CDC log, not
-  * a file tail — [[graft.ops.Compaction.tableChanges]] is that log).
-  * Pushed partition filters drop pruned values' files
-  * at logging AND planning time, and pushed data-column comparisons
-  * skip provably-excluded files at planning (same residual contract
-  * as the batch scan) — with the honest caveat that Spark's streaming
-  * planner does not run V2ScanRelationPushDown, so `.filter` above
-  * `readStream.table` reaches neither hook today; they fire when the
-  * builder is driven through the pushdown protocol directly
-  * (spec-pinned), and the full stream stays correct either way
-  * because every filter is also evaluated post-scan.
+  * after being logged are skipped at planning, which takes sizes from
+  * the latest manifest (already-emitted rows are NOT retracted; a
+  * reader of a table being rewritten wants a CDC log, not a file tail
+  * — [[graft.ops.Compaction.tableChanges]] is that log).
+  * The tail takes no filters and skips no file: Spark's streaming
+  * planner never pushes a filter into a streaming read (it calls
+  * `newScanBuilder` and builds the scan, nothing more), so a `.filter`
+  * above `readStream.table` is evaluated on the rows, as Spark plans
+  * it.
   */
 private class PartitionedSinkMicroBatchStream(
     path: String, partCols: Seq[String], fullSchema: StructType,
-    required: StructType, partitionFilters: Array[Filter],
-    keepTuple: Seq[String] => Boolean, checkpointLocation: String,
-    skipFilters: Array[Filter] = Array.empty,
+    required: StructType, checkpointLocation: String,
     fieldIds: Map[String, Int] = Map.empty)
     extends org.apache.spark.sql.connector.read.streaming.MicroBatchStream {
   import org.apache.spark.sql.connector.read.streaming.Offset
@@ -826,11 +705,9 @@ private class PartitionedSinkMicroBatchStream(
       throw new java.io.IOException(s"file-log commit failed for gen $gen")
   }
 
-  /** The latest snapshot's files that survive the pushed partition
-    * filters, by absolute path. */
+  /** The latest snapshot's files, by absolute path. */
   private def liveFiles(f: FileSystem): Map[String, SinkFileEntry] =
     SinkVersions.readLatest(f, path).toSeq.flatMap(_.entries)
-      .filter(e => keepTuple(e.values))
       .map(e => new Path(path, e.rel).toString -> e).toMap
 
   override def initialOffset(): Offset = GenOffset(0L)
@@ -873,32 +750,18 @@ private class PartitionedSinkMicroBatchStream(
       val p = new Path(logDir, g.toString)
       if (!f.exists(p)) Seq.empty else readLog(f, p)
     }
-    // the logged files still live in the latest snapshot, with its
-    // facts: a file retired since it was logged is skipped
+    // the logged files still live in the latest snapshot, with their
+    // sizes: a file retired since it was logged is skipped
     val latest = liveFiles(f)
     val present = live.flatMap { case (file, _) => latest.get(file).map(file -> _) }
-    // FILE SKIPPING on the tail, same contract as the batch scan: the
-    // query's data-column comparisons stay residual, so dropping a
-    // provably-excluded file removes only rows the filter would
-    // discard anyway
-    val blobs =
-      if (!SinkFileSkip.wantsBloom(skipFilters)) Map.empty[String,
-        Map[String, Map[String, org.apache.spark.util.sketch.BloomFilter]]]
-      else present.flatMap(_._2.bloom).distinct
-        .map(b => b -> SinkBlooms.read(f, path, b)).toMap
-    val kept = present.filter { case (_, e) =>
-      skipFilters.forall(SinkFileSkip.mayMatch(_, e.cols)) &&
-        e.bloom.flatMap(blobs.get(_).flatMap(_.get(e.rel))).forall(bm =>
-          skipFilters.forall(SinkFileSkip.mayMatchBloom(_, bm)))
-    }
     val keyTypes = partCols.map(c => fullSchema(c).dataType)
-    SinkFileSplit.carve(kept.sortBy(_._1).map { case (file, e) =>
+    SinkFileSplit.carve(present.sortBy(_._1).map { case (file, e) =>
       SinkFileSplit(file, e.values, keyTypes) -> e.size })
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionedSinkReaderFactory(required, partCols,
-      PartitionedSinkWriterFactory.sessionConf(), fieldIds, skipFilters.toSeq)
+      PartitionedSinkWriterFactory.sessionConf(), fieldIds, Seq.empty)
 
   override def commit(end: Offset): Unit = ()
   override def stop(): Unit = ()
@@ -994,14 +857,20 @@ private class PartitionedSinkReaderFactory(
   }
 }
 
-/** Range evaluation for file skipping: decides whether a file MAY
+/** The sink's one file-pruning decision, [[mayHold]]: may a manifest
+  * entry hold a row matching every filter? The batch scan's static
+  * pass, its runtime (DPP) filter and the copy-on-write scan's `_file`
+  * filter all ask it.
+  *
+  * Range evaluation for data columns decides whether a file MAY
   * contain a row matching a comparison filter, given the file's
   * per-column min/max (over non-null values). Conservative in every
   * uncertain direction — missing stats, unparseable bounds, or a
   * literal of an unhandled type all answer "may match" (scan the
-  * file). The one aggressive-but-sound case: a column recorded
-  * ALL-NULL can never satisfy a comparison (SQL: NULL cmp x is not
-  * true), so the file skips for any of the handled predicates.
+  * file). The aggressive-but-sound cases: a column recorded ALL-NULL
+  * can never satisfy a comparison, and neither can a NULL literal
+  * (SQL: NULL cmp x is not true), so the file skips for any of the
+  * handled predicates.
   * NUMERIC comparison is BigDecimal (exact for every Long and for the
   * round-tripped Double/Float renderings the writer emits — no 2^53
   * float-widening trap). STRING comparison is binary UTF-8
@@ -1013,6 +882,52 @@ private class PartitionedSinkReaderFactory(
   * the true one.
   */
 private[sources] object SinkFileSkip {
+  /** Runtime data-column IN-sets larger than this skip nothing (values
+    * × files of driver probing for a join already too wide to prune
+    * much).
+    */
+  final val MaxSkipValues = 1000
+
+  /** Types the stats manifests record bounds for — the data columns
+    * worth declaring as runtime-filterable.
+    */
+  def statsEligible(dt: DataType): Boolean = dt match {
+    case StringType | LongType | IntegerType | DoubleType | FloatType |
+         BooleanType | ShortType | ByteType => true
+    case _ => false
+  }
+
+  /** The entries that may hold a row matching every one of `filters`
+    * (false = provably none). An `=`/`IN` on a partition column tests
+    * the entry's rendered tuple (each literal rendered via `toString`,
+    * which mirrors the writer's `rawStr`: strings raw, numerics and
+    * booleans via toString), one on `_file` tests the entry's absolute
+    * path under `root`, and every other filter tests the entry's
+    * recorded stats ([[mayMatch]]). A NULL literal matches nothing; an
+    * unknown shape matches everything. The point sets render once per
+    * call, so an entry costs one lookup per filter.
+    */
+  def mayHold(filters: Seq[Filter], partCols: Seq[String],
+              root: Path): SinkFileEntry => Boolean = {
+    def rendered(vs: Array[Any]) = vs.filter(_ != null).map(_.toString).toSet
+    val tests: Seq[SinkFileEntry => Boolean] = filters.map { f =>
+      val point = f match {
+        case EqualTo(c, v) => Some((c, rendered(Array(v))))
+        case In(c, vs) if vs != null => Some((c, rendered(vs)))
+        case _ => None
+      }
+      point match {
+        case Some((SinkMeta.FileCol, set)) =>
+          (e: SinkFileEntry) => set(new Path(root, e.rel).toString)
+        case Some((c, set)) if partCols.contains(c) =>
+          val i = partCols.indexOf(c)
+          (e: SinkFileEntry) => set(e.values(i))
+        case _ => (e: SinkFileEntry) => mayMatch(f, e.cols)
+      }
+    }
+    e => tests.forall(_(e))
+  }
+
   private def big(s: String): Option[java.math.BigDecimal] =
     try Some(new java.math.BigDecimal(s))
     catch { case _: NumberFormatException => None }
@@ -1041,11 +956,12 @@ private[sources] object SinkFileSkip {
 
   private def cmp(stats: Map[String, Option[(String, String)]], c: String,
                   v: Any)(sat: (Int, Int) => Boolean): Boolean =
-    stats.get(c) match {
+    if (v == null) false // NULL cmp x is never true
+    else stats.get(c) match {
       case None => true // no stats for the column: must scan
       case Some(None) => false // all values NULL: no comparison matches
       case Some(Some((mnS, mxS))) =>
-        Option(v).flatMap(rel(mnS, mxS, _)) match {
+        rel(mnS, mxS, v) match {
           case Some((cMn, cMx)) => sat(cMn, cMx)
           case None => true
         }

@@ -3,13 +3,11 @@ package graft.sources
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.catalog.MetadataColumn
 import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference}
-import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{DataType, StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 /** ROW-LEVEL operations on sink tables — SQL `DELETE FROM`, `UPDATE`
   * and `MERGE INTO` through Spark's group-based (copy-on-write)
@@ -165,74 +163,33 @@ private[sources] class SinkCowScanBuilder(
     extends PartitionedSinkScanBuilder(path, partCols, fullSchema,
       fieldIds = fieldIds) {
   override def build(): org.apache.spark.sql.connector.read.Scan =
-    new SinkCowScan(path, partCols, fullSchema, requiredSchema,
+    new SinkCowScan(path, snapshot, partCols, fullSchema, requiredSchema,
       pushedPartitionFilters, pushedSkipFilters, op, fieldIds)
 }
 
 /** The COW scan: the base class contributes static group pruning
   * (partition subtrees + min/max file skipping — both prune only
   * provably-match-free files, which is the exact soundness a
-  * group-pruning scan needs); this subclass adds runtime group
-  * filtering on `_file` and records the final planned groups into the
-  * operation. Output partitioning is NOT declared (a runtime-filtered
-  * subset's key grouping claim would mis-size the key-grouped plan,
-  * and a rewrite query gains nothing from it).
+  * group-pruning scan needs) and the runtime filter; this subclass
+  * declares `_file` as its one runtime filter attribute and records
+  * the final planned groups into the operation. Catalyst delivers the
+  * matching files as an `IN` over `_file`; an unknown shape is
+  * ignored (rewrite more groups than strictly needed — never fewer: a
+  * group wrongly dropped here would resurrect its deleted rows).
+  * Output partitioning is NOT declared (a runtime-filtered subset's
+  * key grouping claim would mis-size the key-grouped plan, and a
+  * rewrite query gains nothing from it).
   */
 private[sources] class SinkCowScan(
-    path: String, partCols: Seq[String], fullSchema: StructType,
-    required: StructType, partitionFilters: Array[Filter],
-    skipFilters: Array[Filter], op: SinkRowLevelOperation,
-    fieldIds: Map[String, Int] = Map.empty)
-    extends PartitionedSinkScan(path, partCols, fullSchema, required,
-      partitionFilters, skipFilters, asOfVersion = None, fieldIds)
-    with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering {
-
-  /** None until Catalyst's matching-row subquery runs; Some(files)
-    * after — the groups that actually contain matching rows.
-    */
-  @volatile private var runtimeKeep: Option[Set[String]] = None
+    path: String, snapshot: => Option[SinkManifest], partCols: Seq[String],
+    fullSchema: StructType, required: StructType,
+    partitionFilters: Array[Filter], skipFilters: Array[Filter],
+    op: SinkRowLevelOperation, fieldIds: Map[String, Int] = Map.empty)
+    extends PartitionedSinkScan(path, snapshot, partCols, fullSchema,
+      required, partitionFilters, skipFilters, asOfVersion = None, fieldIds) {
 
   override def filterAttributes(): Array[NamedReference] =
     Array(Expressions.column(SinkMeta.FileCol))
-
-  /** Runtime predicates arrive as V2 `IN`/`=` over `_file` with the
-    * matching files as string literals. Unknown predicate shapes are
-    * IGNORED (rewrite more groups than strictly needed — never fewer:
-    * a group wrongly dropped here would resurrect its deleted rows).
-    */
-  override def filter(predicates: Array[Predicate]): Unit = {
-    val sets = predicates.toSeq.flatMap(parseFileSet)
-    if (sets.nonEmpty) runtimeKeep = Some(sets.reduce(_ intersect _))
-  }
-
-  private def parseFileSet(p: Predicate): Option[Set[String]] = {
-    def refIsFile(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Boolean = e match {
-      case r: NamedReference =>
-        r.fieldNames.toSeq == Seq(SinkMeta.FileCol)
-      case _ => false
-    }
-    def lit(e: org.apache.spark.sql.connector.expressions.Expression)
-        : Option[String] = e match {
-      case l: org.apache.spark.sql.connector.expressions.Literal[_] =>
-        l.value match {
-          case u: UTF8String => Some(u.toString)
-          case s: String => Some(s)
-          case _ => None
-        }
-      case _ => None
-    }
-    p.name() match {
-      case "IN" if p.children().nonEmpty && refIsFile(p.children()(0)) =>
-        val vals = p.children().drop(1).toSeq.map(lit)
-        if (vals.forall(_.isDefined)) Some(vals.flatten.toSet) else None
-      case "=" if p.children().length == 2 =>
-        if (refIsFile(p.children()(0))) lit(p.children()(1)).map(Set(_))
-        else if (refIsFile(p.children()(1))) lit(p.children()(0)).map(Set(_))
-        else None
-      case _ => None
-    }
-  }
 
   /** Post-runtime-filter group count, so the ReplaceData scan node's
     * `filesScanned` metric reflects what actually rewrites (the base
@@ -254,8 +211,7 @@ private[sources] class SinkCowScan(
     }
 
   override def planInputPartitions(): Array[InputPartition] = {
-    val groups = staticPrunedFiles.filter(e =>
-      runtimeKeep.forall(_.contains(abs(e))))
+    val groups = holding(runtimeFilters, prunedFilesWithStats)
     groupsPlanned = Some(groups.size.toLong)
     op.plannedGroups = groups.map(e => (e.rel, e.values, abs(e)))
     op.scanDeleteManifests = Some(activeDeleteManifests
@@ -274,7 +230,7 @@ private[sources] class SinkCowScan(
   override def outputPartitioning()
       : org.apache.spark.sql.connector.read.partitioning.Partitioning =
     new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(
-      staticPrunedFiles.size)
+      prunedFilesWithStats.size)
 
   /** NO row-group skipping on a group-based rewrite scan: the files it
     * plans must be read WHOLE — a skipped row group's non-matching

@@ -20,6 +20,14 @@ object GraftColumnShim {
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
   def planOf(df: DataFrame): org.apache.spark.sql.catalyst.plans.logical.LogicalPlan =
     df.asInstanceOf[classic.Dataset[_]].logicalPlan
+
+  /** Spark's own V2 → V1 predicate conversion (`PredicateUtils.toV1`):
+    * literals arrive in the external value space (String, boxed
+    * numerics); a predicate it cannot convert is dropped.
+    */
+  def toV1(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
+      : Array[org.apache.spark.sql.sources.Filter] =
+    org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
 }
 
 /** Bridge to the `private[sql]` InternalRow-RDD → DataFrame endpoint,

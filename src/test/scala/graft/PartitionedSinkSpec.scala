@@ -881,17 +881,31 @@ class PartitionedSinkSpec extends SparkSpec {
       .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
       .option("checkpointLocation", ckpt)
       .start()
+    // a filtered tail: a partition and a data predicate above the stream
+    val qf = spark.readStream.table("graft_tail_spec.t")
+      .filter(col("p") === "A" && col("v") > 1.5)
+      .writeStream.format("memory").queryName("sinktailf")
+      .outputMode(org.apache.spark.sql.streaming.OutputMode.Append())
+      .option("checkpointLocation", tmpDir("sink_tail_ckf"))
+      .start()
     try {
       q.processAllAvailable()
-      def got() = spark.table("sinktail")
+      qf.processAllAvailable()
+      def got(name: String = "sinktail") = spark.table(name)
         .collect().map(r => (r.getLong(0), r.getString(3))).toSet
       assert(got() === Set((1L, "A"), (2L, "B")), "initial layout arrives")
+      assert(got("sinktailf").isEmpty, "no initial row matches the filter")
       // a later append surfaces as a new micro-batch, exactly once
       Seq((3L, 3.0, "c", "A"), (4L, 4.0, "d", "C")).toDF("k", "v", "s", "p")
         .writeTo("graft_tail_spec.t").append()
       q.processAllAvailable()
+      qf.processAllAvailable()
       assert(got() === Set((1L, "A"), (2L, "B"), (3L, "A"), (4L, "C")),
         "appended files arrive once — no replays, no misses")
+      // (1, A) fails the data predicate, (2, B) and (4, C) the partition one
+      assert(spark.table("sinktailf").count() === 1 &&
+        got("sinktailf") === Set((3L, "A")),
+        "the filtered tail returns exactly the matching row")
       // quiescence: nothing new ⇒ no duplicate emission
       q.processAllAvailable()
       assert(spark.table("sinktail").count() === 4)
@@ -907,7 +921,7 @@ class PartitionedSinkSpec extends SparkSpec {
         .getLines().toSeq.last
       assert(offLine.matches("""\{"gen":\d+\}"""),
         s"offset must be a compact generation number, got: $offLine")
-    } finally q.stop()
+    } finally { q.stop(); qf.stop() }
     spark.sql("DROP TABLE graft_tail_spec.t")
   }
 

@@ -271,4 +271,94 @@ class SinkDppSpec extends SparkSpec {
     assert(out.map(_.getAs[Long]("neighbor_id")).toSet === Set(4L, 8L))
     spark.sql("DROP TABLE dppann.c")
   }
+
+  /** A typed V2 literal, as Spark's runtime filters carry them (its
+    * `LiteralValue` is private to Spark, so built reflectively here —
+    * the only way a NULL member keeps its column's type).
+    */
+  private def v2Lit(v: Any, dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.connector.expressions.Expression =
+    Class.forName("org.apache.spark.sql.connector.expressions.LiteralValue")
+      .getConstructor(classOf[Object], classOf[org.apache.spark.sql.types.DataType])
+      .newInstance(v.asInstanceOf[AnyRef], dt)
+      .asInstanceOf[org.apache.spark.sql.connector.expressions.Expression]
+
+  test("runtime IN / = predicates plan exactly the files that may match, on the batch and the COW scan") {
+    import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, SupportsRowLevelOperations}
+    import org.apache.spark.sql.connector.expressions.Expressions
+    import org.apache.spark.sql.connector.expressions.filter.Predicate
+    import org.apache.spark.sql.connector.read.{ScanBuilder, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
+    import org.apache.spark.sql.connector.write.{RowLevelOperation, RowLevelOperationInfo}
+    import org.apache.spark.sql.types.{IntegerType, LongType, StringType}
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import org.apache.spark.unsafe.types.UTF8String
+    import spark.implicits._
+    val root = freshCatalog("dpprt")
+    // one file per (p, n) tuple: k bands 0-9, 10-19, 20-29, 30-39
+    (0 until 40).map(k => (k.toLong, if (k < 20) "A" else "B", k / 10 % 2 + 1))
+      .toDF("k", "p", "n").coalesce(1)
+      .writeTo("dpprt.t").partitionedBy(col("p"), col("n")).create()
+    val t = spark.table("dpprt.t")
+    def filesOf(rows: DataFrame): Set[String] =
+      rows.select(col("_file")).distinct().collect().map(_.getString(0)).toSet
+    val all = filesOf(t).toSeq.sorted
+    assert(all.size === 4)
+
+    val cat = new graft.sources.PartitionedSinkCatalog
+    cat.initialize("dpprt", new CaseInsensitiveStringMap(
+      java.util.Map.of("root", root)))
+    val table = cat.loadTable(Identifier.of(Array.empty[String], "t"))
+    val opts = CaseInsensitiveStringMap.empty()
+    def batchScan: ScanBuilder =
+      table.asInstanceOf[SupportsRead].newScanBuilder(opts)
+    def cowScan: ScanBuilder = table.asInstanceOf[SupportsRowLevelOperations]
+      .newRowLevelOperationBuilder(new RowLevelOperationInfo {
+        override def options(): CaseInsensitiveStringMap = opts
+        override def command(): RowLevelOperation.Command =
+          RowLevelOperation.Command.DELETE
+      }).build().newScanBuilder(opts)
+    // the files a built scan plans once `p` arrives as its runtime
+    // filter, read back through the scan's own splits
+    val schema = table.columns().map(c => (c.name(), c.dataType()))
+    def planned(builder: ScanBuilder, p: Predicate): Set[String] = {
+      builder.asInstanceOf[SupportsPushDownRequiredColumns].pruneColumns(
+        org.apache.spark.sql.types.StructType(
+          schema.map { case (n, dt) =>
+            org.apache.spark.sql.types.StructField(n, dt) }.toSeq :+
+            org.apache.spark.sql.types.StructField("_file", StringType)))
+      val scan = builder.build()
+      scan.asInstanceOf[SupportsRuntimeV2Filtering].filter(Array(p))
+      val batch = scan.toBatch
+      val factory = batch.createReaderFactory()
+      batch.planInputPartitions().flatMap { split =>
+        val r = factory.createReader(split)
+        try Iterator.continually(r.next()).takeWhile(identity)
+          .map(_ => r.get().getUTF8String(schema.length).toString).toVector
+        finally r.close()
+      }.toSet
+    }
+    def pred(name: String, c: String,
+             vs: org.apache.spark.sql.connector.expressions.Expression*) =
+      new Predicate(name, (Expressions.column(c) +: vs).toArray)
+    def str(s: String) = v2Lit(UTF8String.fromString(s), StringType)
+    val cases = Seq(
+      "string partition IN with a NULL member" ->
+        (pred("IN", "p", str("A"), v2Lit(null, StringType)),
+          filesOf(t.filter(col("p") === "A"))),
+      "INT partition IN" ->
+        (pred("IN", "n", v2Lit(2, IntegerType)),
+          filesOf(t.filter(col("n") === 2))),
+      "data-column IN with a NULL member" ->
+        (pred("IN", "k", v2Lit(15L, LongType), v2Lit(null, LongType)),
+          filesOf(t.filter(col("k") === 15L))),
+      "_file IN over 2 of 4 files" ->
+        (pred("IN", "_file", str(all(0)), str(all(2))), Set(all(0), all(2))),
+      "= with a NULL literal" ->
+        (pred("=", "p", v2Lit(null, StringType)), Set.empty[String]))
+    for ((what, (p, expected)) <- cases; (kind, builder) <-
+           Seq("batch" -> (() => batchScan), "cow" -> (() => cowScan))) {
+      assert(planned(builder(), p) === expected, s"$kind scan, $what")
+    }
+    assert(cases.map(_._2._2.size) === Seq(2, 2, 1, 2, 0))
+  }
 }

@@ -60,6 +60,26 @@ class SinkFsOpsSpec extends AnyFunSuite {
       .isEmpty, "count(*) must answer from the manifest, planning no scan")
   }
 
+  test("a declined aggregate pushdown and its scan read one snapshot: one listing, one manifest open") {
+    import spark.implicits._
+    val dir = catalog("graft_opsagg_spec")
+    val t = "graft_opsagg_spec.t"
+    (for (y <- 1 to 2; d <- 1 to 3) yield (y * 100L + d, y, d)).toDF("k", "y", "d")
+      .repartition(col("y"), col("d"))
+      .writeTo(t).tableProperty("graft.deleteMode", "mor")
+      .partitionedBy(col("y"), col("d")).create()
+    // an active position delete declines the metadata-only answer
+    spark.sql(s"DELETE FROM $t WHERE k = 102").collect()
+    val (n, countOps) = FaultyFileSystem.driverOps(
+      spark.sql(s"SELECT count(*) FROM $t").collect())
+    assert(n.head.getLong(0) === 5L)
+    assertManifestOnly(dir, countOps, "declined count(*)")
+    val (mx, maxOps) = FaultyFileSystem.driverOps(
+      spark.sql(s"SELECT max(k) FROM $t").collect())
+    assert(mx.head.getLong(0) === 203L)
+    assertManifestOnly(dir, maxOps, "declined max(k)")
+  }
+
   test("a point-predicate scan opens only the bloom blobs its candidate files name") {
     import spark.implicits._
     val dir = catalog("graft_opsbl_spec")

@@ -99,12 +99,7 @@ class SinkPublishSpec extends AnyFunSuite {
       "the last manifest retires with its file")
   }
 
-  test("streaming tail skips provably-excluded files when filters are pushed") {
-    // Spark's streaming planner does NOT run V2ScanRelationPushDown
-    // (it is batch-only), so a `.filter` above readStream.table never
-    // reaches pushFilters — drive the scan-builder protocol directly,
-    // exactly as a pushing planner would, and pin that the tail plans
-    // only the file whose recorded min/max intersects the predicate
+  test("streaming tail carves a giant epoch file into byte ranges, rows exactly once") {
     val spark = graft.TestSpark.spark
     import spark.implicits._
     import org.apache.spark.sql.functions.col
@@ -123,24 +118,13 @@ class SinkPublishSpec extends AnyFunSuite {
       org.apache.spark.sql.types.StructField("p",
         org.apache.spark.sql.types.StringType)))
     def ckpt(n: String) = Files.createTempDirectory(n).toString
-    val builder = new PartitionedSinkScanBuilder(s"$root/t", Seq("p"), schema)
-    val residual = builder.pushFilters(
-      Array(org.apache.spark.sql.sources.GreaterThan("k", 25L)))
-    assert(residual.length === 1,
-      "skip filters stay residual — the engine re-evaluates post-scan")
-    val stream = builder.build().toMicroBatchStream(ckpt("stail_ck"))
-    val splits = stream.planInputPartitions(
-      stream.initialOffset(), stream.latestOffset())
-    assert(splits.length === 1,
-      s"two band files must be SKIPPED at tail planning, " +
-        s"got ${splits.length} splits")
-    // the unfiltered tail plans all three
+    // the whole tail plans all three files
     val b2 = new PartitionedSinkScanBuilder(s"$root/t", Seq("p"), schema)
     val s2 = b2.build().toMicroBatchStream(ckpt("stail_ck2"))
     assert(s2.planInputPartitions(s2.initialOffset(), s2.latestOffset())
       .length === 3)
-    // and a giant epoch file carves into byte ranges on the tail too —
-    // rows exactly once across the ranges (batch-twin read compares)
+    // a giant epoch file carves into byte ranges on the tail — rows
+    // exactly once across the ranges (batch-twin read compares)
     spark.conf.set("spark.sql.files.maxPartitionBytes", "16")
     try {
       val b3 = new PartitionedSinkScanBuilder(s"$root/t", Seq("p"), schema)
