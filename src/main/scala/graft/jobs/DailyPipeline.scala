@@ -35,6 +35,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     the whole pipeline for the same date writes nothing anywhere,
   *     which is exactly the reference's AirflowSkipException /
   *     count-short-circuit behavior without a scheduler in the loop.
+  *     A dim runs no Spark action at all when its build's fingerprint
+  *     (inputs, their files and the plan) is the one recorded with the
+  *     stored table and no file of the table was written since
+  *     ([[Warehouse.skipIfBuilt]]): airports and dates then only report
+  *     "unchanged", and aircrafts runs just its FK probe, on the stored
+  *     dim. Any mismatch takes the dim's full path below.
   *   - '''retries''': the reference puts retries=5, 10 s apart, on the
   *     one task with an external dependency — the API extract
   *     (flights_daily.py:57-58). [[retry]] wraps exactly that seam;
@@ -45,9 +51,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     write need no DDL step.
   *
   * At the daily sizes the run's cost is per-action overhead, not data,
-  * so each decision costs one Spark action: the extract counts its
-  * fetched rows on the driver, each dim compares rebuild and stored
-  * content in one pass ([[graft.ops.IncrementalOps.sameContent]]), the
+  * so each decision costs one Spark action at most: the extract counts
+  * its fetched rows on the driver, a dim whose stamp does not match
+  * compares rebuild and stored content in one pass
+  * ([[graft.ops.IncrementalOps.sameContent]]), the
   * aircrafts FK probe runs on whichever dim will be published, the fact
   * load decides on one `count()`, and every lake read pins its schema
   * ([[ExtractFlights.readLake]]) so no read launches an inference job.

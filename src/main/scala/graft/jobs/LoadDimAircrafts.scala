@@ -126,6 +126,11 @@ object LoadDimAircrafts {
     * [[IncrementalOps.sameContent]] check has just shown equal to the
     * rebuild; when it changed, the probe runs on the rebuild. A failed
     * probe aborts before any write either way.
+    *
+    * A run whose rebuild has the fingerprint recorded with the stored
+    * dim, its files unwritten since, skips the rebuild and the compare
+    * ([[Warehouse.skipIfBuilt]]): the probe runs on the stored dim, the
+    * run's one Spark action, and nothing is written.
     * @param flightsLake current flights (for the FK assert); None skips
     *                    the check (first load, empty lake). Taken by name
     *                    and evaluated once, only after the compare, so a
@@ -136,19 +141,21 @@ object LoadDimAircrafts {
           aircrafts: DataFrame, manufacturers: DataFrame,
           types: DataFrame, airlines: DataFrame,
           flightsLake: => Option[DataFrame]): Boolean = {
+    def probe(published: DataFrame): Unit =
+      flightsLake.foreach { fl => // the one evaluation of the by-name lake
+        val violations = fkViolations(fl, published)
+        require(violations.isEmpty,
+          s"dim_aircrafts FK check failed: ${violations.count()} flight icao24s missing from dim")
+      }
+
     val dim = build(aircrafts, manufacturers, types, airlines)
-    val stored = if (wh.exists(table)) Some(wh.table(spark, table)) else None
-    val unchanged = stored.filter(IncrementalOps.sameContent(dim, _))
-    val published = unchanged.getOrElse(dim)
-
-    flightsLake.foreach { fl => // the one evaluation of the by-name lake
-      val violations = fkViolations(fl, published)
-      require(violations.isEmpty,
-        s"dim_aircrafts FK check failed: ${violations.count()} flight icao24s missing from dim")
+    Warehouse.skipIfBuilt(wh, table, dim)(unchanged = { probe(wh.table(spark, table)); false }) {
+      val stored = if (wh.exists(table)) Some(wh.table(spark, table)) else None
+      val unchanged = stored.filter(IncrementalOps.sameContent(dim, _))
+      probe(unchanged.getOrElse(dim))
+      val changed = unchanged.isEmpty
+      if (changed) wh.overwrite(table, dim)
+      changed
     }
-
-    val changed = unchanged.isEmpty
-    if (changed) wh.overwrite(table, dim)
-    changed
   }
 }

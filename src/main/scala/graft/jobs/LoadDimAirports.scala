@@ -17,6 +17,11 @@ import graft.schemas.Schemas
   * compares DataFrame object identity and is dead code — effective
   * semantics "always overwrite". We implement REAL content comparison
   * and skip the rewrite when nothing changed.
+  *
+  * A run whose build has the fingerprint the stored dim was recorded
+  * with, its files unwritten since, runs no Spark action and reports
+  * "not rewritten" ([[Warehouse.skipIfBuilt]]); every other run builds,
+  * compares and overwrites as above.
   */
 object LoadDimAirports {
 
@@ -57,9 +62,11 @@ object LoadDimAirports {
         col("iata").as("iata_code"),
         col("name"), col("country"), col("lat"), col("lon"), col("alt"))
 
-    val changed = !wh.exists(table) ||
-      !IncrementalOps.sameContent(dim, wh.table(spark, table))
-    if (changed) wh.overwrite(table, dim)
-    changed
+    Warehouse.skipIfBuilt(wh, table, dim)(unchanged = false) {
+      val changed = !wh.exists(table) ||
+        !IncrementalOps.sameContent(dim, wh.table(spark, table))
+      if (changed) wh.overwrite(table, dim)
+      changed
+    }
   }
 }

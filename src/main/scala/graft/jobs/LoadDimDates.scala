@@ -10,6 +10,12 @@ import graft.ops.{DateDim, IncrementalOps}
   * rows in that range (EXCEPT DISTINCT — the U2 primitive), appends the
   * delta. Cardinality check mirrors the reference's expected-rows
   * assert (reference: load_dim_dates.py:24-29).
+  *
+  * A run whose generator has the fingerprint recorded with the stored
+  * dim, its files unwritten since, runs no Spark action and appends 0
+  * rows ([[Warehouse.skipIfBuilt]]): that generator passed the
+  * cardinality check, and its rows were all stored, when it was
+  * recorded.
   */
 object LoadDimDates {
 
@@ -19,20 +25,22 @@ object LoadDimDates {
   def run(spark: SparkSession, wh: Warehouse, startDate: String, endDate: String): Long = {
     val gen = DateDim.dateDimension(spark, startDate, endDate)
 
-    val expected = java.time.temporal.ChronoUnit.DAYS.between(
-      java.time.LocalDate.parse(startDate), java.time.LocalDate.parse(endDate)) + 1
-    val genCnt = gen.count()
-    require(genCnt == expected, s"dim_dates generator produced $genCnt rows, expected $expected")
+    Warehouse.skipIfBuilt(wh, table, gen)(unchanged = 0L) {
+      val expected = java.time.temporal.ChronoUnit.DAYS.between(
+        java.time.LocalDate.parse(startDate), java.time.LocalDate.parse(endDate)) + 1
+      val genCnt = gen.count()
+      require(genCnt == expected, s"dim_dates generator produced $genCnt rows, expected $expected")
 
-    val delta =
-      if (!wh.exists(table)) gen
-      else {
-        val current = wh.table(spark, table)
-          .filter(col("date_date").between(startDate, endDate))
-        IncrementalOps.exceptNew(gen, current)
-      }
-    val n = delta.count()
-    if (n > 0) wh.append(table, delta)
-    n
+      val delta =
+        if (!wh.exists(table)) gen
+        else {
+          val current = wh.table(spark, table)
+            .filter(col("date_date").between(startDate, endDate))
+          IncrementalOps.exceptNew(gen, current)
+        }
+      val n = delta.count()
+      if (n > 0) wh.append(table, delta)
+      n
+    }
   }
 }

@@ -17,6 +17,55 @@ trait Warehouse {
   def overwrite(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit
   /** Incremental append (reference: load_fct_flights.py:112-116). */
   def append(name: String, df: DataFrame, partitionBy: Seq[String] = Nil): Unit
+
+  /** The fingerprint [[recordBuild]] last recorded with `table`, while
+    * the table still holds exactly the data files it was recorded with;
+    * None when none was recorded or any file was written since, by
+    * anyone. A warehouse that keeps no record answers None, and every
+    * dim load on it takes its full path.
+    */
+  def builtFrom(table: String): Option[String] = None
+
+  /** Records that `table`'s current data files hold what a build with
+    * this [[graft.ops.IncrementalOps.fingerprint]] produces. The stored
+    * stamp is the fingerprint, a colon, and the
+    * [[graft.ops.Fs.filesDigest]] of the table's directory.
+    */
+  def recordBuild(table: String, fingerprint: String): Unit = ()
+}
+
+object Warehouse {
+
+  /** The dims' one skip-if-unchanged check. When `dim` has a fingerprint
+    * and `table` was recorded as built from it, with no file written
+    * since, returns `unchanged` and runs no Spark action. Otherwise runs
+    * `rebuild`, the dim's full path, and then records the fingerprint
+    * with the files the table now holds; a `rebuild` that throws records
+    * nothing. A crash between publish and record leaves the old stamp,
+    * whose file digest no longer matches, so the next run takes the full
+    * path too.
+    */
+  private[jobs] def skipIfBuilt[T](wh: Warehouse, table: String, dim: DataFrame)(
+      unchanged: => T)(rebuild: => T): T = {
+    val fingerprint = graft.ops.IncrementalOps.fingerprint(dim)
+    if (fingerprint.isDefined && wh.builtFrom(table) == fingerprint) unchanged
+    else {
+      val out = rebuild
+      fingerprint.foreach(wh.recordBuild(table, _))
+      out
+    }
+  }
+
+  /** The stamp recorded for `fingerprint` over the files in `dir`. */
+  private[jobs] def stamp(fingerprint: String, dir: String): String =
+    fingerprint + ":" + graft.ops.Fs.filesDigest(dir)
+
+  /** The fingerprint of `stamp` while `dir` holds the files it names. */
+  private[jobs] def fingerprintOf(stamp: String, dir: String): Option[String] = {
+    val at = stamp.lastIndexOf(':')
+    if (at > 0 && stamp.substring(at + 1) == graft.ops.Fs.filesDigest(dir)) Some(stamp.take(at))
+    else None
+  }
 }
 
 /** Parquet-directory warehouse: one partitioned parquet dataset per
@@ -43,6 +92,17 @@ final class ParquetWarehouse(root: String) extends Warehouse {
 
   def append(name: String, df: DataFrame, partitionBy: Seq[String]): Unit =
     write(SaveMode.Append)(name, df, partitionBy)
+
+  /** The build stamp lives in a `_`-prefixed sidecar in the table's
+    * directory: Spark's reader skips it and an overwrite deletes it.
+    */
+  private def stampFile(name: String) = s"${path(name)}/_graft_build"
+
+  override def builtFrom(table: String): Option[String] =
+    graft.ops.Fs.readText(stampFile(table)).flatMap(Warehouse.fingerprintOf(_, path(table)))
+
+  override def recordBuild(table: String, fingerprint: String): Unit =
+    graft.ops.Fs.writeText(stampFile(table), Warehouse.stamp(fingerprint, path(table)))
 }
 
 /** Session-catalog warehouse: managed `USING PARQUET` tables in database
@@ -72,25 +132,25 @@ final class CatalogWarehouse(spark: SparkSession, db: String = "graft") extends 
   /** DDL for the reference's four warehouse tables
     * (reference: create_hive_tbls.hql:1-48). CHAR/VARCHAR become STRING —
     * Spark would silently pad/truncate, the reference's Hive tables do
-    * not enforce length either.
+    * not enforce length either. A table that already exists is left
+    * alone without running its DDL, so a daily run's DDL step runs no
+    * Spark command once the tables are there.
     */
-  def createReferenceTables(): Unit = {
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${q("dim_airports")} (
-      airport_dim_id INT, icao_code STRING, iata_code STRING, name STRING,
-      country STRING, lat FLOAT, lon FLOAT, alt SMALLINT) USING PARQUET""")
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${q("dim_dates")} (
-      date_dim_id INT, date_date DATE, year SMALLINT, month TINYINT,
-      day TINYINT, week_of_year TINYINT, day_of_week TINYINT) USING PARQUET""")
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${q("dim_aircrafts")} (
-      aircraft_dim_id INT, icao24_addr STRING, registration STRING,
+  def createReferenceTables(): Unit = Seq(
+    "dim_airports" -> """(airport_dim_id INT, icao_code STRING, iata_code STRING, name STRING,
+      country STRING, lat FLOAT, lon FLOAT, alt SMALLINT) USING PARQUET""",
+    "dim_dates" -> """(date_dim_id INT, date_date DATE, year SMALLINT, month TINYINT,
+      day TINYINT, week_of_year TINYINT, day_of_week TINYINT) USING PARQUET""",
+    "dim_aircrafts" -> """(aircraft_dim_id INT, icao24_addr STRING, registration STRING,
       operating_airline STRING, manufacturer STRING, model STRING,
       serial_num STRING, line_num STRING, icao_designator STRING,
       icao_type STRING, aircraft_type STRING, engine_cnt TINYINT,
-      engine_type STRING) USING PARQUET""")
-    spark.sql(s"""CREATE TABLE IF NOT EXISTS ${q("fct_flights")} (
-      aircraft_dim_id INT, depart_ts TIMESTAMP, depart_airport_dim_id INT,
+      engine_type STRING) USING PARQUET""",
+    "fct_flights" -> """(aircraft_dim_id INT, depart_ts TIMESTAMP, depart_airport_dim_id INT,
       arrival_ts TIMESTAMP, arrival_airport_dim_id INT)
-      USING PARQUET PARTITIONED BY (flight_date_dim_id INT)""")
+      USING PARQUET PARTITIONED BY (flight_date_dim_id INT)"""
+  ).foreach { case (table, definition) =>
+    if (!exists(table)) spark.sql(s"CREATE TABLE IF NOT EXISTS ${q(table)} $definition")
   }
 
   def exists(table: String): Boolean = spark.catalog.tableExists(q(table))
@@ -116,6 +176,26 @@ final class CatalogWarehouse(spark: SparkSession, db: String = "graft") extends 
 
   def append(name: String, df: DataFrame, partitionBy: Seq[String]): Unit =
     write(SaveMode.Append)(name, df, partitionBy)
+
+  /** The build stamp is the table property `graft.build`; an insert
+    * keeps it, and the file digest inside it tells it stale.
+    */
+  private val StampKey = "graft.build"
+
+  private def metadata(name: String) = spark.sessionState.catalog.getTableMetadata(
+    org.apache.spark.sql.catalyst.TableIdentifier(name, Some(db)))
+
+  override def builtFrom(table: String): Option[String] =
+    if (!exists(table)) None
+    else {
+      val m = metadata(table)
+      m.properties.get(StampKey).flatMap(Warehouse.fingerprintOf(_, m.location.toString))
+    }
+
+  override def recordBuild(table: String, fingerprint: String): Unit = {
+    val stamp = Warehouse.stamp(fingerprint, metadata(table).location.toString)
+    spark.sql(s"ALTER TABLE ${q(table)} SET TBLPROPERTIES ('$StampKey' = '$stamp')")
+  }
 
   /** Hive-style partition listing, e.g. `flight_date_dim_id=20240101`. */
   def partitions(name: String): Seq[String] =

@@ -49,6 +49,73 @@ object IncrementalOps {
       .filter(col(tag) =!= 0L).isEmpty
   }
 
+  /** A SHA-256 (hex) over everything `df`'s rows are computed from, or
+    * None when the plan alone cannot tell that. Two frames with equal
+    * fingerprints hold equal rows, so a stored result recorded with a
+    * fingerprint need not be recomputed while the fingerprint holds.
+    *
+    * Hashed, with no Spark job: the Spark version; `df`'s schema (the
+    * canonical form below erases column names); the analyzed plan's
+    * canonicalized tree string, every field of every node and expression
+    * printed (`maxFields = Int.MaxValue`), so two plans with the same logic give the same text
+    * across sessions; and for each leaf, the data the text leaves out:
+    *   - a `HadoopFsRelation` (a file scan): its options and the (path,
+    *     length, mtime) of the files its own file index holds — the
+    *     files the scan reads, not a fresh listing;
+    *   - a `LocalRelation`: its rows;
+    *   - a `Range`: nothing beyond the plan text.
+    * Any other leaf (an RDD, a V2 scan, a streaming source), a
+    * nondeterministic expression, a current-time expression or a
+    * user-defined function (its code is not in the text) gives None.
+    */
+  def fingerprint(df: DataFrame): Option[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{UnsafeProjection, UserDefinedExpression}
+    import org.apache.spark.sql.catalyst.plans.logical.{LeafNode, LocalRelation, Range}
+    import org.apache.spark.sql.catalyst.trees.TreePattern.CURRENT_LIKE
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitioningAwareFileIndex}
+    import org.apache.spark.sql.internal.SQLConf
+    val plan = df.queryExecution.analyzed
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    def put(bytes: Array[Byte]): Unit = {
+      md.update(java.nio.ByteBuffer.allocate(4).putInt(bytes.length).array())
+      md.update(bytes)
+    }
+    def putStr(s: String): Unit = put(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val opaque = plan.collectWithSubqueries { case p => p.expressions }.flatten.exists(e =>
+      !e.deterministic || e.containsPattern(CURRENT_LIKE) ||
+        e.exists(_.isInstanceOf[UserDefinedExpression]))
+    val leavesHashed = !opaque && plan.collectWithSubqueries { case l: LeafNode => l }.forall {
+      case LogicalRelation(r: HadoopFsRelation, _, _, _, _) => r.location match {
+        case index: PartitioningAwareFileIndex =>
+          r.options.toSeq.sorted.foreach { case (k, v) => putStr(k); putStr(v) }
+          index.allFiles().map(f => (f.getPath.toString, f.getLen, f.getModificationTime))
+            .sorted.foreach { case (path, len, mtime) => putStr(s"$path $len $mtime") }
+          true
+        case _ => false
+      }
+      case l: LocalRelation =>
+        val toBytes = UnsafeProjection.create(l.schema)
+        l.data.foreach(row => put(toBytes(row).getBytes))
+        true
+      case _: Range => true
+      case _ => false
+    }
+    if (!leavesHashed) None
+    else {
+      putStr(org.apache.spark.SPARK_VERSION)
+      putStr(df.schema.json)
+      // expressions print their own arguments under the session's
+      // maxToStringFields, so lift that too: a long IN list must not be
+      // cut short to the same "... N more fields"
+      val untruncated = SQLConf.get.clone()
+      untruncated.setConf(SQLConf.MAX_TO_STRING_FIELDS, Int.MaxValue)
+      putStr(SQLConf.withExistingConf(untruncated) {
+        plan.canonicalized.treeString(verbose = true, maxFields = Int.MaxValue)
+      })
+      Some(md.digest().map("%02x".format(_)).mkString)
+    }
+  }
+
   /** Incremental aggregate maintenance: merge an existing aggregate
     * with a delta aggregate over the same keys by re-summing the
     * mergeable measure columns. For sums/counts (and any commutative

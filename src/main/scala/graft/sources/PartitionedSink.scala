@@ -5,7 +5,7 @@ import java.util
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftColumnShim, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
@@ -256,8 +256,7 @@ private[sources] class PartitionedSinkTable(path: String,
       asOfVersion.map(v => s" VERSION AS OF $v").getOrElse("")
   override def schema(): StructType = schema0
   override def partitioning(): Array[Transform] =
-    partCols.map(c => org.apache.spark.sql.connector.expressions.Expressions
-      .identity(c): Transform).toArray
+    partCols.map(c => GraftColumnShim.identity(c): Transform).toArray
   override def capabilities(): util.Set[TableCapability] = Set(
     TableCapability.BATCH_READ,
     TableCapability.MICRO_BATCH_READ,
@@ -1272,13 +1271,13 @@ private class SinkWrite(path: String, partCols: Seq[String],
   override def requiredDistribution(): Distribution =
     if (sortCols.nonEmpty) Distributions.ordered(requiredOrdering())
     else if (op.nonEmpty && schema.nonEmpty) Distributions.clustered(
-      partCols.map(c => x.Expressions.identity(c): x.Expression).toArray)
+      partCols.map(c => GraftColumnShim.identity(c): x.Expression).toArray)
     else Distributions.unspecified()
   override def distributionStrictlyRequired(): Boolean = false
   override def requiredOrdering(): Array[x.SortOrder] =
     if (sortCols.isEmpty) Array.empty
     else (partCols ++ sortCols).map(c => x.Expressions.sort(
-      x.Expressions.column(c), x.SortDirection.ASCENDING): x.SortOrder).toArray
+      GraftColumnShim.fieldRef(c), x.SortDirection.ASCENDING): x.SortOrder).toArray
 
   override def toBatch: DeltaBatchWrite = this
   override def toStreaming

@@ -334,7 +334,7 @@ private[sources] class PartitionedSinkScan(
   @volatile private var skippedByStats = 0L
   @volatile private var skippedByBloom = 0L
   @volatile private var filesScanned = 0L
-  @volatile private var skippedByRuntime = 0L
+  @volatile protected var skippedByRuntime = 0L
 
   /** RUNTIME pruning (DPP through
     * [[org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering]]):
@@ -390,8 +390,7 @@ private[sources] class PartitionedSinkScan(
       .filter(f => partCols.contains(f.name) ||
         (SinkFileSkip.statsEligible(f.dataType) &&
           f.name != SinkMeta.FileCol && f.name != SinkMeta.PosCol))
-      .map(f => org.apache.spark.sql.connector.expressions
-        .Expressions.column(f.name)).toArray
+      .map(f => org.apache.spark.sql.GraftColumnShim.fieldRef(f.name)).toArray
 
   override def filter(
       predicates: Array[org.apache.spark.sql.connector.expressions
@@ -551,8 +550,7 @@ private[sources] class PartitionedSinkScan(
         inputSplits.length)
     else
       new org.apache.spark.sql.connector.read.partitioning.KeyGroupedPartitioning(
-        partCols.map(c => org.apache.spark.sql.connector.expressions
-          .Expressions.identity(c)
+        partCols.map(c => org.apache.spark.sql.GraftColumnShim.identity(c)
           : org.apache.spark.sql.connector.expressions.Expression).toArray,
         limitedFiles.map(_.values).distinct.size)
 

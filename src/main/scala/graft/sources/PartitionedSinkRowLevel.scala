@@ -191,28 +191,11 @@ private[sources] class SinkCowScan(
   override def filterAttributes(): Array[NamedReference] =
     Array(Expressions.column(SinkMeta.FileCol))
 
-  /** Post-runtime-filter group count, so the ReplaceData scan node's
-    * `filesScanned` metric reflects what actually rewrites (the base
-    * class counts only static pruning). None until planInputPartitions
-    * has run — a metrics read before execution (an EXPLAIN-driven UI)
-    * falls back to the base class's static count instead of reporting
-    * a contradictory 0 next to populated skip counters.
-    */
-  @volatile private var groupsPlanned: Option[Long] = None
-
-  override def reportDriverMetrics()
-      : Array[org.apache.spark.sql.connector.metric.CustomTaskMetric] =
-    super.reportDriverMetrics().map { m =>
-      (m.name, groupsPlanned) match {
-        case ("filesScanned", Some(n)) =>
-          SinkScanMetrics.report("filesScanned" -> n).head
-        case _ => m
-      }
-    }
-
   override def planInputPartitions(): Array[InputPartition] = {
     val groups = holding(runtimeFilters, prunedFilesWithStats)
-    groupsPlanned = Some(groups.size.toLong)
+    // the base class reports `filesScanned` net of these, so the
+    // ReplaceData scan node shows what actually rewrites
+    skippedByRuntime = (prunedFilesWithStats.size - groups.size).toLong
     op.plannedGroups = groups.map(e => (e.rel, e.values, abs(e)))
     op.scanDeleteManifests = Some(activeDeleteManifests
       .map(p => new org.apache.hadoop.fs.Path(p).getName).toSet)

@@ -28,6 +28,18 @@ object GraftColumnShim {
   def toV1(predicates: Array[org.apache.spark.sql.connector.expressions.filter.Predicate])
       : Array[org.apache.spark.sql.sources.Filter] =
     org.apache.spark.sql.internal.connector.PredicateUtils.toV1(predicates)
+
+  /** A V2 reference to the column named `name`, built from its one name
+    * part: the name is never parsed as SQL, so one that needs quoting
+    * (`ev-day`) stays a single column. The public `Expressions.column`
+    * and `Expressions.identity` parse their argument.
+    */
+  def fieldRef(name: String): org.apache.spark.sql.connector.expressions.NamedReference =
+    org.apache.spark.sql.connector.expressions.FieldReference.column(name)
+
+  /** The identity transform over [[fieldRef]]`(name)`. */
+  def identity(name: String): org.apache.spark.sql.connector.expressions.Transform =
+    org.apache.spark.sql.connector.expressions.LogicalExpressions.identity(fieldRef(name))
 }
 
 /** Bridge to the `private[sql]` InternalRow-RDD → DataFrame endpoint,

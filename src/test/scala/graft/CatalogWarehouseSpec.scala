@@ -108,4 +108,37 @@ class CatalogWarehouseSpec extends SparkSpec with JobFixtures {
   test("DailyPipeline's concurrent branches match the sequential schedule (CatalogWarehouse)") {
     assertSameAsSequential(freshWarehouse("graft_whconc"), freshWarehouse("graft_whseq"))
   }
+
+  test("a same-date DailyPipeline replay stays within its query-execution budget (CatalogWarehouse)") {
+    val wh = freshWarehouse("graft_whbudget")
+    val in = dailyInputs(DaySource, tmpDir("lake-budget") + "/flights")
+    val p = dailyParams(java.time.LocalDate.of(2024, 1, 1))
+    DailyPipeline.run(spark, wh, in, p)
+    // the extract EXCEPT count, the aircrafts FK probe and the fact delta
+    // count; the dims' fingerprints match their stamps
+    val budget = 3
+    val n = queryExecutions {
+      assert(DailyPipeline.run(spark, wh, in, p) == DailyPipeline.Report(0L, false, 0L, false, 0L))
+    }
+    assert(n <= budget, s"a replay ran $n query executions, budget $budget")
+  }
+
+  private val stampDbs = new java.util.concurrent.atomic.AtomicInteger
+  private def stampWarehouse(): Warehouse = freshWarehouse(s"graft_stamp${stampDbs.incrementAndGet()}")
+
+  test("an unchanged dim rerun runs no query execution (CatalogWarehouse)") {
+    assertUnchangedRerunsRunNothing(() => stampWarehouse())
+  }
+
+  test("a changed input file, row or plan rebuilds each dim (CatalogWarehouse)") {
+    assertChangedInputsRebuild(() => stampWarehouse())
+  }
+
+  test("an outside write or a stale stamp rebuilds each dim (CatalogWarehouse)") {
+    assertOutsideWritesAndStaleStampsRebuild(() => stampWarehouse())
+  }
+
+  test("an input that is neither a file scan nor a local relation always rebuilds (CatalogWarehouse)") {
+    assertOpaqueInputsRebuild(() => stampWarehouse())
+  }
 }

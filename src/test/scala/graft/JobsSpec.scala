@@ -221,14 +221,30 @@ class JobsSpec extends SparkSpec with JobFixtures {
     val p = DailyPipeline.Params("EDDF", java.time.LocalDate.of(2024, 1, 1),
       dimDatesStart = "2024-01-01", dimDatesEnd = "2024-01-31", retryDelayMs = 0L)
     DailyPipeline.run(spark, wh, in, p)
-    // one action per decision: extract EXCEPT count, airports compare,
-    // dates generator count + delta count, aircrafts compare + FK probe,
-    // fact delta count
-    val budget = 7
+    // the extract EXCEPT count, the aircrafts FK probe and the fact delta
+    // count; the dims' fingerprints match their stamps, so no dim
+    // rebuilds, compares or counts
+    val budget = 3
     val n = queryExecutions {
       assert(DailyPipeline.run(spark, wh, in, p) == DailyPipeline.Report(0L, false, 0L, false, 0L))
     }
     assert(n <= budget, s"a replay ran $n query executions, budget $budget")
+  }
+
+  test("an unchanged dim rerun runs no query execution (ParquetWarehouse)") {
+    assertUnchangedRerunsRunNothing(() => new ParquetWarehouse(tmpDir("wh-stamp")))
+  }
+
+  test("a changed input file, row or plan rebuilds each dim (ParquetWarehouse)") {
+    assertChangedInputsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
+  }
+
+  test("an outside write or a stale stamp rebuilds each dim (ParquetWarehouse)") {
+    assertOutsideWritesAndStaleStampsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
+  }
+
+  test("an input that is neither a file scan nor a local relation always rebuilds (ParquetWarehouse)") {
+    assertOpaqueInputsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
   }
 
   private def source(deps: Seq[Row], arrs: Seq[Row]): FlightSource = new FlightSource {

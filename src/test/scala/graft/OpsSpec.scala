@@ -431,6 +431,38 @@ class OpsSpec extends SparkSpec {
     assert(queryExecutions(assert(!IncrementalOps.sameContent(n, e))) == 1)
   }
 
+  test("fingerprint: equal for equal inputs and logic, sensitive to rows, literals, names and files") {
+    import IncrementalOps.fingerprint
+    def q(rows: Seq[(Int, String)], word: String) =
+      rows.toDF("id", "v").filter(col("v") =!= word).withColumn("n", col("id") + 1)
+    val rows = Seq((1, "x"), (2, "y"))
+    val fp = fingerprint(q(rows, "x"))
+    assert(fp.isDefined)
+    assert(fingerprint(q(rows, "x")) == fp) // rebuilt: new expression ids, same fingerprint
+    assert(fingerprint(q(rows :+ ((3, "z")), "x")) != fp)
+    assert(fingerprint(q(rows, "y")) != fp)
+    assert(fingerprint(q(rows, "x").withColumnRenamed("n", "m")) != fp)
+    // an expression with many arguments is printed whole, its last one too
+    def firstOf(last: String) =
+      q(rows, "x").withColumn("c", coalesce((1 to 40).map(i => col("v")) :+ lit(last): _*))
+    assert(fingerprint(firstOf("a")) != fingerprint(firstOf("b")))
+    assert(fingerprint(spark.range(3).toDF()) == fingerprint(spark.range(3).toDF()))
+    assert(fingerprint(spark.range(3).toDF()) != fingerprint(spark.range(4).toDF()))
+    // a file scan: the files its index holds when the frame is made
+    val file = java.nio.file.Paths.get(tmpDir("fp"), "in.csv")
+    java.nio.file.Files.write(file, "1,a\n".getBytes)
+    def csv() = spark.read.schema("id INT, v STRING").csv(file.toString)
+    val before = csv()
+    assert(fingerprint(csv()) == fingerprint(before) && fingerprint(before).isDefined)
+    java.nio.file.Files.write(file, "1,a\n2,b\n".getBytes)
+    assert(fingerprint(csv()) != fingerprint(before))
+    // what the plan text cannot pin down has no fingerprint
+    assert(fingerprint(spark.createDataFrame(q(rows, "x").rdd, q(rows, "x").schema)).isEmpty)
+    assert(fingerprint(q(rows, "x").withColumn("r", rand(1))).isEmpty)
+    assert(fingerprint(q(rows, "x").withColumn("d", current_date())).isEmpty)
+    assert(fingerprint(q(rows, "x").withColumn("u", udf((i: Int) => i * 2).apply(col("id")))).isEmpty)
+  }
+
   test("surrogate keys are dense 1..n in order; scalable variant agrees") {
     val df = Seq("delta", "alpha", "charlie", "bravo").toDF("name")
     val global = KeyOps.surrogateKey(df, "id", "name")

@@ -389,6 +389,24 @@ class PartitionedSinkSpec extends SparkSpec {
     spark.sql("DROP TABLE graft_read_spec.t")
   }
 
+  test("a table partitioned by a column whose name needs quoting reads back, filtered") {
+    val root = tmpDir("sink_quoted")
+    spark.conf.set("spark.sql.catalog.graft_quoted_spec",
+      classOf[graft.sources.PartitionedSinkCatalog].getName)
+    spark.conf.set("spark.sql.catalog.graft_quoted_spec.root", root)
+    spark.sql("CREATE TABLE graft_quoted_spec.t (k BIGINT, `ev-day` STRING) " +
+      "PARTITIONED BY (`ev-day`)")
+    spark.sql("INSERT INTO graft_quoted_spec.t VALUES " +
+      "(1, 'd1'), (2, 'd2'), (3, 'd1'), (4, 'd3')")
+    val t = spark.table("graft_quoted_spec.t")
+    assert(t.filter(col("`ev-day`") === "d1").select("k").collect().map(_.getLong(0)).toSet ===
+      Set(1L, 3L))
+    assert(t.filter(col("k") > 1L).count() === 3L)
+    assert(t.groupBy(col("`ev-day`")).count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap === Map("d1" -> 2L, "d2" -> 1L, "d3" -> 1L))
+    spark.sql("DROP TABLE graft_quoted_spec.t")
+  }
+
   test("compactSinkTable rewrites only fragmented partitions, through the table's own dynamic overwrite") {
     import spark.implicits._
     val root = tmpDir("sink_compact")

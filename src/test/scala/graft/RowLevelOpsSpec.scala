@@ -116,6 +116,34 @@ class RowLevelOpsSpec extends SparkSpec {
       (2L, 3.0, "A")))
   }
 
+  test("a copy-on-write DELETE's scan node counts the files its runtime filter drops") {
+    import org.apache.spark.sql.execution.{CommandResultExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+    freshCatalog("rlskip")
+    // four files in one partition whose k ranges all cover 5: the stats
+    // keep every one, only the runtime matching-files filter tells them apart
+    seed("rlskip.t",
+      Seq((1L, 1.0, "A"), (10L, 1.0, "A")),
+      Seq((2L, 2.0, "A"), (9L, 2.0, "A")),
+      Seq((3L, 3.0, "A"), (8L, 3.0, "A")),
+      Seq((5L, 5.0, "A"), (6L, 5.0, "A")))
+    val delete = spark.sql("DELETE FROM rlskip.t WHERE k = 5")
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p +: (p match {
+      case c: CommandResultExec => nodes(c.commandPhysicalPlan)
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case other => other.children.flatMap(nodes)
+    })
+    val cow = nodes(delete.queryExecution.executedPlan).collect {
+      case b: BatchScanExec if b.scan.getClass.getSimpleName == "SinkCowScan" => b
+    }
+    assert(cow.size === 1, delete.queryExecution.executedPlan.toString)
+    assert(cow.head.metrics("filesScanned").value === 1L)
+    assert(cow.head.metrics("filesSkippedRuntime").value === 3L)
+    assert(rows("rlskip.t").map(_._1) === Set(1L, 10L, 2L, 9L, 3L, 8L, 6L))
+  }
+
   test("partition-predicate DELETE takes the metadata-only path") {
     val root = freshCatalog("rl3")
     seed("rl3.t",
