@@ -1,14 +1,16 @@
 package graft
 
 import graft.queries.Q
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
 
 /** Counts what a query's Spark jobs did: jobs, completed stages and
   * tasks, executor CPU and GC seconds, shuffle-read bytes, spill bytes,
-  * peak task memory, and one line per job (id, seconds, tasks, call
-  * site). Shuffle volume is what scales to 100 TB (wall time at sf0.1
+  * peak task memory, classes compiled by Spark's code generator, and
+  * one line per job (id, seconds, tasks, call site). Shuffle volume is
+  * what scales to 100 TB (wall time at sf0.1
   * mostly measures fixed overheads), spill marks a partition-sizing
   * failure (the sf10 "superlinear" slopes were partition spill at the
   * 4-partition default, established only by a manual rerun while the
@@ -21,6 +23,9 @@ import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
   *
   * Events arrive on the listener bus thread; [[reset]] and [[counts]]
   * bracket one query on the caller's, after [[Bench.drainListenerBus]].
+  * The compile count is no listener event: it is the change, between
+  * the two calls, of [[JobTally.codegenCompiles]], so it counts every
+  * compile in the JVM and needs one query at a time.
   */
 private[graft] final class JobTally extends SparkListener {
   import JobTally.Counts
@@ -29,13 +34,16 @@ private[graft] final class JobTally extends SparkListener {
   private val stageJob = scala.collection.mutable.Map[Int, Int]()
   private val jobTasks = scala.collection.mutable.Map[Int, Int]()
   private val execSites = scala.collection.mutable.Map[Long, String]()
+  private var compiles0 = JobTally.codegenCompiles
 
   def reset(): Unit = synchronized {
     c = Counts(); jobs.clear(); stageJob.clear(); jobTasks.clear()
     execSites.clear()
+    compiles0 = JobTally.codegenCompiles
   }
 
-  def counts: Counts = synchronized(c)
+  def counts: Counts =
+    synchronized(c.copy(codegenCompiles = JobTally.codegenCompiles - compiles0))
 
   override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
     c = c.copy(jobs = c.jobs + 1)
@@ -82,8 +90,13 @@ private[graft] object JobTally {
   final case class Counts(jobs: Int = 0, stages: Int = 0, tasks: Int = 0,
                           cpuNanos: Long = 0L, gcMillis: Long = 0L,
                           shuffleRead: Long = 0L, spilled: Long = 0L,
-                          peakMem: Long = 0L,
+                          peakMem: Long = 0L, codegenCompiles: Long = 0L,
                           jobLines: Vector[String] = Vector.empty)
+
+  /** Classes Spark's code generator has compiled in this JVM: one sample
+    * of its compile-time histogram per miss of its compiled-class cache.
+    */
+  def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }
 
 /** The bench artifact's self-adjudication tier, factored out so the
@@ -137,6 +150,35 @@ private[graft] object BenchStatus {
     repLoads.isEmpty ||
       repLoads.max - math.max(SelfLoad, sweepMedianLoad) <= AmbientThreshold
 
+  /** The aggregate `cpu` line of /proc/stat; empty where the file does
+    * not exist.
+    */
+  def procStatCpu(): String = {
+    val stat = java.nio.file.Paths.get("/proc/stat")
+    if (!java.nio.file.Files.exists(stat)) ""
+    else java.nio.file.Files.readAllLines(stat).get(0)
+  }
+
+  /** The host's CPU steal share between two `cpu` lines of /proc/stat:
+    * the ticks the hypervisor gave to other machines while this one's
+    * CPUs had work, over all ticks (user, nice, system, idle, iowait,
+    * irq, softirq, steal; guest time is already inside user). 0 when
+    * either line is missing or no tick passed.
+    */
+  def stealShare(before: String, after: String): Double = {
+    def ticks(line: String): Array[Long] = {
+      val f = line.trim.split("\\s+")
+      if (f.headOption.contains("cpu") && f.length > 8) f.slice(1, 9).map(_.toLong)
+      else Array.empty
+    }
+    val (b, a) = (ticks(before), ticks(after))
+    if (b.isEmpty || a.isEmpty) 0.0
+    else {
+      val total = a.sum - b.sum
+      if (total <= 0) 0.0 else (a(7) - b(7)).toDouble / total
+    }
+  }
+
   /** The status string (unquoted). */
   def tier(invalid: Boolean, nFailed: Int, loadBefore: Double,
            perRepLoads: Seq[Double]): String = {
@@ -172,6 +214,30 @@ object Bench {
     val built = (System.nanoTime() - t0) / 1e9
     df.write.format("noop").mode("overwrite").save()
     built
+  }
+
+  /** Milliseconds precision; a negative time is the -1.0 failure
+    * sentinel. Double.toString is locale-independent ('.' always),
+    * unlike f"%.3f".
+    */
+  private def ms(v: Double): Double = if (v < 0) -1.0 else math.round(v * 1000) / 1e3
+
+  /** One headliner's `query_counts` entry: the cold pass's jobs, stages,
+    * tasks, executor CPU and GC seconds, wall seconds (`cold_s`, -1.0
+    * when it failed) and compiled classes (`codegen_compiles`), the
+    * classes the timed reps compiled (`codegen_compiles_timed`), and the
+    * timed reps' median build_s.
+    */
+  private[graft] def queryCountsEntry(c: JobTally.Counts, coldS: Double,
+                                      compilesTimed: Long,
+                                      builds: Seq[Double]): String = {
+    val b = builds.sorted
+    "{\"jobs\":" + c.jobs + ",\"stages\":" + c.stages +
+      ",\"tasks\":" + c.tasks + ",\"executor_cpu_s\":" + ms(c.cpuNanos / 1e9) +
+      ",\"gc_s\":" + ms(c.gcMillis / 1e3) + ",\"cold_s\":" + ms(coldS) +
+      ",\"codegen_compiles\":" + c.codegenCompiles +
+      ",\"codegen_compiles_timed\":" + compilesTimed +
+      ",\"build_s\":" + (if (b.isEmpty) -1.0 else ms(b(b.size / 2))) + "}"
   }
 
   private def loadAvg(): Double = java.lang.management.ManagementFactory
@@ -224,18 +290,23 @@ object Bench {
     // exchanges that build cached relations — a warmed re-run would
     // read those from cache and report ~0 for exactly the
     // shuffle-heaviest queries. Sequential execution attributes the
-    // counts to the right query once the listener bus is drained. A
-    // diagnostic run (SPARK_GRAFT_BENCH_ONLY) keeps the listener for
-    // the timed reps and prints their job lines; a full sweep removes
-    // it first.
+    // counts to the right query once the listener bus is drained. Its
+    // wall time is kept as cold_s: a query that persists relations runs
+    // its timed reps warm, so the medians alone hide the first run's
+    // cost. A diagnostic run (SPARK_GRAFT_BENCH_ONLY) keeps the listener
+    // for the timed reps and prints their job lines; a full sweep
+    // removes it first.
     val tally = new JobTally
     spark.sparkContext.addSparkListener(tally)
     val coldMetrics = headline.map { q =>
       tally.reset()
-      try exec(q, spark, sfDir) catch { case _: Throwable => }
+      val t0 = System.nanoTime()
+      val coldS =
+        try { exec(q, spark, sfDir); (System.nanoTime() - t0) / 1e9 }
+        catch { case _: Throwable => -1.0 }
       drainListenerBus(spark.sparkContext)
       spark.catalog.clearCache() // see timed-loop comment
-      q.name -> tally.counts
+      q.name -> (tally.counts, coldS)
     }.toMap
     if (only.isEmpty) spark.sparkContext.removeSparkListener(tally)
     // n timed runs per query, report the MEDIAN: single-shot numbers have
@@ -260,13 +331,21 @@ object Bench {
     // adjudicable from the artifact alone, instead of cross-referencing
     // a same-HEAD builder sweep (the r14 q_tpch_q5 episode: reps
     // 4.7–6.7 s under load 0.90→4.33, builder 0.85 s)
+    // — and the host's CPU steal share over each rep, read from
+    // /proc/stat as perfbench does: loadavg does not see a neighbour
+    // machine taking this one's CPUs
     val repLoads = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val repSteal = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
     val buildTimes = scala.collection.mutable.LinkedHashMap[String, Seq[Double]]()
+    val timedCompiles = scala.collection.mutable.LinkedHashMap[String, Long]()
     val repTimes = headline.map { q =>
       val loads = scala.collection.mutable.ArrayBuffer[Double]()
+      val steal = scala.collection.mutable.ArrayBuffer[Double]()
       val builds = scala.collection.mutable.ArrayBuffer[Double]()
+      var compiles = 0L
       val times = (1 to reps).map { rep =>
         loads += loadAvg()
+        val stat0 = BenchStatus.procStatCpu()
         tally.reset()
         val t0 = System.nanoTime()
         val rt =
@@ -275,6 +354,8 @@ object Bench {
             System.err.println(s"[bench] ${q.name} FAILED: ${t.getMessage}")
             -1.0
           }
+        steal += BenchStatus.stealShare(stat0, BenchStatus.procStatCpu())
+        compiles += tally.counts.codegenCompiles
         if (only.isDefined) {
           drainListenerBus(spark.sparkContext)
           if (rt >= 0) System.err.println(f"[bench] ${q.name} rep $rep: " +
@@ -285,6 +366,8 @@ object Bench {
       }
       buildTimes(q.name) = builds.toSeq
       repLoads(q.name) = loads.toSeq
+      repSteal(q.name) = steal.toSeq
+      timedCompiles(q.name) = compiles
       // Drop this query's cached relations BEFORE the next query runs.
       // cachedOnce registers entries in the session CacheManager, whose
       // per-persist canonicalized-plan lookup is linear in LIVE entries
@@ -300,9 +383,7 @@ object Bench {
     }
     // ms precision everywhere below: full-precision doubles made the
     // final line > the driver's 2000-char tail window — ten straight
-    // rounds of parsed:null and 4 truncated wall times. Double.toString
-    // is locale-independent ('.' always), unlike f"%.3f".
-    def ms(v: Double): Double = if (v < 0) -1.0 else math.round(v * 1000) / 1e3
+    // rounds of parsed:null and 4 truncated wall times.
     val results = repTimes.map { case (k, times) =>
       val ok = times.filter(_ >= 0).sorted
       k -> (if (ok.isEmpty) -1.0 else ok(ok.size / 2))
@@ -333,20 +414,15 @@ object Bench {
     // decimals — malformed JSON — under a comma-decimal default locale)
     def mbMap(get: JobTally.Counts => Long): String = results.map { case (k, _) =>
       "\"" + k + "\":" + coldMetrics.get(k)
-        .map(c => math.round(get(c) / 1e4) / 100.0).getOrElse(-1.0) }
+        .map(c => math.round(get(c._1) / 1e4) / 100.0).getOrElse(-1.0) }
       .mkString("{", ",", "}")
     val sh = mbMap(_.shuffleRead)
     val sp = mbMap(_.spilled)
     val pm = mbMap(_.peakMem)
-    // per query: the cold pass's jobs, stages, tasks, executor CPU and
-    // GC seconds, and the timed reps' median build_s
     val countsJson = results.map { case (k, _) =>
-      val c = coldMetrics.getOrElse(k, JobTally.Counts())
-      val b = buildTimes.getOrElse(k, Seq.empty).sorted
-      "\"" + k + "\":{\"jobs\":" + c.jobs + ",\"stages\":" + c.stages +
-        ",\"tasks\":" + c.tasks + ",\"executor_cpu_s\":" + ms(c.cpuNanos / 1e9) +
-        ",\"gc_s\":" + ms(c.gcMillis / 1e3) +
-        ",\"build_s\":" + (if (b.isEmpty) -1.0 else ms(b(b.size / 2))) + "}"
+      val (c, coldS) = coldMetrics.getOrElse(k, (JobTally.Counts(), -1.0))
+      "\"" + k + "\":" + queryCountsEntry(c, coldS, timedCompiles.getOrElse(k, 0L),
+        buildTimes.getOrElse(k, Seq.empty))
     }.mkString("{", ",", "}")
     // a run with ANY -1.0 sentinel must not read as "ok": automation
     // keying on status treated r8's 4 broken queries as a clean bench
@@ -393,13 +469,18 @@ object Bench {
       "\"" + k + "\":" + repLoads.getOrElse(k, Seq.empty)
         .map(l => math.round(l * 100) / 100.0).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
+    // steal share of each rep, aligned with rep_times_sec, 3 dp
+    val stealJson = repTimes.map { case (k, _) =>
+      "\"" + k + "\":" + repSteal.getOrElse(k, Seq.empty)
+        .map(v => math.round(v * 1000) / 1000.0).mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
     // origin marks WHO launched the run (r12: a builder artifact and the
     // driver's run collided on one filename — "which run is this?" was
     // forensic). Builder-initiated runs export SPARK_GRAFT_BENCH_ORIGIN=
     // builder and land on a _builder-suffixed artifact; the driver sets
     // nothing and keeps the canonical name.
     val origin = sys.env.getOrElse("SPARK_GRAFT_BENCH_ORIGIN", "driver")
-    println(s"""{"detail":"rep_times_sec","reps":$reps,"times":$repsJson}""")
+    println(s"""{"detail":"rep_times_sec","reps":$reps,"times":$repsJson,"steal_share":$stealJson}""")
     println(s"""{"detail":"load_per_rep","loads":$loadsJson}""")
     println(s"""{"detail":"shuffle_read_mb","queries":$sh,"load_avg_before":$loadBefore,"load_avg":$load}""")
     println(s"""{"detail":"spill_mb","queries":$sp}""")
@@ -426,6 +507,7 @@ object Bench {
          |"medians_sec":$qs,
          |"rep_times_sec":$repsJson,
          |"load_per_rep":$loadsJson,
+         |"steal_share_per_rep":$stealJson,
          |"shuffle_read_mb":$sh,
          |"spill_mb":$sp,
          |"peak_task_mem_mb":$pm,

@@ -9,6 +9,31 @@ import org.apache.spark.sql.SparkSession
   * partition coalescing); `local[n]` is just the harness topology.
   */
 object GraftSession {
+  /** Entries in Spark's compiled-class cache (`CodeGenerator`'s cache of
+    * generated classes; a hit skips the Janino compile). Spark's default
+    * of 100, evicted least-recently-used, is smaller than one pass over
+    * graft's queries, so a repeated pass recompiled nearly every class.
+    * Distinct classes compiled in one pass, counted as cache misses
+    * (`CodegenMetrics.METRIC_COMPILATION_TIME`) under an uncapped cache:
+    *   - the 10 analyst_sweep headliners at sf0.01: 179 (a second pass
+    *     compiles 0);
+    *   - the 57 graft.Bench headliners at sf0.1: 917-919 (a second pass
+    *     compiles 8-10, all in q_tpch_q2 and q_pmi_collocations, whose
+    *     generated code differs from run to run);
+    *   - all 261 graft.Verify queries at sf0.01: 3,674-3,682 (a second
+    *     pass compiles 316-342, 156 of them in q_raking_weights).
+    * The cap is the smallest power of two at least twice the Bench
+    * working set. It holds the sweep and the Bench pass whole; a Verify
+    * pass compiles 3,865 classes under it against 5,970 under Spark's
+    * default, and after that pass Metaspace holds 234 MB against 219 MB.
+    *
+    * The conf is static and JVM-global: `CodeGenerator` reads it once,
+    * when its cache is first built, so the first session in a JVM fixes
+    * it for every later one. A cluster that does not build its session
+    * here sets it with `--conf spark.sql.codegen.cache.maxEntries=...`.
+    */
+  final val CodegenCacheEntries = 2048
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -62,6 +87,7 @@ object GraftSession {
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.sources.FastLocalFileSystem].getName)
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
 
   /** Harness-local session: local[cpus] (env SPARK_GRAFT_CPUS,
     * default 4 — measured, not assumed: at the harness's bench scale

@@ -83,6 +83,24 @@ class BenchStatusSpec extends AnyFunSuite {
       .startsWith("degraded"))
   }
 
+  test("steal share per rep: stolen ticks over all ticks between two /proc/stat cpu lines") {
+    // user nice system idle iowait irq softirq steal guest guest_nice
+    val before = "cpu  100 0 50 800 10 0 5 20 7 0"
+    val after = "cpu  200 0 100 1500 10 0 5 45 9 0"
+    // deltas: 100 user + 50 system + 700 idle + 25 steal = 875 ticks;
+    // guest time is already inside user, so it is not added again
+    assert(math.abs(BenchStatus.stealShare(before, after) - 25.0 / 875) < 1e-12)
+    assert(BenchStatus.stealShare(before, before) === 0.0, "no tick passed")
+    assert(BenchStatus.stealShare("", after) === 0.0, "no /proc/stat")
+    assert(BenchStatus.stealShare("cpu0 1 2 3 4 5 6 7 8", after) === 0.0,
+      "a per-CPU line is not the aggregate")
+    val live = BenchStatus.procStatCpu()
+    if (live.nonEmpty) {
+      val s = BenchStatus.stealShare(live, BenchStatus.procStatCpu())
+      assert(s >= 0.0 && s <= 1.0, s)
+    }
+  }
+
   test("INVALID and FAILED outrank the ambient tiers; empty loads are ok") {
     assert(BenchStatus.tier(invalid = true, nFailed = 0, 0.5, Seq(9.0))
       === "INVALID: load_avg>2")
