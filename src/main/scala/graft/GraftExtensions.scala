@@ -20,10 +20,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rules (operator-optimization fixed-point batch)
     ext.injectOptimizerRule(_ => graft.plans.LevenshteinBandRule)
     ext.injectOptimizerRule(_ => graft.plans.DistinctCountRegroupRule)
-    // measured broadcast planning (opt-in per session:
-    // spark.graft.joinAdvisor.enabled=true) — see SampledBroadcastHintRule
-    ext.injectOptimizerRule(session =>
-      graft.plans.SampledBroadcastHintRule(session))
     // whole-operator extension: the native as-of join physical operator
     // (graft.plans.AsOfJoinPlan → AsOfJoinExec; TemporalOps.asofJoinNative)
     ext.injectPlannerStrategy(_ => graft.plans.AsOfJoinStrategy)

@@ -1,6 +1,7 @@
 package graft.jobs
 
 import scala.util.{Failure, Success, Try}
+import scala.util.control.NonFatal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** The composed daily run — the Spark-native rendition of the
@@ -38,7 +39,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     A dim runs no Spark action at all when its build's fingerprint
   *     (inputs, their files and the plan) is the one recorded with the
   *     stored table and no file of the table was written since
-  *     ([[Warehouse.skipIfBuilt]]): airports and dates then only report
+  *     ([[CatalogWarehouse.skipIfBuilt]]): airports and dates then only report
   *     "unchanged", and aircrafts runs just its FK probe, on the stored
   *     dim. Any mismatch takes the dim's full path below.
   *   - '''retries''': the reference puts retries=5, 10 s apart, on the
@@ -47,8 +48,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *     everything downstream is deterministic and fails fast.
   *   - '''DDL''': create_hive_tbls.hql maps to
   *     [[CatalogWarehouse.createReferenceTables]] (idempotent CREATE
-  *     TABLE IF NOT EXISTS); warehouses that create tables on first
-  *     write need no DDL step.
+  *     TABLE IF NOT EXISTS), the only way the warehouse's tables are
+  *     created.
   *
   * At the daily sizes the run's cost is per-action overhead, not data,
   * so each decision costs one Spark action at most: the extract counts
@@ -102,13 +103,15 @@ object DailyPipeline {
 
   /** Re-run `f` up to `retries` extra times (Airflow counts retries on
     * top of the first attempt), sleeping `delayMs` between attempts.
+    * Only non-fatal failures are retried: a VM error, an interrupt or any
+    * other fatal throwable is rethrown at once.
     */
   private[jobs] def retry[T](retries: Int, delayMs: Long)(f: => T): T = {
     var attempt = 0
     while (true) {
       try return f
       catch {
-        case t: Throwable =>
+        case NonFatal(t) =>
           attempt += 1
           if (attempt > retries) throw t
           System.err.println(
@@ -149,12 +152,9 @@ object DailyPipeline {
     }
   }
 
-  def run(spark: SparkSession, wh: Warehouse, in: Inputs, p: Params): Report = {
+  def run(spark: SparkSession, wh: CatalogWarehouse, in: Inputs, p: Params): Report = {
     // DDL before any dim load (the DAG's create_hive_tbls edge)
-    wh match {
-      case cw: CatalogWarehouse => cw.createReferenceTables()
-      case _                    => ()
-    }
+    wh.createReferenceTables()
     val begin = p.dataDate.atStartOfDay(java.time.ZoneOffset.UTC).toEpochSecond
     val end = begin + 86399
     // the extract branch — the only retried task (external API seam) —

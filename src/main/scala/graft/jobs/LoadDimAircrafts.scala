@@ -129,7 +129,7 @@ object LoadDimAircrafts {
     *
     * A run whose rebuild has the fingerprint recorded with the stored
     * dim, its files unwritten since, skips the rebuild and the compare
-    * ([[Warehouse.skipIfBuilt]]): the probe runs on the stored dim, the
+    * ([[CatalogWarehouse.skipIfBuilt]]): the probe runs on the stored dim, the
     * run's one Spark action, and nothing is written.
     * @param flightsLake current flights (for the FK assert); None skips
     *                    the check (first load, empty lake). Taken by name
@@ -137,7 +137,7 @@ object LoadDimAircrafts {
     *                    caller can overlap the rebuild and compare with
     *                    the extract that feeds the lake.
     */
-  def run(spark: SparkSession, wh: Warehouse,
+  def run(spark: SparkSession, wh: CatalogWarehouse,
           aircrafts: DataFrame, manufacturers: DataFrame,
           types: DataFrame, airlines: DataFrame,
           flightsLake: => Option[DataFrame]): Boolean = {
@@ -149,11 +149,10 @@ object LoadDimAircrafts {
       }
 
     val dim = build(aircrafts, manufacturers, types, airlines)
-    Warehouse.skipIfBuilt(wh, table, dim)(unchanged = { probe(wh.table(spark, table)); false }) {
-      val stored = if (wh.exists(table)) Some(wh.table(spark, table)) else None
-      val unchanged = stored.filter(IncrementalOps.sameContent(dim, _))
-      probe(unchanged.getOrElse(dim))
-      val changed = unchanged.isEmpty
+    val stored = wh.table(spark, table)
+    CatalogWarehouse.skipIfBuilt(wh, table, dim)(unchanged = { probe(stored); false }) {
+      val changed = !IncrementalOps.sameContent(dim, stored)
+      probe(if (changed) dim else stored)
       if (changed) wh.overwrite(table, dim)
       changed
     }

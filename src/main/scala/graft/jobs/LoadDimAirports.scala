@@ -20,7 +20,7 @@ import graft.schemas.Schemas
   *
   * A run whose build has the fingerprint the stored dim was recorded
   * with, its files unwritten since, runs no Spark action and reports
-  * "not rewritten" ([[Warehouse.skipIfBuilt]]); every other run builds,
+  * "not rewritten" ([[CatalogWarehouse.skipIfBuilt]]); every other run builds,
   * compares and overwrites as above.
   */
 object LoadDimAirports {
@@ -51,7 +51,7 @@ object LoadDimAirports {
   }
 
   /** Returns true when the dim was (re)written. */
-  def run(spark: SparkSession, wh: Warehouse, raw: Seq[RawAirport]): Boolean = {
+  def run(spark: SparkSession, wh: CatalogWarehouse, raw: Seq[RawAirport]): Boolean = {
     import scala.jdk.CollectionConverters._
     val src = spark.createDataFrame(normalize(raw).asJava, Schemas.srcAirports)
 
@@ -62,9 +62,8 @@ object LoadDimAirports {
         col("iata").as("iata_code"),
         col("name"), col("country"), col("lat"), col("lon"), col("alt"))
 
-    Warehouse.skipIfBuilt(wh, table, dim)(unchanged = false) {
-      val changed = !wh.exists(table) ||
-        !IncrementalOps.sameContent(dim, wh.table(spark, table))
+    CatalogWarehouse.skipIfBuilt(wh, table, dim)(unchanged = false) {
+      val changed = !IncrementalOps.sameContent(dim, wh.table(spark, table))
       if (changed) wh.overwrite(table, dim)
       changed
     }

@@ -13,7 +13,7 @@ import graft.ops.{DateDim, IncrementalOps}
   *
   * A run whose generator has the fingerprint recorded with the stored
   * dim, its files unwritten since, runs no Spark action and appends 0
-  * rows ([[Warehouse.skipIfBuilt]]): that generator passed the
+  * rows ([[CatalogWarehouse.skipIfBuilt]]): that generator passed the
   * cardinality check, and its rows were all stored, when it was
   * recorded.
   */
@@ -22,22 +22,18 @@ object LoadDimDates {
   val table = "dim_dates"
 
   /** Returns the number of rows appended. */
-  def run(spark: SparkSession, wh: Warehouse, startDate: String, endDate: String): Long = {
+  def run(spark: SparkSession, wh: CatalogWarehouse, startDate: String, endDate: String): Long = {
     val gen = DateDim.dateDimension(spark, startDate, endDate)
 
-    Warehouse.skipIfBuilt(wh, table, gen)(unchanged = 0L) {
+    CatalogWarehouse.skipIfBuilt(wh, table, gen)(unchanged = 0L) {
       val expected = java.time.temporal.ChronoUnit.DAYS.between(
         java.time.LocalDate.parse(startDate), java.time.LocalDate.parse(endDate)) + 1
       val genCnt = gen.count()
       require(genCnt == expected, s"dim_dates generator produced $genCnt rows, expected $expected")
 
-      val delta =
-        if (!wh.exists(table)) gen
-        else {
-          val current = wh.table(spark, table)
-            .filter(col("date_date").between(startDate, endDate))
-          IncrementalOps.exceptNew(gen, current)
-        }
+      val current = wh.table(spark, table)
+        .filter(col("date_date").between(startDate, endDate))
+      val delta = IncrementalOps.exceptNew(gen, current)
       val n = delta.count()
       if (n > 0) wh.append(table, delta)
       n

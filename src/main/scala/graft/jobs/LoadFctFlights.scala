@@ -62,7 +62,7 @@ object LoadFctFlights {
   }
 
   /** Returns rows appended for the given logical date. */
-  def run(spark: SparkSession, wh: Warehouse, lakeDir: String,
+  def run(spark: SparkSession, wh: CatalogWarehouse, lakeDir: String,
           year: Int, month: Int, day: Int): Long = {
     // partition-pruned scan (reference: load_fct_flights.py:24-29)
     val flights = ExtractFlights.readLake(spark, lakeDir)
@@ -75,25 +75,23 @@ object LoadFctFlights {
       wh.table(spark, "dim_aircrafts"))
 
     val dateDimId = year * 10000 + month * 100 + day
-    // ALWAYS diff — the reference's fact table pre-exists via DDL, so
-    // even the first load runs subtract-against-empty, whose EXCEPT
-    // DISTINCT semantics collapse in-batch duplicates
+    // ALWAYS diff — the fact table pre-exists via DDL, as the reference's
+    // does, so even the first load runs subtract-against-empty, whose
+    // EXCEPT DISTINCT semantics collapse in-batch duplicates
     // (reference: load_fct_flights.py:102-105).
     // Deviation (documented): the partition filter also admits NULL date
     // keys — rows from the Hive default partition (NULL firstSeen/lastSeen
     // driver) would otherwise escape the diff and re-append every replay.
-    val current =
-      if (!wh.exists(table)) fact.limit(0)
-      else wh.table(spark, table)
-        .filter(col("flight_date_dim_id") === dateDimId
-          || col("flight_date_dim_id").isNull)
-        .select(factCols.map(col): _*)
+    val current = wh.table(spark, table)
+      .filter(col("flight_date_dim_id") === dateDimId
+        || col("flight_date_dim_id").isNull)
+      .select(factCols.map(col): _*)
     val delta = IncrementalOps.exceptNew(fact, current)
 
     // empty-delta short-circuit (reference: load_fct_flights.py:107),
     // one count() instead of isEmpty followed by count()
     val n = delta.count()
-    if (n > 0) wh.append(table, delta, partitionBy = Seq("flight_date_dim_id"))
+    if (n > 0) wh.append(table, delta)
     n
   }
 }

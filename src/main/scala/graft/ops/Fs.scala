@@ -24,26 +24,6 @@ object Fs {
     p.getFileSystem(hadoopConf()).exists(p)
   }
 
-  /** The whole text of `file`, or None when it does not exist. */
-  def readText(file: String): Option[String] = {
-    val p = new Path(file)
-    val fs = p.getFileSystem(hadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
-      finally in.close()
-    }
-  }
-
-  /** Writes `text` to `file`, replacing what it held. */
-  def writeText(file: String, text: String): Unit = {
-    val p = new Path(file)
-    val out = p.getFileSystem(hadoopConf()).create(p, true)
-    try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    finally out.close()
-  }
-
   /** A SHA-256 (hex) over the relative path, length and mtime of every
     * data file under `dir`, in path order: it changes whenever a file is
     * added, removed or rewritten. Names Spark's readers skip — starting

@@ -15,13 +15,6 @@ class BucketingSpec extends SparkSpec {
 
   private def freshDb(): Unit = {
     spark.sql(s"DROP DATABASE IF EXISTS $db CASCADE")
-    val root = spark.conf.get("spark.sql.warehouse.dir").stripPrefix("file:")
-    def rm(f: java.io.File): Unit = {
-      if (f.isDirectory) f.listFiles().foreach(rm)
-      f.delete(); ()
-    }
-    val dir = new java.io.File(root, s"$db.db")
-    if (dir.exists()) rm(dir)
     spark.sql(s"CREATE DATABASE $db")
   }
 

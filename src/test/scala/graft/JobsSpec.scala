@@ -28,7 +28,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
   test("dims + fact end to end: cleansing, fallbacks, FK closure, idempotent append") {
     val lake = tmpDir("lake2") + "/flights"
     ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
-    val wh = new ParquetWarehouse(tmpDir("wh"))
+    val wh = freshWarehouse()
 
     assert(LoadDimAirports.run(spark, wh, airports))
     assert(!LoadDimAirports.run(spark, wh, airports)) // unchanged -> skipped rewrite
@@ -81,7 +81,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
 
   test("DailyPipeline runs the DAG order end to end; same-date replay writes zero everywhere") {
     val lake = tmpDir("lake3") + "/flights"
-    val wh = new ParquetWarehouse(tmpDir("wh3"))
+    val wh = freshWarehouse()
     val in = DailyPipeline.Inputs(FixtureSource, lake, airports,
       aircraftsDf, manufacturersDf, typesDf, airlinesDf)
     val p = DailyPipeline.Params("EDDF", java.time.LocalDate.of(2024, 1, 1),
@@ -105,7 +105,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
 
   test("DailyPipeline retries only the extract seam (reference retries=5)") {
     val lake = tmpDir("lake4") + "/flights"
-    val wh = new ParquetWarehouse(tmpDir("wh4"))
+    val wh = freshWarehouse()
     var calls = 0
     val flaky = new FlightSource {
       def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] = {
@@ -127,7 +127,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
       def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] =
         throw new RuntimeException("API down")
     }
-    val down = new ParquetWarehouse(tmpDir("wh5"))
+    val down = freshWarehouse()
     val ex = intercept[RuntimeException] {
       DailyPipeline.run(spark, down,
         in.copy(source = alwaysDown, lakeDir = tmpDir("lake5") + "/flights"),
@@ -137,8 +137,29 @@ class JobsSpec extends SparkSpec with JobFixtures {
     // and the fact stay unwritten, while the dim group, which does not
     // depend on the extract (load_dim_tables), still publishes
     assert(ex.getClass == classOf[RuntimeException] && ex.getMessage == "API down")
-    assert(!down.exists(LoadDimAircrafts.table) && !down.exists(LoadFctFlights.table))
-    assert(down.exists(LoadDimAirports.table) && down.exists(LoadDimDates.table))
+    assert(down.table(spark, LoadDimAircrafts.table).isEmpty)
+    assert(down.table(spark, LoadFctFlights.table).isEmpty)
+    assert(!down.table(spark, LoadDimAirports.table).isEmpty)
+    assert(!down.table(spark, LoadDimDates.table).isEmpty)
+    assert(liveDailyThreads().isEmpty)
+  }
+
+  test("DailyPipeline retries no fatal failure: a StackOverflowError fails the run after one fetch") {
+    var calls = 0
+    val overflowing = new FlightSource {
+      def fetch(a: String, b: Long, e: Long, dir: String): Seq[Row] = {
+        calls += 1
+        if (calls == 1) throw new StackOverflowError("API response nested too deep")
+        FixtureSource.fetch(a, b, e, dir)
+      }
+    }
+    val ex = intercept[StackOverflowError] {
+      DailyPipeline.run(spark, freshWarehouse(),
+        dailyInputs(overflowing, tmpDir("lake15") + "/flights"),
+        dailyParams(java.time.LocalDate.of(2024, 1, 1)))
+    }
+    assert(ex.getMessage == "API response nested too deep")
+    assert(calls == 1)
     assert(liveDailyThreads().isEmpty)
   }
 
@@ -170,7 +191,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
   }
 
   test("FK violation aborts the aircrafts dim publish") {
-    val wh = new ParquetWarehouse(tmpDir("wh2"))
+    val wh = freshWarehouse()
     val unknownFlights = spark.createDataFrame(
       Seq(Row("ffffff")).asJava,
       org.apache.spark.sql.types.StructType(Seq(
@@ -183,8 +204,7 @@ class JobsSpec extends SparkSpec with JobFixtures {
   }
 
   test("FK violation aborts an unchanged aircrafts dim too, leaving the stored dim byte-identical") {
-    val root = tmpDir("wh6")
-    val wh = new ParquetWarehouse(root)
+    val wh = freshWarehouse()
     val lake = tmpDir("lake7") + "/flights"
     ExtractFlights.run(spark, FixtureSource, lake, "EDDF", day, day + 86399)
     def load(): Boolean = LoadDimAircrafts.run(spark, wh, aircraftsDf, manufacturersDf,
@@ -193,7 +213,8 @@ class JobsSpec extends SparkSpec with JobFixtures {
     assert(!load()) // same inputs: unchanged, the probe passes on the stored dim
 
     def files(): Map[String, Seq[Byte]] = {
-      val dir = java.nio.file.Paths.get(root, LoadDimAircrafts.table)
+      val dir = java.nio.file.Paths.get(spark.sessionState.catalog.getTableMetadata(
+        org.apache.spark.sql.catalyst.TableIdentifier(LoadDimAircrafts.table, Some(wh.db))).location)
       val walk = java.nio.file.Files.walk(dir)
       try walk.iterator().asScala.filter(java.nio.file.Files.isRegularFile(_))
         .map(f => dir.relativize(f).toString ->
@@ -211,40 +232,6 @@ class JobsSpec extends SparkSpec with JobFixtures {
     val ex = intercept[IllegalArgumentException](load())
     assert(ex.getMessage.contains("1 flight icao24s missing"))
     assert(files() == before)
-  }
-
-  test("a same-date DailyPipeline replay stays within its query-execution budget") {
-    val lake = tmpDir("lake8") + "/flights"
-    val wh = new ParquetWarehouse(tmpDir("wh8"))
-    val in = DailyPipeline.Inputs(FixtureSource, lake, airports,
-      aircraftsDf, manufacturersDf, typesDf, airlinesDf)
-    val p = DailyPipeline.Params("EDDF", java.time.LocalDate.of(2024, 1, 1),
-      dimDatesStart = "2024-01-01", dimDatesEnd = "2024-01-31", retryDelayMs = 0L)
-    DailyPipeline.run(spark, wh, in, p)
-    // the extract EXCEPT count, the aircrafts FK probe and the fact delta
-    // count; the dims' fingerprints match their stamps, so no dim
-    // rebuilds, compares or counts
-    val budget = 3
-    val n = queryExecutions {
-      assert(DailyPipeline.run(spark, wh, in, p) == DailyPipeline.Report(0L, false, 0L, false, 0L))
-    }
-    assert(n <= budget, s"a replay ran $n query executions, budget $budget")
-  }
-
-  test("an unchanged dim rerun runs no query execution (ParquetWarehouse)") {
-    assertUnchangedRerunsRunNothing(() => new ParquetWarehouse(tmpDir("wh-stamp")))
-  }
-
-  test("a changed input file, row or plan rebuilds each dim (ParquetWarehouse)") {
-    assertChangedInputsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
-  }
-
-  test("an outside write or a stale stamp rebuilds each dim (ParquetWarehouse)") {
-    assertOutsideWritesAndStaleStampsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
-  }
-
-  test("an input that is neither a file scan nor a local relation always rebuilds (ParquetWarehouse)") {
-    assertOpaqueInputsRebuild(() => new ParquetWarehouse(tmpDir("wh-stamp")))
   }
 
   private def source(deps: Seq[Row], arrs: Seq[Row]): FlightSource = new FlightSource {
@@ -286,13 +273,8 @@ class JobsSpec extends SparkSpec with JobFixtures {
     assert(ExtractFlights.readLake(spark, lake2).count() == 2)
   }
 
-  test("DailyPipeline's concurrent branches match the sequential schedule (ParquetWarehouse)") {
-    assertSameAsSequential(
-      new ParquetWarehouse(tmpDir("wh-conc")), new ParquetWarehouse(tmpDir("wh-seq")))
-  }
-
   test("an FK failure surfaces after the other branches finished; no branch thread outlives a run") {
-    val wh = new ParquetWarehouse(tmpDir("wh10"))
+    val wh = freshWarehouse()
     val lake = tmpDir("lake12") + "/flights"
     val day1 = java.time.LocalDate.of(2024, 1, 1)
     assert(DailyPipeline.run(spark, wh, dailyInputs(DaySource, lake), dailyParams(day1)).factRows == 4)
@@ -305,13 +287,10 @@ class JobsSpec extends SparkSpec with JobFixtures {
     }
     // day 2 also widens the calendar, and the dates branch's append lands
     // well after the aircrafts probe has failed
-    val slowDates = new Warehouse {
-      def exists(t: String): Boolean = wh.exists(t)
-      def table(s: org.apache.spark.sql.SparkSession, n: String): DataFrame = wh.table(s, n)
-      def overwrite(n: String, df: DataFrame, parts: Seq[String]): Unit = wh.overwrite(n, df, parts)
-      def append(n: String, df: DataFrame, parts: Seq[String]): Unit = {
+    val slowDates = new CatalogWarehouse(spark, wh.db) {
+      override def append(n: String, df: DataFrame): Unit = {
         if (n == LoadDimDates.table) Thread.sleep(3000)
-        wh.append(n, df, parts)
+        super.append(n, df)
       }
     }
     val ex = intercept[IllegalArgumentException] {
@@ -335,9 +314,10 @@ class JobsSpec extends SparkSpec with JobFixtures {
         groups.add(Option(js.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id"))))
     }
     Bench.drainListenerBus(sc)
+    val wh = freshWarehouse()
     sc.addSparkListener(listener)
     sc.setJobGroup("g", "daily run")
-    try DailyPipeline.run(spark, new ParquetWarehouse(tmpDir("wh11")),
+    try DailyPipeline.run(spark, wh,
       dailyInputs(DaySource, tmpDir("lake13") + "/flights"),
       dailyParams(java.time.LocalDate.of(2024, 1, 1)))
     finally {
@@ -359,8 +339,9 @@ class JobsSpec extends SparkSpec with JobFixtures {
       }
     }
     @volatile var aliveAtExit: Option[Set[String]] = None
+    val wh = freshWarehouse()
     val runner = new Thread(() =>
-      try DailyPipeline.run(spark, new ParquetWarehouse(tmpDir("wh12")),
+      try DailyPipeline.run(spark, wh,
         dailyInputs(held, tmpDir("lake14") + "/flights"),
         dailyParams(java.time.LocalDate.of(2024, 1, 1)))
       catch { case _: Throwable => () } // whatever the interrupt makes it throw
@@ -382,4 +363,10 @@ class JobsSpec extends SparkSpec with JobFixtures {
     assert(!runner.isAlive)
     assert(aliveAtExit.contains(Set.empty[String]), s"branch threads alive at exit: $aliveAtExit")
   }
+
+  /** Threads of `DailyPipeline.run`'s branches that are still alive. */
+  private def liveDailyThreads(): Set[String] =
+    Thread.getAllStackTraces.keySet.asScala
+      .filter(t => t.isAlive && t.getName.startsWith("graft-daily-"))
+      .map(_.getName).toSet
 }

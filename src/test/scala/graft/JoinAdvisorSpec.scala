@@ -39,93 +39,6 @@ class JoinAdvisorSpec extends SparkSpec {
     assert(sj.orderBy(col("key")).collect().toSeq == expected)
   }
 
-  // ---- the INJECTED rule (graft.plans.SampledBroadcastHintRule):
-  // JoinAdvisor's measurement wired into the optimizer ----
-
-  // AQE is disabled inside these tests so the strategy flip is
-  // attributable to the RULE: at this toy scale AQE's runtime replan
-  // also converts the SMJ to broadcast — but only AFTER materializing
-  // the first shuffle stage, which at 100 TB is exactly the cost the
-  // planning-time measurement avoids
-  private def withRule[A](maxRows: Long, enabled: Boolean = true,
-                          threshold: Long = 1024)(f: => A): A = {
-    val prevT = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    val prevAqe = spark.conf.get("spark.sql.adaptive.enabled")
-    try {
-      spark.conf.set("spark.sql.adaptive.enabled", "false")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", threshold.toString)
-      spark.conf.set(graft.plans.SampledBroadcastHintRule.EnabledKey,
-        enabled.toString)
-      spark.conf.set(graft.plans.SampledBroadcastHintRule.MaxRowsKey,
-        maxRows.toString)
-      f
-    } finally {
-      spark.conf.set("spark.sql.adaptive.enabled", prevAqe)
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevT)
-      spark.conf.set(graft.plans.SampledBroadcastHintRule.EnabledKey, "false")
-      spark.conf.unset(graft.plans.SampledBroadcastHintRule.MaxRowsKey)
-    }
-  }
-
-  // the stats-blind shape: size-only estimation propagates lineitem's
-  // FULL scan size through the selective filter, so with the broadcast
-  // threshold at 1 KB Catalyst plans a sort-merge join — while the
-  // filtered side's TRUE row count is dimension-sized
-  private def statsBlindJoin(sfDir: String) = {
-    val small = Tables.lineitem(spark, sfDir)
-      .filter(col("l_quantity") < 5)
-      .select(col("l_orderkey"), col("l_quantity"))
-    val big = Tables.orders(spark, sfDir)
-      .select(col("o_orderkey"), col("o_totalprice"))
-    small.join(big, col("l_orderkey") === col("o_orderkey"))
-  }
-
-  test("injected rule: a measured-small side flips a stats-blind sort-merge join to broadcast, rows unchanged") {
-    val sfDir = "/root/testdata/sf0.01" // filtered count 4787 < 20000
-    // plans are lazy: planMatches/collect must run INSIDE withRule
-    // rule ON: measured 4787 ≤ 20000 ⇒ BROADCAST hint ⇒ BHJ
-    val onRows = withRule(maxRows = 20000) {
-      val on = statsBlindJoin(sfDir)
-      assert(JoinAdvisor.planMatches(on, "broadcast_left"),
-        "the rule must flip the join to broadcast:\n" +
-          on.queryExecution.executedPlan.toString.take(800))
-      on.orderBy("l_orderkey", "l_quantity", "o_orderkey").collect().toSeq
-    }
-    // rule OFF, same confs: stats say both sides big ⇒ SMJ
-    val offRows = withRule(maxRows = 20000, enabled = false) {
-      val off = statsBlindJoin(sfDir)
-      assert(JoinAdvisor.planMatches(off, "shuffle"),
-        "without the rule the stats-blind plan stays sort-merge")
-      off.orderBy("l_orderkey", "l_quantity", "o_orderkey").collect().toSeq
-    }
-    // the hint changes STRATEGY only — bitwise-same result
-    assert(onRows === offRows)
-  }
-
-  test("injected rule: the SAME query flips strategy across the sf0.01→sf0.1 boundary") {
-    // maxBroadcastRows = 20000 sits between the filtered side's true
-    // counts (4787 at sf0.01, 48034 at sf0.1): the rule broadcasts at
-    // the small sf and correctly declines at the big one — the
-    // measured decision tracks the DATA, which no static stats
-    // threshold can (the estimated sizes are "big" at both sfs)
-    withRule(maxRows = 20000) {
-      assert(JoinAdvisor.planMatches(statsBlindJoin("/root/testdata/sf0.01"),
-        "broadcast_left"), "sf0.01: measured 4787 ≤ 20000 must broadcast")
-      assert(JoinAdvisor.planMatches(statsBlindJoin("/root/testdata/sf0.1"),
-        "shuffle"), "sf0.1: measured 48034 > 20000 must stay sort-merge")
-    }
-  }
-
-  test("injected rule: the probe is capped — it never counts past maxRows+1") {
-    // with maxRows = 10, both sides cap at 11 ⇒ shuffle, and the
-    // decision is reached without scanning 600k rows (cap bound holds
-    // by the Limit in the probe plan; here we pin the DECISION)
-    withRule(maxRows = 10) {
-      assert(JoinAdvisor.planMatches(statsBlindJoin("/root/testdata/sf0.01"),
-        "shuffle"), "both sides measured over cap must stay sort-merge")
-    }
-  }
-
   test("loop closure: Catalyst's unhinted choice matches the advisor on clear-cut TPC-H edges") {
     // dimension edges — far from any threshold on both metrics
     // (row-count rule here, byte-size stats in Catalyst)

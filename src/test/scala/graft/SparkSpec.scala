@@ -3,10 +3,17 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all specs (one JVM — Test/fork). */
+/** Shared local SparkSession for all specs (one JVM — Test/fork). Its
+  * catalog's managed tables live in a temporary directory of the JVM's
+  * own, so no run sees another's tables or leaves any behind in the
+  * working directory.
+  */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = GraftSession.builder("local[4]", 4).getOrCreate()
+    val s = GraftSession.builder("local[4]", 4)
+      .config("spark.sql.warehouse.dir",
+        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
+      .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
